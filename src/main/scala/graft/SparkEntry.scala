@@ -27,21 +27,71 @@ import graft.multimodal.Multimodal
   */
 object SparkEntry {
 
+  /** Reads one registry table. Parquet schema inference is a Spark job, so
+    * the schema Spark infers is remembered per file version and Parquet
+    * type-mapping settings, and every later read binds to it: a steady-state
+    * read starts no job, and plans, schemas and rows are those of an inferred
+    * read. The key holds no session, so dead sessions are not kept alive.
+    */
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // The driver regenerates testdata between rounds and has shipped `ts` as
-    // both TIMESTAMP(NANOS) (unreadable without the legacy nanos-as-long
-    // conf) and plain timestamp[us]. Our own sessions set the conf at build
-    // time; for a caller-supplied session, only flip it if the nanos footer
-    // actually rejects the read.
-    val df =
-      try s.read.parquet(path)
-      catch {
-        case e: Exception if e.getMessage != null && e.getMessage.contains("NANOS") =>
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          s.read.parquet(path)
-      }
+    val ver = fileVersion(s, path)
+    def key = (ver, parquetTypeConfs.map(k => s.conf.getOption(k).orNull))
+    val df = parquetSchemas.get(key) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None =>
+        // Event tables have shipped `ts` as both TIMESTAMP(NANOS) (unreadable
+        // without the legacy nanos-as-long conf) and plain timestamp[us]. Our
+        // own sessions set the conf at build time; for a caller-supplied
+        // session, only flip it if the nanos footer actually rejects the read.
+        val inferred =
+          try s.read.parquet(path)
+          catch {
+            case e: Exception if e.getMessage != null && e.getMessage.contains("NANOS") =>
+              s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+              s.read.parquet(path)
+          }
+        // `key` is re-read here: the schema belongs to the settings in force
+        // when inference succeeded, so a session without nanosAsLong never
+        // binds to the LongType `ts` a nanosAsLong read inferred.
+        parquetSchemas.put(key, inferred.schema)
+        inferred
+    }
     if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** The session settings that change the schema Spark infers for a Parquet
+    * file: how its physical types map to Spark types, and whether a
+    * directory's part files are merged.
+    */
+  private val parquetTypeConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+  private val parquetSchemas = scala.collection.concurrent.TrieMap
+    .empty[(FileVersion, Seq[String]), org.apache.spark.sql.types.StructType]
+
+  /** One version of a file: its qualified path, byte length and mtime (for
+    * a directory, the total length and latest mtime of the files under it).
+    * A memo keyed on it misses after a rewrite, and a rewrite within one mtime
+    * tick still misses when it changes the file's length.
+    */
+  private case class FileVersion(path: String, length: Long, mtime: Long)
+
+  private def fileVersion(s: SparkSession, path: String): FileVersion = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val q = fs.makeQualified(p)
+    val files = fs.listFiles(q, true)
+    var length, mtime = 0L
+    while (files.hasNext) {
+      val f = files.next()
+      length += f.getLen
+      mtime = math.max(mtime, f.getModificationTime)
+    }
+    FileVersion(q.toString, length, mtime)
   }
 
   /** Normalize the `ts` column of an events-shaped frame to session-TZ
@@ -109,20 +159,15 @@ object SparkEntry {
       s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})"
     }.mkString(" + ")
 
-  /** Memoized row count per table path — LSH auto-sizing needs the corpus
-    * size driver-side; one metadata-only count job per (dir, table), not one
-    * per query invocation. The key includes the file's mtime so a table
+  /** Memoized row count per table version — LSH auto-sizing needs the
+    * corpus size driver-side; one metadata-only count job per table version,
+    * not one per query invocation. Keyed on [[fileVersion]], so a table
     * rewritten within the same JVM can't serve a stale corpus size to
     * bitsFor/broadcast gating.
     */
-  private val countCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def tableCount(s: SparkSession, dir: String, name: String): Long = {
-    val ver =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(s"$dir/$name.parquet")).toMillis
-      catch { case _: Exception => 0L }
-    countCache.getOrElseUpdate(s"$dir/$name@$ver", t(s, dir, name).count())
-  }
+  private val countCache = scala.collection.concurrent.TrieMap.empty[FileVersion, Long]
+  private def tableCount(s: SparkSession, dir: String, name: String): Long =
+    countCache.getOrElseUpdate(fileVersion(s, s"$dir/$name.parquet"), t(s, dir, name).count())
 
   // ------------------------------------------------------------ reference surface
 
@@ -3621,25 +3666,13 @@ object SparkEntry {
     // The two driver-side side-input builds — the LM estimation (one fused
     // histogram collect over the target slice) and the decontamination
     // broadcast-gate census (distinct span-fp count over the benchmark
-    // quarter) — are INDEPENDENT; submit them from two driver threads so
-    // their jobs overlap instead of serializing (guide §2.6). Passing the
-    // census result as `benchN` reproduces exactly the broadcast decision
+    // quarter) — are INDEPENDENT; build them on two driver threads so their
+    // jobs overlap instead of serializing (guide §2.6). Passing the census
+    // result as `benchN` reproduces exactly the broadcast decision
     // decontaminateSpans would make alone: plan and rows are identical.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (gate, benchN) = try {
-      val gateF = pool.submit(new java.util.concurrent.Callable[DataFrame => DataFrame] {
-        def call() = TrainingData.perplexityGate(target, "text", maxNll = 7.85)
-      })
-      val bNF = pool.submit(new java.util.concurrent.Callable[java.lang.Long] {
-        def call() = TrainingData.benchSpanFingerprintCount(bench, "doc_id", "text")
-      })
-      // surface the ORIGINAL failure, not the ExecutionException wrapper —
-      // a broken LM build must read the same here as on the sequential path
-      def unwrap[T](f: java.util.concurrent.Future[T]): T =
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      (unwrap(gateF), unwrap(bNF).longValue())
-    } finally pool.shutdown()
+    val (gate, benchN) = graft.operators.Par.both(s)(
+      TrainingData.perplexityGate(target, "text", maxNll = 7.85),
+      TrainingData.benchSpanFingerprintCount(bench, "doc_id", "text"))
     val banded = gate(gophered)
     val cleaned = TrainingData.decontaminateSpans(banded, bench, "doc_id", "text",
       benchN = benchN)

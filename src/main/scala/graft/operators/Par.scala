@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Local-parallelism guard for CPU-heavy per-row stages (shingling, hashing,
   * all-pairs vector math). A small parquet file scans as ONE split, so
@@ -69,5 +70,41 @@ object Par {
       df.repartition(target,
         keyCols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
     else df
+  }
+
+  /** Runs two independent driver-side builds on two threads, so their jobs
+    * overlap instead of serializing, and returns both results. Every job
+    * either build starts carries one job tag. On the first failure the tag's
+    * jobs are cancelled and the other thread is interrupted, so no orphan job
+    * keeps running, and the ORIGINAL exception is thrown, not its
+    * `ExecutionException` wrapper: a failing build reads the same as it
+    * would on a sequential path.
+    */
+  def both[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
+    val sc = spark.sparkContext
+    val tag = s"graft-par-both-${java.util.UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(2)
+    val done = new ExecutorCompletionService[Any](pool)
+    def submit(body: => Any) = done.submit(new Callable[Any] {
+      def call(): Any = { sc.addJobTag(tag); body }
+    })
+    val fa = submit(a)
+    val fb = submit(b)
+    try {
+      for (_ <- 1 to 2)
+        try done.take().get()
+        catch {
+          case e: ExecutionException =>
+            pool.shutdownNow()
+            sc.cancelJobsWithTag(tag)
+            // an interrupted thread that was between jobs may still have
+            // submitted one before it saw the interrupt: cancel again once
+            // both threads are gone
+            pool.awaitTermination(1, TimeUnit.MINUTES)
+            sc.cancelJobsWithTag(tag)
+            throw e.getCause
+        }
+      (fa.get().asInstanceOf[A], fb.get().asInstanceOf[B])
+    } finally pool.shutdown()
   }
 }

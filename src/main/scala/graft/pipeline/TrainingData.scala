@@ -1536,6 +1536,19 @@ object TrainingData {
     }
   }
 
+  /** The distinct span-fingerprint count of `bench` — the broadcast-gate
+    * fact [[decontaminateSpans]] computes itself when `benchN` is not
+    * supplied. Exposed so composed pipelines (q_curate_corpus_v2) can
+    * overlap this census with their OTHER independent side-input builds
+    * (guide §2.6 — concurrent driver jobs back-fill each other's tails)
+    * and pass the result in; supplying `benchN = benchSpanFingerprintCount(…)`
+    * is exactly the decision the operator would have made alone.
+    */
+  def benchSpanFingerprintCount(bench: DataFrame, idCol: String,
+                                textCol: String, window: Int = 16): Long =
+    spanFingerprints(bench, idCol, textCol, window)
+      .select(col("span_fp")).distinct().count()
+
   /** Surgical span-level decontamination: rewrites TRAINING documents with
     * every `window`-token run that also appears in the BENCHMARK corpus
     * blanked out (all occurrences — benchmark text must go, there is no
@@ -1550,19 +1563,6 @@ object TrainingData {
     * map-only against it, and only MATCHED positions form the per-doc cut
     * arrays — clean documents rewrite through the left join untouched.
     */
-  /** The distinct span-fingerprint count of `bench` — the broadcast-gate
-    * fact [[decontaminateSpans]] computes itself when `benchN` is not
-    * supplied. Exposed so composed pipelines (q_curate_corpus_v2) can
-    * overlap this census with their OTHER independent side-input builds
-    * (guide §2.6 — concurrent driver jobs back-fill each other's tails)
-    * and pass the result in; supplying `benchN = benchSpanFingerprintCount(…)`
-    * is exactly the decision the operator would have made alone.
-    */
-  def benchSpanFingerprintCount(bench: DataFrame, idCol: String,
-                                textCol: String, window: Int = 16): Long =
-    spanFingerprints(bench, idCol, textCol, window)
-      .select(col("span_fp")).distinct().count()
-
   def decontaminateSpans(train: DataFrame, bench: DataFrame, idCol: String,
                          textCol: String, window: Int = 16,
                          benchN: Long = -1L,

@@ -18,13 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Read one named Parquet table from a directory layout `dir/<name>.parquet`.
-    * (The driver's testdata layout; events' nanos timestamp is normalized by
-    * the caller — see SparkEntry.t.)
-    */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** Read a newline-delimited JSON table with an explicit schema. Schema-on
     * -read is mandatory at scale: inference is a full extra pass over the
     * data, and a drifting inferred schema silently changes downstream plans.

@@ -41,6 +41,20 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(out(2L) - (floor + 0.85 * (floor / 1 + floor / 1))) < 1e-12)
   }
 
+  test("pageRank drops null-endpoint edges as if they were never there") {
+    val clean = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L))
+    val nulls = Seq[(java.lang.Long, java.lang.Long)](
+      (null, 2L), (1L, null), (null, null), (4L, null)) // 4 only ever has a null dst
+    val withNulls = (clean.map { case (a, b) => (Long.box(a), Long.box(b)) } ++ nulls)
+      .toDF("src", "dst")
+    val rank = (df: org.apache.spark.sql.DataFrame) =>
+      Graph.pageRank(df, "src", "dst", iterations = 3)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val expected = rank(clean.toDF("src", "dst"))
+    assert(expected.keySet === Set(1L, 2L, 3L))
+    assert(rank(withNulls) === expected) // exact: decimal sums, no node 4, no null id
+  }
+
   test("weightedSample equals a driver-side replay and is layout-independent") {
     val rows = (1L to 1000L).map(i => (i, (i % 10 + 1).toDouble))
     val df = rows.toDF("doc_id", "w")

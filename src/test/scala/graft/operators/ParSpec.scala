@@ -73,4 +73,47 @@ class ParSpec extends SparkSpec {
     val df2 = Seq((8L, (Map("b" -> 2), "x"))).toDF("id", "s").coalesce(1)
     assert(Par.fanOut(df2).count() === 1)
   }
+
+  test("both rethrows the original failure and cancels the sibling's job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val siblingStarted = new java.util.concurrent.CountDownLatch(1)
+    val siblingJobs = scala.collection.concurrent.TrieMap.empty[Int, Set[String]]
+    val siblingEnds = new java.util.concurrent.ConcurrentLinkedQueue[(Set[String], String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty[String])
+        if (tags("par-spec-sibling")) { siblingJobs(e.jobId) = tags; siblingStarted.countDown() }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        siblingJobs.get(e.jobId).foreach(tags => siblingEnds.add(tags -> e.jobResult.toString))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val boom = new IllegalStateException("side-input build failed")
+      val thrown = intercept[IllegalStateException] {
+        Par.both(spark)(
+          { // a long job that only ends early when it is cancelled
+            sc.addJobTag("par-spec-sibling")
+            sc.parallelize(Seq(0), 1).foreach { _ =>
+              val ctx = org.apache.spark.TaskContext.get()
+              val until = System.nanoTime() + 60L * 1000 * 1000 * 1000
+              while (!ctx.isInterrupted() && System.nanoTime() < until) Thread.sleep(20)
+            }
+          },
+          {
+            assert(siblingStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
+            throw boom
+          })
+      }
+      assert(thrown eq boom)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (siblingEnds.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(siblingEnds.size === 1)
+      val (tags, result) = siblingEnds.peek()
+      assert(tags.exists(_.startsWith("graft-par-both-")), s"untagged sibling job: $tags")
+      assert(result.contains("cancelled"), s"sibling job did not end cancelled: $result")
+    } finally sc.removeSparkListener(listener)
+  }
 }
