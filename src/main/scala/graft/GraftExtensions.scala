@@ -4,16 +4,26 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import graft.dedup.Dedup
 import graft.expressions.{BigramStats, DotProduct, DotProductInt8, Fnv1a64, MinHashSignature, QualityScoreRaw, SimHash64, WordShingles}
+import graft.streaming.LocalCheckpointFileManager
 
 /** Session extension registering the engine's native expressions as SQL
   * functions, so `spark.sql("SELECT vec_dot(a, b) ...")` works alongside the
-  * Column API. Install via
+  * Column API, and making [[graft.streaming.LocalCheckpointFileManager]] the
+  * session's checkpoint file manager unless the session already names one.
+  * Install via
   * `spark.sql.extensions=graft.GraftExtensions` or
   * `SparkSession.builder.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+
+  /** The resolution rule the checkpoint-manager default rides on. */
+  private object NoRule extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = plan
+  }
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
@@ -28,6 +38,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plus the pruning rule Catalyst cannot apply to a node it doesn't know
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsofJoinColumnPruning)
+    // the analyzer is built, and this builder run, before the session can
+    // start a stream, so every checkpoint sees the key; a value the session
+    // already has is kept, and one set later replaces this default
+    ext.injectResolutionRule { session =>
+      val key = LocalCheckpointFileManager.ConfKey
+      if (session.conf.getOption(key).isEmpty)
+        session.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+      NoRule
+    }
     register(ext, "vec_dot",
       "vec_dot(a, b) - dot product of two array<double> vectors",
       { args: Seq[Expression] =>

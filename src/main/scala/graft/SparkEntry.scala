@@ -212,26 +212,13 @@ object SparkEntry {
       .apply("large-transaction-made")
   }
 
-  /** S1+S2+S5+T5 under the driver gate: the SAME Part-3 topology as
-    * [[topologyTransactions]], but executed through the live Structured
-    * Streaming runtime inside the query — file-stream sources (schema
-    * declared, directory-watched, checkpoint-tracked: the broker-less
-    * topic binding), the topology compiler over STREAMING DataFrames,
-    * [[graft.streaming.StreamRunner.fileSink]] (checkpointed append sink,
-    * `Trigger.AvailableNow`), then the sink directory read back as the
-    * result. The oracle is the batch experiment's SQL verbatim — stream
-    * parity IS the claim (`core.clj:224-234`'s run-experiment promises the
-    * live topology computes what the simulation computed; this gate checks
-    * it every round against DuckDB, so a streaming-runtime regression is
-    * driver-visible, not just spec-visible). Fresh checkpoint/sink dirs
-    * per invocation: this query measures a COLD end-to-end streaming run,
-    * lifecycle included.
-    */
-  /** Recursive delete of a staging tree — shared by the stream-parity
-    * queries, which keep exactly ONE fixed tree per sf dir alive (wiped on
-    * the way in, so bench retries never accumulate /tmp garbage).
-    */
-  /** App-scoped /tmp base for a streaming query's staging/run tree. The
+  /** The JVM's temp directory (`java.io.tmpdir`), under which the stream
+    * gates' trees and the layout and format gates' tables are written. */
+  private def tmpDir: String = System.getProperty("java.io.tmpdir")
+  private def inTmpDir(name: String): String =
+    java.nio.file.Paths.get(tmpDir, name).toString
+
+  /** App-scoped temp-dir base for a streaming query's staging/run tree. The
     * appId suffix is the concurrency contract: with a FIXED shared path, a
     * second Spark app (bench + verify JVMs overlapping, or two sessions in
     * one JVM) would wipeTree a fixture another app was actively streaming
@@ -245,7 +232,7 @@ object SparkEntry {
     * once and then only STREAMS — a single long-running query — never
     * re-invokes staging), and the cutoff sits far above any plausible
     * single-run duration in this environment (gate + bench + verify
-    * together are under an hour; 24h of margin, not 2h). /tmp then holds
+    * together are under an hour; 24h of margin, not 2h). The temp dir then holds
     * at most the last day of app trees instead of growing forever.
     */
   private[graft] val staleSweepDone = new java.util.concurrent.atomic.AtomicBoolean
@@ -255,7 +242,7 @@ object SparkEntry {
       val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
       try {
         scala.util.Using.resource(
-            java.nio.file.Files.list(java.nio.file.Paths.get("/tmp"))) { st =>
+            java.nio.file.Files.list(java.nio.file.Paths.get(tmpDir))) { st =>
           import scala.jdk.CollectionConverters._
           st.iterator().asScala
             .filter { p =>
@@ -268,7 +255,7 @@ object SparkEntry {
         }.foreach(p => try wipeTree(p.toString) catch { case _: Throwable => () })
       } catch { case _: Throwable => () } // sweep is best-effort hygiene
     }
-    val base = s"/tmp/graft_stream_${tag}_${dir.replaceAll("\\W", "_")}__$app"
+    val base = inTmpDir(s"graft_stream_${tag}_${dir.replaceAll("\\W", "_")}__$app")
     // keep OUR tree visibly live for other JVMs' sweeps even when staging
     // is memoized and no child dir gets recreated (see the doc above)
     touchBase(base)
@@ -336,6 +323,10 @@ object SparkEntry {
       } catch { case _: Throwable => () } // hygiene only — never fail a query
     }
 
+  /** Recursive delete of a staging tree — shared by the stream-parity
+    * queries, which keep exactly ONE fixed tree per sf dir alive (wiped on
+    * the way in, so bench retries never accumulate temp-dir garbage).
+    */
   private def wipeTree(base: String): Unit = {
     val p = java.nio.file.Paths.get(base)
     if (java.nio.file.Files.exists(p)) {
@@ -351,6 +342,21 @@ object SparkEntry {
     }
   }
 
+  /** S1+S2+S5+T5 under the driver gate: the SAME Part-3 topology as
+    * [[topologyTransactions]], but executed through the live Structured
+    * Streaming runtime inside the query — file-stream sources (schema
+    * declared, directory-watched, checkpoint-tracked: the broker-less
+    * topic binding), the topology compiler over STREAMING DataFrames,
+    * [[graft.streaming.StreamRunner.fileSink]] (checkpointed append sink,
+    * `Trigger.AvailableNow`), then the sink directory read back as the
+    * result. The oracle is the batch experiment's SQL verbatim — stream
+    * parity IS the claim (`core.clj:224-234`'s run-experiment promises the
+    * live topology computes what the simulation computed; this gate checks
+    * it every round against DuckDB, so a streaming-runtime regression is
+    * driver-visible, not just spec-visible). Fresh checkpoint/sink dirs
+    * per invocation: this query measures a COLD end-to-end streaming run,
+    * lifecycle included.
+    */
   private def streamParityQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     // FIXED per-sfdir base, wiped at entry: a fresh nanoTime tree per
@@ -430,7 +436,7 @@ object SparkEntry {
   /** The streaming schema of the staged events files — declared (a file
     * stream cannot infer), shared by every live-parity query.
     */
-  private def stagedEventsSchema: org.apache.spark.sql.types.StructType = {
+  private[graft] def stagedEventsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("user_id", LongType), StructField("ts", TimestampType),
@@ -4727,7 +4733,7 @@ object SparkEntry {
     */
   private def bucketedAggQ(s: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("\\W", "_")
-    val path = s"/tmp/graft_bucketed$tag"
+    val path = inTmpDir(s"graft_bucketed$tag")
     t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
       .write.mode("overwrite").format("parquet")
       .bucketBy(8, "l_orderkey").option("path", path)
@@ -4759,7 +4765,7 @@ object SparkEntry {
     * most was the in-query write). Layout write cost is a one-time
     * ingest-side cost at scale, benchmarked separately by the cold run.
     * Always writing on first touch per JVM keeps correctness under driver
-    * testdata regeneration (stale /tmp tables never survive into a new
+    * testdata regeneration (stale temp-dir tables never survive into a new
     * process's results).
     */
   private val bucketedFixtureDone =
@@ -4770,11 +4776,11 @@ object SparkEntry {
     if (bucketedFixtureDone.add(s"$tag@${s.sparkContext.applicationId}")) {
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_extendedprice"))
         .write.mode("overwrite").format("parquet").bucketBy(16, "l_orderkey")
-        .sortBy("l_orderkey").option("path", s"/tmp/graft_bj_li$tag")
+        .sortBy("l_orderkey").option("path", inTmpDir(s"graft_bj_li$tag"))
         .saveAsTable(s"bj_li$tag")
       t(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"))
         .write.mode("overwrite").format("parquet").bucketBy(16, "o_orderkey")
-        .sortBy("o_orderkey").option("path", s"/tmp/graft_bj_ord$tag")
+        .sortBy("o_orderkey").option("path", inTmpDir(s"graft_bj_ord$tag"))
         .saveAsTable(s"bj_ord$tag")
     }
     s.table(s"bj_li$tag").hint("merge")
@@ -4796,7 +4802,7 @@ object SparkEntry {
     val tag = dir.replaceAll("\\W", "_")
     val base = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
-    val (jPath, cPath) = (s"/tmp/graft_fmt_json$tag", s"/tmp/graft_fmt_csv$tag")
+    val (jPath, cPath) = (inTmpDir(s"graft_fmt_json$tag"), inTmpDir(s"graft_fmt_csv$tag"))
     base.write.mode("overwrite").json(jPath)
     base.write.mode("overwrite").option("header", "true").csv(cPath)
     val j = graft.sources.Tables.jsonTable(s, jPath, base.schema)
@@ -4822,7 +4828,7 @@ object SparkEntry {
     val tag = dir.replaceAll("\\W", "_")
     val base = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
-    val path = s"/tmp/graft_fmt_orc$tag"
+    val path = inTmpDir(s"graft_fmt_orc$tag")
     base.write.mode("overwrite").orc(path)
     val o = graft.sources.Tables.orcTable(s, path)
     base.as("p").join(o.as("o"), col("p.doc_id") === col("o.doc_id"), "full")

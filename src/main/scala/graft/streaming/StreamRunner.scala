@@ -27,6 +27,16 @@ import graft.core.Topology
   * at-least-once multiset of outputs with per-micro-batch emission
   * (SURVEY §2.5 "exactly-once" note) — identical results, different
   * granularity.
+  *
+  * Checkpoint I/O: every query started from a session with
+  * [[graft.GraftExtensions]] writes its offset and commit logs, source and
+  * sink metadata logs and state-store files through
+  * [[LocalCheckpointFileManager]]. On `file:` checkpoints it writes with
+  * `java.nio` and publishes by atomic rename or hard link, where Spark's
+  * default manager, without Hadoop's native library, forks a `chmod` and
+  * several `readlink` processes per file. Other schemes get Spark's own
+  * manager. Opt out by setting `spark.sql.streaming.checkpointFileManagerClass`
+  * on the session.
   */
 object StreamRunner {
 

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 
 /** The app-scoped stream staging contract (r14 advice, cutoff revised by
@@ -15,12 +15,15 @@ import java.nio.file.attribute.FileTime
   */
 class StreamBaseSpec extends SparkSpec {
 
+  /** Stream trees live in the JVM's temp directory. */
+  private def inTmp(name: String): Path = Paths.get(System.getProperty("java.io.tmpdir"), name)
+
   test("streamBase is app-scoped; the sweep removes stale foreign trees only") {
     val app = spark.sparkContext.applicationId.replaceAll("\\W", "_")
     val now = System.currentTimeMillis()
-    val stale = Paths.get("/tmp/graft_stream_spectag_stale__foreignapp")
-    val fresh = Paths.get("/tmp/graft_stream_spectag_fresh__foreignapp")
-    val ownOld = Paths.get(s"/tmp/graft_stream_spectag_own__$app")
+    val stale = inTmp("graft_stream_spectag_stale__foreignapp")
+    val fresh = inTmp("graft_stream_spectag_fresh__foreignapp")
+    val ownOld = inTmp(s"graft_stream_spectag_own__$app")
     Seq(stale, fresh, ownOld).foreach(Files.createDirectories(_))
     try {
       // stale foreign: 25 h old; long-running foreign: 3 h old (the r15
@@ -32,7 +35,7 @@ class StreamBaseSpec extends SparkSpec {
       Files.setLastModifiedTime(ownOld, FileTime.fromMillis(now - 25L * 3600 * 1000))
       SparkEntry.staleSweepDone.set(false) // the sweep is once-per-JVM
       val base = SparkEntry.streamBase(spark, "spectag", "/tmp/x")
-      assert(base === s"/tmp/graft_stream_spectag__tmp_x__$app",
+      assert(base === inTmp(s"graft_stream_spectag__tmp_x__$app").toString,
         "base must embed tag, sanitized dir, and the sanitized applicationId")
       assert(!Files.exists(stale), "stale foreign tree must be swept")
       assert(Files.exists(fresh), "a 3 h-old foreign tree must be retained " +
@@ -51,7 +54,7 @@ class StreamBaseSpec extends SparkSpec {
   test("streamBase touches its own existing base so other JVMs' sweeps see " +
        "it as live") {
     val app = spark.sparkContext.applicationId.replaceAll("\\W", "_")
-    val own = Paths.get(s"/tmp/graft_stream_touchtag__tmp_x__$app")
+    val own = inTmp(s"graft_stream_touchtag__tmp_x__$app")
     Files.createDirectories(own)
     try {
       val old = System.currentTimeMillis() - 25L * 3600 * 1000
@@ -66,7 +69,7 @@ class StreamBaseSpec extends SparkSpec {
   test("the streaming heartbeat keeps long-running bases fresh: progress " +
        "events re-touch every registered base; vanished trees self-remove") {
     val app = spark.sparkContext.applicationId.replaceAll("\\W", "_")
-    val own = Paths.get(s"/tmp/graft_stream_hbtag__tmp_x__$app")
+    val own = inTmp(s"graft_stream_hbtag__tmp_x__$app")
     Files.createDirectories(own)
     try {
       val base = SparkEntry.streamBase(spark, "hbtag", "/tmp/x")
