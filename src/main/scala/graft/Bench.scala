@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val cpus = Harness.defaultCpus
+    val spark = Harness.session(cpus)
     // Settle guard: a just-exited sbt/Spark JVM keeps stealing cores for
     // ~minutes (observed: consecutive runs varying 2x), and the driver runs
     // this bench right after the test suite. Round 5's "3.8x/4.3x
@@ -25,7 +16,7 @@ object Bench {
       // inflated a full run ~1.2x when admission happened at load ~4, so
       // the threshold sits near idle (~1); bounded wait, so a busy
       // neighbor costs at most 3 min of settling, never a hang
-      val target = math.max(1.5, cpus.toDouble / 16.0)
+      val target = math.max(1.5, cpus / 16.0)
       val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
       def load1(): Double =
         try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
@@ -111,19 +102,11 @@ object Bench {
         .trim.split("\\s+")(8).toLong
       catch { case _: Throwable => 0L }
     val stealStart = stealJiffies()
-    // Per-query shuffle BYTES (write side), attributed around the cold run
-    // with the listener bus drained on both edges: bytes are deterministic
-    // per execution (unlike wall-clock, steal can't fake them), so this is
-    // the scale posture number — a query whose bytes grow superlinearly
-    // with SF is the 100 TB bottleneck no local timing shows.
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val shuffleListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          shuffleW.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(shuffleListener)
+    // Per-query shuffle BYTES (write side), metered around the cold run
+    // (Harness.measure): bytes are deterministic per execution (unlike
+    // wall-clock, steal can't fake them), so this is the scale posture
+    // number — a query whose bytes grow superlinearly with SF is the
+    // 100 TB bottleneck no local timing shows.
     val shuffleBytes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     // Per-query GC attribution (r12 verdict: several queries ran 3-6x
     // slower in-suite than solo with no steal evidence — the detector was
@@ -133,19 +116,14 @@ object Bench {
     // region, so every query starts from a clean heap exactly like its
     // solo profile (and like a fresh-executor cluster job); (b) the GC
     // seconds spent INSIDE each query's timed runs, written per-query to
-    // the output file and flagged when they dominate — turning "probably
-    // GC" into a number the next triage can read.
+    // the output file — turning "probably GC" into a number the next
+    // triage can read.
     def gcMs(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
     val gcSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val gcFlagged = scala.collection.mutable.LinkedHashSet.empty[String]
-    // cause label per warm>cold-flagged query, from steal/GC sampled
-    // around the trio whose median was actually PUBLISHED as warm (see
-    // the trio() note below)
-    val warmCause = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
       // cache isolation, same rationale as the forced GC below: an operator
       // that persists inside its returned plan (e.g. the LSH-decon slim
@@ -175,38 +153,14 @@ object Bench {
       }
       val s0 = stealJiffies()
       val tq0 = System.nanoTime()
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      val sb0 = shuffleW.get
-      val cold = once()
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      shuffleBytes(name) = shuffleW.get - sb0
+      val (cold, coldRun) = Harness.measure(spark)(once())
+      shuffleBytes(name) = coldRun.shuffleBytes
       // steady-state = MEDIAN of three warm runs: a single warm sample can
       // be poisoned by a GC pause (observed: 3.4 s on a 0.26 s query), and
       // min() of few samples biases optimistic (one lucky run sets the
       // number) — the median is robust to one outlier in either direction.
-      // Each trio also samples steal + GC around ITSELF: the whole-query
-      // steal detector below needs > max(2s, query wall) of steal to fire,
-      // so a smaller burst can poison every warm sample of a multi-second
-      // query and leave warm>cold "unexplained" (r12/r14's q_image_dhash:
-      // warm 5.67 s vs cold 0.93 s, gc 0.35 s, no steal flag — a
-      // sub-threshold burst is the only consistent account, and solo
-      // profiles are clean at 0.6 s). Attributing the trio turns the
-      // noise-floor substitution from silent masking into a labeled cause
-      // — "unknown" now MEANS "possibly a real warm-path regression".
-      // Trio stats travel WITH the samples and are kept paired with
-      // whichever trio's median is ultimately published: the earlier
-      // formulation read the LAST trio's counters, so a retry whose median
-      // did not beat the original published the FIRST trio's number with
-      // the RETRY trio's steal/GC evidence — a mislabeled cause on exactly
-      // the flagged queries the label exists to triage.
-      // (median, steal jiffies, gc sec, summed wall) per trio
-      def trio(): (Double, Long, Double, Double) = {
-        val ts0 = stealJiffies(); val tg0 = gcMs()
-        val xs = Seq(once(), once(), once())
-        (xs.sorted.apply(1), stealJiffies() - ts0,
-          (gcMs() - tg0) / 1000.0, xs.sum)
-      }
-      var (warm, warmTrioSteal, warmTrioGc, warmTrioSec) = trio()
+      def trio(): Double = Seq(once(), once(), once()).sorted.apply(1)
+      var warm = trio()
       // A warm median above the query's own cold time is physically
       // implausible on a quiet box (cold pays codegen on top of the same
       // work): a steal/GC burst poisoned all three samples. ONE bounded
@@ -214,13 +168,10 @@ object Bench {
       // number survives unless the rerun's median (not min) beats it, and
       // the retry is logged with the steal evidence.
       if (!failed.contains(name) && warm > cold * 1.10 && warm - cold > 0.25) {
-        val (again, aSteal, aGc, aSec) = trio()
+        val again = trio()
         val stolen = stealJiffies() - s0
         System.err.println(f"BENCH RETRY $name%-26s warm $warm%.2fs > cold $cold%.2fs (steal ${stolen}j) — rerun median ${again}%.2fs")
-        if (again < warm) {
-          warm = again
-          warmTrioSteal = aSteal; warmTrioGc = aGc; warmTrioSec = aSec
-        }
+        if (again < warm) warm = again
       }
       // The warm>cold check is blind to a steal burst that spans the WHOLE
       // query (cold and warm poisoned alike: this session's gate shipped
@@ -242,37 +193,13 @@ object Bench {
           // in-JVM (codegen is warm now) — flag it so cold_total readers
           // know which addends were measured under contention
           coldStealSuspect += name
-          val (again, aSteal, aGc, aSec) = trio()
+          val again = trio()
           System.err.println(f"BENCH STEAL-RETRY $name%-26s warm $warm%.2fs under ${stealSecQ}%.0f CPU-s steal — rerun median ${again}%.2fs")
-          if (again < warm) {
-            warm = again
-            warmTrioSteal = aSteal; warmTrioGc = aGc; warmTrioSec = aSec
-          } else stealFlagged += name
+          if (again < warm) warm = again
+          else stealFlagged += name
         }
       }
-      val gcSecQ = (gcMs() - gc0) / 1000.0
-      gcSecs(name) = gcSecQ
-      // flag when GC ate a core's worth of the query's own wall — with the
-      // pre-query System.gc() this should be the query's OWN allocation
-      // pressure, a real signal about the plan, not a neighbor's garbage
-      if (!failed.contains(name)) {
-        val wallSecQ = (System.nanoTime() - tq0) / 1e9
-        if (gcSecQ > math.max(1.0, 0.30 * wallSecQ)) {
-          gcFlagged += name
-          System.err.println(f"BENCH GC $name%-26s spent $gcSecQ%.2fs in GC over $wallSecQ%.2fs wall")
-        }
-      }
-      // attribute a would-be warm>cold flag while the trio stats are in
-      // scope (the flag list itself is recomputed post-loop from results)
-      if (!failed.contains(name) && warm > cold * 1.10 && warm - cold > 0.25) {
-        val stealSec = warmTrioSteal / 100.0
-        warmCause(name) =
-          if (stealSec >= 0.5 * warmTrioSec)
-            f"steal $stealSec%.1fs over $warmTrioSec%.1fs warm wall"
-          else if (warmTrioGc >= 0.5 * warmTrioSec)
-            f"gc $warmTrioGc%.1fs over $warmTrioSec%.1fs warm wall"
-          else "unknown — possibly a real warm-path regression"
-      }
+      gcSecs(name) = (gcMs() - gc0) / 1000.0
       if (failed.contains(name)) name -> (-1.0, -1.0) else name -> (warm, cold)
     }
     // Noise self-check (r7/r8 judge ask): a query's warm MEDIAN exceeding its
@@ -290,7 +217,7 @@ object Bench {
     }.sortBy { case (_, w, c) => -(w / c) }
     warmGtCold.foreach { case (k, w, c) =>
       System.err.println(f"BENCH NOISE $k%-26s warm $w%.2fs > cold $c%.2fs (${w / c}%.2fx) — " +
-        warmCause.getOrElse(k, "timing suspect") + "; rerun on a quiet box")
+        "timing suspect; rerun on a quiet box")
     }
     // Steady value per query: the warm median — EXCEPT when even the
     // retried median stays implausibly above the query's own cold run
@@ -445,21 +372,16 @@ object Bench {
     // flagged queries keep all three numbers in the file: the raw (noisy)
     // warm median, the cold run, and the min() that entered the totals
     val noiseJson = warmGtCold.map { case (k, w, c) =>
-      val cause = warmCause.getOrElse(k, "unattributed").replace("\"", "")
-      s""""$k":{"raw_warm":${r3(w)},"cold":${r3(c)},"used":${r3(math.min(w, c))},"cause":"$cause"}"""
+      s""""$k":{"raw_warm":${r3(w)},"cold":${r3(c)},"used":${r3(math.min(w, c))}}"""
     }.mkString("{", ",", "}")
     val stealTotal = stealJiffies() - stealStart
     val shuffleJson = shuffleBytes
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val gcJson = jmap(gcSecs)
-    val gcFlaggedJson = gcFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fileLine = s"""{"metric":"total","value":${r3(total)},"value_normalized":${r3(total * fpScale)},"fingerprint_ref":${r3(fpRef)},"unit":"sec","queries":$qs,"cold_total":${r3(coldTotal)},"queries_cold":$qsCold,"failed":$failedJson,"warm_gt_cold":$noiseJson,"steal_flagged":${stealFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")},"cold_steal_suspect":${coldStealSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")},"steal_jiffies":$stealTotal,"box_fingerprint_sec":${r3(boxFp)},"prefix_cache":{"hits":$pcHits,"misses":$pcMisses},"gc_sec":$gcJson,"gc_flagged":$gcFlaggedJson,"shuffle_bytes":$shuffleJson,"measure":"$measure","sf":"$sfDir"}"""
+    val fileLine = s"""{"metric":"total","value":${r3(total)},"value_normalized":${r3(total * fpScale)},"fingerprint_ref":${r3(fpRef)},"unit":"sec","queries":$qs,"cold_total":${r3(coldTotal)},"queries_cold":$qsCold,"failed":$failedJson,"warm_gt_cold":$noiseJson,"steal_flagged":${stealFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")},"cold_steal_suspect":${coldStealSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")},"steal_jiffies":$stealTotal,"box_fingerprint_sec":${r3(boxFp)},"prefix_cache":{"hits":$pcHits,"misses":$pcMisses},"gc_sec":$gcJson,"shuffle_bytes":$shuffleJson,"measure":"$measure","sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fileLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    // unregister before stop: a wrapper invoking main() twice on one
-    // session must not stack listeners
-    spark.sparkContext.removeSparkListener(shuffleListener)
     spark.stop()
   }
 }

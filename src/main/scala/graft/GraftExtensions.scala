@@ -15,8 +15,8 @@ import graft.streaming.LocalCheckpointFileManager
   * Column API, and making [[graft.streaming.LocalCheckpointFileManager]] the
   * session's checkpoint file manager unless the session already names one.
   * Install via
-  * `spark.sql.extensions=graft.GraftExtensions` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * `spark.sql.extensions=graft.GraftExtensions` or a session builder's
+  * `withExtensions(new GraftExtensions)`, as [[Harness.builder]] does.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,59 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: per-job wall-clock attribution for named SparkEntry queries —
-  * two warm-up runs (codegen + page cache), then a profiled run with a
-  * listener recording (jobId, duration, call site). This is the harness
-  * behind PERF.md's job-count verdicts (a query whose wall ≈ the sum of
-  * many sub-0.3 s sequential jobs is paying LOCAL job-submission latency,
-  * not data cost — the part a cluster amortizes; one fat job is a real
-  * target). Usage: `sbt "runMain graft.JobProfile q_curate_corpus,q_bfs_reach"`
-  * (env SPARK_GRAFT_SF_DIR overrides the corpus).
+  * two warm-up runs (codegen + page cache), then a profiled run under
+  * [[Harness.measure]], which records each job's id, duration and call site.
+  * This is the harness behind PERF.md's job-count verdicts (a query whose
+  * wall ≈ the sum of many sub-0.3 s sequential jobs is paying LOCAL
+  * job-submission latency, not data cost — the part a cluster amortizes;
+  * one fat job is a real target). Usage:
+  * `sbt "runMain graft.JobProfile q_curate_corpus,q_bfs_reach"` (env
+  * SPARK_GRAFT_SF_DIR overrides the corpus, SPARK_GRAFT_CPUS the local
+  * worker count; PERF.md's numbers were taken with SPARK_GRAFT_CPUS=32).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q_curate_corpus").split(",").toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .map(_.getProperty("spark.job.description", "")).getOrElse("")
-        val call = Option(j.properties)
-          .map(_.getProperty("callSite.short", "")).getOrElse("")
-        jobs.put(j.jobId, (System.nanoTime(), s"$call | ${desc.take(60)}"))
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val st = jobs.remove(j.jobId)
-        if (st != null) done.add((j.jobId, (System.nanoTime() - st._1) / 1e9, st._2))
-      }
-    }
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       fn(spark, sfDir).queryExecution.toRdd.count() // warm: codegen + page cache
       fn(spark, sfDir).queryExecution.toRdd.count()
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      done.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      val rows = done.asScala.toSeq.sortBy(_._1)
-      println(f"\n=== $name wall=$wall%.2fs jobs=${rows.size} jobsum=${rows.map(_._2).sum}%.2fs ===")
-      rows.foreach { case (id, sec, d) => println(f"  job $id%4d $sec%7.3fs  $d") }
+      val (_, run) = Harness.measure(spark)(fn(spark, sfDir).queryExecution.toRdd.count())
+      println(f"\n=== $name wall=${run.wallSec}%.2fs jobs=${run.jobs.size} " +
+        f"jobsum=${run.jobs.map(_.sec).sum}%.2fs ===")
+      run.jobs.foreach(j => println(f"  job ${j.id}%4d ${j.sec}%7.3fs  ${j.callSite}"))
     }
     spark.stop()
   }

@@ -21,7 +21,9 @@ import org.apache.spark.sql.SparkSession
   * store.
   *
   * Usage: `sbt "runMain graft.RocksDbParity"` (env SPARK_GRAFT_SF_DIR
-  * overrides the corpus; output lands on stdout for PERF.md).
+  * overrides the corpus, SPARK_GRAFT_CPUS the local worker and shuffle
+  * partition count — PERF.md's receipt ran with SPARK_GRAFT_CPUS=32;
+  * output lands on stdout for PERF.md).
   */
 object RocksDbParity {
   private val gates = Seq(
@@ -31,15 +33,8 @@ object RocksDbParity {
     "q_stream_recursive_parity")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
 
     // state-operator metrics receipt: collected off the progress events of
     // whichever gate is currently running (gates run sequentially)

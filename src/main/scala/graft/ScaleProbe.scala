@@ -3,59 +3,60 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry.inTmpDir
+
 /** Reproduces the README "scale probe": blows the sf0.1 test corpus up 10×
   * (each doc/vector duplicated with jitter — the realistic near-dup shape)
-  * into /tmp, then times the dedup/similarity pipelines on it. Run:
-  * `sbt "runMain graft.ScaleProbe"` (env `SPARK_GRAFT_SF_DIR` overrides the
-  * source corpus).
+  * under `java.io.tmpdir`, then times the dedup/similarity pipelines on it.
+  * Run: `sbt "runMain graft.ScaleProbe [mode] [factor]"` (env
+  * `SPARK_GRAFT_SF_DIR` overrides the source corpus, `SPARK_GRAFT_CPUS` the
+  * local worker count; the README's numbers were taken with
+  * SPARK_GRAFT_CPUS=32).
+  *
+  * With no mode every probe of the main flow runs. A mode runs only its own
+  * rows — the quick re-measure when one of them changes:
+  *  - `skew`: the skewed top-k probe;
+  *  - `ops`: the metered operator probes (census / split / boilerplate /
+  *    upsampling) and the skip-gram compare;
+  *  - `resolve`: the deep-chain duplicate-resolution row (the
+  *    min-label/pointer-halving loop);
+  *  - `curate`: the curate-pipeline 1x-vs-10x amortization row (the
+  *    job-count-overhead verdict);
+  *  - `coreset`: the k-center per-round flatness row (the running-min loop);
+  *  - `stream`: the streaming state-store probe (sessionize + funnel-TTL at
+  *    1x and 10x key cardinality);
+  *  - `snm`: the multi-pass SNM candidate-growth probe
+  *    (O(n·window·passes), per-pass contribution);
+  *  - `gates`: the dispatch-gate probes at one order of magnitude above
+  *    bench SF (where each gate flips and what each face costs).
+  * The optional factor is the blow-up (default 10× → 50k docs / 20k
+  * vectors; 50 for the 100k-vector crossover demonstration).
   */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // optional arg: blow-up factor (default 10× → 50k docs / 20k vectors;
-    // pass 50 for the 100k-vector crossover demonstration)
-    val modeNames = Set("skew", "ops", "resolve", "curate", "stream",
-      "coreset", "snm", "gates")
-    val nCopies = args.find(a => !modeNames.contains(a)).map(_.toInt).getOrElse(10)
-    // `runMain graft.ScaleProbe skew` runs ONLY the skewed top-k probe;
-    // `runMain graft.ScaleProbe ops` runs ONLY the metered operator probes
-    // (census / split / boilerplate / upsampling) — the quick re-measure
-    // mode when one of them changes
-    val skewOnly = args.contains("skew")
-    val opsOnly = args.contains("ops")
-    // `runMain graft.ScaleProbe resolve` runs ONLY the deep-chain
-    // duplicate-resolution row — the quick re-measure mode for the
-    // min-label/pointer-halving loop
-    val resolveOnly = args.contains("resolve")
-    // `runMain graft.ScaleProbe curate` runs ONLY the curate-pipeline
-    // 1x-vs-10x amortization row — the quick re-measure mode for the
-    // job-count-overhead verdict
-    val curateOnly = args.contains("curate")
-    // `runMain graft.ScaleProbe coreset` runs ONLY the k-center per-round
-    // flatness row — the quick re-measure mode for the running-min loop
-    val coresetOnly = args.contains("coreset")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // `runMain graft.ScaleProbe stream` runs ONLY the streaming state-store
-    // probe (sessionize + funnel-TTL at 1x and 10x key cardinality)
-    if (args.contains("stream")) { streamStateProbe(spark); spark.stop(); return }
-    // `runMain graft.ScaleProbe snm` runs ONLY the multi-pass SNM
-    // candidate-growth probe (O(n·window·passes), per-pass contribution)
-    if (args.contains("snm")) { snmProbe(spark, sfDir, nCopies); spark.stop(); return }
-    // `runMain graft.ScaleProbe gates` runs ONLY the dispatch-gate probes
-    // at one order of magnitude above bench SF (the r16 verdict's "100x
-    // question, measured": where each gate flips and what each face costs)
-    if (args.contains("gates")) { gatesProbe(spark, sfDir, nCopies); spark.stop(); return }
-    if (!resolveOnly)
-      blowUpCorpus(spark, sfDir, nCopies,
-        "/tmp/graft_probe_docs", "/tmp/graft_probe_vecs")
+  private val modes = Set("skew", "ops", "resolve", "curate", "stream",
+    "coreset", "snm", "gates")
 
-    lazy val d = spark.read.parquet("/tmp/graft_probe_docs")
-    lazy val v = spark.read.parquet("/tmp/graft_probe_vecs")
-    if (!resolveOnly) println(s"docs=${d.count()} vecs=${v.count()}")
+  def main(args: Array[String]): Unit = {
+    val sfDir = Harness.sfDir
+    val nCopies = args.find(a => !modes.contains(a)).map(_.toInt).getOrElse(10)
+    val mode = args.find(modes.contains).getOrElse("all")
+    val all = mode == "all"
+    def on(m: String): Boolean = all || mode == m
+    val small = nCopies <= 10
+    val spark = Harness.session()
+    mode match {
+      case "stream" => streamStateProbe(spark); spark.stop(); return
+      case "snm" => snmProbe(spark, sfDir, nCopies); spark.stop(); return
+      case "gates" => gatesProbe(spark, sfDir, nCopies); spark.stop(); return
+      case _ => ()
+    }
+    if (mode != "resolve")
+      blowUpCorpus(spark, sfDir, nCopies,
+        inTmpDir("graft_probe_docs"), inTmpDir("graft_probe_vecs"))
+
+    lazy val d = spark.read.parquet(inTmpDir("graft_probe_docs"))
+    lazy val v = spark.read.parquet(inTmpDir("graft_probe_vecs"))
+    if (mode != "resolve") println(s"docs=${d.count()} vecs=${v.count()}")
 
     def time(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val n = f
@@ -63,15 +64,13 @@ object ScaleProbe {
     }
     // Metered timer: wall-clock plus the facts that actually break at
     // 100 TB — total shuffle bytes/records and the slowest task (the skew
-    // signal local[32] wall-clock hides, because local shuffle is
-    // memory-speed). ONE implementation ([[Meter]]) shared with the
-    // standalone probe modes, thinly wrapped here because the dozens of
-    // existing call sites discard the row count.
-    val meter = new Meter(spark)
-    def timeM(name: String)(f: => Long): Unit = { meter.timeM(name)(f); () }
+    // signal local wall-clock hides, because local shuffle is
+    // memory-speed). ONE implementation ([[metered]]) shared with the
+    // standalone probe modes.
+    def timeM(name: String)(f: => Long): Long = metered(spark, name)(f)
     // doc pipelines only at the default factor — the big-factor runs target
     // the embedding crossover and 250k-doc all-pairs baselines take minutes
-    if (!skewOnly && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly && nCopies <= 10) {
+    if (all && small) {
       time("exact dedup") { graft.dedup.Dedup.exact(d, "text", "doc_id").count() }
       time("minhash+lsh pairs") {
         graft.dedup.Dedup.minhashPairs(d, "doc_id", "text", 5, 0.8).count() }
@@ -81,34 +80,29 @@ object ScaleProbe {
         graft.dedup.Dedup.simhashPairs(d, "doc_id", "text", maxHamming = 3).count() }
       time("ppjoin prefix-filter pairs") {
         graft.dedup.Dedup.ppjoinPairs(d, "doc_id", "text", 5, 4, 5).count() }
-    }
-    // exact all-pairs baselines only at the default factor: at 100k vectors
-    // (factor 50) the quadratic runs exceeded 30 minutes on local[32] before
-    // being killed — which IS the datapoint: past ~10^5 rows only the
-    // sub-quadratic path is viable, whatever its constants.
-    if (!skewOnly && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly && nCopies <= 10) {
+      // exact all-pairs baselines only at the default factor: at 100k
+      // vectors (factor 50) the quadratic runs exceeded 30 minutes with 32
+      // local workers before being killed — which IS the datapoint: past
+      // ~10^5 rows only the sub-quadratic path is viable, whatever its
+      // constants.
       time("embed near-dup exact") {
         graft.dedup.Dedup.embeddingNearDupExact(v, "vec_id", "embedding", 0.45).count() }
-    }
-    if (!skewOnly && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly && nCopies <= 10) {
       // Forced-LSH at τ=0.45 only at the default factor: at 100k vectors the
       // 99.9%-recall config is ~2.6e9 candidate dots + a 213M-row probe
       // shuffle — the cost model prices it ≈ exact, so the DISPATCHER would
       // pick exact; forcing LSH here just reproduces that prediction slowly.
       time("embed near-dup lsh (auto)") {
         graft.dedup.Dedup.embeddingNearDupLsh(v, "vec_id", "embedding", 64, 0.45).count() }
-    }
-    // High-threshold regime: p1 = 1-acos(0.7)/π ≈ 0.745, so signatures are
-    // far more selective per bit and few tables hold high recall — this is
-    // where hyperplane LSH decisively beats exact (low thresholds pay the
-    // recall tax in candidates; see Dedup.embeddingNearDupLsh docs).
-    if (!skewOnly && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly && nCopies <= 10) {
+      // High-threshold regime: p1 = 1-acos(0.7)/π ≈ 0.745, so signatures are
+      // far more selective per bit and few tables hold high recall — this is
+      // where hyperplane LSH decisively beats exact (low thresholds pay the
+      // recall tax in candidates; see Dedup.embeddingNearDupLsh docs).
       time("embed near-dup exact @0.7") {
         graft.dedup.Dedup.embeddingNearDupExact(v, "vec_id", "embedding", 0.7).count() }
     }
-    if (!skewOnly && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly) time("embed near-dup lsh  @0.7") {
+    if (all) time("embed near-dup lsh  @0.7") {
       graft.dedup.Dedup.embeddingNearDupLsh(v, "vec_id", "embedding", 64, 0.7).count() }
-    if (!skewOnly && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly && nCopies <= 10) {
+    if (all && small) {
       // the round-5 operators on the same blown-up corpus
       time("semantic dedup (k=64)") {
         val model = graft.similarity.KMeans.fit(v, "embedding", "vec_id", k = 64, maxIter = 5)
@@ -131,7 +125,7 @@ object ScaleProbe {
           .head().getSeq[Double](0).toIndexedSeq
         graft.similarity.Ann.quantizedTopK(v, "embedding", "vec_id", q, 20).count() }
     }
-    if (!skewOnly && !resolveOnly && !curateOnly && !coresetOnly) {
+    if (on("ops")) {
       // Native combinatorial generators vs their HOF formulations at 10×
       // corpus (the r13 swaps: SkipGramPairs in pmiPairs, Pair/TripleCombos
       // in the market-basket family). Same rows out — the delta is pure
@@ -161,7 +155,7 @@ object ScaleProbe {
       time("skipgram w=3 native") { sgNative() }
       time("skipgram w=3 HOF") { sgHof() }
     }
-    if ((!skewOnly && !opsOnly && !resolveOnly && !coresetOnly && nCopies <= 10) || curateOnly) {
+    if ((all && small) || mode == "curate") {
       // The "fixed job-submission overhead amortizes at scale" verdict for
       // the curate pipelines, MEASURED instead of extrapolated: the exact
       // q_curate_corpus_v2 stage chain (exact dedup → Gopher gate →
@@ -203,13 +197,13 @@ object ScaleProbe {
       // engine's fanOut guard exists for, and an artifact a real 10x
       // corpus (which arrives as many files) does not have. Same bytes,
       // 32-file layout: the delta is pure scan parallelism.
-      val multi = "/tmp/graft_probe_docs_multi"
+      val multi = inTmpDir("graft_probe_docs_multi")
       d.repartition(32, col("doc_id")).write.mode("overwrite").parquet(multi)
       val dMulti = spark.read.parquet(multi)
       curateV2(dMulti) // untimed warm-up
       timeM("curate_v2 pipeline 10x multifile") { curateV2(dMulti) }
     }
-    if ((!skewOnly && !opsOnly && !curateOnly && !coresetOnly) || resolveOnly) {
+    if (on("resolve")) {
       // Deep-chain duplicate resolution, distributed path FORCED
       // (maxDriverEdges = 0): a 2^14-node path graph is the adversarial
       // depth case for min-label propagation — the "near-dup components
@@ -225,8 +219,7 @@ object ScaleProbe {
         graft.dedup.Dedup.resolveDuplicates(chainEdges, maxDriverEdges = 0L)
           .count() }
     }
-    if ((!skewOnly && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly && nCopies <= 10)
-        || coresetOnly) {
+    if ((all && small) || mode == "coreset") {
       // Greedy k-center at two k values: the running-min formulation's claim
       // is per-round wall FLAT in |centers| (O(n) dots per round vs the
       // naive form's O(n·|centers|)). Marginal s/round between the two runs
@@ -260,7 +253,7 @@ object ScaleProbe {
       println(f"kcenter k=$k2 RELIABLE ckpt: $wr%.2f s " +
         f"(${wr / w2}%.2fx local mode — the durability premium)")
     }
-    if (!skewOnly && !resolveOnly && !curateOnly && !coresetOnly && nCopies <= 10) {
+    if (on("ops") && small) {
       // round-6 operators with an unprobed shuffle surface, metered: the
       // mixture census shuffles |strata| partial rows keyed by a LOW-
       // CARDINALITY stratum (worst case: one reducer per language takes the
@@ -420,16 +413,16 @@ object ScaleProbe {
     }
     // Skewed-key grouped top-k sweep: 10M ~170-byte rows (the "top documents
     // per stratum" shape), hot-key fraction f ∈ {uniform, 50%, 90%}. The
-    // wall-clock on local[32] understates the cluster gap (local shuffle is
-    // memory-speed and 32 threads saturate at 1000 keys anyway), so the
-    // probe ALSO records what actually breaks at 100 TB: total shuffle
+    // wall-clock with 32 local workers understates the cluster gap (local
+    // shuffle is memory-speed and 32 threads saturate at 1000 keys anyway),
+    // so the probe ALSO records what actually breaks at 100 TB: total shuffle
     // bytes (the window exchanges every byte of every row; the bounded agg
     // forwards <= k rows per key per mapper) and the slowest task (the
     // window sorts the hot key's f·10M rows in ONE task — its runtime grows
     // with f; the agg's partials stay balanced at any f). toRdd.count()
     // executes the FULL plan — a bare count() would let Catalyst prune the
     // payload column off the window side, deflating its shuffle.
-    if (nCopies <= 10 && !opsOnly && !resolveOnly && !curateOnly && !coresetOnly) {
+    if (on("skew") && small) {
       for (hotPct <- Seq(0, 50, 90)) {
         val skewed = spark.range(10L * 1000 * 1000).select(
           when(col("id") % 100 < hotPct, lit(0L)).otherwise(col("id") % 1000).as("k"),
@@ -441,8 +434,8 @@ object ScaleProbe {
           concat(sha2(col("id").cast("string"), 256),
             sha2((col("id") + 1).cast("string"), 256),
             sha2((col("id") + 2).cast("string"), 224)).as("payload"))
-        skewed.write.mode("overwrite").parquet("/tmp/graft_probe_skew")
-        val sk = spark.read.parquet("/tmp/graft_probe_skew")
+        skewed.write.mode("overwrite").parquet(inTmpDir("graft_probe_skew"))
+        val sk = spark.read.parquet(inTmpDir("graft_probe_skew"))
         timeM(s"top-5/key window   (hot=$hotPct%)") {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("k")).orderBy(col("v").desc, col("id").desc)
@@ -456,55 +449,20 @@ object ScaleProbe {
             .queryExecution.toRdd.count()
         }
       }
-      meter.close()
     }
     spark.stop()
   }
 
-  /** THE metered timer: wall plus the 100 TB facts (shuffle bytes/rows
-    * written, slowest task, SLOWTASK lines for >2 s stragglers). One
-    * implementation for the main flow and every standalone probe mode —
-    * two drifting copies of listener+counters is how probe sections stop
-    * being comparable. `timeM` returns the thunk's row count so probe
-    * callers can also assert/compare result parity; `close()` unregisters
-    * the listener.
+  /** THE metered timer: [[Harness.measure]] around the thunk, printed as one
+    * row of wall plus the 100 TB facts (shuffle bytes/rows written, slowest
+    * task). One implementation for the main flow and every standalone probe
+    * mode, so probe sections stay comparable. Returns the thunk's row count
+    * so probe callers can also assert/compare result parity.
     */
-  private final class Meter(spark: SparkSession) {
-    import java.util.concurrent.atomic.AtomicLong
-    private val shuffleW = new AtomicLong; private val shuffleRec = new AtomicLong
-    private val maxTask = new AtomicLong
-    private val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          shuffleW.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          shuffleRec.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten)
-          maxTask.updateAndGet(m => math.max(m, te.taskMetrics.executorRunTime))
-          if (te.taskMetrics.executorRunTime > 2000)
-            println(s"SLOWTASK stage=${te.stageId} ${te.taskMetrics.executorRunTime}ms " +
-              s"shufW=${te.taskMetrics.shuffleWriteMetrics.bytesWritten/1024}KB " +
-              s"shufR=${te.taskMetrics.shuffleReadMetrics.totalBytesRead/1024}KB " +
-              s"input=${te.taskMetrics.inputMetrics.bytesRead/1024}KB")
-          ()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def timeM(name: String)(f: => Long): Long = {
-      // flush pending task-end events from the previous run
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      shuffleW.set(0); maxTask.set(0); shuffleRec.set(0)
-      val t0 = System.nanoTime(); val n = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      println(f"$name%-40s $sec%6.2f s  shuffle=${shuffleW.get / 1024 / 1024}%5d MB / ${shuffleRec.get}%9d rows  maxTask=${maxTask.get}%6d ms  rows=$n")
-      n
-    }
-    def close(): Unit = spark.sparkContext.removeSparkListener(listener)
-  }
-
-  private def withMeter(spark: SparkSession)(
-      body: (String => (=> Long) => Long) => Unit): Unit = {
-    val m = new Meter(spark)
-    try body(m.timeM) finally m.close()
+  private def metered(spark: SparkSession, name: String)(f: => Long): Long = {
+    val (n, r) = Harness.measure(spark)(f)
+    println(f"$name%-40s ${r.wallSec}%6.2f s  shuffle=${r.shuffleBytes / 1024 / 1024}%5d MB / ${r.shuffleRecords}%9d rows  maxTask=${r.maxTaskMs}%6d ms  rows=$n")
+    n
   }
 
   /** Blow the sf corpus up nCopies× with near-dup jitter (each doc gets a
@@ -552,23 +510,22 @@ object ScaleProbe {
         when(col("copy") === 0, col("p_name"))
           .otherwise(concat(col("p_name"), lit(" v"), col("copy"))).as("p_name"),
         col("p_brand"), col("p_type"))
-      .write.mode("overwrite").parquet("/tmp/graft_probe_part10")
-    val part10 = spark.read.parquet("/tmp/graft_probe_part10")
+      .write.mode("overwrite").parquet(inTmpDir("graft_probe_part10"))
+    val part10 = spark.read.parquet(inTmpDir("graft_probe_part10"))
     val keys = Seq(col("p_name"), reverse(col("p_name")),
       concat_ws(" ", col("p_brand"), col("p_type"), col("p_name")))
-    withMeter(spark) { timeM =>
-      for ((nm, d) <- Seq("1x" -> part, s"${nCopies}x" -> part10)) {
-        val n = d.count()
-        var prev = 0L
-        for (p <- 1 to 3) {
-          val c = timeM(f"snm $nm%-4s n=$n%8d passes=$p") {
-            graft.dedup.Dedup.sortedNeighborPairsMulti(
-              d, "p_partkey", keys.take(p), window = 8).count()
-          }
-          println(f"    pass $p marginal pairs: ${c - prev}%8d " +
-            f"(cand/n/pass=${c.toDouble / n / p}%.2f, bound window-1=7)")
-          prev = c
+    def timeM(name: String)(f: => Long): Long = metered(spark, name)(f)
+    for ((nm, d) <- Seq("1x" -> part, s"${nCopies}x" -> part10)) {
+      val n = d.count()
+      var prev = 0L
+      for (p <- 1 to 3) {
+        val c = timeM(f"snm $nm%-4s n=$n%8d passes=$p") {
+          graft.dedup.Dedup.sortedNeighborPairsMulti(
+            d, "p_partkey", keys.take(p), window = 8).count()
         }
+        println(f"    pass $p marginal pairs: ${c - prev}%8d " +
+          f"(cand/n/pass=${c.toDouble / n / p}%.2f, bound window-1=7)")
+        prev = c
       }
     }
   }
@@ -602,7 +559,7 @@ object ScaleProbe {
     // vectors / 2.5M docs) so growth exponents are measured across
     // decades, not read off one ratio
     blowUpCorpus(spark, sfDir, nCopies,
-      "/tmp/graft_gates_docs_raw", "/tmp/graft_gates_vecs_raw")
+      inTmpDir("graft_gates_docs_raw"), inTmpDir("graft_gates_vecs_raw"))
     // re-lay the fixture out as 32 files: near-dup copies compress so well
     // that the whole blow-up lands in ONE snappy file, and a one-file corpus
     // makes every scan-bound face a SINGLE task — at 500x the dense
@@ -612,10 +569,10 @@ object ScaleProbe {
     // artifact DELIBERATELY (its "10x multifile" control), the gate probes
     // must not.
     for ((raw, out, key) <- Seq(
-        ("/tmp/graft_gates_docs_raw", "/tmp/graft_gates_docs", "doc_id"),
-        ("/tmp/graft_gates_vecs_raw", "/tmp/graft_gates_vecs", "vec_id")))
-      spark.read.parquet(raw).repartition(32, col(key))
-        .write.mode("overwrite").parquet(out)
+        ("graft_gates_docs_raw", "graft_gates_docs", "doc_id"),
+        ("graft_gates_vecs_raw", "graft_gates_vecs", "vec_id")))
+      spark.read.parquet(inTmpDir(raw)).repartition(32, col(key))
+        .write.mode("overwrite").parquet(inTmpDir(out))
     // ... and make local scans SPLIT like cluster scans: the 32 files
     // compress to ~1-2 MB each, so default file-packing
     // (maxPartitionBytes=128 MB) re-coalesces them into ONE input
@@ -629,13 +586,13 @@ object ScaleProbe {
     spark.conf.set("spark.sql.files.maxPartitionBytes", 4L << 20)
     spark.conf.set("spark.sql.files.openCostInBytes", 0L)
     try {
-    val v10 = spark.read.parquet("/tmp/graft_gates_vecs")
-    val d10 = spark.read.parquet("/tmp/graft_gates_docs")
-    def vAt(f: Int) = v10.filter(pmod(col("vec_id"), lit(nCopies)) < f)
-    val n1 = v10.count() / nCopies
-    val factors = (Seq(1, 3, 10) ++ Seq(nCopies)).distinct.filter(_ <= nCopies)
+      val v10 = spark.read.parquet(inTmpDir("graft_gates_vecs"))
+      val d10 = spark.read.parquet(inTmpDir("graft_gates_docs"))
+      def vAt(f: Int) = v10.filter(pmod(col("vec_id"), lit(nCopies)) < f)
+      val n1 = v10.count() / nCopies
+      val factors = (Seq(1, 3, 10) ++ Seq(nCopies)).distinct.filter(_ <= nCopies)
 
-    withMeter(spark) { timeM =>
+      def timeM(name: String)(f: => Long): Long = metered(spark, name)(f)
       println("=== gate 1: embeddingNearDup cost dispatch (tau=0.7) ===")
       // execute the AUTO face only through the measured decades (n ≤ 150k):
       // the candidate-growth exponent is already pinned across 2k → 20k →
@@ -716,7 +673,6 @@ object ScaleProbe {
           d10, benchD, "doc_id", "text", broadcastMaxRows = 1L).count() }
       println(s"  fallback row-parity: broadcast=$nb shuffle=$ns " +
         (if (nb == ns) "OK" else "MISMATCH"))
-    }
     } finally {
       // restore even when a probe body throws: an exception here used to
       // leave the whole session pinned at 4 MB partitions / zero open cost
@@ -749,16 +705,6 @@ object ScaleProbe {
   private def streamStateProbe(spark: SparkSession): Unit = {
     import spark.implicits._
     val baseUs = 1704067200000000L // 2024-01-01 UTC
-    def wipe(p: String): Unit = {
-      val path = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(path)) {
-        import scala.jdk.CollectionConverters._
-        scala.util.Using.resource(java.nio.file.Files.walk(path)) { st =>
-          st.iterator().asScala.toSeq.reverseIterator
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
-    }
     // events for K keys: burst 1 = 5 events 5 min apart starting at a
     // per-key offset (0..96 min); ODD keys get a burst 2 two hours later
     // (even keys go idle — the funnel-TTL eviction targets). ~7.5K rows.
@@ -772,59 +718,26 @@ object ScaleProbe {
               .otherwise(lit(7200000000L) + (col("j") - 5) * 300000000L)).as("ts"),
           concat(lit("s"), col("j") % 3).as("event_type"),
           (col("j") + 1).cast("double").as("value"))
-    // stage as 3 time-range files with ascending mtimes (the
-    // stageTimeSplitEvents shape): batch order == time order
-    def stage(df: org.apache.spark.sql.DataFrame, base: String): String = {
-      val landing = java.nio.file.Paths.get(s"$base/in")
-      java.nio.file.Files.createDirectories(landing)
-      val mm = df.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).head()
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val (b1, b2) = (lo + (hi - lo) / 3, hi - (hi - lo) / 3)
-      Seq(df.filter(unix_micros(col("ts")) <= b1),
-        df.filter(unix_micros(col("ts")) > b1 && unix_micros(col("ts")) <= b2),
-        df.filter(unix_micros(col("ts")) > b2)).zipWithIndex.foreach { case (p, i) =>
-        val tmp = s"$base/tmp_$i"
-        p.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = scala.util.Using.resource(
-            java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { st =>
-          st.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        }
-        val dst = landing.resolve(f"ev_$i%02d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 10000L))
-      }
-      landing.toString
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
     def run(name: String, k: Int, mode: String)(
         mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
-      val base = s"/tmp/graft_probe_stream_${name}_$k"
-      wipe(base)
-      val landing = stage(events(k), base)
-      val src = spark.readStream.format("parquet").schema(schema)
-        .option("maxFilesPerTrigger", "1").load(landing)
+      val base = inTmpDir(s"graft_probe_stream_${name}_$k")
+      SparkEntry.wipeTree(base)
+      // 3 time-range files with ascending mtimes (the stageTimeSplitEvents
+      // shape): batch order == time order
+      val landing = java.nio.file.Paths.get(s"$base/in")
+      val ev = events(k)
+      SparkEntry.landTimeSplit(ev, base, landing)
+      val src = spark.readStream.format("parquet").schema(ev.schema)
+        .option("maxFilesPerTrigger", "1").load(landing.toString)
       // 4 state partitions at 1x, 8 at 10x (the key-space sizing rule the
       // parity queries use): per-batch per-partition delta-file overhead
       // stays fixed while rows/partition grows 5x
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        spark.conf.set("spark.sql.shuffle.partitions",
-          if (k > 10000) "8" else "4")
+      val q = SparkEntry.withStatePartitions(spark, if (k > 10000) 8 else 4) {
         mk(src).writeStream.outputMode(mode).format("noop")
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       val t0 = System.nanoTime()
       q.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9

@@ -215,7 +215,7 @@ object SparkEntry {
   /** The JVM's temp directory (`java.io.tmpdir`), under which the stream
     * gates' trees and the layout and format gates' tables are written. */
   private def tmpDir: String = System.getProperty("java.io.tmpdir")
-  private def inTmpDir(name: String): String =
+  private[graft] def inTmpDir(name: String): String =
     java.nio.file.Paths.get(tmpDir, name).toString
 
   /** App-scoped temp-dir base for a streaming query's staging/run tree. The
@@ -327,7 +327,7 @@ object SparkEntry {
     * queries, which keep exactly ONE fixed tree per sf dir alive (wiped on
     * the way in, so bench retries never accumulate temp-dir garbage).
     */
-  private def wipeTree(base: String): Unit = {
+  private[graft] def wipeTree(base: String): Unit = {
     val p = java.nio.file.Paths.get(base)
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._
@@ -479,39 +479,47 @@ object SparkEntry {
     statefulStageDone.synchronized {
       if (!statefulStageDone.contains(key)) {
         wipeTree(base)
-        java.nio.file.Files.createDirectories(landing)
-        val ev = t(s, dir, "events")
+        landTimeSplit(t(s, dir, "events")
           .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-            col("value"))
-        val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-          max(unix_micros(col("ts"))).as("hi")).head()
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        val span = hi - lo
-        val (b1, b2) = (lo + span / 3, hi - span / 3)
-        val parts = Seq(
-          ev.filter(unix_micros(col("ts")) <= b1),
-          ev.filter(unix_micros(col("ts")) > b1 && unix_micros(col("ts")) <= b2),
-          ev.filter(unix_micros(col("ts")) > b2))
-        parts.zipWithIndex.foreach { case (p, i) =>
-          val tmp = s"$base/tmp_$i"
-          p.coalesce(1).write.mode("overwrite").parquet(tmp)
-          // Using.resource: Files.list holds a directory fd until closed
-          val part = scala.util.Using.resource(
-              java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { st =>
-            st.filter(f => f.getFileName.toString.endsWith(".parquet"))
-              .findFirst().get()
-          }
-          val dst = landing.resolve(f"events_$i%02d.parquet")
-          java.nio.file.Files.move(part, dst)
-          // distinct ascending mtimes: FileStreamSource admits oldest-first,
-          // so batch order == time order (a tie would leave order to listing)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 10000L))
-        }
+            col("value")), base, landing)
         statefulStageDone.add(key) // only after staging fully succeeded
       }
     }
     landing.toString
+  }
+
+  /** Land `ev` in `landing` as three Parquet files `events_00..02`, split at
+    * the thirds of its `ts` range (equal-ts rows land in ONE file), each
+    * written through `base/tmp_<i>`.
+    */
+  private[graft] def landTimeSplit(ev: DataFrame, base: String,
+                                   landing: java.nio.file.Path): Unit = {
+    java.nio.file.Files.createDirectories(landing)
+    val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
+      max(unix_micros(col("ts"))).as("hi")).head()
+    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+    val span = hi - lo
+    val (b1, b2) = (lo + span / 3, hi - span / 3)
+    val parts = Seq(
+      ev.filter(unix_micros(col("ts")) <= b1),
+      ev.filter(unix_micros(col("ts")) > b1 && unix_micros(col("ts")) <= b2),
+      ev.filter(unix_micros(col("ts")) > b2))
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val tmp = s"$base/tmp_$i"
+      p.coalesce(1).write.mode("overwrite").parquet(tmp)
+      // Using.resource: Files.list holds a directory fd until closed
+      val part = scala.util.Using.resource(
+          java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { st =>
+        st.filter(f => f.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get()
+      }
+      val dst = landing.resolve(f"events_$i%02d.parquet")
+      java.nio.file.Files.move(part, dst)
+      // distinct ascending mtimes: FileStreamSource admits oldest-first,
+      // so batch order == time order (a tie would leave order to listing)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 10000L))
+    }
   }
 
   private def streamStatefulParityQ(s: SparkSession, dir: String): DataFrame = {
@@ -553,7 +561,7 @@ object SparkEntry {
     * caller starts a FRESH checkpoint, so the burned-in value never
     * conflicts.
     */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(start: => A): A =
+  private[graft] def withStatePartitions[A](s: SparkSession, n: Int)(start: => A): A =
     // synchronized on the session: the get/set/restore is non-atomic, and
     // two threads building gated queries on one session would otherwise
     // race — one could read the other's temporary n as "prev" and leak it

@@ -103,7 +103,7 @@ object Ann {
     * model: candidate verifications `n²/2 · T · probes(b) / 2^b` at weight
     * 1 plus probe-row handling `n · T · probes(b)` at weight `rowWeight`
     * (a shuffled/exploded probe row costs ~10× a codegen'd dot+hash probe,
-    * measured on local[32]). The interesting consequence, measured at 20k
+    * measured with 32 local workers). The interesting consequence, measured at 20k
     * vectors: multiprobe wins at LOW thresholds (it is the only way to stay
     * recall-feasible under the table clamp), while at high thresholds
     * single-probe with more tables wins because the (1+b)× probe-row

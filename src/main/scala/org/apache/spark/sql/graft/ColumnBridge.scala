@@ -54,4 +54,9 @@ object ColumnBridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The listeners of class `T` on the context's bus (`private[spark]`). */
+  def listenersOf[T <: org.apache.spark.scheduler.SparkListenerInterface : scala.reflect.ClassTag](
+      sc: org.apache.spark.SparkContext): Seq[T] =
+    sc.listenerBus.findListenersByClass[T]()
 }

@@ -4,18 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (sessions are expensive;
-  * every spec gets the same deterministic config as Verify/Bench).
+  * every spec gets the same deterministic config as Verify/Bench). Four
+  * workers whatever `SPARK_GRAFT_CPUS` says, so the specs' partitioning
+  * does not follow the box.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Harness.builder(4)
       .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .getOrCreate()

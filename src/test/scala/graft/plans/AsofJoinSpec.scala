@@ -189,28 +189,12 @@ class AsofJoinSpec extends SparkSpec {
     // combined schema. UnsafeRow null slots + lz4 keep the padding modest
     // (measured ~21% on matched narrow sides, ~3% under a dominant wide
     // left) — this asserts the strict direction, not a fantasy factor.
-    import java.util.concurrent.atomic.AtomicLong
-    val shuffleW = new AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          shuffleW.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-        }
-    }
     val left = spark.range(20000).select(col("id") % 50 as "user_id",
       col("id") % 977 as "ts", col("id") as "purchase_id")
     val right = spark.range(20000).select(col("id") % 50 as "user_id",
       col("id") % 991 as "ts", (col("id") % 100).cast("double").as("v"))
-    def measure(df: org.apache.spark.sql.DataFrame): Long = {
-      org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      shuffleW.set(0)
-      try {
-        df.queryExecution.toRdd.count()
-        org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      shuffleW.get
-    }
+    def measure(df: org.apache.spark.sql.DataFrame): Long =
+      graft.Harness.measure(spark)(df.queryExecution.toRdd.count())._2.shuffleBytes
     val composedBytes = measure(
       Analytics.asofJoin(left, right, "user_id", "ts", "ts", Seq("v")))
     val mergedBytes = measure(
