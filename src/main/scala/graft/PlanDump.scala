@@ -13,6 +13,8 @@ package graft
   * overrides the corpus, SPARK_GRAFT_CPUS the local worker and shuffle
   * partition count; the committed `plans/` were dumped with
   * SPARK_GRAFT_CPUS=32, and the partition count shows in every exchange).
+  * Expression and plan ids are renumbered (see [[renumber]]), so two dumps
+  * of one plan are byte-identical.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,17 +28,30 @@ object PlanDump {
     val spark = Harness.session()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val qe = df.queryExecution
-      qe.toRdd.count() // execute so AQE finalizes every adaptive plan
-      val txt = new StringBuilder
-      txt ++= s"== $name @ $sfDir (executed; AQE final where adaptive) ==\n\n"
-      txt ++= qe.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
-        txt.toString.getBytes("UTF-8"))
+        dump(spark, sfDir, name).getBytes("UTF-8"))
       println(s"wrote ${outDir.resolve(s"${name}_$suffix.txt")}")
     }
     spark.stop()
   }
+
+  /** One query's file: its formatted plan after one run, with ids renumbered. */
+  def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String, name: String): String = {
+    val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+    qe.toRdd.count() // execute so AQE finalizes every adaptive plan
+    renumber(s"== $name @ $sfDir (executed; AQE final where adaptive) ==\n\n" +
+      qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+  }
+
+  /** Renumbers each `#<exprId>` and each `plan_id=<n>` from 0 in order of
+    * first appearance. Both come from JVM-wide counters, so the raw numbers
+    * change from run to run; the renumbered ones still match wherever the
+    * plan refers to one id twice.
+    */
+  private[graft] def renumber(plan: String): String =
+    Seq("#", "plan_id=").foldLeft(plan) { (text, prefix) =>
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      s"${scala.util.matching.Regex.quote(prefix)}(\\d+)".r.replaceAllIn(text, m =>
+        prefix + ids.getOrElseUpdate(m.group(1), ids.size))
+    }
 }

@@ -81,13 +81,18 @@ object SparkEntry {
   private case class FileVersion(path: String, length: Long, mtime: Long)
 
   private def fileVersion(s: SparkSession, path: String): FileVersion = {
+    import org.apache.hadoop.fs.FileStatus
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val q = fs.makeQualified(p)
-    val files = fs.listFiles(q, true)
+    // plain statuses: `listFiles`' LocatedFileStatus reads each file's
+    // permission, which on a local file without Hadoop's native library
+    // forks an `ls`
+    def files(st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(files)
+      else Iterator(st)
     var length, mtime = 0L
-    while (files.hasNext) {
-      val f = files.next()
+    files(fs.getFileStatus(q)).foreach { f =>
       length += f.getLen
       mtime = math.max(mtime, f.getModificationTime)
     }

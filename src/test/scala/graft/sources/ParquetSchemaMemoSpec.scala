@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{ProcessStarts, SparkEntry, SparkSpec}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -73,6 +73,22 @@ class ParquetSchemaMemoSpec extends SparkSpec {
     // a filtered projection plans the same too (pushed filters, read schema)
     val q = (df: DataFrame) => df.filter(col("score") > 0).select(col("id"), col("xs"))
     assert(plan(q(cached)) === plan(q(inferred)))
+  }
+
+  test("a memoized read starts no process; a located listing of the same file does") {
+    val dir = Files.createTempDirectory("graft_memo")
+    writeTable(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir, "memo_fork")
+    SparkEntry.t(spark, dir.toString, "memo_fork") // infers and memoizes the schema
+    val inEntry = ProcessStarts.inClass(SparkEntry.getClass.getName.stripSuffix("$")) _
+    assert(ProcessStarts.count(inEntry)(SparkEntry.t(spark, dir.toString, "memo_fork")) === 0)
+    // the LocatedFileStatus walk the version check replaced forks an `ls`
+    // per file without Hadoop's native library: the recording sees it
+    val p = new org.apache.hadoop.fs.Path(dir.resolve("memo_fork.parquet").toString)
+    val located = ProcessStarts.count(ProcessStarts.inClass(getClass.getName)) {
+      val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      while (files.hasNext) files.next()
+    }
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) assert(located > 0)
   }
 
   test("a rewrite with a different column set is read with its new columns") {

@@ -7,8 +7,6 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
@@ -16,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{ProcessStarts, SparkSpec}
 
 /** A local file system under its own scheme, counting the files created
   * through it: the stand-in for a remote store in the delegation case. */
@@ -125,24 +123,8 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
 
   /** Processes started while `body` runs whose stack passes through a
     * checkpoint file manager or a state store provider, recorded by JFR. */
-  private def checkpointForks(body: => Unit): Int = {
-    val rec = new Recording()
-    try {
-      rec.enable("jdk.ProcessStart").withStackTrace()
-      rec.start()
-      try body finally rec.stop()
-      val f = Files.createTempFile("graft_forks", ".jfr")
-      try {
-        rec.dump(f)
-        RecordingFile.readAllEvents(f).asScala.count { e =>
-          Option(e.getStackTrace).exists(_.getFrames.asScala.exists { fr =>
-            val cls = fr.getMethod.getType.getName
-            cls.contains("CheckpointFileManager") || cls.contains("StateStoreProvider")
-          })
-        }
-      } finally Files.deleteIfExists(f)
-    } finally rec.close()
-  }
+  private def checkpointForks(body: => Unit): Int =
+    ProcessStarts.count(ProcessStarts.inClass("CheckpointFileManager", "StateStoreProvider"))(body)
 
   /** A three-batch streamingSessionize lifecycle into a sink that drops the
     * rows (it must still consume every partition: Spark checks that each
