@@ -1,20 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.core.Topology
-import graft.operators.{Analytics, ReferenceOps}
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.dedup.Dedup
-import graft.pipeline.TrainingData
-import graft.similarity.Ann
-import graft.multimodal.Multimodal
+import graft.queries._
 
 /** Driver contract (see SURVEY.md §5.2/§7). Every operator from SURVEY §2
   * plus the north-star LLM-pipeline operators is exposed as a named query
   * over the driver's Parquet tables, with a DuckDB oracle where the
-  * semantics are ANSI-SQL-expressible.
+  * semantics are ANSI-SQL-expressible. Each query is one
+  * [[graft.queries.QueryDef]] in its family's file under `graft.queries`,
+  * next to its oracle; this object holds the registry built from them,
+  * [[entry]], the shared table read ([[t]]) and the stream-tree layer the
+  * stream gates stage into.
   *
   * Oracle-compat rules used throughout (SURVEY §7.3.4):
   *  - every computed column is aliased identically in Spark and SQL;
@@ -42,23 +39,39 @@ object SparkEntry {
       case None =>
         // Event tables have shipped `ts` as both TIMESTAMP(NANOS) (unreadable
         // without the legacy nanos-as-long conf) and plain timestamp[us]. Our
-        // own sessions set the conf at build time; for a caller-supplied
-        // session, only flip it if the nanos footer actually rejects the read.
+        // own sessions set the conf at build time. For a caller-supplied
+        // session it is set only while the schema is inferred, and only if
+        // the nanos footer rejects the read: a read bound to that LongType
+        // schema executes without the conf, so the caller's session is left
+        // as it was.
         val inferred =
           try s.read.parquet(path)
           catch {
             case e: Exception if e.getMessage != null && e.getMessage.contains("NANOS") =>
-              s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-              s.read.parquet(path)
+              val schema = withConf(s, "spark.sql.legacy.parquet.nanosAsLong", "true")(
+                s.read.parquet(path).schema)
+              s.read.schema(schema).parquet(path)
           }
-        // `key` is re-read here: the schema belongs to the settings in force
-        // when inference succeeded, so a session without nanosAsLong never
-        // binds to the LongType `ts` a nanosAsLong read inferred.
+        // under the caller's settings, this file version always reads with
+        // the schema just found, so later reads skip the failed inference
         parquetSchemas.put(key, inferred.schema)
         inferred
     }
     if (name == "events") normalizeEventTs(df) else df
   }
+
+  /** Runs `body` with one session setting changed, then puts it back as it
+    * was. Synchronized on the session: the get/set/restore is not atomic,
+    * and two threads changing one session would otherwise race, one reading
+    * the other's temporary value as the one to restore. Java monitors are
+    * reentrant, so a nested use on one thread restores outside-in.
+    */
+  private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A =
+    s.synchronized {
+      val prev = s.conf.getOption(key)
+      s.conf.set(key, value)
+      try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    }
 
   /** The session settings that change the schema Spark infers for a Parquet
     * file: how its physical types map to Spark types, and whether a
@@ -70,6 +83,7 @@ object SparkEntry {
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.mergeSchema")
+
   private val parquetSchemas = scala.collection.concurrent.TrieMap
     .empty[(FileVersion, Seq[String]), org.apache.spark.sql.types.StructType]
 
@@ -121,49 +135,6 @@ object SparkEntry {
     }
   }
 
-  /** English stopword list shared by Spark and oracle SQL. */
-  private def sqlList(xs: Seq[String]): String = xs.map(x => s"'$x'").mkString("[", ",", "]")
-
-  /** SQL twin of one [[graft.operators.Analytics.corrPairs]] output row:
-    * Pearson r from the exact decimal moment sums of CTE `m`, with the
-    * identical left-to-right double arithmetic as the Spark side.
-    */
-  private def duckCorrArm(x: String, y: String): String =
-    s"""SELECT '$x' AS x_col, '$y' AS y_col,
-       |  round((CAST(n AS DOUBLE)*CAST(p_${x}__$y AS DOUBLE) - CAST(s_$x AS DOUBLE)*CAST(s_$y AS DOUBLE)) /
-       |    sqrt((CAST(n AS DOUBLE)*CAST(q_$x AS DOUBLE) - CAST(s_$x AS DOUBLE)*CAST(s_$x AS DOUBLE)) *
-       |         (CAST(n AS DOUBLE)*CAST(q_$y AS DOUBLE) - CAST(s_$y AS DOUBLE)*CAST(s_$y AS DOUBLE))), 6) AS corr_v
-       |FROM m""".stripMargin
-
-  /** SQL twins of [[graft.operators.Analytics.emaTrunc]]'s numerator and
-    * denominator: the same exact-decimal weight literals ((1−α)ᵏ
-    * terminates), one lag() term per depth step over the shared window `w`.
-    */
-  private def duckEmaW(k: Int, ratio: BigDecimal): String =
-    (ratio.pow(k) * BigDecimal(10).pow(19)).toBigInt.toString
-
-  private def duckEmaNum(depth: Int, ratio: BigDecimal): String =
-    (0 until depth).map { k =>
-      val x = if (k == 0) "xv" else s"lag(xv, $k) OVER w"
-      s"COALESCE(($x) * CAST('${duckEmaW(k, ratio)}' AS DECIMAL(20,0)), CAST(0 AS DECIMAL(35,0)))"
-    }.mkString(" + ")
-
-  private def duckEmaDen(depth: Int, ratio: BigDecimal): String =
-    (0 until depth).map { k =>
-      val x = if (k == 0) "xv" else s"lag(xv, $k) OVER w"
-      s"CASE WHEN ($x) IS NOT NULL THEN CAST('${duckEmaW(k, ratio)}' AS DECIMAL(20,0)) ELSE CAST(0 AS DECIMAL(20,0)) END"
-    }.mkString(" + ")
-
-  /** SQL expansion of the [[graft.expressions.InterleaveBits]] Morton key:
-    * one disjoint shift/mask term per bit position of each dimension, summed
-    * (terms never overlap, so + == |). Generated, not hand-typed — the bit
-    * count must match the Spark side's `bits` exactly.
-    */
-  private def duckInterleave(x: String, y: String, bits: Int): String =
-    (0 until bits).map { i =>
-      s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})"
-    }.mkString(" + ")
-
   /** Memoized row count per table version — LSH auto-sizing needs the
     * corpus size driver-side; one metadata-only count job per table version,
     * not one per query invocation. Keyed on [[fileVersion]], so a table
@@ -171,55 +142,14 @@ object SparkEntry {
     * bitsFor/broadcast gating.
     */
   private val countCache = scala.collection.concurrent.TrieMap.empty[FileVersion, Long]
-  private def tableCount(s: SparkSession, dir: String, name: String): Long =
+
+  private[graft] def tableCount(s: SparkSession, dir: String, name: String): Long =
     countCache.getOrElseUpdate(fileVersion(s, s"$dir/$name.parquet"), t(s, dir, name).count())
-
-  // ------------------------------------------------------------ reference surface
-
-  /** P1+P2+P3 — filter on amount, key-preserving projection (core.clj:77-83). */
-  private def filterProject(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .filter(col("o_totalprice") >= 250000)
-      .select(col("o_orderkey").as("key"), col("o_custkey").as("user_id"),
-        col("o_totalprice").as("amount"))
-
-  /** P4+P5 — cents→units rescale with truncation + value reshape (core.clj:112-118). */
-  private def donationRescale(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .filter(col("value") * 100 >= 10000)
-      .select(col("event_id").as("key"), col("user_id"),
-        ReferenceOps.centsToUnits(col("value") * 100).as("amount"))
-
-  /** M1/M2 — schema-normalized bag-union of two branches (core.clj:130-134). */
-  private def mergeUnion(s: SparkSession, dir: String): DataFrame = {
-    val purchases = t(s, dir, "orders")
-      .filter(col("o_totalprice") >= 250000)
-      .select(col("o_custkey").as("user_id"), col("o_totalprice").cast("int").as("amount"))
-    val donations = t(s, dir, "events")
-      .filter(col("value") * 100 >= 10000)
-      .select(col("user_id"), ReferenceOps.centsToUnits(col("value") * 100).as("amount"))
-    ReferenceOps.merge(Seq(purchases, donations))
-  }
-
-  /** T1+T2 — the full Part-3 topology (core.clj:139-157) compiled and run in
-    * batch (experiment) mode: orders play `purchase-made`, events play
-    * `humble-donation-made` (FIXTURES.md §B mapping).
-    */
-  private def topologyTransactions(s: SparkSession, dir: String): DataFrame = {
-    val purchases = t(s, dir, "orders").select(
-      col("o_orderkey").as("key"), col("o_custkey").as("user_id"),
-      col("o_totalprice").as("amount"))
-    val donations = t(s, dir, "events").select(
-      col("event_id").as("key"), col("user_id"),
-      (col("value") * 100).as("donation_amount_cents"))
-    ReferenceOps.transactionTopology
-      .compile(Map("purchase-made" -> purchases, "humble-donation-made" -> donations))
-      .apply("large-transaction-made")
-  }
 
   /** The JVM's temp directory (`java.io.tmpdir`), under which the stream
     * gates' trees and the layout and format gates' tables are written. */
   private def tmpDir: String = System.getProperty("java.io.tmpdir")
+
   private[graft] def inTmpDir(name: String): String =
     java.nio.file.Paths.get(tmpDir, name).toString
 
@@ -241,6 +171,7 @@ object SparkEntry {
     * at most the last day of app trees instead of growing forever.
     */
   private[graft] val staleSweepDone = new java.util.concurrent.atomic.AtomicBoolean
+
   private[graft] def streamBase(s: SparkSession, tag: String, dir: String): String = {
     val app = s.sparkContext.applicationId.replaceAll("\\W", "_")
     if (staleSweepDone.compareAndSet(false, true)) {
@@ -320,6 +251,7 @@ object SparkEntry {
     * under the lock via the listener-type scan.
     */
   private val heartbeatLock = new Object
+
   private def registerHeartbeat(s: SparkSession): Unit =
     heartbeatLock.synchronized {
       try {
@@ -347,86 +279,6 @@ object SparkEntry {
     }
   }
 
-  /** S1+S2+S5+T5 under the driver gate: the SAME Part-3 topology as
-    * [[topologyTransactions]], but executed through the live Structured
-    * Streaming runtime inside the query — file-stream sources (schema
-    * declared, directory-watched, checkpoint-tracked: the broker-less
-    * topic binding), the topology compiler over STREAMING DataFrames,
-    * [[graft.streaming.StreamRunner.fileSink]] (checkpointed append sink,
-    * `Trigger.AvailableNow`), then the sink directory read back as the
-    * result. The oracle is the batch experiment's SQL verbatim — stream
-    * parity IS the claim (`core.clj:224-234`'s run-experiment promises the
-    * live topology computes what the simulation computed; this gate checks
-    * it every round against DuckDB, so a streaming-runtime regression is
-    * driver-visible, not just spec-visible). Fresh checkpoint/sink dirs
-    * per invocation: this query measures a COLD end-to-end streaming run,
-    * lifecycle included.
-    */
-  private def streamParityQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    // FIXED per-sfdir base, wiped at entry: a fresh nanoTime tree per
-    // invocation leaked ~6 directories per bench+verify round (cold + 3
-    // warm + retries); wiping the previous tree on the way in keeps at
-    // most ONE tree alive per sf dir while still giving every invocation
-    // the cold checkpoint/sink this query exists to measure
-    val base = streamBase(s, "parity", dir)
-    wipeTree(base)
-    val ordersSchema = StructType(Seq(
-      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-      StructField("o_totalprice", DoubleType)))
-    val eventsSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("value", DoubleType)))
-    // stage each single-file table into a watched landing directory — the
-    // file source's contract is "files arrive under a path" (like topic
-    // partitions), not "read this one file"
-    def stage(table: String): String = {
-      val in = java.nio.file.Paths.get(s"$dir/$table.parquet")
-      // a directory-style table would Files.copy as an EMPTY dir and the
-      // stream would silently drain zero rows — fail loud instead (staging
-      // a multi-file table means copying its part files, not the dir node)
-      require(java.nio.file.Files.isRegularFile(in),
-        s"stream_parity stages single-file tables; $in is not a regular file")
-      val landing = java.nio.file.Paths.get(s"$base/in_$table")
-      java.nio.file.Files.createDirectories(landing)
-      java.nio.file.Files.copy(in, landing.resolve(s"$table.parquet"))
-      landing.toString
-    }
-    val purchases = graft.streaming.StreamRunner
-      .fileSource(s, stage("orders"), ordersSchema, format = "parquet")
-      .select(col("o_orderkey").as("key"), col("o_custkey").as("user_id"),
-        col("o_totalprice").as("amount"))
-    val donations = graft.streaming.StreamRunner
-      .fileSource(s, stage("events"), eventsSchema, format = "parquet")
-      .select(col("event_id").as("key"), col("user_id"),
-        (col("value") * 100).as("donation_amount_cents"))
-    val engine = graft.streaming.StreamRunner.start(
-      ReferenceOps.transactionTopology,
-      Map("purchase-made" -> purchases, "humble-donation-made" -> donations),
-      (sink, df) => graft.streaming.StreamRunner.fileSink(
-        df, s"$base/$sink", s"$base/ckpt_$sink"))
-    engine.awaitAll() // AvailableNow: terminates once the input is drained
-    engine.stop()
-    s.read.parquet(s"$base/large-transaction-made")
-  }
-
-  /** STATEFUL streaming under the driver gate — the arbitrary-state
-    * (`flatMapGroupsWithState`) runtime path that [[streamParityQ]]'s
-    * stateless topology never exercises: the events table is staged as
-    * THREE time-range files (every ts in file i ≤ every ts in file i+1,
-    * the Kafka per-partition ordering guarantee the operator models),
-    * `maxFilesPerTrigger=1` forces three ordered micro-batches with real
-    * cross-batch state-store round-trips (mtime-spaced files — the file
-    * source admits oldest-first), and
-    * [[graft.streaming.StatefulOps.streamingAsofEnrich]] carries each
-    * user's latest view across batches to enrich later-batch purchases.
-    * The oracle is the batch q_asof_join SQL verbatim — live stateful
-    * runtime == batch custom operator, hash-checked every round (the
-    * parity was previously only spec-visible). Equal-ts view/purchase
-    * collisions would make arrival order authoritative where ASOF is
-    * order-blind; the data has none (verified at every SF), and the
-    * StatefulOpsSpec pins the trade.
-    */
   /** Per-JVM memo of the staged 3-file time-split input (bucketed-fixture
     * pattern): staging — span boundaries + three coalesce(1) writes — is
     * test-fixture construction, not the runtime under gate; paying it
@@ -527,37 +379,6 @@ object SparkEntry {
     }
   }
 
-  private def streamStatefulParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val base = streamBase(s, "stateful", dir)
-    val landing = java.nio.file.Paths.get(stageTimeSplitEvents(s, dir))
-    // fresh streaming run dirs per invocation (the part under gate)
-    val runBase = s"$base/run"
-    wipeTree(runBase)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing.toString, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .as[graft.streaming.EnrichEvent]
-    val enriched = graft.streaming.StatefulOps
-      .streamingAsofEnrich(src, refType = "view", factType = "purchase")
-      .select(col("event_id"), col("user_id"), col("value"),
-        col("prior_view_value"))
-    // SIZE THE STATE PARTITIONS TO THE KEY SPACE: a stateful query's
-    // shuffle-partition count is burned into its checkpoint at first
-    // start, and every micro-batch writes one state-store delta file +
-    // fsync PER PARTITION — 32 partitions × 3 batches = 96 store commits
-    // for 1.5k keys was pure per-file overhead (the Kafka Streams analog
-    // is sizing task count to the key space). The batch-side conf is
-    // restored immediately; each run starts a FRESH checkpoint, so the
-    // burned-in value never conflicts.
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        enriched.toDF(), s"$runBase/out", s"$runBase/ckpt")
-    }
-    q.awaitTermination() // AvailableNow: terminates once the input drains
-    s.read.parquet(s"$runBase/out")
-  }
-
   /** Start a streaming query with `spark.sql.shuffle.partitions` sized to
     * the state-store key space (see the SIZE THE STATE PARTITIONS note in
     * [[streamStatefulParityQ]]: each micro-batch commits one delta file +
@@ -567,10737 +388,25 @@ object SparkEntry {
     * conflicts.
     */
   private[graft] def withStatePartitions[A](s: SparkSession, n: Int)(start: => A): A =
-    // synchronized on the session: the get/set/restore is non-atomic, and
-    // two threads building gated queries on one session would otherwise
-    // race — one could read the other's temporary n as "prev" and leak it
-    // as the session default. Java monitors are reentrant, so a nested use
-    // on the same thread still restores outside-in correctly.
-    s.synchronized {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try { s.conf.set("spark.sql.shuffle.partitions", n.toString); start }
-      finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-
-  /** `dropDuplicatesWithinWatermark` under the driver gate — the streaming
-    * dedup runtime ([[graft.streaming.StreamRunner.streamingDedup]], the
-    * live face of [[graft.dedup.Dedup.exact]]) over the SAME staged 3-file
-    * time-split source as [[streamStatefulParityQ]]: three ordered
-    * micro-batches with real cross-batch dedup-state round-trips (a key
-    * first seen in batch 0 must still suppress its batch-2 repeats through
-    * the state store). The retention delay deliberately covers the whole
-    * corpus span, so zero evictions fire and the live output is EXACTLY
-    * batch `SELECT DISTINCT` — the oracle. (With a shorter delay the
-    * emitted multiset depends on per-batch watermark progression —
-    * eviction + re-emission is pinned by StreamingSpec's controlled
-    * MemoryStream fixture instead, where batch boundaries are exact.)
-    * Output projects the KEY columns only: dropDuplicates keeps the
-    * first-encountered row per key, and which same-key row a batch
-    * encounters first is partition-order nondeterministic — the key set
-    * is not.
-    */
-  private def streamDedupParityQ(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "dedup", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withColumn("day", to_date(col("ts")).cast("timestamp"))
-    val deduped = graft.streaming.StreamRunner
-      .streamingDedup(src, "ts", "3650 days",
-        Seq("user_id", "event_type", "day"))
-      .select(col("user_id"), col("event_type"), col("day"))
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        deduped, s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-  }
-
-  /** `mapGroupsWithState` with EventTimeTimeout under the driver gate —
-    * the live face of the batch funnel ([[funnelQ]]): the staged 3-batch
-    * events stream drives [[graft.streaming.StatefulOps.streamingFunnel]]
-    * (signup → view → purchase), whose per-user stage list must survive
-    * cross-batch state round-trips (a user signing up in batch 0 and
-    * purchasing in batch 2 completes only if state carried). The TTL (90
-    * days > the 30-day corpus span) keeps the EventTimeTimeout machinery
-    * LIVE — watermark tracked, per-key timeout timestamps set and
-    * re-clamped every batch — without an eviction firing, so the final
-    * per-user progress equals the batch funnel exactly (the oracle is
-    * q_funnel's SQL verbatim); an actually-firing timeout (eviction flush
-    * + fresh-funnel restart) is pinned by StatefulOpsSpec where batch
-    * boundaries are controlled. mapGroupsWithState emits cumulative
-    * progress per (key, batch) in UPDATE mode — no append-mode file sink —
-    * so batches land via the idempotent foreachBatch sink and the FINAL
-    * row per user (max `_batch_id`) is the funnel result.
-    */
-  private def streamFunnelParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "funnel", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[graft.streaming.FunnelEvent]
-    val prog = graft.streaming.StatefulOps.streamingFunnel(
-      src, Seq("signup", "view", "purchase"),
-      stateTtlMs = 90L * 24 * 3600 * 1000)
-    val q = withStatePartitions(s, 4) {
-      prog.toDF().writeStream
-        .outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) =>
-          graft.streaming.StreamRunner.writeBatchIdempotent(b, id, s"$base/out"))
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    // try_element_at: a user who never reaches stage k has a short
-    // stage_times array — out-of-bounds must be NULL (q_funnel's shape),
-    // not an ANSI error
-    s.read.parquet(s"$base/out")
-      .groupBy(col("user_id"))
-      .agg(max_by(col("stage_times"), col("_batch_id")).as("__st"))
-      .select(col("user_id"),
-        try_element_at(col("__st"), lit(1)).as("t_signup"),
-        try_element_at(col("__st"), lit(2)).as("t_view"),
-        try_element_at(col("__st"), lit(3)).as("t_purchase"))
-  }
-
-  /** Watermark-closed tumbling windows under the driver gate — the live
-    * face of [[graft.streaming.StreamRunner.windowedAgg]] (SURVEY §2.5's
-    * windowed aggregation) over the staged 3-batch events stream: per
-    * (1-day window, event_type) counts and exact decimal sums, append-mode
-    * file sink. In append mode a window row is emitted ONLY once the
-    * watermark passes its end — so the result is the set of windows the
-    * final watermark (max staged ts − 1 h) closed, and the last day's
-    * partial window correctly stays in state when the AvailableNow run
-    * drains; the oracle applies the same closure predicate in SQL. The
-    * decimal cast happens BEFORE the windowed sum so the streamed
-    * per-batch partial aggregation is exact (a double sum's value would
-    * depend on accumulation order across batches).
-    */
-  private def streamWindowParityQ(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "window", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-    val agg = graft.streaming.StreamRunner
-      .windowedAgg(src, "ts", "event_type", "v", "1 day", "1 hour")
-      .select(col("window.start").as("ws"), col("event_type"),
-        col("n"), col("total").cast("double").as("total"))
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(agg, s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-  }
-
-  /** STREAM-STREAM interval join under the driver gate — the live face of
-    * [[graft.operators.Analytics.intervalJoin]] (q_interval_join's exact
-    * shape: each purchase joined to the same user's views in the trailing
-    * hour) via [[graft.streaming.StreamRunner.streamIntervalJoin]], both
-    * sides file-streamed from the staged 3-batch split with watermarks.
-    * Exactness over the split is structural, not delay-tuned: the split is
-    * time-ordered, so a match's view (rt ≤ lt) is always in the same or an
-    * EARLIER batch than its purchase — the probe side only ever looks at
-    * state already built, and eviction (watermark vs the join's time
-    * bound) can only remove rows whose match window future batches have
-    * provably left behind. The joined pairs land in an append sink; the
-    * read-back aggregates per purchase BATCH-side, so the streamed face
-    * under gate is the join itself. Oracle = the batch q_interval_join SQL
-    * verbatim. (MemoryStream parity incl. cross-batch buffering was
-    * already spec'd; this puts the join-state runtime under the hash gate
-    * every round.)
-    */
-  private def streamJoinParityQ(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "join", dir)
-    wipeTree(base)
-    def src() = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-      .withWatermark("ts", "1 hour")
-    val views = src().filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value"))
-      .withWatermark("ts", "1 hour")
-    val joined = graft.streaming.StreamRunner.streamIntervalJoin(
-      purchases, views, "user_id", "ts", "ts",
-      beforeUs = 3600L * 1000000L, afterUs = 0L,
-      rightCols = Seq("value" -> "view_value"))
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        joined.select(col("event_id"), col("user_id"), col("view_value")),
-        s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-      .groupBy(col("event_id"), col("user_id"))
-      .agg(count(lit(1)).as("n_views"),
-        sum(col("view_value").cast("decimal(18,2)")).cast("double").as("view_total"))
-  }
-
-  /** Session windows with a FIRING event-time timeout under the driver
-    * gate — [[graft.streaming.StatefulOps.streamingSessionize]]
-    * (`flatMapGroupsWithState` + EventTimeTimeout) live over the staged
-    * 3-batch stream: the first gated query where state timeouts actually
-    * FIRE (the funnel gate's TTL outlives the corpus; here every mid-corpus
-    * session's 30-min gap elapses and the timeout flush emits it). A
-    * session is emitted either in-stream (a later event for the user
-    * exceeds the gap — watermark-independent) or by timeout (watermark
-    * passes last+gap), so the only emission the final watermark governs is
-    * each user's LAST session — the oracle applies exactly that predicate.
-    * Two precision traps the oracle mirrors: the operator's state is
-    * MILLISECOND (java.sql.Timestamp.getTime), so gap decisions diff
-    * `epoch_ms`, not micros, and emitted start/end are ms-truncated
-    * (`date_trunc('milliseconds')`; trunc is monotone, so trunc∘min =
-    * min∘trunc). `total_value` is NOT projected: its per-session double
-    * accumulation order is undefined between equal-ts events.
-    */
-  private def streamSessionizeParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "sess", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[graft.streaming.SessionEvent]
-    val sessions = graft.streaming.StatefulOps
-      .streamingSessionize(src, gapMs = 1800L * 1000)
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        sessions.toDF().select(col("user_id"), col("n_events"),
-          col("session_start"), col("session_end")),
-        s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-  }
-
-  /** Streaming KMV distinct-count sketch under the driver gate — the live
-    * face of [[graft.operators.Analytics.kmvDistinct]]
-    * ([[graft.streaming.StatefulOps.streamingKmvDistinct]]): per event
-    * type, the k smallest distinct FNV-1a hashes of the user ids carried
-    * as state across the 3 staged micro-batches, snapshot emitted per
-    * batch in update mode. KMV state is a pure SET function — the k
-    * smallest distinct hashes are arrival-order independent — so the LAST
-    * snapshot per group equals the batch sketch EXACTLY (k, k-th minimum,
-    * and the 6-dp estimate), and the oracle is the batch q_kmv_distinct
-    * SQL verbatim. The value-exactness contract (not just an error band)
-    * is what makes a sketch portable across engines; this gate extends it
-    * to the streaming runtime.
-    */
-  private def streamKmvParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "kmv", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .select(col("event_type").as("group"),
-        col("user_id").cast("string").as("item"))
-      .as[graft.streaming.KmvEvent]
-    val snaps = graft.streaming.StatefulOps.streamingKmvDistinct(src, k = 256)
-    val q = withStatePartitions(s, 4) {
-      snaps.toDF().writeStream
-        .outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) =>
-          graft.streaming.StreamRunner.writeBatchIdempotent(b, id, s"$base/out"))
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-      .groupBy(col("group"))
-      .agg(max_by(struct(col("kmv_k"), col("h_k"), col("est_distinct")),
-        col("_batch_id")).as("__f"))
-      .select(col("group").as("event_type"), col("__f.kmv_k").as("kmv_k"),
-        col("__f.h_k").as("h_k"), col("__f.est_distinct").as("est_distinct"))
-  }
-
-  /** The three RECURSIVE stateful runtimes under the driver gate — EMA,
-    * Welford anomaly, token-bucket rate limit — whose per-event folds are
-    * NOT SQL-expressible (each output feeds the next event's state:
-    * recursive IEEE / integer chains no window formulation reproduces),
-    * so value-replay oracles are impossible. This gate uses the
-    * INVARIANT form instead: each op runs LIVE over the staged 3-batch
-    * split (three concurrent update-mode streams, real cross-batch
-    * state-store round-trips) AND as its own batch twin (the identical
-    * fold — `flatMapGroupsWithState` in batch mode for ema/anomaly,
-    * [[graft.streaming.StatefulOps.rateLimitBatch]] for the bucket), and
-    * the query emits one row per op: (op, n_rows, n_mismatch) from a
-    * full-outer join on event_id comparing EXACT values (bit equality —
-    * same Scala arithmetic in same per-key order is the contract). The
-    * oracle pins n_mismatch = 0 and anchors n_rows to DuckDB's OWN
-    * count(*) of events — a dropped, duplicated, or diverging row
-    * anywhere in the live runtime hash-mismatches the round. Stated
-    * honestly: this is live == engine-batch-twin under an independent
-    * row-count anchor, not an independent value replay — the strongest
-    * gate the non-replayable folds admit.
-    */
-  private def streamRecursiveParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.{StatefulOps, StreamRunner, EmaEvent, RateEvent}
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "recur", dir)
-    wipeTree(base)
-    def src() = StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-    def upd(df: DataFrame, name: String) = df.writeStream
-      .outputMode("update")
-      .foreachBatch((b: DataFrame, id: Long) =>
-        StreamRunner.writeBatchIdempotent(b, id, s"$base/$name"))
-      .option("checkpointLocation", s"$base/ckpt_$name")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val queries = withStatePartitions(s, 4) { Seq(
-      upd(StatefulOps.streamingEma(
-        src().select(col("user_id"), col("ts"), col("event_id"), col("value"))
-          .as[EmaEvent], alpha = 0.3).toDF(), "ema"),
-      upd(StatefulOps.streamingAnomaly(
-        src().select(col("user_id"), col("ts"), col("event_id"), col("value"))
-          .as[EmaEvent], zMax = 3.0).toDF(), "anomaly"),
-      upd(StatefulOps.streamingRateLimit(
-        src().select(col("user_id"), col("ts"), col("event_id"))
-          .as[RateEvent], capTokens = 2L, ratePerSec = 1L).toDF(), "rate_limit"))
-    }
-    queries.foreach(_.awaitTermination()) // concurrent AvailableNow streams
-    val staged = s.read.parquet(landing)
-    def cmp(op: String, live: DataFrame, twin: DataFrame,
-            cols: Seq[String]): DataFrame = {
-      // presence markers + null-safe <=> per column: the earlier
-      // isNull-either-side form counted a row whose compared column is
-      // legitimately null on BOTH sides as a mismatch, so a future stateful
-      // op emitting nullable values would hash-fail the gate as a false
-      // positive. Only a row missing from one side entirely (presence
-      // marker null after the full outer join) or a genuine value
-      // divergence (not <=>) counts now.
-      val l = live.select(col("event_id") +: lit(true).as("__pl") +:
-        cols.map(col): _*)
-      val t = twin.select(col("event_id") +: lit(true).as("__pt") +:
-        cols.map(c => col(c).as(s"__b_$c")): _*)
-      val mism = (col("__pl").isNull || col("__pt").isNull ||
-        cols.map(c => !(col(c) <=> col(s"__b_$c"))).reduce(_ || _))
-      l.join(t, Seq("event_id"), "full_outer")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(mism, 1L).otherwise(0L)).as("n_mismatch"))
-        .select(lit(op).as("op"), col("n_rows"), col("n_mismatch"))
-    }
-    val emaTwin = StatefulOps.streamingEma(
-      staged.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[EmaEvent], alpha = 0.3).toDF()
-    val anomTwin = StatefulOps.streamingAnomaly(
-      staged.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[EmaEvent], zMax = 3.0).toDF()
-    val rateTwin = StatefulOps.rateLimitBatch(
-      staged.select(col("user_id"), col("ts"), col("event_id"))
-        .as[RateEvent], capTokens = 2L, ratePerSec = 1L).toDF()
-    cmp("anomaly", s.read.parquet(s"$base/anomaly"), anomTwin,
-        Seq("value", "z", "anomaly"))
-      .unionByName(cmp("ema", s.read.parquet(s"$base/ema"), emaTwin, Seq("ema")))
-      .unionByName(cmp("rate_limit", s.read.parquet(s"$base/rate_limit"),
-        rateTwin, Seq("admitted", "tokens_after_micro")))
-  }
-
-  /** T4 under the driver gate: the DOT rendering of the Part-3 topology
-    * (`wv/view-topology`, reference core.clj:204) in BOTH faces — bare, and
-    * with experiment results overlaid on the node labels (the reference's
-    * post-experiment visualization, `wv/view-topology` after
-    * `we/run-experiment`, core.clj:237). The overlay runs a deterministic
-    * literal experiment (the Part-1 purchases plus one humble/one large
-    * donation) through [[graft.core.Topology.experiment]], so every node
-    * label's sample rows and row count — truncation at maxRows included —
-    * are part of the pinned text. The oracle pins both literals exactly:
-    * node sort order, shapes, edge order, label escaping, and the
-    * per-entity fold results are hash-checked every round, not just
-    * spec-checked.
-    */
-  private def topologyDotQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val topo = ReferenceOps.transactionTopology
-    val purchases = Seq(
-      (1, 10.0, 101, 1), (2, 500.0, 102, 3), (3, 50.0, 103, 2),
-      (4, 1000.0, 104, 5)).toDF("key", "amount", "user_id", "quantity")
-    val donations = Seq((10, 5000, 201), (11, 20000, 202))
-      .toDF("key", "donation_amount_cents", "user_id")
-    val results = topo.experiment(Map(
-      "purchase-made" -> purchases, "humble-donation-made" -> donations))
-    Seq("bare" -> topo.toDot, "overlay" -> topo.toDot(results))
-      .toDF("variant", "dot")
-  }
-
-  /** T3 under the driver gate: the validation walkthrough
-    * (`s/explain ::ws/topology`, reference core.clj:247-252) as data. Runs
-    * the valid topology plus four malformed shapes — including the
-    * reference's own injected-cycle probe (core.clj:249-252) — through
-    * construction-time validation and reduces each outcome to
-    * (probe, ok, err), err being the stable phrase from the validator.
-    */
-  private def topologyValidateQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.core.{Stream => TStream, Topology => TTopo}
-    val base = ReferenceOps.transactionTopology
-    def probe(name: String)(build: => TTopo): (String, Boolean, String) =
-      try { build; (name, true, "") }
-      catch {
-        case e: IllegalArgumentException =>
-          val kinds = Seq("acyclic", "undeclared", "no input edge", "self-edges")
-          (name, false, kinds.find(e.getMessage.contains).getOrElse("other"))
-      }
-    Seq(
-      probe("valid")(base.copy()),
-      // the reference's exact invalid example: a loop through the sink
-      probe("cycle")(base.copy(workflow =
-        base.workflow :+ ("large-transaction-made" -> "purchase-made"))),
-      probe("undeclared")(base.copy(workflow =
-        base.workflow :+ ("purchase-made" -> "no-such-entity"))),
-      probe("self-edge")(base.copy(workflow =
-        base.workflow :+ ("purchase-made" -> "purchase-made"))),
-      probe("orphan-stream")(base.copy(entities =
-        base.entities + ("dangling-stream" -> TStream("dangling-stream", identity))))
-    ).toDF("probe", "ok", "err")
-  }
-
-  /** The Part-1 REPL walkthrough as an oracle-checked query (reference
-    * core.clj:165-184): four literal purchases of 10/500/50/1000 through
-    * the simple source → filter(≥100) → select-keys → sink topology
-    * (core.clj:77-83); the output topic must hold exactly the 500 and
-    * 1000 transactions.
-    */
-  private def replWalkthroughQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.core.{Stream => TStream, Topic => TTopic, Topology => TTopo}
-    val purchases = Seq(
-      (1L, 10.0, 101L, 1), (2L, 500.0, 102L, 3),
-      (3L, 50.0, 103L, 2), (4L, 1000.0, 104L, 5))
-      .toDF("key", "amount", "user_id", "quantity")
-    val topo = TTopo(
-      entities = Map(
-        "purchase-made" -> TTopic("purchase-made"),
-        "large-purchase-stream" -> TStream("large-purchase-stream", ReferenceOps.largePurchases),
-        "large-transaction-made" -> TTopic("large-transaction-made")),
-      workflow = Seq(
-        "purchase-made" -> "large-purchase-stream",
-        "large-purchase-stream" -> "large-transaction-made"))
-    topo.compile(Map("purchase-made" -> purchases))("large-transaction-made")
-  }
-
-  // --------------------------------------------------------- analytic core
-
-  private def q1Agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(col("l_quantity")).as("sum_qty"),
-        sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_price"),
-        count(lit(1)).as("n"))
-
-  /** orders ⋈ customer ⋈ nation revenue rollup. `customer` is a
-    * FACT-SIZED dimension (10⁹ rows at 100 TB TPC-H scale, ~16 GB for the
-    * two joined columns alone) so it carries NO broadcast hint — the
-    * planner broadcasts it below `autoBroadcastJoinThreshold` (it does at
-    * every test SF) and falls back to a key-partitioned shuffle join at
-    * scale. `nation` is a 25-row constant table: hint kept. */
-  private def joinAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"),
-        count(lit(1)).as("n_orders"))
-
-  private def windowHourly(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-
-  private def topkOrders(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(100)
-
-  /** Hopping (overlapping) event-time windows — the Kafka-Streams window
-    * kind the tumbling q_window_hourly doesn't cover: 2-hour windows every
-    * 30 minutes, so each event lands in size/slide = 4 windows. Spark's
-    * `window()` explodes the bounded per-event window list scan-side (a
-    * generator, no self-join), then one partial-aggregated shuffle on
-    * (window, type). Sums in DECIMAL — exact at any partition order.
-    */
-  private def windowHoppingQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(window(col("ts"), "2 hours", "30 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        col("n"), col("total"))
-
-  /** KTable materialization (changelog compaction): each user's single
-    * latest event by (ts, event_id) — the bounded aggregate at k = 1.
-    */
-  private def latestByKeyQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.latestByKey(t(s, dir, "events"), "user_id",
-      unix_micros(col("ts")), col("event_id"),
-      Seq("ts" -> col("ts"), "event_id" -> col("event_id"),
-        "event_type" -> col("event_type"), "value" -> col("value")))
-
-  /** KTable history as an SCD-2 temporal table: each event version's
-    * validity interval per user ([[Analytics.scd2]]); `valid_to` is null on
-    * the current version — the compacted view [[latestByKeyQ]] is exactly
-    * the `valid_to IS NULL` slice.
-    */
-  private def scd2Q(s: SparkSession, dir: String): DataFrame =
-    Analytics.scd2(t(s, dir, "events"), "user_id", col("ts"), col("event_id"))
-      .select("user_id", "event_id", "event_type", "valid_from", "valid_to")
-
-  /** BPE tokenizer-training round one: corpus-wide adjacent character-pair
-    * frequencies over the aggregated word table ([[TrainingData.bpePairStats]]).
-    */
-  private def bpePairsQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.bpePairStats(t(s, dir, "documents"), "text", topPairs = 50)
-
-  /** T5-style span corruption ([[TrainingData.spanCorrupt]]): deterministic
-    * block-confined mask spans, numbered sentinels in the input, masked
-    * tokens in the target. The oracle rebuilds every corrupted and target
-    * STRING value-exactly (sentinels, span contents, whitespace), so a
-    * one-token drift anywhere in the mask arithmetic fails the gate.
-    */
-  private def spanCorruptQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.spanCorrupt(t(s, dir, "documents"), "doc_id", "text")
-
-  /** BPE tokenizer TRAINING ([[graft.pipeline.BpeTrainer.train]]): 8 merge
-    * rounds over the word-frequency census. The oracle replays the entire
-    * training loop — census, per-round pair argmax (lexicographic
-    * tie-break), and the greedy leftmost merge fold — as a statically
-    * unrolled CTE chain, so every learned rule AND its selection-time count
-    * must match value-exactly.
-    */
-  private def bpeTrainQ(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.BpeTrainer.train(t(s, dir, "documents"), "text", rounds = 8)
-
-  /** Tokenizer fertility (subwords per word — the standard tokenizer-eval
-    * metric) per language, for the 8-merge BPE vocabulary trained on this
-    * corpus. Encoding goes through [[graft.pipeline.BpeTrainer.vocab]] —
-    * tokens equi-join the vocab-bounded symbol table (the lookup-table
-    * shape a real tokenizer uses for seen words; planner picks
-    * broadcast vs shuffle by the vocab's actual size).
-    */
-  private def bpeFertilityQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val rules = graft.pipeline.BpeTrainer.train(docs, "text", rounds = 8)
-      .orderBy(col("merge_round"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val vocab = graft.pipeline.BpeTrainer.vocab(docs, "text", rules)
-      .select(col("word"), size(col("syms")).as("__ns"))
-    val toks = filter(split(trim(lower(col("text"))), "\\s+"), x => length(x) > 0)
-    docs.select(col("lang"), explode(toks).as("word"))
-      .join(vocab, "word")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("__ns")).as("n_subwords"))
-      .withColumn("fertility",
-        round(col("n_subwords").cast("double") / col("n_tokens").cast("double"), 6))
-  }
-
-  /** Mutual information between the corpus's two categorical axes (lang,
-    * source), plus each marginal entropy — the redundancy number a corpus
-    * datasheet reports ("does source already determine language?"). One
-    * corpus scan builds the |langs|×|sources| cell census; margins and the
-    * MI sum are censuses-of-the-census, so cost is independent of corpus
-    * size beyond the first aggregate.
-    */
-  private def mutualInfoQ(s: SparkSession, dir: String): DataFrame = {
-    val cells = t(s, dir, "documents")
-      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("cxy"))
-    val mx = cells.groupBy(col("lang")).agg(sum(col("cxy")).as("cx"))
-    val my = cells.groupBy(col("source")).agg(sum(col("cxy")).as("cy"))
-    val n = cells.agg(sum(col("cxy")).as("n"))
-    val joined = cells.join(mx, "lang").join(my, "source").crossJoin(n)
-    joined.agg(
-        max(col("n")).as("n_docs"),
-        round(sum(col("cxy").cast("double") / col("n").cast("double")
-          * log(col("cxy").cast("double") * col("n").cast("double")
-            / (col("cx").cast("double") * col("cy").cast("double")))), 6).as("mi_nats"))
-      .crossJoin(
-        mx.crossJoin(n).agg(round(log(max(col("n")).cast("double"))
-          - sum(col("cx").cast("double") * log(col("cx").cast("double")))
-            / max(col("n")).cast("double"), 6).as("h_lang")))
-      .crossJoin(
-        my.crossJoin(n).agg(round(log(max(col("n")).cast("double"))
-          - sum(col("cy").cast("double") * log(col("cy").cast("double")))
-            / max(col("n")).cast("double"), 6).as("h_source")))
-  }
-
-  /** TPC-H Q5 shape (local-supplier volume): the 6-table star join with
-    * region/nation broadcast onto the fact-side shuffle join, revenue in
-    * exact decimal partial aggregation. The canonical "did the optimizer
-    * pick broadcast for the dims and shuffle only the facts" query.
-    */
-  private def sqlQ5(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-      // probe-side fanOut A/B'd and REJECTED (r13): 1.377 s without vs
-      // 1.370 s with — at this SF all five joins broadcast and the run
-      // cost is the broadcast BUILDS (orders/customer HashedRelations per
-      // run), not the single-split probe; at real scale these joins
-      // shuffle on their keys and the question disappears
-      .join(t(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "supplier"),
-        col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-      .filter(col("r_name") === "ASIA" &&
-        col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-      .groupBy(col("n_name"))
-      .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount")).cast("decimal(4,2)"))
-        .cast("double").as("revenue"))
-      .orderBy(col("revenue").desc)
-
-  /** Per-source language diversity (Shannon entropy in bits): the census
-    * of (source, lang) counts is domain-bounded (≤ |langs| per source), so
-    * the entropy sum runs as an ORDERED higher-order fold over the
-    * lang-sorted count list — one defined association on both engines,
-    * like [[ndcgQ]]'s DCG — with each p·log2(p) term built from exact
-    * integer counts. The curation read: a "diverse" source at entropy ~2
-    * bits needs per-lang quality thresholds; a monolingual one (0 bits)
-    * can take a global one.
-    */
-  private def langEntropyQ(s: SparkSession, dir: String): DataFrame = {
-    val census = t(s, dir, "documents")
-      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c"))
-    val ln2 = math.log(2.0)
-    census.groupBy(col("source"))
-      .agg(sum(col("c")).as("n_docs"),
-        count(lit(1)).as("n_langs"),
-        sort_array(collect_list(struct(col("lang").as("l"),
-          col("c").cast("double").as("c")))).as("lst"))
-      .select(col("source"), col("n_docs"), col("n_langs"),
-        round(aggregate(col("lst"), lit(0.0), (acc, e) =>
-          acc - e.getField("c") / col("n_docs").cast("double") *
-            (log(e.getField("c") / col("n_docs").cast("double")) / lit(ln2))),
-          6).as("entropy_bits"))
-  }
-
-  /** Duplicate ATTRIBUTION by source: per source, how many of its
-    * documents share a normalized-text fingerprint with ANY document in
-    * the corpus — the "who brings the duplicates" view the global dedup
-    * rate hides (a source can be small and still contribute most of the
-    * dup mass). The join key is the 8-byte FNV of the normalized text —
-    * the same fingerprint-not-text rule every dedup shuffle here follows.
-    */
-  private def dupBySourceQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-      TF.fnv1a64(TF.normalizeText(col("text"))).as("hk"))
-    val counts = d.groupBy(col("hk")).agg(count(lit(1)).as("cnt"))
-    d.join(counts, "hk")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("cnt") > 1L, 1L).otherwise(0L)).as("n_dup"))
-      .withColumn("dup_rate",
-        round(col("n_dup").cast("double") / col("n_docs").cast("double"), 6))
-  }
-
-  /** Cross-source shingle-overlap matrix over the documents corpus
-    * ([[TrainingData.crossSourceOverlap]]).
-    */
-  private def crossSourceOverlapQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.crossSourceOverlap(t(s, dir, "documents"), "source", "text", n = 5)
-
-  /** PageRank over the customer→supplier trade graph (3 power iterations,
-    * d = 0.85) — iterative graph centrality with decimal-exact contribution
-    * sums ([[graft.operators.Graph.pageRank]]); top-100 nodes. Customer ids
-    * are offset by 10^9 so the two key spaces cannot collide.
-    */
-  private def pageRankQ(s: SparkSession, dir: String): DataFrame = {
-    val edges = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") + lit(1000000000L)).as("src"), col("l_suppkey").as("dst"))
-    graft.operators.Graph.pageRank(edges, "src", "dst", iterations = 3)
-      .select(col("id"), round(col("rank"), 6).as("rank"))
-      .orderBy(col("rank").desc, col("id").asc)
-      .limit(100)
-  }
-
-  /** Per-vertex triangle counts on the symmetrized k-NN-5 embedding graph
-    * (the q_knn_graph edge set) — the local-density signal clustering
-    * pipelines read off a neighborhood graph: a vertex on many triangles
-    * sits inside a tight semantic cluster, one on none is a hub or an
-    * outlier. The k-NN build bounds the graph (n·k edges, sparse at any
-    * scale — unlike a co-occurrence projection, which saturates to a
-    * near-clique as SF grows); the count itself is the degree-ordered
-    * wedge join ([[graft.operators.Graph.triangleCounts]]).
-    */
-  private def triangleCountQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val knn = Ann.knnGraph(emb.filter(col("vec_id") < 200), emb, "vec_id",
-      "embedding", k = 5)
-    graft.operators.Graph.triangleCounts(knn, "src", "dst")
-  }
-
-  /** Link prediction on the same symmetrized k-NN-5 embedding graph as
-    * [[triangleCountQ]]: non-adjacent two-hop pairs ranked by
-    * common-neighbor count and the resource-allocation index
-    * ([[graft.operators.Graph.linkPredict]]) — the "which similarity edges
-    * is the graph missing" second-pass candidate generator. RA credits are
-    * exact integer picocredits (10^12 div deg), so the score replays
-    * bit-for-bit on any engine.
-    */
-  private def linkPredictQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val knn = Ann.knnGraph(emb.filter(col("vec_id") < 200), emb, "vec_id",
-      "embedding", k = 5)
-    graft.operators.Graph.linkPredict(knn, "src", "dst", maxDeg = 64)
-  }
-
-  /** Global transitivity (clustering coefficient) of the same k-NN-5
-    * similarity graph as [[triangleCountQ]]: 3·triangles / wedges, both
-    * EXACT integers (Σ per-vertex triangle counts = 3T from the
-    * degree-ordered wedge join; Σ deg·(deg−1) = 2W from the degree
-    * census), one final double division — the one-number "are similar
-    * documents similar to each other" cohesion gate next to
-    * [[assortativityQ]]'s mixing gate.
-    */
-  private def transitivityQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val knn = Ann.knnGraph(emb.filter(col("vec_id") < 200), emb, "vec_id",
-      "embedding", k = 5)
-    // und duplicates Graph.triangleCounts' internal symmetrization EXPRESSION
-    // FOR EXPRESSION (same least/greatest projection, same =!=/isNotNull
-    // filter), and the t3 branch passes the RAW knn so triangleCounts builds
-    // that identical subtree itself: only canonically equal subtrees let AQE
-    // reuse und's exchange between the t3 and w2 branches. The previous
-    // shape (own `a =!= b`-only und, re-wrapped inside triangleCounts)
-    // collapsed into a filter carrying BOTH predicate generations — never
-    // canonically equal to the w2 side — so the brute-force kNN executed
-    // TWICE per run (plan-audited: two BroadcastNestedLoopJoin +
-    // ObjectHashAggregate chains in plans/r18/q_transitivity_before.txt,
-    // one + ReusedExchange after).
-    val und = knn.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .distinct()
-    val t3 = graft.operators.Graph.triangleCounts(knn, "src", "dst")
-      .agg(sum(col("triangles")).as("t3"))
-    val w2 = und.select(col("a").as("v")).unionAll(und.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      .agg(sum(col("d") * (col("d") - 1L)).as("w2"))
-    t3.crossJoin(w2).select(col("t3"), col("w2"),
-      // an edgeless/starless graph has zero wedges: NULL, not Infinity
-      when(col("w2") > 0L,
-        round(lit(2.0) * col("t3").cast("double") / col("w2").cast("double"), 6))
-        .otherwise(lit(null).cast("double")).as("transitivity"))
-  }
-
-  /** k-NN majority-vote classification ([[Ann.knnClassify]]): vectors
-    * 200–299 are stripped of their label and re-labeled by the plurality
-    * vote of their 5 nearest labeled neighbors (vec_id < 200); the output
-    * keeps the held-out true label and a correctness flag, so the query
-    * doubles as the label-spread accuracy audit a curation pipeline runs
-    * before trusting the classifier at corpus scale.
-    */
-  private def knnClassifyQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val labeled = emb.filter(col("vec_id") < 200)
-    val held = emb.filter(col("vec_id") >= 200 && col("vec_id") < 300)
-    Ann.knnClassify(held, labeled, "vec_id", "embedding", "label", k = 5)
-      .join(emb.select(col("vec_id"), col("label").as("true_label")),
-        col("id") === col("vec_id"))
-      .select(col("vec_id"), col("pred_label"), col("votes"),
-        col("true_label"),
-        (col("pred_label") === col("true_label")).cast("long").as("correct"))
-  }
-
-  /** Mutual-kNN pairs ([[graft.operators.Graph.mutualEdges]]) over a closed
-    * 300-vector k-NN-5 subgraph: pairs where EACH vector ranks the other in
-    * its own top-5 — the high-precision near-dup signal (one-directional
-    * edges are usually hub attraction, mutual ones are genuine pairs). Both
-    * directions' ranks are kept so downstream can tighten to rank ≤ r.
-    */
-  private def mutualKnnQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings").filter(col("vec_id") < 300)
-    val knn = Ann.knnGraph(emb, emb, "vec_id", "embedding", k = 5)
-    graft.operators.Graph.mutualEdges(knn, "src", "dst", "rn")
-  }
-
-  /** Degree assortativity ([[graft.operators.Graph.degreeAssortativity]])
-    * of the same symmetrized k-NN-5 graph as [[linkPredictQ]]: one row of
-    * exact BIGINT moment sums plus Newman's r — the similarity-graph health
-    * gate (r near +1 means duplicates are clique-ing; strongly negative
-    * means hubs dominate and the k-NN lists need a mutual filter).
-    */
-  private def assortativityQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val knn = Ann.knnGraph(emb.filter(col("vec_id") < 200), emb, "vec_id",
-      "embedding", k = 5)
-    graft.operators.Graph.degreeAssortativity(knn, "src", "dst")
-  }
-
-  /** Per-discount-position constants for nDCG@10: 1/log2(i+1) precomputed
-    * once in Scala and embedded as LITERALS on both engines — a runtime
-    * log2 could differ by an ulp between libm and Math.log, a literal
-    * cannot. IDCG is the same fold over the ideal gains 10..1.
-    */
-  private val ndcgDiscounts: IndexedSeq[Double] =
-    (1 to 10).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
-  private val ndcgIdeal: Double =
-    (1 to 10).foldLeft(0.0)((acc, j) => acc + (11 - j) * ndcgDiscounts(j - 1))
-
-  /** nDCG@10 of the int8-quantized ANN tier against the exact cosine
-    * ranking, per query vector (ids 0–4): graded relevance = 11 − exact
-    * rank (0 outside the exact top-10), DCG folded in ANN-rank order.
-    * This is the retrieval-quality eval [[annRecallQ]] can't express —
-    * recall treats rank 1 and rank 10 alike; nDCG charges the quantizer
-    * for every position it displaces. The DCG fold runs over a 10-element
-    * per-query array via the ORDERED higher-order aggregate, so the
-    * double sum has ONE defined association on both engines.
-    */
-  /** Per-query int8-quantized ANN ranks (the exact replayed scoring of
-    * [[Ann.quantizedTopK]] generalized to a query SET) — shared by the
-    * nDCG and MRR retrieval evals.
-    */
-  private def quantizedAnnRanks(emb: DataFrame, maxQid: Int, k: Int): DataFrame = {
-    val br = org.apache.spark.sql.graft.ColumnBridge
-    val quant = emb.select(col("vec_id"), Ann.quantize8(col("embedding")).as("qv"))
-    val qs = quant.filter(col("vec_id") < maxQid)
-      .select(col("vec_id").as("src"), col("qv").as("qq"))
-    val idot = br.column(graft.expressions.DotProductInt8(
-      br.expression(col("qq.q")), br.expression(col("qv.q"))))
-    // fan out the PROBE side: the corpus streams through the broadcast
-    // nested-loop join doing quantize + |queries| dot products per row, and
-    // a single-file embedding table scans as one split — without this the
-    // whole scoring pass ran one-core (stage-profiled: 0.93 s of a 1.7 s
-    // query). No-op at scale, where the scan already has ≥ cores splits.
-    val annPairs = qs.join(graft.operators.Par.fanOut(quant, Seq("vec_id")),
-        col("vec_id") =!= col("src"))
-      .select(col("src"), col("vec_id").as("dst"),
-        round(col("qv.scale") * col("qq.scale") * idot.cast("double"), 6).as("qscore"))
-    Analytics.topPerKeyAgg(annPairs, "src",
-        Seq(negate(col("qscore")), col("dst")), Seq("dst" -> col("dst")), k)
-      .select(col("src"), col("dst"), col("rn").as("arank"))
-  }
-
-  /** Mean-reciprocal-rank eval of the int8 tier: at which ANN position the
-    * EXACT nearest neighbor lands (rr = 1/position, 0 if outside the
-    * top-10) — the first-result quality number next to [[annRecallQ]]'s
-    * set recall and [[ndcgQ]]'s graded ranking. Per-query rows, no
-    * cross-query float mean (the reader averages exact rationals).
-    */
-  private def mrrQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val ann = quantizedAnnRanks(emb, maxQid = 5, k = 10)
-    val exact1 = Ann.knnGraph(emb.filter(col("vec_id") < 5), emb, "vec_id",
-        "embedding", 1)
-      .select(col("src"), col("dst"))
-    exact1.join(ann, Seq("src", "dst"), "left")
-      .select(col("src").as("vec_id"), col("dst").as("true_nn"),
-        coalesce(col("arank").cast("long"), lit(0L)).as("found_at"),
-        when(col("arank").isNotNull,
-          round(lit(1.0) / col("arank").cast("double"), 6)).otherwise(lit(0.0))
-          .as("rr"))
-  }
-
-  private def ndcgQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val ann = quantizedAnnRanks(emb, maxQid = 5, k = 10)
-    val exact = Ann.knnGraph(emb.filter(col("vec_id") < 5), emb, "vec_id",
-        "embedding", 10)
-      .select(col("src"), col("dst"), col("rn").as("erank"))
-    val rel = ann.join(exact, Seq("src", "dst"), "left")
-      .select(col("src"), col("arank"),
-        coalesce(lit(11L) - col("erank"), lit(0L)).as("rel"))
-    val dlit = typedlit(ndcgDiscounts)
-    rel.groupBy(col("src"))
-      .agg(sort_array(collect_list(struct(col("arank").cast("int").as("a"),
-        col("rel").cast("double").as("r")))).as("lst"))
-      .select(col("src").as("vec_id"),
-        aggregate(col("lst"), lit(0.0),
-          (acc, e) => acc + e.getField("r") * element_at(dlit, e.getField("a")))
-          .as("dcg"))
-      .select(col("vec_id"), round(col("dcg"), 6).as("dcg"),
-        round(col("dcg") / lit(ndcgIdeal), 6).as("ndcg"))
-  }
-
-  /** Margin-based parallel-pair mining ([[Ann.marginMine]]) between the
-    * label-0 and label-1 embedding sets: each label-0 vector's best label-1
-    * candidate by the LASER margin criterion — cosine renormalized by both
-    * endpoints' top-4 neighborhood density, the hub-robust score actual
-    * mined-bitext pipelines threshold on.
-    */
-  private def bitextMineQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Ann.marginMine(emb.filter(col("label") === 0),
-      emb.filter(col("label") === 1), "vec_id", "embedding", k = 4)
-  }
-
-  /** Weighted sampling without replacement (Efraimidis–Spirakis race,
-    * [[graft.operators.Graph.weightedSample]]): 200 documents drawn with
-    * probability proportional to length, deterministically from the id
-    * hash.
-    */
-  private def weightedSampleQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.weightedSample(
-      t(s, dir, "documents"), "doc_id", col("n_chars"), k = 200)
-
-  /** Native `session_window` aggregation — the streaming-capable
-    * SessionWindows analog (Kafka Streams `SessionWindows.with(gap)`):
-    * Spark's dedicated session-merge aggregate (sort-per-key, then merge
-    * runs whose gap < 30 min), not a window function. Note the boundary
-    * differs from [[sessionizeQ]] by design: `session_window` starts a new
-    * session at gap >= 30 min (windows [ts, ts+gap) that merely touch do
-    * NOT merge), the window-function islands at gap > 30 min.
-    */
-  private def sessionAggQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("total"))
-
-  /** Stream-stream windowed join: for each purchase, the views by the same
-    * user in the preceding hour (inclusive), aggregated per purchase —
-    * the KStream⋈KStream JoinWindows shape over the banded equi-join
-    * ([[Analytics.intervalJoin]]), never a key-only join with a range
-    * post-filter.
-    */
-  private def intervalJoinQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    Analytics.intervalJoin(
-        ev.filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts"),
-        ev.filter(col("event_type") === "view"),
-        "user_id", "ts", "ts",
-        beforeUs = 3600L * 1000000L, afterUs = 0L,
-        rightCols = Seq("value" -> "view_value"))
-      .groupBy(col("event_id"), col("user_id"))
-      .agg(count(lit(1)).as("n_views"),
-        sum(col("view_value").cast("decimal(18,2)")).cast("double").as("view_total"))
-  }
-
-  /** SlidingWindows analog ([[Analytics.slidingAgg]]): per event, the same
-    * user's event count and value total over the trailing 10 minutes
-    * (both bounds inclusive) — the fourth member of the windowing quartet
-    * (tumbling [[windowHourlyQ]], hopping [[windowHoppingQ]], session
-    * [[sessionAggQ]], sliding here).
-    */
-  private def windowSlidingQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.slidingAgg(
-        t(s, dir, "events")
-          .select("event_id", "user_id", "ts", "value"),
-        "user_id", "ts", sizeSeconds = 600L,
-        Seq("n_window" -> count(lit(1)),
-          "total_dec" -> sum(col("value").cast("decimal(18,2)"))))
-      .select(col("event_id"), col("user_id"), col("ts"), col("n_window"),
-        col("total_dec").cast("double").as("total"))
-
-  /** KTable⋈KTable full-outer join: each user's CURRENT purchase state
-    * joined with their CURRENT view state — two changelog compactions
-    * ([[Analytics.latestByKey]], partial-aggregating min-struct, never a
-    * per-key sort of history) meeting in a key-equi join. Both compactions
-    * hash-partition on `user_id`, so their output partitioning feeds the
-    * join without a further exchange.
-    */
-  private def tableJoinQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    def latest(tpe: String, prefix: String) =
-      Analytics.latestByKey(ev.filter(col("event_type") === tpe), "user_id",
-        unix_micros(col("ts")), col("event_id"),
-        Seq(s"${prefix}_id" -> col("event_id"), s"${prefix}_ts" -> col("ts"),
-          s"${prefix}_value" -> col("value")))
-    latest("purchase", "purchase").join(latest("view", "view"),
-      Seq("user_id"), "full_outer")
-  }
-
-  /** Cohort retention matrix: users bucketed by first-seen day, activity
-    * counted per (cohort, age-in-days). Both aggregations and the join key
-    * on `user_id`, so the first-seen census meets the activity set without
-    * an exchange beyond the aggregates' own; the census side is
-    * |users|-sized and broadcasts whenever it fits.
-    */
-  private def cohortRetentionQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "events")
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val first = d.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-    d.join(first, "user_id")
-      .groupBy(col("cohort_day"),
-        datediff(col("day"), col("cohort_day")).as("age_days"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      // DATE surfaces differently per engine (date32 vs datetime64) —
-      // ship bars/cohorts at midnight TIMESTAMP for a type-stable contract
-      .withColumn("cohort_day", col("cohort_day").cast("timestamp"))
-  }
-
-  /** Discrete conversion-hazard curve: for each day-since-signup t, the
-    * users still unconverted entering day t (n_at_risk) and the share who
-    * first purchase ON day t (hazard = d/n) — the life-table form of
-    * time-to-convert analytics (the Kaplan–Meier survival curve is the
-    * running product of (1 − hazard); the hazard table is its exact,
-    * order-free core, and censoring at the observation horizon is
-    * implicit: users never converting simply stay in the risk set).
-    * Exact shape: one per-user min/first-purchase aggregate, a
-    * domain-bounded day census, at-risk via the banded census self-join
-    * (strictly-before cumulative — no partition-less window), one double
-    * division per row.
-    */
-  private def hazardCurveQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val users = ev.groupBy(col("user_id"))
-      .agg(min(col("ts")).as("first_ts"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("conv_ts"))
-    val nAll = users.agg(count(lit(1)).as("n_users"))
-    val census = users.filter(col("conv_ts").isNotNull)
-      .select(datediff(to_date(col("conv_ts")), to_date(col("first_ts"))).cast("long").as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("d"))
-    val cumBefore = census
-      .join(census.select(col("t").as("t2"), col("d").as("d2")), col("t2") < col("t"), "left")
-      .groupBy(col("t"), col("d")).agg(coalesce(sum(col("d2")), lit(0L)).as("cb"))
-    cumBefore.crossJoin(nAll)
-      .select(col("t"), (col("n_users") - col("cb")).as("n_at_risk"), col("d"),
-        round(col("d").cast("double") / (col("n_users") - col("cb")).cast("double"), 6)
-          .as("hazard"))
-  }
-
-  /** Gini coefficient of token mass across documents — the corpus-
-    * concentration number next to [[powerUsersQ]]'s decile curve:
-    * G = (2·Σ rank·x) / (n·Σx) − (n+1)/n over the ascending-token global
-    * rank. Σ rank·x is an exact DECIMAL(38,0) sum over the range-sharded
-    * rank (no single-task sort at any corpus size); G is one left-to-right
-    * double expression over three exact integers.
-    */
-  private def giniTokensQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-      .select(col("doc_id"), TF.tokenCount(col("text")).cast("long").as("x"))
-    Analytics.rangedRank(d, Seq.empty, Seq(col("x"), col("doc_id")))
-      .agg(count(lit(1)).as("n"),
-        sum(col("x")).as("sum_tokens"),
-        sum((col("rn") * col("x")).cast("decimal(38,0)")).as("rx"))
-      .select(col("n"), col("sum_tokens"),
-        round(lit(2.0) * col("rx").cast("double") /
-            (col("n").cast("double") * col("sum_tokens").cast("double")) -
-          (col("n") + 1L).cast("double") / col("n").cast("double"), 6).as("gini"))
-  }
-
-  /** DAU/MAU stickiness per month: average daily actives over monthly
-    * actives — the engagement ratio product analytics tracks next to the
-    * retention matrix. Exact integer numerators/denominators (sum of daily
-    * distinct counts, one monthly distinct count); only the final ratio is
-    * one rounded double division. Both distincts are key-sharded exact
-    * aggregates — no HLL here because the contract is the exact ratio (the
-    * approximate tier is [[Analytics.hllRollup]]).
-    */
-  private def stickinessQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val daily = ev
-      .select(date_trunc("month", col("ts")).as("month"),
-        to_date(col("ts")).as("day"), col("user_id"))
-      .groupBy(col("month"), col("day"))
-      .agg(countDistinct(col("user_id")).as("dau"))
-      .groupBy(col("month"))
-      .agg(sum(col("dau")).as("sum_dau"), count(lit(1)).as("n_days"))
-    val monthly = ev
-      .groupBy(date_trunc("month", col("ts")).as("month"))
-      .agg(countDistinct(col("user_id")).as("mau"))
-    daily.join(monthly, "month")
-      .select(col("month"), col("sum_dau"), col("n_days"), col("mau"),
-        round(col("sum_dau").cast("double") /
-          (col("n_days") * col("mau")).cast("double"), 6).as("stickiness"))
-  }
-
-  /** Inactivity churn by signup cohort: users grouped by first-event ISO
-    * week; churned = no activity in the observation window's last 14 days.
-    * One per-user min/max aggregate, a 1-row global-max broadcast, and the
-    * cohort rollup — the whole query is two key shuffles regardless of
-    * corpus size. Cohort ships as midnight TIMESTAMP (the DATE-vs-engine
-    * contract used by [[cohortRetentionQ]]).
-    */
-  private def churnCohortQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val users = ev.groupBy(col("user_id"))
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-    users.crossJoin(ev.agg(max(col("ts")).as("mx")))
-      .select(date_trunc("week", col("first_ts")).as("cohort_week"),
-        (col("last_ts") < col("mx") - expr("INTERVAL 14 DAYS")).cast("long").as("ch"))
-      .groupBy(col("cohort_week"))
-      .agg(count(lit(1)).as("users"), sum(col("ch")).as("churned"))
-      .withColumn("churn_rate",
-        round(col("churned").cast("double") / col("users").cast("double"), 6))
-  }
-
-  /** Watermark-selection audit: per event type, how late events actually
-    * arrive — lateness = (max event-time seen EARLIER in the per-user
-    * arrival order, by event_id) minus the event's own time, exact micros.
-    * This is the measurement that justifies a streaming `withWatermark`
-    * bound: n_late says how often disorder happens, p99/max say how much
-    * slack the state store must keep. One key-partitioned window (arrival
-    * order per user) and one aggregate — no global sort.
-    */
-  private def watermarkAuditQ(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    t(s, dir, "events")
-      .select(col("event_type"), col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"))
-      .withColumn("late_us",
-        greatest(lit(0L), coalesce(max(col("us")).over(w) - col("us"), lit(0L))))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("late_us") > 0L, 1L).otherwise(0L)).as("n_late"),
-        max(col("late_us")).as("max_late_us"),
-        round(expr("percentile(late_us, 0.99)"), 6).as("p99_late_us"))
-  }
-
-  /** Inter-event gap histogram (power-of-2 second buckets): the measurement
-    * behind the sessionization gap knob — the session threshold should sit
-    * in the valley between the intra-session bucket mass and the
-    * between-visit mass, and this census shows exactly where that valley
-    * is. One key shuffle for the lag, then a domain-bounded census.
-    */
-  private def gapHistogramQ(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    val gaps = t(s, dir, "events")
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-      .withColumn("prev_us", lag(col("us"), 1).over(w))
-      .filter(col("prev_us").isNotNull)
-      .select(TF.pow2BucketCap(expr("(us - prev_us) div 1000000")).as("gap_cap_s"))
-    val counts = gaps.groupBy(col("gap_cap_s")).agg(count(lit(1)).as("n_gaps"))
-    counts.crossJoin(counts.agg(sum(col("n_gaps")).as("__tot")))
-      .select(col("gap_cap_s"), col("n_gaps"),
-        round(col("n_gaps").cast("double") / col("__tot").cast("double"), 6).as("share"))
-  }
-
-  /** Ordered signup → view → purchase funnel ([[Analytics.funnel]]): per
-    * user, the first completion time of each stage strictly after the
-    * previous one — one key shuffle, no per-key sort at any stage.
-    */
-  private def funnelQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.funnel(
-      t(s, dir, "events").select("user_id", "ts", "event_type"),
-      "user_id", "ts",
-      Seq("t_signup" -> (col("event_type") === "signup"),
-        "t_view" -> (col("event_type") === "view"),
-        "t_purchase" -> (col("event_type") === "purchase")))
-
-  /** Daily OHLC bars per event type: open/close by event sequence via the
-    * partial-aggregating `min_by`/`max_by` — bounded state per group, no
-    * window sort anywhere — volume and total exact.
-    */
-  private def ohlcBarsQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).cast("timestamp").as("day"))
-      .agg(min_by(col("value"), col("event_id")).as("open"),
-        max(col("value")).as("high"), min(col("value")).as("low"),
-        max_by(col("value"), col("event_id")).as("close"),
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-
-  /** Daily resampling + LOCF gap fill ([[Analytics.resampleDailyLocf]]):
-    * every user × every day of the corpus span, carrying the most recent
-    * daily close (by event sequence) forward across silent days.
-    */
-  private def resampleFfillQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.resampleDailyLocf(t(s, dir, "events"), "user_id", "ts",
-        max_by(col("value"), col("event_id")), "close")
-      .select(col("user_id"), col("day").cast("timestamp").as("day"),
-        col("close"))
-
-  /** Window-function sessionization over the events stream (30-min gap). */
-  private def sessionizeQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.sessionize(t(s, dir, "events"), "ts", "user_id", gapSeconds = 1800,
-        orderCols = Seq(col("event_id")))
-      .groupBy(col("user_id"), col("session_seq"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("ts")).as("session_start"), max(col("ts")).as("session_end"))
-
-  /** Top-3 orders per customer — the bounded-heap aggregate form: customers
-    * are a high-cardinality key, so ≤ 3 rows per customer per mapper enter
-    * the shuffle instead of every order (rows identical to the window form).
-    */
-  private def rankOrders(s: SparkSession, dir: String): DataFrame =
-    Analytics.topPerKeyAgg(
-      t(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"), col("o_totalprice")),
-      "o_custkey",
-      ordAsc = Seq(negate(col("o_totalprice")), col("o_orderkey")),
-      payload = Seq("o_orderkey" -> col("o_orderkey"),
-        "o_totalprice" -> col("o_totalprice")), k = 3)
-
-  /** Rollup revenue by (region, nation). */
-  private def rollupRevenue(s: SparkSession, dir: String): DataFrame =
-    Analytics.rollupAgg(
-      t(s, dir, "orders")
-        .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey")),
-      levels = Seq(col("r_name"), col("n_name")),
-      aggs = Seq(
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"),
-        count(lit(1)).as("n_orders")))
-
-  /** Anti join: customers with no order above 300k. */
-  private def antiJoin(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders").filter(col("o_totalprice") > 300000),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select(col("c_custkey"))
-
-  /** Semi join: customers with at least one order above 300k. */
-  private def semiJoin(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders").filter(col("o_totalprice") > 300000),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select(col("c_custkey"))
-
-  /** As-of join: each purchase event matched to the user's latest view event
-    * at or before it (inner semantics — unmatched purchases dropped).
-    */
-  private def asofJoinQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value").as("view_value"),
-        col("event_id").as("view_seq"))
-    // the custom whole-operator plan (graft.plans.AsofJoinExec): each side
-    // shuffles its own width, O(1) merge state — spec-pinned equal to the
-    // composed union+LOCF Analytics.asofJoin; view_seq makes equal-ts view
-    // duplicates deterministic should the data ever grow them
-    Analytics.asofJoinMerge(purchases, views, "user_id", "ts", "ts",
-        Seq("view_value"), rightTies = Seq("view_seq"))
-      .filter(col("asof_view_value").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"),
-        col("asof_view_value").as("prior_view_value"))
-  }
-
-  /** [[asofJoinQ]] with a max-staleness bound: a prior view only counts if
-    * it happened within 24 h of the purchase (`toleranceUs`) — the
-    * merge operator masks the match when its closest-at-or-before row is
-    * staler than the bound, so no second pass or post-join ts plumbing is
-    * needed. Oracle: DuckDB ASOF JOIN post-filtered on the gap (the
-    * closest match is the only candidate, so the filter IS tolerance
-    * semantics for the inner form).
-    */
-  private def asofToleranceQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value").as("view_value"),
-        col("event_id").as("view_seq"))
-    Analytics.asofJoinMerge(purchases, views, "user_id", "ts", "ts",
-        Seq("view_value"), rightTies = Seq("view_seq"),
-        toleranceUs = 24L * 3600L * 1000000L)
-      .filter(col("asof_view_value").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"),
-        col("asof_view_value").as("prior_view_value"))
-  }
-
-  /** First-order Markov transition matrix over each user's event sequence
-    * ([[Analytics.transitionMatrix]]): count and conditional probability of
-    * every event_type → event_type step, steps ordered by (ts, event_id).
-    * One key shuffle for the lag; the |states|² matrix makes the totals
-    * join a broadcast by construction.
-    */
-  private def eventTransitionsQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.transitionMatrix(
-      t(s, dir, "events").select("user_id", "ts", "event_id", "event_type"),
-      "user_id", "event_type", Seq(col("ts"), col("event_id")))
-
-  /** User-journey trigrams: every 3-step event_type path a user walked,
-    * with counts — the funnel-discovery companion to [[eventTransitionsQ]]
-    * (same single key-partitioned window, two lags instead of one; the
-    * output is ≤ |states|³ rows, aggregated map-side).
-    */
-  private def eventPathsQ(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    t(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("s1", lag(col("event_type"), 2).over(w))
-      .withColumn("s2", lag(col("event_type"), 1).over(w))
-      .filter(col("s1").isNotNull)
-      .groupBy(col("s1"), col("s2"), col("event_type").as("s3"))
-      .agg(count(lit(1)).as("n_paths"))
-  }
-
-  /** ROWS-frame rolling aggregates ([[Analytics.rollingAgg]]): 7-event
-    * moving sum and mean of `value` per user. The frame sums DECIMAL so the
-    * result is independent of the engines' frame-evaluation association
-    * order; the mean divides the exact sum once in double.
-    */
-  private def movingAvgQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "events").select(col("user_id"), col("ts"), col("event_id"),
-      col("value").cast("decimal(18,2)").as("__v"))
-    Analytics.rollingAgg(d, "user_id", Seq(col("ts"), col("event_id")), 7,
-      Seq("__ws" -> sum(col("__v")), "__wn" -> count(lit(1))))
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("__ws").cast("double").as("mov_sum"),
-        (col("__ws").cast("double") / col("__wn").cast("double")).as("mov_avg"))
-  }
-
-  /** Z-order data-layout audit: normalize (l_partkey, l_suppkey) to 16-bit
-    * range ids (exact integer min/max scaling — the range-id-then-interleave
-    * construction every production z-order writer uses), interleave with the
-    * native [[graft.expressions.InterleaveBits]] key, cut the curve into 64
-    * equal-height file-sized buckets (global NTILE via the range-sharded
-    * [[Analytics.rangedRank]] — no single-partition window), and report each
-    * bucket's zone map (min/max of BOTH dims). The point of the layout: every
-    * bucket is narrow in both columns at once, so predicates on either
-    * column prune files — `repartitionByRange(64, z)` + sortWithinPartitions
-    * writes exactly this layout at 100 TB. The min/max bounds are ONE
-    * collected aggregate row (a bounded side input, like shard boundaries).
-    */
-  private def zorderLayoutQ(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-    val b = li.agg(min(col("l_partkey")), max(col("l_partkey")),
-      min(col("l_suppkey")), max(col("l_suppkey"))).head()
-    val (minP, maxP, minS, maxS) = (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    val xn = expr(s"((l_partkey - ${minP}L) * 65536L) div ${maxP - minP + 1}L")
-    val yn = expr(s"((l_suppkey - ${minS}L) * 65536L) div ${maxS - minS + 1}L")
-    val keyed = li.withColumn("__z", graft.functions.LayoutFunctions.zorder2(xn, yn, 16))
-    Analytics.rangedRank(keyed, Seq.empty,
-        Seq(col("__z"), col("l_orderkey"), col("l_linenumber")))
-      .withColumn("zbucket", Analytics.ntileOf(col("rn"), col("n_part"), 64))
-      .groupBy(col("zbucket"))
-      .agg(count(lit(1)).as("n_rows"),
-        min(col("l_partkey")).as("min_part"), max(col("l_partkey")).as("max_part"),
-        min(col("l_suppkey")).as("min_supp"), max(col("l_suppkey")).as("max_supp"))
-  }
-
-  /** RFM customer segmentation: per user, recency (days since last event,
-    * against the corpus max day — ONE collected bound), frequency, and
-    * decimal-exact monetary total, each cut into quartiles by the
-    * range-sharded global NTILE ([[Analytics.rangedRank]] — the per-user
-    * aggregate can be billions of rows at corpus scale, so no
-    * single-reducer window anywhere), composed into the classic
-    * three-digit segment code.
-    */
-  private def rfmSegmentsQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val maxDay = ev.agg(max(to_date(col("ts")))).head().getDate(0)
-    val perUser = ev.groupBy(col("user_id"))
-      .agg(datediff(lit(maxDay), max(to_date(col("ts")))).cast("long").as("recency_days"),
-        count(lit(1)).as("frequency"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("monetary"))
-    def quartile(df: DataFrame, metric: String, out: String): DataFrame =
-      Analytics.rangedRank(df, Seq.empty, Seq(col(metric), col("user_id")))
-        .withColumn(out, Analytics.ntileOf(col("rn"), col("n_part"), 4))
-        .drop("rn", "n_part")
-    quartile(quartile(quartile(perUser, "recency_days", "r"), "frequency", "f"),
-        "monetary", "m")
-      .withColumn("segment", col("r") * 100 + col("f") * 10 + col("m"))
-  }
-
-  /** Join-skew diagnosis: the top-10 hottest join keys on the fact side
-    * with their share of all rows and the self-join row amplification n² —
-    * the report you run BEFORE deciding between AQE skew splitting and
-    * static salting ([[saltedJoinQ]]). One census aggregate, top-k via
-    * orderBy+limit (TakeOrderedAndProject — no global sort), the total as
-    * a single-row broadcast.
-    */
-  private def skewReportQ(s: SparkSession, dir: String): DataFrame = {
-    val counts = t(s, dir, "events")
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_rows"))
-    val total = counts.agg(sum(col("n_rows")).as("__tot"))
-    counts.orderBy(col("n_rows").desc, col("user_id")).limit(10)
-      .crossJoin(broadcast(total))
-      .select(col("user_id"), col("n_rows"),
-        round(col("n_rows").cast("double") / col("__tot").cast("double"), 6).as("frac"),
-        // double, not long×long: a hot key above ~3.04e9 rows would
-        // ANSI-overflow the bigint square — exactly the scale this report
-        // exists to diagnose (IEEE multiply is engine-identical)
-        (col("n_rows").cast("double") * col("n_rows").cast("double"))
-          .as("self_join_rows"))
-  }
-
-  /** Partition-layout planner: per output partition (lang, source), the
-    * byte volume (n_chars as the proxy) and the file count that keeps each
-    * file under the 16 KiB target — integer ceiling division, exact on
-    * both engines. The spill-aware sizing question ("does this partition
-    * fit an executor?") answered as a query; at 100 TB the same census
-    * drives spark.sql.files.maxPartitionBytes and writer bucketing.
-    */
-  private def partitionPlanQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-      .withColumn("files", expr("(total_chars + 16383) DIV 16384"))
-
-  /** Output-shard assignment balanced by token mass: documents ranked by
-    * (tokens DESC, id) and dealt round-robin into 16 shards — the
-    * longest-processing-time-first deal that bounds any shard's token sum
-    * to within one max-document of perfect balance, so no training-data
-    * writer task straggles. The global rank is the range-sharded
-    * [[Analytics.rangedRank]] (boundary-sampled, no one-reducer window);
-    * output is the 16-row balance audit a writer checks before committing
-    * the layout.
-    */
-  private def shardBalanceQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id"), TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-    Analytics.rangedRank(docs, Seq.empty,
-        Seq(negate(col("n_tokens")), col("doc_id")))
-      .select(pmod(col("rn") - 1L, lit(16L)).as("shard"), col("n_tokens"))
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-  }
-
-  /** Zone-map pruning audit ([[graft.sources.Tables.zoneMapAudit]]): would
-    * a Q1 1998 ship-date predicate prune files under (a) the as-ingested
-    * layout (file = orderkey mod 64 — every file spans the whole date
-    * domain) vs (b) a date-clustered layout (file = calendar month)? The
-    * measured answer at sf0.01 is the whole layout argument in two rows:
-    * arrival scans 64/64 files, date_sorted scans 6/83.
-    */
-  private def zoneMapQ(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.zoneMapAudit(
-      t(s, dir, "lineitem"),
-      layouts = Seq(
-        "arrival" -> pmod(col("l_orderkey"), lit(64)),
-        "date_sorted" -> (year(col("l_shipdate")) * 12 + month(col("l_shipdate")) - 1)),
-      statCol = col("l_shipdate"),
-      lo = lit("1998-01-01").cast("timestamp"),
-      hi = lit("1998-07-01").cast("timestamp"))
-
-  /** Local-DP randomized response ([[Analytics.randomizedResponse]]) over
-    * the purchase bit, cohorts = user_id mod 10. The flip coin is a
-    * deterministic integer hash of the event id (Knuth multiplicative mod
-    * 1e9+7, then mod 4) so the whole mechanism — flips included — replays
-    * exactly in the oracle, and the debiased estimate can be checked
-    * against the true count it is never allowed to see in production.
-    */
-  private def randomizedResponseQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.randomizedResponse(
-      t(s, dir, "events"),
-      cohortCol = pmod(col("user_id"), lit(10)),
-      bitCol = when(col("event_type") === "purchase", 1L).otherwise(0L),
-      coinCol = pmod(pmod(col("event_id"), lit(1000000007L)) * lit(2654435761L), lit(1000000007L)) % 4)
-
-  /** Salted skew join: orders⋈customer⋈nation revenue with the orders side
-    * salt-sharded 8 ways and the dimension replicated per salt — the static
-    * hot-key defense when AQE skew splitting isn't enough. Oracle = the
-    * plain join SQL: salting must be result-invariant.
-    */
-  private def saltedJoinQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Skew.saltedJoin(
-        t(s, dir, "orders"),
-        t(s, dir, "customer").join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey").as("o_custkey"), col("n_name")),
-        key = "o_custkey", salt = 8)
-      .groupBy(col("n_name"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"),
-        count(lit(1)).as("n_orders"))
-
-  /** Bloom semi-join reduction ([[graft.operators.Skew.bloomReducedJoin]]):
-    * orders ⋈ high-balance customers with the dim keys' Bloom pushed onto
-    * the fact scan — only ~(matching + fpp) fact rows enter the shuffle.
-    * Oracle = the PLAIN join SQL: the reduction must be result-invariant
-    * (false positives are dropped by the exact join condition).
-    */
-  private def bloomJoinQ(s: SparkSession, dir: String): DataFrame = {
-    val dim = t(s, dir, "customer").filter(col("c_acctbal") > 9000)
-      .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-    graft.operators.Skew.bloomReducedJoin(t(s, dir, "orders"), dim, "o_custkey")
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-  }
-
-  /** TPC-H Q3-shaped revenue query executed through `spark.sql` over temp
-    * views — the SAME SQL text serves as its own oracle (the engine's SQL
-    * surface is ANSI-compatible for this query class). Revenue goes through
-    * DECIMAL so both engines sum exactly.
-    */
-  private val sqlQ3Text =
-    """SELECT l_orderkey,
-      |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-      |COUNT(*) AS n_lines
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |WHERE o_orderstatus = 'O'
-      |GROUP BY l_orderkey
-      |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin
-
-  private def sqlQ3(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-    t(s, dir, "orders").createOrReplaceTempView("orders")
-    s.sql(sqlQ3Text)
-  }
-
-  /** JSON column extraction: parse events.props (a JSON string) with an
-    * explicit schema and aggregate the extracted field — from_json is the
-    * engine's EdnSerde-replacement codec applied inside a query.
-    */
-  private def jsonExtractQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .select(col("event_type"),
-        from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType))))
-          .getField("k").as("k"))
-      .groupBy(col("event_type"))
-      .agg(sum(col("k")).as("sum_k"), count(col("k")).as("n_k"))
-
-  /** Date arithmetic: monthly order revenue with month boundaries. */
-  private def monthlyRevenueQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"),
-        count(lit(1)).as("n_orders"))
-
-  /** NTILE quartiles of order price within each order status — equi-height
-    * bucketing. `o_orderstatus` has 3 values, so a plain
-    * `Window.partitionBy(status)` is 3 tasks at any scale; instead
-    * [[graft.operators.Analytics.rangedRank]] range-partitions the sort and
-    * derives the tile from the global row number in closed form (same bucket
-    * allocation as SQL NTILE, verified against the DuckDB oracle).
-    */
-  private def ntileQ(s: SparkSession, dir: String): DataFrame = {
-    val ranked = graft.operators.Analytics.rangedRank(
-      t(s, dir, "orders").select(col("o_orderstatus"), col("o_totalprice"), col("o_orderkey")),
-      Seq("o_orderstatus"), Seq(col("o_totalprice"), col("o_orderkey")))
-    ranked
-      .withColumn("tile", graft.operators.Analytics.ntileOf(col("rn"), col("n_part"), 4))
-      .groupBy(col("o_orderstatus"), col("tile"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-  }
-
-  /** Day-over-day revenue delta via lag — the offset window. The global
-    * window runs over POST-aggregation data (one row per day), so the
-    * single-partition sort is a few thousand rows regardless of corpus
-    * size; deltas subtract in DECIMAL (exact) before the double cast.
-    */
-  private def dailyDeltaQ(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
-    t(s, dir, "orders")
-      .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-      .select(col("day"), col("rev").cast("double").as("revenue"),
-        lag(col("rev"), 1).over(w).cast("double").as("prev_revenue"),
-        (col("rev") - lag(col("rev"), 1).over(w)).cast("double").as("delta"))
-  }
-
-  /** Relative-rank windows: percent_rank and cume_dist of each order within
-    * its status partition. The (o_totalprice, o_orderkey) ordering is total,
-    * so both are closed-form functions of the global row number — computed
-    * by the range-partitioned [[graft.operators.Analytics.rangedRank]]
-    * instead of a 3-task `Window.partitionBy(status)` sort; identical
-    * doubles to the engine window functions (same (rn−1)/(n−1) and rn/n
-    * arithmetic), oracle-verified.
-    */
-  private def percentRankQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Analytics
-    Analytics.rangedRank(
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-      Seq("o_orderstatus"), Seq(col("o_totalprice"), col("o_orderkey")))
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        round(Analytics.percentRankOf(col("rn"), col("n_part")), 6).as("pr"),
-        round(Analytics.cumeDistOf(col("rn"), col("n_part")), 6).as("cd"))
-  }
-
-  /** Bag-semantics set ops: EXCEPT ALL keeps multiplicity (a customer with 3
-    * small orders and 1 big one survives twice), unlike the set-semantics
-    * q_except.
-    */
-  private def exceptAllQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").select(col("o_custkey").as("custkey"))
-      .exceptAll(t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-        .select(col("o_custkey").as("custkey")))
-      .groupBy(col("custkey")).agg(count(lit(1)).as("n"))
-
-  /** Fixed-width histogram via portable floor-div bucketing (no engine
-    * histogram UDAF): order prices in 25k-wide buckets.
-    */
-  private def histogramQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .groupBy(floor(col("o_totalprice") / 25000).cast("long").as("bucket"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Pivot: one column per event type, summed values per user bucket. */
-  private def pivotQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .withColumn("user_bucket", (col("user_id") % 10).cast("int"))
-      .groupBy(col("user_bucket"))
-      .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double"))
-
-  /** Cube: all grouping-set combinations of (returnflag, linestatus). */
-  private def cubeQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"))
-      .select(coalesce(col("l_returnflag"), lit("ALL")).as("l_returnflag"),
-        coalesce(col("l_linestatus"), lit("ALL")).as("l_linestatus"), col("n"))
-
-  /** Explicit GROUPING SETS — the general grouping-set form that cube and
-    * rollup specialize: per-returnflag totals and per-linestatus totals in
-    * one pass (one Expand + one aggregation, not a self-union of two scans).
-    */
-  private def groupingSetsQ(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-    s.sql("""SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
-            |COALESCE(l_linestatus, 'ALL') AS l_linestatus,
-            |SUM(l_quantity) AS sum_qty, COUNT(*) AS n
-            |FROM lineitem
-            |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""".stripMargin)
-  }
-
-  /** Orders above their customer's average — correlated-aggregate semantics
-    * expressed as a window (one shuffle, no rescan). The comparison is the
-    * cross-multiplied `price * n > sum` in DECIMAL so it is exact on both
-    * engines (a float average's low bits depend on summation order).
-    */
-  private def aboveAvgQ(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("o_custkey"))
-    t(s, dir, "orders")
-      .withColumn("cust_sum", sum(col("o_totalprice").cast("decimal(18,2)")).over(w))
-      .withColumn("cust_n", count(lit(1)).over(w))
-      .filter(col("o_totalprice").cast("decimal(18,2)") * col("cust_n") > col("cust_sum"))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-  }
-
-  /** Range (interval) join: orders classified into price bands via a
-    * non-equi BETWEEN join against a tiny broadcast bands table — the
-    * broadcast-nested-loop shape appropriate when one side is literal-small
-    * (a shuffle range join would be wrong here).
-    */
-  private def rangeJoinQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bands = Seq(
-      ("low", 0.0, 150000.0), ("mid", 150000.0, 300000.0),
-      ("high", 300000.0, 450000.0), ("extreme", 450000.0, 1e9))
-      .toDF("band", "lo", "hi")
-    t(s, dir, "orders")
-      .join(broadcast(bands), col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-  }
-
-  /** Set ops: customers with orders EXCEPT customers with an order > 300k. */
-  private def exceptQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").select(col("o_custkey").as("custkey"))
-      .except(t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-        .select(col("o_custkey").as("custkey")))
-
-  private def intersectQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      .intersect(t(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-
-  /** Part catalog stats: brand-level pricing over the part dimension with a
-    * LIKE filter — string-predicate pushdown plus DECIMAL-exact averaging
-    * (avg = sum/count computed identically on both engines).
-    */
-  private def partBrandsQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .filter(col("p_type").like("%AND%"))
-      .groupBy(col("p_brand"))
-      .agg(count(lit(1)).as("n_parts"),
-        round(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double")
-          / count(lit(1)), 6).as("avg_price"),
-        max(col("p_size")).as("max_size"))
-
-  /** IVF top-k: probe only the query vector's own inverted list (`label`). */
-  private def ivfTopkQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val lbl = emb.filter(col("vec_id") === 0).select("label").head().getInt(0)
-    Ann.ivfTopK(emb, "embedding", "vec_id", "label", queryVec(s, dir),
-      probeLists = Seq(lbl), k = 20)
-  }
-
-  /** Default IVF operating point (round-12 tuning, measured on the sweep
-    * data, nothing guessed): 16 hash-seeded lists refined by 2 replayable
-    * Lloyd rounds ([[graft.similarity.KMeans.fitReplayable]]), SPILL-2
-    * assignment (each vector indexed in its 2 nearest lists), nprobe = 8.
-    * Measured mean recall@20 with probes disjoint from the seeds: 0.91 at
-    * sf0.01, 0.945 at sf0.1 — vs 0.37 at the r11 label-list tier's best
-    * setting. This corpus is weakly clustered (mean top-20 cosine ≈ 0.27
-    * against an all-pairs mean of ≈ 0, no blob structure), so the 0.8
-    * recall floor genuinely costs a large nprobe here; on a clustered
-    * corpus the same machinery crosses 0.8 at nprobe 1-2 and the
-    * q_ivf_probe_sweep dial is how you find the operating point either way.
-    */
-  private val IvfLists = 16
-  private val IvfIters = 2
-  private val IvfSpill = 2
-  private val IvfNprobe = 8
-
-  /** Trained-IVF building blocks shared by [[annRecallQ]] and
-    * [[ivfProbeSweepQ]]: `(probes(qid, qv), corpus(did, dv),
-    * postings(did, clab), centroids(clab, cvec))` — postings are the
-    * spill-assignment inverted index (≤ [[IvfSpill]] rows per vector,
-    * 2×8-byte shuffles only; embeddings never ride a posting).
-    */
-  /** Per-JVM memo of the trained IVF model: q_ann_recall and
-    * q_ivf_probe_sweep train the IDENTICAL replayable k-means (same data,
-    * same seeds, same fixed Lloyd rounds — deterministic by construction,
-    * so one training serves all), and fitReplayable's driver-side loop
-    * costs 2 full assignment scans + a seed scan per call. Keyed on
-    * (sfdir, applicationId) like the bucketed fixture, so a new process
-    * (fresh testdata) always retrains; the memo holds only the k×dim
-    * centroid array, a few KB. At scale this IS the production shape:
-    * an IVF model is trained once and served to every query, never
-    * refit per query.
-    */
-  private val ivfModelMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.similarity.KMeans.Model]
-
-  private def ivfTrained(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val model = ivfModelMemo.getOrElseUpdate(
-      s"$dir@${s.sparkContext.applicationId}#$IvfLists/$IvfIters/$IvfSpill",
-      graft.similarity.KMeans.fitReplayable(
-        emb, "embedding", "vec_id", IvfLists, IvfIters))
-    val probes = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), VF.toDouble(col("embedding")).as("qv"))
-    val corpus = emb.select(col("vec_id").as("did"),
-      VF.toDouble(col("embedding")).as("dv"))
-    val post = emb.select(col("vec_id").as("did"),
-      explode(model.assignTopCol(col("embedding"), IvfSpill)).as("clab"))
-    val cent = model.centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toDF("clab", "cvec")
-    (probes, corpus, post, cent)
-  }
-
-  /** Per-probe recall@20 of the trained IVF tier at its DEFAULT operating
-    * point against the exact cosine top-20 — the accuracy report you run
-    * before trusting an ANN tier at scale. Every stage is deterministic
-    * (hash-sampled seeds, fixed Lloyd rounds with 6-dp means, exact
-    * cosines), so the oracle replays recall VALUE-exactly, training
-    * included — no contract band. Per-probe top-20 via the bounded-heap
-    * aggregate (no global window); the all-pairs truth side is
-    * |probes|·|corpus| — an audit over a probe SAMPLE by construction (at
-    * 100 TB you sample probes, never pair up the corpus). The ≥ 0.8 mean
-    * recall floor is pinned by AnnSpec ("trained IVF tier clears the 0.8
-    * recall floor at the default config").
-    */
-  private def annRecallQ(s: SparkSession, dir: String): DataFrame = {
-    val (probes, corpus, post, cent) = ivfTrained(s, dir)
-    def top20(pairs: DataFrame): DataFrame =
-      Analytics.topPerKeyAgg(
-        pairs.select(col("qid"), col("did"),
-          VF.cosine(col("qv"), col("dv")).as("cos")),
-        "qid", Seq(negate(col("cos")), col("did")), Seq("did" -> col("did")), 20)
-    val exact = top20(probes.join(corpus, col("did") =!= col("qid")))
-    val lists = Analytics.topPerKeyAgg(
-        probes.crossJoin(broadcast(cent)).select(col("qid"), col("clab"),
-          VF.cosine(col("qv"), col("cvec")).as("ccos")),
-        "qid", Seq(negate(col("ccos")), col("clab")), Seq("clab" -> col("clab")),
-        IvfNprobe)
-      .select(col("qid"), col("clab"))
-    // candidate set = union of the probed posting lists, deduped (a spill
-    // vector can arrive via two lists and must occupy ONE shortlist slot)
-    val candIds = lists.join(post, "clab")
-      .filter(col("did") =!= col("qid"))
-      .select("qid", "did").distinct()
-    val ivf = top20(candIds.join(probes, "qid").join(corpus, "did"))
-    // both rank sets are ≤ |probes|·20 rows BY CONSTRUCTION (top-k output),
-    // so these broadcasts are size-bounded at any corpus scale
-    val hits = exact.select("qid", "did")
-      .join(broadcast(ivf.select("qid", "did")), Seq("qid", "did"))
-      .groupBy("qid").agg(count(lit(1)).as("n_hit"))
-    probes.select("qid").join(broadcast(hits), Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .withColumn("recall", round(col("n_hit").cast("double") / 20.0, 6))
-  }
-
-  /** IVF tuning curve: recall@20 vs nprobe ∈ {2, 4, 8} over the SAME
-    * trained spill-2 lists as [[annRecallQ]] — the sweep behind choosing
-    * an ANN operating point (the recall audit pins one setting; this
-    * measures how fast recall buys back as more inverted lists are probed,
-    * which is THE latency/recall dial at corpus scale). All ranks replay:
-    * the trained centroids are deterministic 6-dp means, list ranking and
-    * candidate ranking use the identical cosine, and recall is an exact
-    * hit count against the exact top-20.
-    */
-  private def ivfProbeSweepQ(s: SparkSession, dir: String): DataFrame = {
-    val (probes, corpus, post, cent) = ivfTrained(s, dir)
-    def top20(pairs: DataFrame): DataFrame =
-      Analytics.topPerKeyAgg(
-        pairs.select(col("qid"), col("did"), VF.cosine(col("qv"), col("dv")).as("cos")),
-        "qid", Seq(negate(col("cos")), col("did")), Seq("did" -> col("did")), 20)
-    val exact = top20(probes.join(corpus, col("did") =!= col("qid")))
-      .select(col("qid"), col("did"))
-    val lrank = Analytics.topPerKeyAgg(
-        probes.crossJoin(broadcast(cent)).select(col("qid"), col("clab"),
-          VF.cosine(col("qv"), col("cvec")).as("ccos")),
-        "qid", Seq(negate(col("ccos")), col("clab")), Seq("clab" -> col("clab")),
-        IvfNprobe)
-      .select(col("qid"), col("clab"), col("rn").as("lrank"))
-    // The three sweep points NEST: the np-probe candidate set is exactly
-    // {did : min list-rank over the lists containing did ≤ np}. Score the
-    // np=max candidate set ONCE — the min-lrank aggregate replaces the old
-    // per-np distinct() (same dedup, one extra tiny column) and the corpus
-    // re-rank join + cosine run once instead of once per sweep point (the
-    // old shape re-joined corpus and re-scored 3×; r19, guide §2.4). The
-    // repartition on qid is the one exchange all three top-20 branches
-    // then reuse (their filter preserves partitioning and the bounded
-    // top-k aggregate's required distribution is already satisfied).
-    // Per-np top-20s, hits, and recalls are row-identical: same candidate
-    // sets, same cosines, same (−cos, did) tie-breaks.
-    val candIds = lrank.select(col("qid"), col("clab"), col("lrank"))
-      .join(post, "clab")
-      .filter(col("did") =!= col("qid"))
-      .groupBy(col("qid"), col("did")).agg(min(col("lrank")).as("mlr"))
-    val scored = candIds.join(probes, "qid").join(corpus, "did")
-      .select(col("qid"), col("did"), col("mlr"),
-        VF.cosine(col("qv"), col("dv")).as("cos"))
-      .repartition(col("qid"))
-    Seq(2, 4, IvfNprobe).map { np =>
-      val ivf = Analytics.topPerKeyAgg(
-        scored.filter(col("mlr") <= np),
-        "qid", Seq(negate(col("cos")), col("did")), Seq("did" -> col("did")), 20)
-      val hits = exact.join(broadcast(ivf.select(col("qid"), col("did"))),
-          Seq("qid", "did"))
-        .groupBy(col("qid")).agg(count(lit(1)).as("n_hit"))
-      probes.select(col("qid")).join(broadcast(hits), Seq("qid"), "left")
-        .select(lit(np.toLong).as("nprobe"), col("qid"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-    }.reduce(_ unionAll _)
-      .withColumn("recall", round(col("n_hit").cast("double") / 20.0, 6))
-  }
-
-  // ------------------------------------------------------------------ dedup
-
-  private def dedupExact(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(t(s, dir, "documents"), "text", "doc_id")
-
-  /** Cross-document duplicated-span detection by winnowing-style tiling:
-    * non-overlapping 32-char tiles fingerprinted (fnv1a64), inverted
-    * postings self-joined on fingerprint, pairs sharing ≥ 2 distinct
-    * tiles reported with the shared count — the copy-detection primitive
-    * between exact dedup (whole doc) and MinHash (bag similarity): it
-    * localizes HOW MUCH verbatim text two documents share and survives
-    * content moved around a document. Scale posture: postings are 8-byte
-    * fingerprints (text never shuffles past the tiling scan); boilerplate
-    * tiles shared by > 50 docs are dropped BEFORE the self-join (the
-    * hot-shingle cap — quadratic pair blowup capped at 50² per tile, the
-    * Dedup.autoDocFreqCap pattern); the cap is part of the documented
-    * semantics and the oracle replays it.
-    */
-  private def tileDupesQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(length(col("text")) >= 32)
-    val tiles = docs.select(col("doc_id"),
-        explode(expr("transform(sequence(1, length(text) div 32), " +
-          "k -> substring(text, (k-1)*32 + 1, 32))")).as("tile"))
-      .select(col("doc_id"), TF.fnv1a64(col("tile")).as("fp"))
-      .distinct()
-    val ok = tiles.groupBy(col("fp")).agg(count(lit(1)).as("m"))
-      .filter(col("m") >= 2 && col("m") <= 50)
-      .select("fp")
-    val p = tiles.join(ok, "fp")
-    p.as("a").join(p.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= 2)
-  }
-
-  /** Group-leakage-free train/val/test split (GroupShuffleSplit): the
-    * split is a pure function of the GROUP key (user), not the row, so
-    * all of a user's events land in one split — the guard against
-    * near-duplicate leakage across splits that a row-hash split cannot
-    * give. Deterministic content hash (fnv1a64, power-of-two modulus →
-    * engine-portable), 12/2/2 sixteenths = 75/12.5/12.5. The audit column
-    * re-derives the invariant from the DATA (max distinct splits per
-    * user == 1) rather than trusting the construction. One census
-    * aggregate + one 1-row broadcast; the corpus never shuffles.
-    */
-  private def leakageSplitQ(s: SparkSession, dir: String): DataFrame = {
-    val b = pmod(TF.fnv1a64(concat(lit("split#"), col("user_id").cast("string"))),
-      lit(16L))
-    val split = when(b < 12, "train").when(b < 14, "val").otherwise("test")
-    val tagged = t(s, dir, "events").select(col("user_id"), split.as("split"))
-    val audit = tagged.groupBy(col("user_id"))
-      .agg(countDistinct(col("split")).as("k"))
-      .agg(max(col("k")).as("mx"))
-    tagged.groupBy(col("split"))
-      .agg(count(lit(1)).as("n_events"), countDistinct(col("user_id")).as("n_users"))
-      .crossJoin(broadcast(audit))
-      .withColumn("leak_free", col("mx") === 1L)
-      .drop("mx")
-  }
-
-  /** Walk-forward time split with a purge embargo (the leakage-safe CV for
-    * temporal data: train strictly precedes validation, and the 6 h before
-    * each validation window is EMBARGOED from train so look-ahead features
-    * computed near the boundary cannot leak). Three equal time slices from
-    * the observed [min, max] span — fold 1 trains on slice 0 and validates
-    * on slice 1, fold 2 trains on slices 0-1 and validates on slice 2.
-    * One corpus scan: the span bounds are a 1-row broadcast, fold
-    * boundaries are integer-micros arithmetic, and all six counts come from
-    * conditional sums in a single aggregate, unpivoted to one row per fold.
-    */
-  private def timeSplitQ(s: SparkSession, dir: String): DataFrame = {
-    val embargoUs = 21600000000L // 6 hours
-    val ev = t(s, dir, "events").select(unix_micros(col("ts")).as("us"))
-    val bounds = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-    val withB = ev.crossJoin(broadcast(bounds))
-      .withColumn("b1", expr("mn + (mx - mn + 1) div 3"))       // integer div:
-      .withColumn("b2", expr("mn + ((mx - mn + 1) * 2) div 3")) // `/` would go double
-    val agg = withB.agg(
-      sum(when(col("us") < col("b1") - embargoUs, 1L).otherwise(0L)).as("t1"),
-      sum(when(col("us") >= col("b1") - embargoUs && col("us") < col("b1"), 1L).otherwise(0L)).as("e1"),
-      sum(when(col("us") >= col("b1") && col("us") < col("b2"), 1L).otherwise(0L)).as("v1"),
-      sum(when(col("us") < col("b2") - embargoUs, 1L).otherwise(0L)).as("t2"),
-      sum(when(col("us") >= col("b2") - embargoUs && col("us") < col("b2"), 1L).otherwise(0L)).as("e2"),
-      sum(when(col("us") >= col("b2"), 1L).otherwise(0L)).as("v2"))
-    agg.select(expr(
-      """stack(2,
-        |  CAST(1 AS BIGINT), t1, e1, v1,
-        |  CAST(2 AS BIGINT), t2, e2, v2) AS (fold, train_rows, embargoed_rows, val_rows)""".stripMargin))
-  }
-
-  /** Exact 5-gram Jaccard with the default hot-shingle guard ON (df cap
-    * `max(64, n/100)` — Dedup.autoDocFreqCap): one boilerplate shingle must
-    * not quadratically explode the inverted-index self-join. The oracle
-    * replays the identical cap ([[duckCappedJaccardSql]]).
-    */
-  private def ngramJaccard(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", n = 5, threshold = 0.8,
-      corpusN = tableCount(s, dir, "documents"))
-
-  /** Fuzzy-dedup threshold sweep: pair counts at four Jaccard cutoffs from
-    * ONE pass over the exact pair set ([[Dedup.ngramJaccardPairs]] at the
-    * loosest threshold, conditional counts above it). The inverted-index
-    * join — the expensive part — is threshold-independent, so sweeping
-    * costs the same as a single-threshold run; this is how you pick the
-    * dedup threshold for a corpus without re-running the candidate join
-    * per candidate value.
-    */
-  private def jaccardSweepQ(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", n = 5,
-        threshold = 0.5, corpusN = tableCount(s, dir, "documents"))
-      .agg(count(when(col("jaccard") >= 0.5, 1)).as("n_ge_50"),
-        count(when(col("jaccard") >= 0.6, 1)).as("n_ge_60"),
-        count(when(col("jaccard") >= 0.7, 1)).as("n_ge_70"),
-        count(when(col("jaccard") >= 0.8, 1)).as("n_ge_80"))
-
-  /** Directed n-gram containment pairs ([[Dedup.containmentPairs]]): the
-    * quote/excerpt detector — C(A→B)=|A∩B|/|A| flags a document pasted
-    * inside a larger one where Jaccard stays near zero. Same hot-capped
-    * inverted index as the Jaccard pass, so a corpus pays one candidate
-    * join for both resemblance and containment.
-    */
-  private def docContainmentQ(s: SparkSession, dir: String): DataFrame =
-    Dedup.containmentPairs(t(s, dir, "documents"), "doc_id", "text", n = 5,
-      threshold = 0.5, corpusN = tableCount(s, dir, "documents"))
-
-  /** Language-ID confusion matrix: declared `lang` vs the n-gram
-    * heuristic's prediction, with each cell's share of its true-language
-    * row — the corpus-scale evaluation of the classifier the curation
-    * pipeline gates on. Two aggregates; the per-language totals side is
-    * |langs| rows, so the join back is planner-broadcast.
-    */
-  private def langConfusionQ(s: SparkSession, dir: String): DataFrame = {
-    val conf = t(s, dir, "documents")
-      .select(col("lang"), TF.langId(col("text")).as("lang_guess"))
-      .groupBy(col("lang"), col("lang_guess"))
-      .agg(count(lit(1)).as("n"))
-    val tot = conf.groupBy(col("lang")).agg(sum(col("n")).as("__t"))
-    conf.join(tot, "lang")
-      .select(col("lang"), col("lang_guess"), col("n"),
-        round(col("n").cast("double") / col("__t").cast("double"), 6).as("frac"))
-  }
-
-  /** k-anonymity audit over the release quasi-identifiers (lang, source):
-    * any combination shared by fewer than k=5 documents re-identifies its
-    * members and must be suppressed or generalized before release. One
-    * partial-aggregated census — the standard privacy gate shape.
-    */
-  private def kAnonymityQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("at_risk", col("n") < 5)
-
-  /** IVF index balance audit: per-list vector counts under the fixed
-    * first-10 coarse quantizer plus the skew ratio max/avg — list sizes ARE
-    * the partition sizes at serving time, so imbalance here is executor
-    * skew at 100 TB (the fix being more lists or k-means re-training).
-    * One aggregation + a single-row broadcast for the global ratios.
-    */
-  private def ivfBalanceQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 10).orderBy(col("vec_id"))
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val sizes = graft.similarity.KMeans.Model(cents).assign(emb, "embedding")
-      .groupBy(col("list").cast("long").as("list"))
-      .agg(count(lit(1)).as("n_vecs"))
-    val g = sizes.agg(sum(col("n_vecs")).as("__tot"), max(col("n_vecs")).as("__max"))
-    sizes.crossJoin(broadcast(g))
-      .select(col("list"), col("n_vecs"),
-        round(col("n_vecs").cast("double") / col("__tot").cast("double"), 6).as("frac"),
-        round((col("__max") * lit(cents.length)).cast("double") /
-          col("__tot").cast("double"), 6).as("imbalance"))
-  }
-
-  private def minhashLsh(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashPairs(t(s, dir, "documents"), "doc_id", "text", n = 5, threshold = 0.8,
-      corpusN = tableCount(s, dir, "documents"))
-
-  /** End-to-end dedup resolution: near-dup pairs → connected components →
-    * keep/drop decision per involved doc. Oracle: a DuckDB recursive CTE
-    * over the exact-Jaccard pair graph (see [[duckResolveCte]]).
-    */
-  private def dedupResolve(s: SparkSession, dir: String): DataFrame =
-    // no orderBy: a global sort is an extra range-partition exchange and the
-    // driver's compare sorts rows itself
-    Dedup.resolveDuplicates(
-      Dedup.minhashPairs(t(s, dir, "documents"), "doc_id", "text", n = 5, threshold = 0.8,
-        corpusN = tableCount(s, dir, "documents")))
-
-  /** SimHash near-dup pairs. Tokens hash with FNV-1a (engine-portable), so
-    * the DuckDB oracle recomputes every document's 64-bit simhash from
-    * scratch (HUGEINT FNV + bit votes) and checks the pair set row-for-row
-    * — the pigeonhole blocking has zero false negatives, so Spark's output
-    * IS the exact hamming ≤ 3 pair set.
-    */
-  private def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
-      .withColumn("hamming", col("hamming").cast("long"))
-
-  private def embedNearDup(s: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingNearDupExact(t(s, dir, "embeddings"), "vec_id", "embedding", 0.45)
-
-  /** Cost-dispatched near-dup (the user-facing entry point): exact below
-    * the measured crossover, LSH above — oracle = the exact pair SQL, valid
-    * at verify scale where the dispatcher picks the exact path.
-    */
-  private def embedNearDupAuto(s: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingNearDup(t(s, dir, "embeddings"), "vec_id", "embedding",
-      dim = 64, threshold = 0.45, n = tableCount(s, dir, "embeddings"))
-
-  /** SemDeDup semantic dedup over the embeddings corpus. Centroids are the
-    * first 10 vectors (the q_kmeans_assign fixed-centroid scheme) so the
-    * oracle replays the assignment bit-for-bit; eps matches the near-dup
-    * threshold, making the within-cluster pair set the cluster-restricted
-    * subset of q_embed_near_dup's pairs and the keep decision a recursive
-    * CTE over it.
-    */
-  private def semanticDedupQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 10).orderBy(col("vec_id"))
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    Dedup.semanticDedup(emb, "vec_id", "embedding", dim = 64,
-      graft.similarity.KMeans.Model(cents), eps = 0.45,
-      n = tableCount(s, dir, "embeddings"))
-      .select(col("vec_id"), col("list").cast("long").as("list"), col("keep_id"))
-  }
-
-  private def embedNearDupLsh(s: SparkSession, dir: String): DataFrame =
-    // bits/tables = 0 → auto-size from corpus, threshold, and probe radius
-    // (Ann.bitsFor / Ann.tablesFor): fixed bits degrade to near-all-pairs as
-    // the corpus grows, fixed tables lose recall as bits grow. Radius-1
-    // multiprobe at the 99.9% recall target drives the per-pair miss
-    // probability low enough that the output equals the exact pair set at
-    // verify scale — so the exact-cosine SQL oracle applies verbatim and a
-    // recall regression fails the hash compare (plus a spec pins it).
-    Dedup.embeddingNearDupLsh(t(s, dir, "embeddings"), "vec_id", "embedding",
-      dim = 64, threshold = 0.45, bits = 0, tables = 0,
-      n = tableCount(s, dir, "embeddings"))
-
-  // ---------------------------------------------------------- text analysis
-
-  private def tokenCounts(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .groupBy(col("lang"))
-      .agg(sum(TF.tokenCount(col("text")).cast("long")).as("total_tokens"),
-        count(lit(1)).as("n_docs"))
-
-  /** Sequence-length bucketing for training-batch construction: assign each
-    * document to the next power-of-2 token-capacity bucket and report, per
-    * bucket, the padding waste a fixed-shape batch of that capacity pays
-    * (padded slots minus real tokens). The bucket is the INTEGER closed form
-    * `1 << length(bin(n-1))` — no float log2, whose boundary rounding
-    * differs across engines. One scan + one tiny aggregate (≤ 64 buckets);
-    * the bucketing column itself is the partition key a batching writer
-    * would `repartitionByRange` on at scale.
-    */
-  private def lengthBucketsQ(s: SparkSession, dir: String): DataFrame = {
-    val padded = col("bucket_cap") * col("n_docs")
-    t(s, dir, "documents")
-      .select(TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("bucket_cap", TF.pow2BucketCap(col("n_tokens")))
-      .groupBy(col("bucket_cap"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("total_tokens"))
-      .select(col("bucket_cap"), col("n_docs"), col("total_tokens"),
-        (padded - col("total_tokens")).as("padding_waste"),
-        round((padded - col("total_tokens")).cast("double") / padded.cast("double"), 6)
-          .as("waste_frac"))
-  }
-
-  private def textQuality(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val toks = TF.tokens(lower(col("text")))
-    d.select(col("doc_id"),
-      TF.tokenCount(col("text")).cast("long").as("n_tokens"),
-      TF.punctCount(col("text")).cast("long").as("n_punct"),
-      size(filter(toks, x => x.isInCollection(TF.stopwords("en")))).cast("long").as("n_stop"))
-  }
-
-  private def langIdQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"), TF.langId(col("text")).as("lang_guess"))
-
-  private def fingerprintQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"), TF.fingerprintMod(col("text")).as("fp"))
-
-  private def qualityScoreQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"), TF.qualityScore(col("text")).as("quality"))
-
-  private def subwordCountQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
-      TF.subwordCount(col("text")).cast("long").as("n_subwords"))
-
-  /** C4-style per-document filter features with exact integer numerators:
-    * mean word length (non-space chars / tokens) and uppercase-character
-    * ratio — both integer/integer divisions rounded at 6 dp, so the oracle
-    * matches bit-exactly.
-    */
-  private def textStatsQ(s: SparkSession, dir: String): DataFrame = {
-    val nonSpace = length(regexp_replace(col("text"), "\\s", ""))
-    val nToks = TF.tokenCount(col("text"))
-    val nUpper = length(col("text")) - length(regexp_replace(col("text"), "[A-Z]", ""))
-    t(s, dir, "documents").select(col("doc_id"),
-      when(nToks > 0, round(nonSpace.cast("double") / nToks, 6)).otherwise(0.0).as("mean_word_len"),
-      when(length(col("text")) > 0,
-        round(nUpper.cast("double") / length(col("text")), 6)).otherwise(0.0).as("upper_frac"))
-  }
-
-  /** Within-document repetition (a Gopher/C4-style quality filter signal):
-    * the fraction of a document's word bigrams taken by its most frequent
-    * bigram. High values flag boilerplate/spam. Bigrams are NON-distinct
-    * occurrences (unlike the dedup shingle sets). Counting is per-document
-    * state, so it runs INSIDE the row via the native
-    * [[graft.expressions.BigramStats]] expression — a pure scan with zero
-    * shuffles, vs the original explode + two groupBys that re-shuffled the
-    * corpus's entire bigram stream twice (6.6 s → ~0.2 s at sf0.1; at
-    * 100 TB the shuffle formulation is corpus-sized × 2).
-    */
-  private def repetitionQ(s: SparkSession, dir: String): DataFrame = {
-    val toks = TF.tokens(lower(col("text")))
-    val stats = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.expressions.BigramStats(
-        org.apache.spark.sql.graft.ColumnBridge.expression(toks)))
-    t(s, dir, "documents")
-      .filter(size(toks) >= 2)
-      .select(col("doc_id"), stats.as("bs"))
-      .select(col("doc_id"),
-        element_at(col("bs"), 1).as("top_bigram_n"),
-        element_at(col("bs"), 2).as("n_bigrams"),
-        round(element_at(col("bs"), 1).cast("double") / element_at(col("bs"), 2), 6)
-          .as("top_bigram_frac"))
-  }
-
-  /** TF-IDF term statistics: top-5 terms per document by term frequency
-    * (integer counts — exact across engines; idf transform is caller-side,
-    * see TextFunctions.termStats).
-    */
-  private def tfidfQ(s: SparkSession, dir: String): DataFrame =
-    // bounded-heap top-k: ≤ 5 (term, tf, df) rows per doc per mapper reach
-    // the shuffle — a document's whole vocabulary never sorts in one task
-    Analytics.topPerKeyAgg(
-      TF.termStats(t(s, dir, "documents"), "doc_id", "text", broadcastVocab = true),
-      "doc_id",
-      ordAsc = Seq(negate(col("tf")), col("term")),
-      payload = Seq("term" -> col("term"), "tf" -> col("tf"),
-        "df" -> col("df")), k = 5)
-
-  /** Exact dedup after canonical normalization (case/punct/whitespace). */
-  private def dedupNormalized(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(
-      t(s, dir, "documents").select(col("doc_id"), TF.normalizeText(col("text")).as("norm_text")),
-      "norm_text", "doc_id")
-
-  /** Exact distinct cardinality per group (map-side partial distinct). */
-  private def distinctUsers(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n_users"), count(lit(1)).as("n_events"))
-
-  /** Exact interpolated percentiles per group. */
-  private def percentilesQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(round(expr("percentile(value, 0.5)"), 6).as("med"),
-        round(expr("percentile(value, 0.95)"), 6).as("p95"))
-
-  /** GK-sketch percentiles — the constant-memory, single-pass face of
-    * [[percentilesQ]] for 100 TB group-bys. Sketch cut points are
-    * engine-specific, so the oracle checks the sketch's CONTRACT instead of
-    * its value: the query re-ranks each approximate percentile against the
-    * group's raw values and emits whether its rank position lands inside a
-    * band 25× wider than the sketch's 1/1000 rank-error guarantee; DuckDB
-    * supplies the exact group counts and expects every band check true.
-    * Deterministic for fixed data (the GK sketch has no RNG), so the gate
-    * cannot flake; a sketch regression lands outside the band and fails the
-    * hash compare.
-    */
-  private def approxPercentilesQ(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
-    val sk = e.groupBy(col("event_type"))
-      .agg(expr("approx_percentile(value, 0.5, 1000)").as("ap50"),
-        expr("approx_percentile(value, 0.95, 1000)").as("ap95"))
-    e.join(broadcast(sk), "event_type")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("value") <= col("ap50"), 1L).otherwise(0L)).as("r50"),
-        sum(when(col("value") <= col("ap95"), 1L).otherwise(0L)).as("r95"))
-      .select(col("event_type"), col("n"),
-        (col("r50").cast("double") / col("n")).between(0.475, 0.525).as("p50_in_band"),
-        (col("r95").cast("double") / col("n")).between(0.925, 0.975).as("p95_in_band"))
-  }
-
-  /** HLL++ sketch cardinality — the constant-memory face of
-    * [[distinctUsers]] for 100 TB group-bys. The estimate itself is
-    * engine-specific, so the oracle checks the sketch's error CONTRACT: the
-    * query computes both the exact distinct count and the rsd=1% HLL
-    * estimate and emits whether the relative error is within 5σ; DuckDB
-    * supplies the exact counts and expects every check true. HLL is
-    * deterministic for fixed data — no flake — while an estimator
-    * regression (>5% error) fails the hash compare.
-    */
-  /** KMV set-similarity matrix ([[Analytics.kmvJaccard]], k = 256):
-    * pairwise Jaccard of the user sets behind every event-type pair,
-    * estimated from bottom-256 signatures next to the exact answer — the
-    * audience-overlap question answered from |keys|·256 longs instead of
-    * the full sets, with BOTH columns value-gated (the estimator is
-    * deterministic from the hash).
-    */
-  private def kmvJaccardQ(s: SparkSession, dir: String): DataFrame =
-    // (user, day) incidence, not bare users: every user eventually touches
-    // every type, which would make all ten Jaccards a degenerate 1.0 —
-    // the day-sliced sets actually differ and stress the estimator
-    Analytics.kmvJaccard(t(s, dir, "events"), "event_type",
-      concat(col("user_id").cast("string"), lit("#"),
-        to_date(col("ts")).cast("string")), k = 256)
-
-  /** AMS second-moment (F₂) sketch (Alon, Matias & Szegedy, STOC 1996):
-    * the self-join size Σc² of the user stream estimated from nine
-    * hash-derived ±1 sign sums — the one-pass, O(1)-state answer to "how
-    * big would this key's self-join be" that the CM inner product
-    * ([[joinSizeEstQ]]-style) answers for A⋈B. Every piece is an exact
-    * integer (sign sums, their squares, the median-of-9 by exact rank),
-    * so the estimate — unusual for a sketch — is value-gated by the
-    * oracle, not error-band-gated. One scan-side ×9 generator with
-    * map-side partials; only 9 partial rows per mapper shuffle.
-    */
-  private def amsF2Q(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("user_id").cast("string").as("k"))
-    val reps = ev.select(col("k"), explode(sequence(lit(0), lit(8))).as("e"))
-    val sign = lit(1L) - lit(2L) * pmod(TF.fnv1a64(
-      concat(lit("ams"), col("e").cast("string"), lit("#"), col("k"))), lit(2L))
-    val ests = reps.select(col("e"), sign.as("s"))
-      .groupBy(col("e")).agg(sum(col("s")).as("se"))
-      .select(col("e"), (col("se") * col("se")).as("est"))
-    val med = ests.join(ests.select(col("est").as("e2"), col("e").as("i2")),
-        col("e2") < col("est") || (col("e2") === col("est") && col("i2") < col("e")),
-        "left")
-      .groupBy(col("e"), col("est")).agg(count(col("i2")).as("rk"))
-      .filter(col("rk") === 4L).select(col("est").as("ams_f2"))
-    ev.groupBy(col("k")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c") * col("c")).as("exact_f2"))
-      .crossJoin(med)
-      .select(col("exact_f2"), col("ams_f2"),
-        round((col("ams_f2") - col("exact_f2")).cast("double") /
-          col("exact_f2").cast("double") * 100.0, 6).as("rel_err_pct"))
-  }
-
-  /** KMV bottom-k distinct sketch ([[Analytics.kmvDistinct]], k = 256) of
-    * users per event type — the hash-replayable cardinality tier next to
-    * [[approxDistinctQ]]'s HLL: the oracle recomputes the exact summary
-    * (k-th minimum hash) and the identical estimate expression, so this
-    * one is value-gated, not error-contract-gated.
-    */
-  private def kmvDistinctQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.kmvDistinct(t(s, dir, "events"), "event_type",
-      col("user_id"), k = 256)
-
-  private def approxDistinctQ(s: SparkSession, dir: String): DataFrame =
-    // Two-phase: distinct (event_type, user_id) pairs first (map-side
-    // combined — only unique pairs shuffle), then count + HLL over the
-    // distinct set. The HLL estimate is identical (registers are
-    // multiplicity-invariant) but the expensive rsd=1% sketch runs over
-    // |distinct| rows instead of riding an Expand over the full table
-    // inside the mixed exact+approx aggregate (measured 3× at sf0.1).
-    t(s, dir, "events")
-      .groupBy(col("event_type"), col("user_id")).agg(count(lit(1)).as("_c"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_users_exact"),
-        approx_count_distinct(col("user_id"), 0.01).as("hll"))
-      .select(col("event_type"), col("n_users_exact"),
-        (abs(col("hll") - col("n_users_exact")).cast("double") / col("n_users_exact") <= 0.05)
-          .as("hll_in_band"))
-
-  /** Per-label mean embedding via the VectorSumAgg custom aggregate —
-    * centroids of the label partition, exploded to one scalar row per
-    * (label, dim) so the result is sortable/hashable downstream. Rounding
-    * the MEAN (not the sum) to 6 dp absorbs summation-order noise: the
-    * double-sum error is ~n·ulp but dividing by n shrinks it ~1e-14, far
-    * inside the 5e-7 rounding band — so a real DuckDB oracle holds.
-    * Boundary caveat (judge advice): a mean landing within ~1e-14 of an
-    * exact x.xxxxxx5 rounding boundary could still flip the 6-dp rounding
-    * between engines; measured margins on this corpus are ≥1e-9, so the
-    * gate is stable for the driver's fixed data but NOT a general-data
-    * guarantee — new data should re-check margins or compare with an
-    * epsilon.
-    */
-  private def labelCentroids(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n"), VF.vecSum(VF.toDouble(col("embedding"))).as("sums"))
-      .select(col("label"), col("n"), posexplode(col("sums")).as(Seq("dim", "sv")))
-      .select(col("label"), col("dim").cast("long").as("dim"), col("n"),
-        round(col("sv") / col("n"), 6).as("centroid"))
-
-  // ------------------------------------------------------------- similarity
-
-  private def queryVec(s: SparkSession, dir: String): Seq[Double] =
-    t(s, dir, "embeddings").filter(col("vec_id") === 0)
-      .select(col("embedding")).head().getSeq[Float](0).toIndexedSeq.map(_.toDouble)
-
-  private def topkCosine(s: SparkSession, dir: String): DataFrame =
-    Ann.bruteForceTopK(t(s, dir, "embeddings"), "embedding", "vec_id",
-      queryVec(s, dir), k = 20)
-
-  /** Int8-quantized brute-force top-k — the 8× smaller store. The oracle
-    * replays quantization, the integer dot, and the rescale exactly (both
-    * engines round half-away-from-zero), so this gates the quantized math
-    * itself, not an approximation band.
-    */
-  private def annQuantizedQ(s: SparkSession, dir: String): DataFrame =
-    Ann.quantizedTopK(t(s, dir, "embeddings"), "embedding", "vec_id",
-      queryVec(s, dir), k = 20)
-
-  /** IVF + int8 top-k: probe only the query's own inverted list, score
-    * quantized codes — the memory-bound ANN composition.
-    */
-  private def ivfQuantizedQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val lbl = emb.filter(col("vec_id") === 0).select("label").head().getInt(0)
-    Ann.ivfQuantizedTopK(emb, "embedding", "vec_id", "label", queryVec(s, dir),
-      probeLists = Seq(lbl), k = 20)
-  }
-
-  /** Two-stage PQ search (m=8 subspaces × k=16 centroids): ADC over 8-byte
-    * code rows shortlists 40 candidates, exact cosine re-scores only those.
-    * Codebooks are the deterministic first-16-vectors scheme so the oracle
-    * replays encode, the query LUT, the left-to-right ADC sum, the
-    * shortlist boundary, and the re-scored final 10 bit-for-bit.
-    */
-  private def pqTopkQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val model = Ann.pqCodebook(emb, "embedding", "vec_id", m = 8, k = 16)
-    Ann.pqTopK(emb, "embedding", "vec_id", model, queryVec(s, dir),
-      k = 10, shortlist = 40)
-  }
-
-  /** IVF + PQ — the canonical billion-scale ANN composition (FAISS's
-    * IVFPQ shape): the coarse quantizer (the q_kmeans_assign fixed-centroid
-    * model) restricts the scan to the query's 3 nearest inverted lists,
-    * then the two-stage PQ search (ADC shortlist → exact re-score) runs
-    * over only those lists. At 100 TB the list column is the partition key,
-    * so stage 1 reads `nprobe/k` of the code table and nothing else.
-    */
-  private def ivfPqQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 10).orderBy(col("vec_id"))
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val km = graft.similarity.KMeans.Model(cents)
-    val q = queryVec(s, dir)
-    val pq = Ann.pqCodebook(emb, "embedding", "vec_id", m = 8, k = 16)
-    Ann.pqTopK(
-      km.assign(emb, "embedding")
-        .filter(col("list").isInCollection(km.probeLists(q, nprobe = 3))),
-      "embedding", "vec_id", pq, q, k = 10, shortlist = 40)
-  }
-
-  /** BM25 topical retrieval over the corpus (k1 = 1.5 / b = 0.75: exact
-    * binary doubles, so every constant replays bit-identically in SQL).
-    */
-  private def bm25Q(s: SparkSession, dir: String): DataFrame =
-    Analytics.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-      terms = Seq("spark", "join", "window"), k = 20, k1 = 1.5, b = 0.75)
-
-  /** Hybrid retrieval: reciprocal-rank fusion of the lexical BM25 top-50
-    * and the dense cosine top-50 (query vector 0, itself excluded), fused
-    * on the doc_id == vec_id identity — the two-tower retrieval combiner.
-    * kRrf = 60 per Cormack et al. 2009.
-    */
-  private def hybridRrfQ(s: SparkSession, dir: String): DataFrame = {
-    val text = Analytics.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("spark", "join", "window"), k = 50, k1 = 1.5, b = 0.75)
-      .withColumnRenamed("doc_id", "id")
-    val vec = Ann.bruteForceTopK(t(s, dir, "embeddings").filter(col("vec_id") =!= 0),
-        "embedding", "vec_id", queryVec(s, dir), k = 50)
-      .withColumnRenamed("vec_id", "id").withColumnRenamed("cos", "score")
-    // absent-from-list ranks surface as 0 (ranks are 1-based): a nullable
-    // int column round-trips through parquet→pandas as float64 with NaN,
-    // which the oracle compare cannot equate
-    Analytics.rrfFuse(Seq("text" -> text, "vec" -> vec), "id", "score", k = 10)
-      .select(col("id"),
-        coalesce(col("rank_text"), lit(0)).cast("long").as("rank_text"),
-        coalesce(col("rank_vec"), lit(0)).cast("long").as("rank_vec"),
-        col("rrf"))
-  }
-
-  /** Bounded-posting inverted index over the whole corpus vocabulary (the
-    * 31-term synthetic vocab makes EVERY term a hot key — exactly the skew
-    * the bounded aggregate is for).
-    */
-  private def invertedIndexQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
-      maxPostings = 15)
-
-  /** α-temperature (α = 1/2) mixture over the five-language corpus —
-    * shares derived from the census itself, not supplied.
-    */
-  private def temperatureMixQ(s: SparkSession, dir: String): DataFrame = {
-    val langs = Seq("en", "fr", "es", "zh", "de")
-    val docs = t(s, dir, "documents").filter(col("lang").isin(langs: _*))
-    TrainingData.temperatureMix(docs, "lang", "doc_id", "text", langs)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TF.tokenCount(col("text")).cast("long")).as("n_tokens"))
-  }
-
-  /** UniMax water-filled mixture over the five-language corpus (Chung et
-    * al. 2023): budget = 1.5× the measured tokens, epoch cap 2 — with this
-    * census the four low-resource languages are capacity-bound (repeated
-    * exactly twice, `n_rows` ≈ 2× their doc count), and the high-resource
-    * one receives the remaining water level (~0.86 epochs), the allocation
-    * shape temperature sampling cannot produce. Both parameters are
-    * short-mantissa doubles so every capacity and cumulative sum is an
-    * exact integer-valued double and the oracle replays bit-for-bit.
-    */
-  private def unimaxMixQ(s: SparkSession, dir: String): DataFrame = {
-    val langs = Seq("en", "fr", "es", "zh", "de")
-    val docs = t(s, dir, "documents").filter(col("lang").isin(langs: _*))
-    TrainingData.unimaxMix(docs, "lang", "doc_id", "text", langs,
-        budget = 1.5, epochCap = 2.0, budgetIsFraction = true)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(TF.tokenCount(col("text")).cast("long")).as("n_tokens"))
-  }
-
-  /** MMR-diversified top-10 from the exact-cosine top-40 shortlist (λ =
-    * 1/2, an exact binary double; the query vector itself is excluded —
-    * retrieving the query is not a result, and its redundancy term
-    * degenerates to `rel` exactly).
-    */
-  private def mmrQ(s: SparkSession, dir: String): DataFrame =
-    Ann.mmrRerank(t(s, dir, "embeddings").filter(col("vec_id") =!= 0),
-      "embedding", "vec_id", queryVec(s, dir),
-      k = 10, shortlist = 40, lambda = 0.5)
-
-  /** Greedy token-budget selection by quality: the budget admits the
-    * highest-quality prefix; wholly-out shards are pruned before any sort
-    * (quality is the 6dp-rounded score, so the priority key is bit-portable;
-    * doc_id breaks ties totally).
-    */
-  private def budgetSelectQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.budgetSelect(
-      t(s, dir, "documents").select(col("doc_id"),
-        TF.qualityScore(col("text")).as("quality"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens")),
-      orderCols = Seq(negate(col("quality")), col("doc_id")),
-      tokens = col("n_tokens"), budget = 15000L)
-
-  /** Exact k-NN graph of a 200-vector query slice against the corpus —
-    * the bounded-aggregate graph-build shape (a full self-graph swaps the
-    * pair source for LSH/IVF candidates, same aggregate).
-    */
-  private def knnGraphQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Ann.knnGraph(emb.filter(col("vec_id") < 200), emb, "vec_id", "embedding",
-      k = 5)
-  }
-
-  /** Hard-negative mining ([[Ann.hardNegatives]]): per anchor, the 3
-    * highest-cosine embeddings of a DIFFERENT label — the contrastive
-    * training negatives. The label inequality is in the join condition, so
-    * same-label (false-negative) pairs never reach the bounded top-k
-    * aggregate.
-    */
-  private def hardNegativesQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Ann.hardNegatives(emb.filter(col("vec_id") < 100), emb, "vec_id",
-      "embedding", "label", k = 3)
-  }
-
-  /** Sketch-merge distinct users: per-(event_type, day) HLL sketches
-    * union-rolled up to event_type ([[graft.operators.Analytics.hllRollup]]
-    * — the materialize-once/merge-many incremental pattern, vs
-    * q_approx_distinct's direct single-pass sketch). The estimate itself is
-    * sketch-impl-specific, so the contract oracle pins the exact count and
-    * the error-band flag (lgK=12 → rse ≈ 1.6%; band = 5σ ≈ 8%).
-    */
-  private def hllRollupQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val est = Analytics.hllRollup(ev,
-      Seq(col("event_type"), date_trunc("day", col("ts")).as("day")),
-      Seq(col("event_type")), col("user_id"), lgK = 12)
-    val exact = ev.groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n_users_exact"))
-    est.join(exact, "event_type")
-      .select(col("event_type"), col("n_users_exact"),
-        (abs(col("estimate") - col("n_users_exact")) <=
-          col("n_users_exact") * 0.08).as("hll_merged_in_band"))
-  }
-
-  /** Mergeable-quantile rollup: per-(event_type, day) KLL sketches of
-    * `value` merged to event_type
-    * ([[graft.operators.Analytics.kllRollup]]); KLL compaction is
-    * randomized, so the contract is the rank-error band — merged p50/p95
-    * must land between the exact ±5%-rank percentiles (k = 200 → rank
-    * error ≈ 1.65%, 3× headroom) — mirroring q_approx_percentiles but
-    * exercising the materialize-once/merge-many path.
-    */
-  private def kllRollupQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val merged = Analytics.kllRollup(ev,
-      Seq(col("event_type"), date_trunc("day", col("ts")).as("day")),
-      Seq(col("event_type")), col("value"), k = 200)
-      .select(col("event_type"),
-        kll_sketch_get_quantile_double(col("sketch"), lit(0.5)).as("p50"),
-        kll_sketch_get_quantile_double(col("sketch"), lit(0.95)).as("p95"))
-    val exact = ev.groupBy(col("event_type")).agg(
-      count(lit(1)).as("n"),
-      expr("percentile(value, 0.45)").as("lo50"),
-      expr("percentile(value, 0.55)").as("hi50"),
-      expr("percentile(value, 0.90)").as("lo95"),
-      max(col("value")).as("hi95"))
-    merged.join(exact, "event_type")
-      .select(col("event_type"), col("n"),
-        (col("p50") >= col("lo50") && col("p50") <= col("hi50")).as("p50_in_band"),
-        (col("p95") >= col("lo95") && col("p95") <= col("hi95")).as("p95_in_band"))
-  }
-
-  /** Theta-sketch segment overlap: one distinct-user sketch per
-    * event_type ([[graft.operators.Analytics.thetaSketches]]), then every
-    * pairwise intersection estimated driver-side from the serialized
-    * binaries ([[graft.expressions.ThetaOps.intersect]]) — the set-algebra
-    * question HLL cannot answer. At this corpus's cardinalities the
-    * sketches are in exact mode (≪ 2^12 distinct), so the band is pure
-    * headroom; the contract oracle pins the exact pair counts.
-    */
-  private def thetaIntersectQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val sk = Analytics.thetaSketches(ev, col("event_type"), "event_type",
-        col("user_id"), lgK = 12)
-      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).sortBy(_._1)
-    val pairs = for {
-      i <- sk.indices; j <- (i + 1) until sk.length
-    } yield (sk(i)._1, sk(j)._1,
-      graft.expressions.ThetaOps.intersect(Seq(sk(i)._2, sk(j)._2)))
-    import s.implicits._
-    val est = pairs.toDF("type_a", "type_b", "est")
-    val d = ev.select(col("event_type"), col("user_id")).distinct()
-    val exact = d
-      .join(d.select(col("event_type").as("type_b"), col("user_id")), "user_id")
-      .filter(col("event_type") < col("type_b"))
-      .groupBy(col("event_type").as("type_a"), col("type_b"))
-      .agg(count(lit(1)).as("n_exact"))
-    exact.join(est, Seq("type_a", "type_b"))
-      .select(col("type_a"), col("type_b"), col("n_exact"),
-        (abs(col("est") - col("n_exact")) <= col("n_exact") * 0.10 + lit(1.0))
-          .as("theta_in_band"))
-  }
-
-  /** Training sequences of 512 tokens across document boundaries, documents
-    * laid end-to-end in doc_id order — every number in the output is pure
-    * integer arithmetic on the exact sharded global prefix sum.
-    */
-  private def seqWindowsQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.seqWindows(
-      t(s, dir, "documents").select(col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens")),
-      Seq(col("doc_id")), col("n_tokens"), seqLen = 512L)
-      .select(col("seq_id"), col("doc_id"), col("doc_off"), col("n_toks"))
-
-  /** Per-label embedding outliers: the least prototypical members of every
-    * label by distance to the 6dp-quantized label centroid.
-    */
-  private def embedOutliersQ(s: SparkSession, dir: String): DataFrame =
-    graft.similarity.KMeans.labelOutliers(t(s, dir, "embeddings"),
-      "label", "vec_id", "embedding", k = 5)
-
-  /** Curriculum interleave: within every source, documents ranked by
-    * (quality DESC, id) through the range-sharded per-source rank, then
-    * dealt into one global order position = (rank − 1)·|sources| + source
-    * index — the "best of each source first, sources round-robin"
-    * curriculum an epoch builder materializes (a pure quality sort would
-    * let one source monopolize the head of training). First 1000 positions
-    * returned. The source census is a bounded collect; the rank is
-    * [[Analytics.rangedRank]] — no |sources|-task window.
-    */
-  private def curriculumQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-      TF.qualityScore(col("text")).as("quality"))
-    val sources = d.select(col("source")).distinct()
-      .orderBy(col("source")).collect().map(_.getString(0))
-    val idx = typedlit(sources.zipWithIndex.map { case (s0, i) => s0 -> i }.toMap)
-    Analytics.rangedRank(d, Seq("source"), Seq(negate(col("quality")), col("doc_id")))
-      .select(((col("rn") - 1L) * sources.length +
-          element_at(idx, col("source")).cast("long")).as("position"),
-        col("doc_id"), col("source"), col("rn").cast("long").as("rn"))
-      .filter(col("position") < 1000L)
-  }
-
-  /** Quality-for-length forensics: the 20 documents whose quality score
-    * deviates most from the corpus-wide quality~length OLS line
-    * ([[Analytics.olsTrend]] — exact moment sums, one closed-form double).
-    * A raw quality ranking mostly re-ranks by length; the residual
-    * surfaces the docs that are suspiciously good (template/spam that
-    * games the score) or bad FOR THEIR SIZE — the review queue a curation
-    * pass actually wants. Residuals use the published (rounded) fit, so
-    * the whole row replays.
-    */
-  private def qualityResidualsQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(col("doc_id"), col("n_chars"),
-      TF.qualityScore(col("text")).as("quality"))
-    val fit = Analytics.olsTrend(d, Seq.empty, col("n_chars"), col("quality"))
-    d.crossJoin(fit.select(col("slope"), col("intercept")))
-      .select(col("doc_id"), col("n_chars"), col("quality"),
-        round(col("quality") - (col("slope") * col("n_chars") + col("intercept")), 6)
-          .as("residual"))
-      .orderBy(abs(col("residual")).desc, col("doc_id"))
-      .limit(20)
-  }
-
-  /** Per-source rank calibration of the quality score: raw quality is not
-    * comparable across domains (a median news article outscores a great
-    * forum post), so each document gets its within-source percent rank —
-    * computed by the range-sharded [[Analytics.rangedRank]], never a
-    * |sources|-task window.
-    */
-  private def qualityCalibratedQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-      TF.qualityScore(col("text")).as("quality"))
-    Analytics.rangedRank(d, Seq("source"), Seq(col("quality"), col("doc_id")))
-      .select(col("doc_id"), col("source"), col("quality"),
-        round(Analytics.percentRankOf(col("rn"), col("n_part")), 6).as("q_rank"))
-  }
-
-  /** Corpus datasheet: per source × lang rollup with exact counts and
-    * integer-derived averages (float sums across partitions are order-
-    * dependent — avg_chars divides two EXACT longs; quality spread uses
-    * min/max, which commute).
-    */
-  private def corpusDatasheetQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-      .select(col("source"), col("lang"),
-        TF.tokenCount(col("text")).cast("long").as("__nt"),
-        length(col("text")).cast("long").as("__nc"),
-        TF.qualityScore(col("text")).as("__q"))
-    Analytics.rollupAgg(d, Seq(col("source"), col("lang")),
-      Seq(count(lit(1)).as("n_docs"),
-        sum(col("__nt")).as("n_tokens"),
-        round(sum(col("__nc")).cast("double") / count(lit(1)), 6).as("avg_chars"),
-        min(col("__q")).as("min_quality"),
-        max(col("__q")).as("max_quality")))
-  }
-
-  /** Gopher quality rules as flat boolean flags + the AND-composite keep. */
-  private def gopherFilterQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), TF.gopherFlags(col("text")).as("g"))
-      .select(col("doc_id"), col("g.f_wc").as("f_wc"), col("g.f_mwl").as("f_mwl"),
-        col("g.f_symbol").as("f_symbol"), col("g.f_bullet").as("f_bullet"),
-        col("g.f_ellipsis").as("f_ellipsis"), col("g.f_alpha").as("f_alpha"),
-        col("g.f_stop").as("f_stop"), col("g.keep").as("keep"))
-
-  /** Multi-probe LSH top-k. Probing radius 1 (the query's bucket plus every
-    * 1-bit neighbor, per table) pushes the per-neighbor miss probability low
-    * enough that the shortlist provably-in-practice contains the true top-20
-    * at verify scale — so the brute-force SQL oracle applies verbatim, and a
-    * recall regression fails the hash compare. Deterministic: hyperplanes
-    * are seeded, data is fixed.
-    */
-  private def annLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    // size bits from the corpus so each probe scans ~64 rows per table
-    val idx = Ann.LshIndex(dim = 64,
-      bits = Ann.bitsFor(tableCount(s, dir, "embeddings")), tables = 16, seed = 7)
-    val indexed = idx.withBuckets(emb, "embedding")
-    idx.topK(indexed, "embedding", "vec_id", queryVec(s, dir), k = 20, probeHamming = 1)
-  }
-
-  // ------------------------------------------- training-data pipeline ops
-
-  /** Benchmark decontamination: docs with doc_id % 4 == 0 play the benchmark
-    * corpus, the rest are training docs; report shared-5-gram containment.
-    */
-  private def decontaminateQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    TrainingData.contaminationReport(
-      d.filter(col("doc_id") % 4 =!= 0), d.filter(col("doc_id") % 4 === 0),
-      "doc_id", "text", n = 5)
-  }
-
-  /** CCNet-style LM quality signal: hashed-bigram model from the doc_id%5
-    * target slice, per-doc mean negative log-prob. Oracle recomputes both
-    * histograms and replays the ordered summation.
-    */
-  private def perplexityQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    TrainingData.perplexityScore(d, d.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-  }
-
-  /** Per-stratum fractional quality gate: keep the top 30% of documents per
-    * language by quality score — the "dynamic threshold" curation step done
-    * RANK-based (`rn · 10 ≤ n · 3`, exact integers) instead of
-    * quantile-threshold-based, so there is no float-interpolation boundary
-    * to disagree on between engines. Rides [[graft.operators.Analytics
-    * .rangedRank]] — parallelism shards × languages, not |languages|.
-    */
-  private def topFracQualityQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Analytics
-    val scored = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), TF.qualityScore(col("text")).as("q"))
-    Analytics.rangedRank(scored, Seq("lang"),
-        Seq(negate(col("q")), col("doc_id")))
-      .filter(col("rn") * 10 <= col("n_part") * 3)
-      .select(col("doc_id"), col("lang"), col("q"))
-  }
-
-  /** Surgical decontamination: training docs (doc_id % 4 != 0) rewritten
-    * with every 16-token run shared with the benchmark quarter removed —
-    * drop-span, not drop-document. Oracle replays the cross-corpus span
-    * match and the coverage rewrite.
-    */
-  private def decontaminateSpansQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    TrainingData.decontaminateSpans(
-      d.filter(col("doc_id") % 4 =!= 0), d.filter(col("doc_id") % 4 === 0),
-      "doc_id", "text", window = 16)
-  }
-
-  /** Policy-driven resolution: per near-dup component, keep the member with
-    * the highest quality score (ties → smallest id) — the curation keep
-    * rule, vs [[dedupResolve]]'s min-id. Oracle: recursive-CTE components
-    * plus a quality-ordered pick per component.
-    */
-  private def dedupResolveBestQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    Dedup.resolveDuplicatesBy(
-      Dedup.minhashPairs(d, "doc_id", "text", n = 5, threshold = 0.8,
-        corpusN = tableCount(s, dir, "documents")),
-      d.select(col("doc_id"), TF.qualityScore(col("text")).as("q")), "doc_id", "q")
-  }
-
-  /** Stride-1 repeated spans (Lee et al. exact-substring shape): every
-    * occurrence of a 16-token run shared by ≥ 2 documents, wherever it
-    * sits. Oracle regenerates every sliding window and its FNV fingerprint.
-    */
-  private def repeatedSpansQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.repeatedSpans(t(s, dir, "documents"), "doc_id", "text", window = 16)
-
-  /** The removal pass over the span cut list: every non-first occurrence of
-    * a repeated 16-token span blanked, overlaps merged by token coverage.
-    * Oracle replays first-occurrence selection and the coverage mask.
-    */
-  private def removeSpansQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.removeRepeatedSpans(t(s, dir, "documents"), "doc_id", "text", window = 16)
-
-  /** Gopher A1.2 repetition rules (top-n-gram coverage, n = 2/3/4) as flat
-    * booleans; one narrow scan, per-row HashMap census, no shuffle. Oracle
-    * rebuilds each n-gram census with unnest + group + deterministic
-    * tie-break and replays the integer threshold comparisons.
-    */
-  private def repetitionGopherQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), TF.repetitionFlags(col("text")).as("g"))
-      .select(col("doc_id"), col("g.f_top2").as("f_top2"),
-        col("g.f_top3").as("f_top3"), col("g.f_top4").as("f_top4"),
-        col("g.keep").as("keep"))
-
-  /** Leakage-free split: near-dup components move across the train/val/test
-    * boundary atomically (split = content-hash of the component root). The
-    * oracle rebuilds the components with the recursive exact-Jaccard CTE,
-    * roots every document, and replays the same FNV split rule.
-    */
-  private def leakFreeSplitQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.leakFreeSplit(t(s, dir, "documents"), "doc_id", "text",
-      corpusN = tableCount(s, dir, "documents"))
-
-  /** Corpus mixture construction: language-stratified token-share targets
-    * (en 50%, the rest 12.5% each — exact binary fractions, so the share
-    * normalization is order-independent in float), fractions derived from
-    * the measured token census, content-hash keep decision. Output is the
-    * per-language summary of the sampled corpus; DuckDB replays the whole
-    * construction — census, binding-stratum minimum, threshold rounding,
-    * FNV keep rule — from the same table.
-    */
-  private def mixCorpusQ(s: SparkSession, dir: String): DataFrame = {
-    val targets = Map("en" -> 0.5, "fr" -> 0.125, "es" -> 0.125,
-      "zh" -> 0.125, "de" -> 0.125)
-    TrainingData.mixToTargets(t(s, dir, "documents"), "lang", "doc_id", "text", targets)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TF.tokenCount(col("text")).cast("long")).as("n_tokens"))
-  }
-
-  /** Heavy hitters over a deterministically synthesized Zipf-ish token
-    * stream (the corpus's own vocabulary is near-uniform — no true heavy
-    * hitter exists in it to find): position hashes map to 15 tokens with
-    * shares 50/25/12.5/…%, the Misra-Gries sketch runs k = 8 < vocabulary,
-    * and the query then JOINS its own output against the exact census and
-    * EMITS the error contract: for every item with exact count > n/(k+1),
-    * (a) the inner join finds it in the summary (completeness — a miss
-    * drops the row and fails the row-count compare), (b) est ≤ exact,
-    * (c) exact − est ≤ n/(k+1). The raw estimates are merge-order-dependent
-    * and never surface; the flags are guarantees, stable under any
-    * partitioning — the same oracle pattern as the HLL/percentile sketch
-    * gates.
-    */
-  private def heavyHittersQ(s: SparkSession, dir: String): DataFrame = {
-    val k = 8
-    val d = t(s, dir, "documents")
-    val stream = d
-      .select(col("doc_id"), TF.tokenCount(col("text")).cast("int").as("nt"))
-      .filter(col("nt") > 0)
-      .select(col("doc_id"), explode(sequence(lit(0), col("nt") - 1)).as("i"))
-    val m = pmod(TF.fnv1a64(concat(col("doc_id").cast("string"), lit("#"),
-      col("i").cast("string"))), lit(1024L))
-    val tok = when(m < 512, lit("t0")).when(m < 768, lit("t1"))
-      .when(m < 896, lit("t2")).when(m < 960, lit("t3"))
-      .when(m < 992, lit("t4")).when(m < 1008, lit("t5"))
-      .when(m < 1016, lit("t6"))
-      .otherwise(concat(lit("cold"), (m - 1016).cast("string")))
-    val toks = stream.select(tok.as("item"))
-    val sk = toks
-      .agg(TF.freqItems(col("item"), k).as("hh"), count(lit(1)).as("n"))
-      .select(explode(col("hh")).as("e"), col("n"))
-      .select(col("e.item").as("item"), col("e.est").as("est"), col("n"))
-    toks.groupBy(col("item")).agg(count(lit(1)).as("exact_count"))
-      .join(sk, "item")
-      .filter(col("exact_count") * (k + 1) > col("n"))
-      .select(col("item"), col("exact_count"),
-        (col("est") <= col("exact_count")).as("under_ok"),
-        ((col("exact_count") - col("est")) * (k + 1) <= col("n")).as("band_ok"))
-  }
-
-  /** Per-language Shannon entropy of the token distribution — the
-    * diversity number a mixture designer reads next to raw token counts
-    * (low entropy = repetitive/boilerplate-heavy slice; entropy near
-    * ln(vocab) = flat distribution). Computed as `H = ln N − Σ c·ln c / N`
-    * over the exact integer census, so the only floating point is the
-    * final ln/divide (rounded 6dp on both engines). Scale shape: one
-    * (lang, token) partial-aggregated census, then |vocab| rows reduce to
-    * |langs| — no joins, no windows.
-    */
-  private def tokenEntropyQ(s: SparkSession, dir: String): DataFrame = {
-    val toks = t(s, dir, "documents")
-      .select(col("lang"), explode(TF.tokens(lower(col("text")))).as("tok"))
-    toks.groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c"))
-      .groupBy(col("lang"))
-      .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("vocab"),
-        round(log(sum(col("c")).cast("double"))
-          - sum(col("c").cast("double") * log(col("c").cast("double")))
-            / sum(col("c")).cast("double"), 6).as("entropy_nats"))
-  }
-
-  /** Vocabulary-growth (Heaps'-law) audit: distinct-token count after the
-    * first 100/200/…/500 documents — the curve that says whether a corpus
-    * keeps contributing new vocabulary or has gone asymptotic (the
-    * data-collection stopping signal). One pass: per-token FIRST document
-    * (min doc_id), then five conditional sums unpivoted — no joins, no
-    * windows, and the prefix thresholds are literals so the plan is two
-    * partial-aggregated censuses at any scale.
-    */
-  private def vocabGrowthQ(s: SparkSession, dir: String): DataFrame = {
-    val fs = t(s, dir, "documents")
-      .select(col("doc_id"), explode(TF.tokens(lower(col("text")))).as("tok"))
-      .groupBy(col("tok")).agg(min(col("doc_id")).as("fd"))
-    val sums = (1 to 5).map(k =>
-      sum(when(col("fd") < k * 100, 1L).otherwise(0L)).as(s"v$k"))
-    fs.agg(sums.head, sums.tail: _*)
-      .select(expr("stack(5, 100L, v1, 200L, v2, 300L, v3, 400L, v4, 500L, v5) " +
-        "AS (prefix_docs, vocab)"))
-  }
-
-  /** Count-Min point-frequency audit ([[TF.cmSketch]]): ONE 4×64 sketch
-    * over the events user stream (deliberately tiny so collisions are
-    * real), probed for the 20 hottest users and checked against the exact
-    * census. Unlike the sketch-contract gates (HLL/KLL/theta), Count-Min
-    * is fully DETERMINISTIC given the hash family — the oracle replays
-    * the ENTIRE sketch (every occurrence's d bucket increments, then the
-    * min-over-rows probe) in unsigned HUGEINT arithmetic and matches the
-    * estimates VALUE-exactly, not just in-band. Power-of-two moduli make
-    * unsigned-mod == signed floorMod ([[graft.expressions.CountMin]]).
-    * Scale shape: the sketch is one 80 KB-max partial-aggregated row; the
-    * census exists only because the audit needs ground truth.
-    */
-  private def countMinQ(s: SparkSession, dir: String): DataFrame = {
-    val (d, w) = (4, 64)
-    val ev = t(s, dir, "events").select(col("user_id").cast("string").as("item"))
-    val sk = ev.agg(TF.cmSketch(col("item"), d, w).as("cm"))
-    ev.groupBy(col("item")).agg(count(lit(1)).as("n_exact"))
-      .orderBy(col("n_exact").desc, col("item")).limit(20)
-      .crossJoin(broadcast(sk))
-      .select(col("item").as("user_id"), col("n_exact"),
-        TF.cmEstimate(col("cm"), col("item"), d, w).as("cm_est"))
-      .withColumn("over_ok", col("cm_est") >= col("n_exact"))
-  }
-
-  /** Join-size estimation from sketches (the Count-Min inner product,
-    * Cormode & Muthukrishnan §4.2): |A ⋈ B| on the join key = Σ_k
-    * cnt_A(k)·cnt_B(k), estimated as min_i Σ_b tableA[i,b]·tableB[i,b]
-    * from two already-built CM sketches — overcounting always (collision
-    * products only add), within ε·N_A·N_B w.h.p. The shuffle-planning
-    * question at 100 TB ("should this join be salted? pre-aggregated?")
-    * answered from two 80 KB summaries WITHOUT running the join — and the
-    * sketches compose: per-partition sketches sum element-wise first.
-    * Here: view-events ⋈ purchase-events on user, checked against the
-    * exact inner product; the oracle replays both sketches and the
-    * estimate VALUE-exactly (the q_countmin full-replay machinery).
-    */
-  private def joinSizeEstQ(s: SparkSession, dir: String): DataFrame = {
-    val (d, w) = (4, 64)
-    val ev = t(s, dir, "events")
-    def sk(typ: String, as: String) = ev.filter(col("event_type") === typ)
-      .select(col("user_id").cast("string").as("item"))
-      .agg(TF.cmSketch(col("item"), d, w).as(as))
-    def census(typ: String, as: String) = ev.filter(col("event_type") === typ)
-      .groupBy(col("user_id")).agg(count(lit(1)).as(as))
-    val exact = census("view", "nv").join(census("purchase", "np"), "user_id")
-      .agg(coalesce(sum(col("nv") * col("np")), lit(0L)).as("n_exact"))
-    val prods = expr(s"transform(sequence(0, ${d - 1}), i -> " +
-      s"aggregate(zip_with(slice(a.table, i * $w + 1, $w), " +
-      s"slice(b.table, i * $w + 1, $w), (x, y) -> x * y), 0L, (acc, v) -> acc + v))")
-    exact.crossJoin(broadcast(sk("view", "a")))
-      .crossJoin(broadcast(sk("purchase", "b")))
-      .select(col("n_exact"), array_min(prods).as("cm_est"))
-      .withColumn("over_ok", col("cm_est") >= col("n_exact"))
-  }
-
-  /** Simplified (centroid) silhouette per cluster — the clustering-quality
-    * audit over the fixed-centroid k-means scheme of [[kmeansAssignQ]]:
-    * a = distance to the own centroid, b = distance to the nearest OTHER
-    * centroid, s = (b − a)/max(a, b), averaged per cluster. Centroids
-    * rank by the IDENTICAL −2·v·c + |c|² score (and tie-break) as
-    * [[graft.similarity.KMeans.Model.assignCol]] — the constant |v|² term
-    * joins only AFTER selection (monotone, so the order is unchanged but
-    * the float score bits match the assignment exactly: a near-tie can
-    * never assign a vector differently in the two audits). sqrt is
-    * IEEE-correctly-rounded on both engines. Scale shape: k centroid
-    * literals folded into codegen — one scan, one |k|-group aggregate, no
-    * joins; the full-pairwise silhouette (O(n²)) is exactly what this
-    * variant avoids at corpus scale.
-    */
-  private def silhouetteQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 10).orderBy(col("vec_id"))
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val v = VF.toDouble(col("embedding"))
-    val vn = VF.normSq(v)
-    val scored = cents.zipWithIndex.map { case (c, i) =>
-      val cn = c.map(x => x * x).sum
-      struct((VF.dot(v, VF.vecLit(c.toSeq)) * -2.0 + cn).as("d"),
-        lit(i.toLong).as("i"))
-    }
-    val sorted = array_sort(array(scored.toIndexedSeq: _*))
-    val a = sqrt(greatest(vn + element_at(sorted, 1).getField("d"), lit(0.0)))
-    val b = sqrt(greatest(vn + element_at(sorted, 2).getField("d"), lit(0.0)))
-    val sil = when(greatest(a, b) === 0.0, lit(0.0))
-      .otherwise((b - a) / greatest(a, b))
-    emb.select(element_at(sorted, 1).getField("i").as("list"), sil.as("__s"))
-      .groupBy(col("list"))
-      .agg(count(lit(1)).as("n_vecs"), round(avg(col("__s")), 6).as("mean_silhouette"))
-  }
-
-  /** CCNet's final move (Wenzek et al. §4.3): bucket the corpus into
-    * head / middle / tail by LM-perplexity TERCILES — the quality bands
-    * CCNet publishes. The tercile comes from the closed-form [[Analytics
-    * .ntileOf]] over the range-sharded global rank (no one-reducer window),
-    * the nll from the oracle-proven hashed-bigram LM. Output: per bucket,
-    * document and token counts — the mixture table a trainer reads.
-    */
-  private def ccnetBucketsQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val scored = TrainingData.perplexityScore(
-        d, d.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-      .join(d.select(col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("nt")), "doc_id")
-    val ranked = graft.operators.Analytics.rangedRank(
-      scored, Seq(), Seq(col("nll"), col("doc_id")))
-    ranked
-      .withColumn("tile",
-        graft.operators.Analytics.ntileOf(col("rn"), col("n_part"), 3))
-      .withColumn("bucket", when(col("tile") === 1, "head")
-        .when(col("tile") === 2, "middle").otherwise("tail"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("nt")).cast("long").as("n_tokens"))
-  }
-
-  /** Epoch upsampling: en and zh weighted 50/50 at twice the measured
-    * (en+zh) token budget. zh is the smaller stratum, so its multiplicity
-    * crosses 1 (real replication: copy indices ≥ 1 appear); en sits near
-    * or below it. The oracle replays the census, the float multiplicity
-    * arithmetic in the same op order, and the per-(row, fractional-copy)
-    * FNV draw — the full deterministic draw, row for row.
-    */
-  private def upsampleEpochsQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.upsampleToTargets(t(s, dir, "documents"), "lang", "doc_id",
-        "text", Map("en" -> 0.5, "zh" -> 0.5), factor = 2.0)
-      .select(col("doc_id"), col("lang"), col("copy"))
-
-  /** Bloom-prefiltered decontamination — output identical to
-    * [[decontaminateQ]] by construction (bloom false positives are removed
-    * by the exact join), so it shares the oracle; what it adds is the
-    * 100 TB shape: the native [[graft.expressions.BloomMightContain]] probe
-    * filters the training scan with a ~30× smaller executor footprint than
-    * a broadcast string set, and exact verification joins only the
-    * survivors.
-    */
-  private def bloomDecontaminateQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    TrainingData.bloomDecontaminate(
-      d.filter(col("doc_id") % 4 =!= 0), d.filter(col("doc_id") % 4 === 0),
-      "doc_id", "text", n = 5)
-  }
-
-  /** Top-5 documents per language by quality score — the "keep the best k
-    * per stratum" curation step (window top-k over the quality signal).
-    */
-  private def topQualityDocsQ(s: SparkSession, dir: String): DataFrame = {
-    val scored = t(s, dir, "documents")
-      .select(col("lang"), col("doc_id"), TF.qualityScore(col("text")).as("quality"))
-    // bounded-heap aggregate, not a window: each mapper ships <= k rows per
-    // language into the shuffle (same rows as the window formulation —
-    // spec-asserted; descending quality encoded as the negated field)
-    Analytics.topPerKeyAgg(scored, "lang",
-      ordAsc = Seq(negate(col("quality")), col("doc_id")),
-      payload = Seq("doc_id" -> col("doc_id"), "quality" -> col("quality")), k = 5)
-  }
-
-  /** Out-of-vocabulary rate per document against the corpus's top-20
-    * vocabulary — a Gopher-style quality signal (high OOV ⇒ junk/garbled).
-    * The vocabulary is a TakeOrdered over the token frequency aggregate
-    * (deterministic count-desc/token-asc tiebreak) and is broadcast; counts
-    * are exact integers so the oracle matches bit-for-bit.
-    */
-  private def oovRateQ(s: SparkSession, dir: String): DataFrame = {
-    val toks = t(s, dir, "documents")
-      .select(col("doc_id"), explode(TF.tokens(lower(col("text")))).as("tok"))
-    val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("tok")).limit(20)
-      .select(col("tok"), lit(1).as("iv"))
-    toks.join(broadcast(vocab), Seq("tok"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("iv").isNull, 1L).otherwise(0L)).as("n_oov"))
-      .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-        round(col("n_oov").cast("double") / col("n_tokens"), 6).as("oov_frac"))
-  }
-
-  /** End-to-end corpus curation as ONE query — the full training-data
-    * pipeline composed from individually-oracled pieces: exact dedup on
-    * normalized text (keep min doc_id) → quality gate (native one-pass
-    * score ≥ 0.6) → benchmark decontamination (drop docs sharing any
-    * 5-gram with the doc_id%4==0 benchmark split) → token-budget packing.
-    * The DuckDB oracle replays the entire composition, so the INTERACTION
-    * of the stages is verified, not just each stage alone. Plan shape: two
-    * broadcast-able keep/drop joins + one window + one aggregate — the
-    * corpus is scanned, never re-shuffled wholesale.
-    */
-  private def curateCorpusQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val train = d.filter(col("doc_id") % 4 =!= 0)
-    val bench = d.filter(col("doc_id") % 4 === 0)
-    val keep = Dedup.exact(
-      train.select(col("doc_id"), TF.normalizeText(col("text")).as("k")), "k", "doc_id")
-      .select(col("doc_id"))
-    val q = train.join(keep, "doc_id")
-      .filter(TF.qualityScore(col("text")) >= 0.6)
-    val contaminated = TrainingData.contaminationReport(q, bench, "doc_id", "text", n = 5)
-      .select(col("doc_id"))
-    val clean = q.join(contaminated, Seq("doc_id"), "left_anti")
-    TrainingData.packBudgeted(clean, "doc_id", "text", budget = 2000)
-  }
-
-  /** End-to-end curation v2 — the CCNet-shaped pipeline: exact dedup
-    * (normalized text, keep min doc_id) → Gopher A1.1 quality rules →
-    * perplexity band-pass (hashed-bigram LM from the doc_id%5==0 target
-    * slice, keep 0 ≤ nll ≤ 7.85 — the band that drops the worst-perplexity
-    * tail) → SURGICAL span decontamination against the doc_id%4==0
-    * benchmark quarter (drop-span, not drop-document) → token-budget
-    * packing over the REWRITTEN text. The perplexity stage runs through the
-    * streaming [[TrainingData.perplexityGate]] — so the oracle checks the
-    * gate transform itself, and the identical closure is what a live
-    * curation stream runs. The DuckDB oracle replays all five stages AND
-    * their interactions (pack token counts are over post-rewrite text).
-    *
-    * The Gopher stage composes every A1.1 flag EXCEPT `f_stop`: the
-    * stop-word rule tests English-ness, and the synthetic corpus contains
-    * no English stopwords at all — with it the pipeline provably empties
-    * (0 keeps at every SF), which would make the whole downstream replay
-    * vacuous. Dropping exactly that rule is the per-corpus adaptation the
-    * Gopher paper itself prescribes for non-English slices.
-    *
-    * Cost provenance (the suite's slowest query, ~2.8 s warm at sf0.1,
-    * by design not by defect): each run re-ESTIMATES the bigram LM (two
-    * histogram collects over the target), re-counts the benchmark span
-    * fingerprints (the broadcast gate decides from a fact), and then
-    * executes five chained stages whose solo costs sum to roughly this
-    * total — there is no redundant work to remove, only model estimation
-    * a production pipeline would amortize across runs.
-    */
-  private def curateCorpusV2Q(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val train = d.filter(col("doc_id") % 4 =!= 0)
-    val bench = d.filter(col("doc_id") % 4 === 0)
-    val target = d.filter(col("doc_id") % 5 === 0)
-    val keep = Dedup.exact(
-      train.select(col("doc_id"), TF.normalizeText(col("text")).as("k")), "k", "doc_id")
-      .select(col("doc_id"))
-    val g = TF.gopherFlags(col("text"))
-    val gophered = train.join(keep, "doc_id")
-      .filter(g.getField("f_wc") && g.getField("f_mwl") && g.getField("f_symbol") &&
-        g.getField("f_bullet") && g.getField("f_ellipsis") && g.getField("f_alpha"))
-    // The two driver-side side-input builds — the LM estimation (one fused
-    // histogram collect over the target slice) and the decontamination
-    // broadcast-gate census (distinct span-fp count over the benchmark
-    // quarter) — are INDEPENDENT; build them on two driver threads so their
-    // jobs overlap instead of serializing (guide §2.6). Passing the census
-    // result as `benchN` reproduces exactly the broadcast decision
-    // decontaminateSpans would make alone: plan and rows are identical.
-    val (gate, benchN) = graft.operators.Par.both(s)(
-      TrainingData.perplexityGate(target, "text", maxNll = 7.85),
-      TrainingData.benchSpanFingerprintCount(bench, "doc_id", "text"))
-    val banded = gate(gophered)
-    val cleaned = TrainingData.decontaminateSpans(banded, bench, "doc_id", "text",
-      benchN = benchN)
-    TrainingData.packBudgeted(cleaned, "doc_id", "text", budget = 2000)
-  }
-
-  /** PII redaction over a deterministically synthesized PII-bearing column
-    * (the corpus itself has no PII spans — the same synthesis move as
-    * [[syntheticMedia]]): emails / URLs / phone runs masked by
-    * [[TF.redactPii]]'s RE2-safe regex chain, replayed verbatim by DuckDB.
-    * Every third doc carries no PII and must pass through byte-identically.
-    */
-  private def redactPiiQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val raw = when(col("doc_id") % 3 === 2,
-        concat(lit("clean note "), col("doc_id").cast("string")))
-      .otherwise(concat(
-        lit("reach u"), col("doc_id").cast("string"),
-        lit("@mail"), (col("doc_id") % 7).cast("string"),
-        lit(".org or https://ex"), (col("doc_id") % 5).cast("string"),
-        lit(".com/d?id="), col("doc_id").cast("string"),
-        lit(" tel +1 (415) 555-0"),
-        lpad((col("doc_id") % 1000).cast("string"), 3, "0"),
-        lit(" end")))
-    d.select(col("doc_id"), raw.as("raw"), TF.redactPii(raw).as("redacted"))
-  }
-
-  /** Boilerplate line removal over deterministically synthesized multi-line
-    * docs (the corpus text itself is single-line): every doc except the
-    * `doc_id % 10 == 7` slice gets a per-source header, a blank separator
-    * line, and a corpus-wide footer wrapped around its text. The header
-    * (~1/5 of docs each) and footer (~9/10 of docs) cross `minDocs = 30`;
-    * the body lines don't. Expected: wrapped docs keep `"\n" + body` (the
-    * blank line survives — only NON-blank repeated lines are boilerplate),
-    * and the `% 10 == 7` slice passes through byte-identically.
-    */
-  private def removeBoilerplateQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val raw = when(col("doc_id") % 10 === 7, col("text"))
-      .otherwise(concat(
-        lit("NOTICE: auto-generated export from "), col("source"), lit("\n\n"),
-        col("text"),
-        lit("\ncontact support at example dot org")))
-    TrainingData.removeBoilerplate(
-      d.select(col("doc_id"), raw.as("text")), "doc_id", "text", minDocs = 30)
-  }
-
-  /** Paragraph-level exact dedup on a synthesized newline corpus: a header
-    * line shared per source, an optional promo line on 1/4 of docs, and a
-    * footer shared by every doc — the global first occurrence of each
-    * repeated line survives, every other occurrence is cut, untouched docs
-    * pass byte-identically. (The base corpus has no newlines, so the line
-    * structure is synthesized deterministically — the q_remove_boilerplate
-    * pattern; dedup here KEEPS one copy where boilerplate removal would
-    * drop all of a frequent line.)
-    */
-  private def paragraphDedupQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val raw = concat(
-      lit("From the "), col("source"), lit(" collection\n"),
-      col("text"),
-      when(col("doc_id") % 4 === 0,
-        lit("\nSubscribe for updates at example dot org")).otherwise(lit("")),
-      lit("\nAll rights reserved"))
-    TrainingData.dedupParagraphs(
-      d.select(col("doc_id"), raw.as("text")), "doc_id", "text")
-  }
-
-  /** Packing in DETERMINISTIC-SHUFFLE order: trainers don't consume a
-    * corpus in ingestion order — they shuffle it first, and at 100 TB the
-    * shuffle must be a pure function (`fnv1a64(seed # id)`), not an RNG
-    * whose result depends on partition layout. Same sharded-window pack
-    * machinery, different total order; the oracle replays the hashed order
-    * end to end, so pack boundaries are proven engine-identical.
-    */
-  private def packShuffledQ(s: SparkSession, dir: String): DataFrame = {
-    val shuffled = t(s, dir, "documents").select(
-      TF.fnv1a64(concat(lit("seed42#"), col("doc_id").cast("string")))
-        .as("shuffle_key"),
-      col("text"))
-    TrainingData.packBudgeted(shuffled, "shuffle_key", "text", budget = 2000)
-  }
-
-  /** Token-budget sequence packing: 2000-token packs in doc_id order. */
-  private def packBudgetedQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.packBudgeted(t(s, dir, "documents"), "doc_id", "text", budget = 2000)
-
-  /** Content-addressed 80/10/10 split over the document text hash. */
-  /** Passage-level exact dedup: repeated 16-token windows across the corpus. */
-  private def chunkDedupQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.duplicateChunks(t(s, dir, "documents"), "doc_id", "text",
-      chunkTokens = 16)
-
-  /** DSIR selection: k = 100 of the corpus, target = the `doc_id % 7` slice
-    * (same domain-role slice as q_importance_weights).
-    */
-  private def dsirSampleQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    TrainingData.dsirSample(docs, docs.filter(col("doc_id") % 7 === 0),
-      "doc_id", "text", k = 100)
-  }
-
-  /** Incremental dedup: the `doc_id % 7` slice plays the fresh delta, the
-    * rest the accumulated corpus; output keeps every original column.
-    */
-  private def dedupIncrementalQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    TrainingData.dedupAgainst(docs.filter(col("doc_id") % 7 === 0),
-      docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text")
-  }
-
-  /** Cross-corpus fuzzy decontamination: the benchmark is the `doc_id % 7`
-    * slice of the corpus (chosen so it contains real near-dup partners at
-    * verify scale); self-matches are excluded since here bench ⊂ train.
-    * Oracle = the exact cross Jaccard join, valid because banding recall at
-    * j ≥ 0.8 is 1 − 1e-28 per pair.
-    */
-  private def fuzzyDecontaminateQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    TrainingData.fuzzyDecontaminate(docs, docs.filter(col("doc_id") % 7 === 0),
-        "doc_id", "text")
-      .filter(col("doc_id") =!= col("bench_id"))
-  }
-
-  /** Semantic (embedding-space) benchmark decontamination
-    * ([[TrainingData.semanticDecontaminate]]): every `vec_id % 4 != 0`
-    * train embedding scored by max cosine against the broadcast
-    * `% 4 == 0` benchmark quarter, flagged at 0.35 — the vector face of
-    * the decontamination family (paraphrase-level leakage the n-gram
-    * faces can't see). The oracle replays the dense pass: same
-    * left-to-right IEEE dot (list_sum comprehension == DotProduct's
-    * accumulation order), max per train id, UNROUNDED threshold compare.
-    */
-  private def semanticDecontaminateQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    TrainingData.semanticDecontaminate(
-      emb.filter(col("vec_id") % 4 =!= 0),
-      emb.filter(col("vec_id") % 4 === 0),
-      "vec_id", "embedding", threshold = 0.35)
-  }
-
-  /** The LSH face of semantic decontamination under the driver gate: same
-    * train/bench split as [[semanticDecontaminateQ]] but FORCED through
-    * [[TrainingData.semanticDecontaminateLsh]] (`strategy = Lsh` — the
-    * explicit opt-in to the candidate-max contract, not the Auto
-    * size-dispatch) and
-    * projected to the CONTAMINATED slice — the slice whose scores the LSH
-    * face contracts to compute exactly (every contaminated row's argmax
-    * partner clears the threshold, so it is a bucket candidate and the
-    * candidate max equals the true max). At this scale and threshold the
-    * auto-sized radius-1 multiprobe config detects exactly the dense
-    * face's contaminated set (TrainingDataSpec pins set AND scores), so
-    * the dense max-cosine SQL filtered to the threshold applies verbatim
-    * — a recall regression in the LSH candidate machinery hash-fails the
-    * driver gate, the q_embed_near_dup_lsh pattern.
-    */
-  private def semanticDecontaminateLshQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    TrainingData.semanticDecontaminate(
-      emb.filter(col("vec_id") % 4 =!= 0),
-      emb.filter(col("vec_id") % 4 === 0),
-      "vec_id", "embedding", threshold = 0.45,
-      strategy = TrainingData.DecontaminationStrategy.Lsh)
-      .filter(col("contaminated"))
-  }
-
-  private def chunkDocsQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.chunkDocs(t(s, dir, "documents"), "doc_id", "text",
-      chunkTokens = 32, stride = 16)
-
-  /** DSIR importance scores against the `doc_id % 7` slice as the target
-    * domain (the same slice q_fuzzy_decontaminate treats as a benchmark —
-    * here it plays the high-quality-domain role).
-    */
-  private def importanceWeightsQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    TrainingData.importanceWeights(docs, docs.filter(col("doc_id") % 7 === 0),
-      "doc_id", "text")
-  }
-
-  private def trainSplitQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.contentSplit(t(s, dir, "documents"), "text", valPct = 10, testPct = 10)
-
-  /** Sample-ratio-mismatch (SRM) check on [[trainSplitQ]]'s 80/10/10
-    * content split — the experiment-platform health gate applied to data
-    * splits: a biased hash, a filter applied to one split, or a text
-    * distribution quirk all surface as observed shares drifting off the
-    * design, and the χ² (2 dof) catches it long before a model does.
-    * Exactness: the χ² numerator is assembled as Σ(100·o − n·w)²·(80/w)
-    * over exact integers (LCD trick — w ∈ {80,10,10} makes the
-    * multipliers {1,8,8} integral), so only the final /8000n division is
-    * a double; the 5.991 (α = 0.05) flag compares the unrounded value on
-    * both engines.
-    */
-  private def srmCheckQ(s: SparkSession, dir: String): DataFrame = {
-    val splits = TrainingData.contentSplit(t(s, dir, "documents"), "text",
-      valPct = 10, testPct = 10)
-    val w = when(col("split") === "train", lit(80L)).otherwise(lit(10L))
-    val mult = when(col("split") === "train", lit(1L)).otherwise(lit(8L))
-    val dev = col("n_docs") * 100L - col("n") * w
-    val chi2 = col("num").cast("double") / (col("n") * 8000L).cast("double")
-    // n over a WINDOW on the 3-row census, not crossJoin(splits.agg(...)):
-    // Spark does not share a scan across join sides, so the self-derived
-    // cross join ran contentSplit's full-text scan (fingerprint+tokenCount
-    // over every document) TWICE — measured 3.75 s vs the 0.41 s
-    // single-scan sibling. The window's single-partition exchange moves
-    // exactly 3 aggregate rows; the corpus scans once.
-    splits.withColumn("n", sum(col("n_docs")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(lit(1))))
-      .select(col("n"),
-        ((dev * dev).cast("decimal(38,0)") * mult).as("term"),
-        when(col("split") === "train", col("n_docs")).otherwise(0L).as("tr"),
-        when(col("split") === "val", col("n_docs")).otherwise(0L).as("va"),
-        when(col("split") === "test", col("n_docs")).otherwise(0L).as("te"))
-      .groupBy(col("n"))
-      .agg(sum(col("term")).as("num"), sum(col("tr")).as("n_train"),
-        sum(col("va")).as("n_val"), sum(col("te")).as("n_test"))
-      .select(col("n"), col("n_train"), col("n_val"), col("n_test"),
-        round(chi2, 6).as("chi2"), (chi2 > 5.991).as("srm_flag"))
-  }
-
-  /** Content-hash per-language stratified sample: the keep/drop decision is
-    * `fnv1a64(doc_id) mod 1000 < rate(lang)·1000` — deterministic from row
-    * content, independent of partition layout and engine, so the DuckDB
-    * oracle replays the identical decision row for row (exact row-level
-    * match, not a statistical gate). The RNG `sampleBy` variant stays
-    * available as [[TrainingData.stratifiedSample]] (spec-gated).
-    */
-  private def stratifiedSampleQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.hashStratifiedSample(t(s, dir, "documents"), "lang", "doc_id",
-        Map("en" -> 0.5, "de" -> 0.25, "fr" -> 0.25, "es" -> 0.25, "zh" -> 0.25))
-      .select(col("doc_id"), col("lang"))
-
-  /** Exact-10-per-language deterministic sample
-    * ([[TrainingData.hashReservoirK]]): the bottom-k of the content hash
-    * per stratum via the bounded-heap aggregate — the oracle replays the
-    * identical hash order, so membership AND rank match row for row.
-    */
-  private def hashReservoirQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.hashReservoirK(t(s, dir, "documents"), "lang", "doc_id", 10)
-
-  /** Nearest-centroid assignment with FIXED centroids (the first 10 corpus
-    * vectors) — oracle-verifies the k-means/IVF assignment expression: the
-    * `-2·v·c + |c|²` score and the (distance, id) argmin tie-break are
-    * computed with identical left-to-right double arithmetic in DuckDB, so
-    * the full assignment matches bit-exactly. (Lloyd's training itself is
-    * iterative float-mean math — spec-verified, not oracle-able.)
-    */
-  private def kmeansAssignQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 10).orderBy(col("vec_id"))
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    graft.similarity.KMeans.Model(cents)
-      .assign(emb, "embedding")
-      .select(col("vec_id"), col("list").cast("long").as("list"))
-  }
-
-  /** Cluster-balanced UniMax: the water-filling allocation of
-    * [[unimaxMixQ]] applied to LEARNED strata — each document's k-means
-    * cluster id (fixed first-10 centroids, doc_id == vec_id identity)
-    * instead of its language tag. DoReMi-style domain balancing where the
-    * domains come from the embedding space: every semantic cluster gets
-    * the common token water level, tiny clusters are capped at 2 epochs.
-    * Strata are the clusters actually present (collected from the ≤ k-row
-    * distinct), so a centroid owning no vectors can never trip the
-    * zero-token guard on regenerated data.
-    */
-  private def clusterMixQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 10).orderBy(col("vec_id"))
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val assigned = graft.similarity.KMeans.Model(cents).assign(emb, "embedding")
-      .select(col("vec_id").as("doc_id"), col("list").cast("string").as("cluster"))
-    // NOT fanned out (measured A/B): fanOut(docs) pushed 1.55 → 2.46 s —
-    // unimaxMix runs an eager census job plus the main job, and each
-    // action re-pays the full-text exchange the fan-out inserts, costing
-    // more than the one-core tokenCount passes it parallelizes
-    val docs = t(s, dir, "documents").join(assigned, "doc_id")
-    val strata = assigned.select("cluster").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    TrainingData.unimaxMix(docs, "cluster", "doc_id", "text", strata,
-        budget = 1.5, epochCap = 2.0, budgetIsFraction = true)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(TF.tokenCount(col("text")).cast("long")).as("n_tokens"))
-  }
-
-  // ------------------------------------------------------------- multimodal
-
-  private def multimodalBytes(s: SparkSession, dir: String): DataFrame =
-    Multimodal.byteStats(t(s, dir, "documents"), "doc_id", "text")
-      .select(col("doc_id"), col("n_bytes").cast("long").as("n_bytes"),
-        col("n_chars").cast("long").as("n_chars"))
-
-  private def multimodalMeta(s: SparkSession, dir: String): DataFrame =
-    Multimodal.imageMeta(Multimodal.asMedia(t(s, dir, "documents"), "doc_id", "text")).toDF()
-
-  /** Frame sampling layout (every 3rd frame of the fake video): the
-    * (media_id, frame_index) multiplicity is deterministic — frame count =
-    * payload_bytes/1024 + 1 — so the explode/generator plumbing gets a real
-    * oracle even though the per-frame features are engine-specific fakes.
-    */
-  private def multimodalFrames(s: SparkSession, dir: String): DataFrame =
-    Multimodal.frameSamples(
-        Multimodal.asMedia(t(s, dir, "documents"), "doc_id", "text"), everyN = 3, dim = 8)
-      .toDF()
-      .select(col("media_id"), col("frame_index").cast("long").as("frame_index"))
-
-  /** REAL decoded-pixel features, oracle-checked end to end: each document
-    * becomes a 24×16 PNG whose pixels follow a closed-form mod-256 formula
-    * ([[Multimodal.syntheticMedia]]), the engine round-trips it through a
-    * real ImageIO encode + decode, and [[Multimodal.features]] computes
-    * channel means + an 8-bin luminance histogram from the DECODED raster.
-    * PNG is lossless, so the DuckDB oracle replays the identical numbers by
-    * regenerating the pixel grid arithmetically — if the decode or the
-    * pixel math were fake, the hashes would diverge.
-    */
-  private def imageFeaturesQ(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.syntheticMedia(
-      t(s, dir, "documents").select(col("doc_id")), "doc_id", 24, 16)
-    val f = Multimodal.features(media, dim = 11).toDF()
-    val cols = Seq(col("media_id").as("doc_id")) ++
-      Seq("mean_r", "mean_g", "mean_b").zipWithIndex.map { case (nm, i) =>
-        round(element_at(col("feature"), i + 1).cast("double"), 6).as(nm)
-      } ++
-      (0 until 8).map(b =>
-        round(element_at(col("feature"), b + 4).cast("double"), 6).as(s"h$b"))
-    f.select(cols: _*)
-  }
-
-  /** Perceptual image dedup: every synthetic PNG is decoded, dHashed
-    * ([[Multimodal.dHashes]] — 9×8 pooled BT.601 luminance, adjacent-block
-    * comparisons, 64 bits), and mapped to its canonical asset (smallest
-    * media_id sharing the hash). The synthetic pixel formula repeats
-    * whenever the three channel offsets all wrap (doc_id ≡ mod 256), so the
-    * corpus genuinely contains pixel-identical images and the clusters are
-    * non-trivial; the DuckDB oracle replays pixels → pooling →
-    * cross-multiplied comparisons → bit packing with integer arithmetic
-    * only. Near-dup (Hamming ≤ d) pairing is spec'd on perturbed rasters
-    * (`MultimodalSpec`) — the banding machinery is [[Dedup.simhashPairs]]'.
-    */
-  private def imageDhashQ(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.syntheticMedia(
-      t(s, dir, "documents").select(col("doc_id")), "doc_id", 24, 16)
-    val hashes = Multimodal.dHashes(media).toDF()
-    val canon = hashes.groupBy(col("dhash")).agg(min(col("media_id")).as("canonical_id"))
-    hashes.join(canon, "dhash")
-      .select(col("media_id").as("doc_id"), col("dhash"), col("canonical_id"))
-  }
-
-  /** Real audio-container parse: the synthetic WAV corpus
-    * ([[Multimodal.syntheticAudio]]) round-tripped through the JDK's
-    * actual RIFF/WAVE reader ([[Multimodal.audioMeta]]). The oracle states
-    * the generator's closed-form metadata; the engine must recover it by
-    * PARSING the bytes — a malformed container or broken reader fails the
-    * row, not the stub.
-    */
-  private def audioMetaQ(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.syntheticAudio(
-      t(s, dir, "documents").select(col("doc_id")), "doc_id")
-    Multimodal.audioMeta(media).toDF()
-      .select(col("media_id").as("doc_id"), col("sample_rate"), col("channels"),
-        col("bits_per_sample"), col("n_samples"), col("duration_us"),
-        col("decoded"))
-  }
-
-  /** Real signal statistics over DECODED PCM ([[Multimodal.audioFeatures]]):
-    * peak, zero crossings, RMS, mean from exact integer sums over the
-    * samples read back out of the WAV container. The sawtooth fixture is
-    * lossless, so DuckDB replays the decoded stream arithmetically —
-    * decode + feature extraction verified end to end, the audio analog of
-    * `q_image_features`.
-    */
-  private def audioFeaturesQ(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.syntheticAudio(
-      t(s, dir, "documents").select(col("doc_id")), "doc_id")
-    Multimodal.audioFeatures(media).toDF()
-      .select(col("media_id").as("doc_id"), col("n_samples"), col("peak"),
-        col("zero_crossings"), round(col("rms"), 6).as("rms"),
-        round(col("mean"), 6).as("mean"))
-  }
-
-  /** Multimodal end-to-end curation: a document survives iff (1) its image
-    * is its dHash cluster's canonical (perceptual image dedup — first
-    * occurrence keeps), (2) its audio RMS sits inside the quality band
-    * (decoded-PCM gate), and (3) its text passes the Gopher A1.1 rules.
-    * Three modality verdicts — each partial-aggregated or per-partition
-    * bounded — meet in `doc_id`-keyed joins; payload bytes (pixels, PCM)
-    * never shuffle, only 8-byte ids, hashes, and one double per doc.
-    */
-  private def curateMultimodalQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val dh = Multimodal.dHashes(Multimodal.syntheticMedia(
-      docs.select(col("doc_id")), "doc_id", 24, 16)).toDF()
-    val canon = dh.groupBy(col("dhash")).agg(min(col("media_id")).as("canonical_id"))
-    val imgKeep = dh.join(canon, "dhash")
-      .filter(col("media_id") === col("canonical_id"))
-      .select(col("media_id").as("doc_id"))
-    val aud = Multimodal.audioFeatures(Multimodal.syntheticAudio(
-        docs.select(col("doc_id")), "doc_id")).toDF()
-      .filter(col("rms") >= 18910.0 && col("rms") <= 18930.0)
-      .select(col("media_id").as("doc_id"), col("rms"))
-    // six Gopher flags sans f_stop — the synthetic corpus never carries two
-    // distinct stopwords, so the full `keep` would gate vacuously (same
-    // adaptation as curateCorpusV2Q)
-    val g = TF.gopherFlags(col("text"))
-    docs
-      .join(imgKeep, Seq("doc_id"), "left_semi")
-      .filter(g.getField("f_wc") && g.getField("f_mwl") && g.getField("f_symbol") &&
-        g.getField("f_bullet") && g.getField("f_ellipsis") && g.getField("f_alpha"))
-      .join(aud, "doc_id")
-      .select(col("doc_id"), round(col("rms"), 6).as("rms"))
-  }
-
-  /** Per-segment OLS revenue trend ([[Analytics.olsTrend]]): o_totalprice
-    * regressed on days-since-epoch of o_orderdate. The customer join is
-    * UNHINTED: customer scales with the fact tables (10⁹ rows at 100 TB —
-    * the (custkey, segment) projection alone is ~16 GB, not
-    * broadcastable), so the planner broadcasts it below
-    * `autoBroadcastJoinThreshold` and shuffle-joins co-partitioned on the
-    * custkey above. Either way the trend itself is one
-    * partial-aggregating pass — only |segments| moment rows shuffle.
-    */
-  private def regrTrendQ(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-    val joined = o.join(c, col("o_custkey") === col("c_custkey"))
-    Analytics.olsTrend(joined, Seq(col("c_mktsegment")),
-      datediff(to_date(col("o_orderdate")), to_date(lit("1970-01-01"))),
-      col("o_totalprice"))
-  }
-
-  /** Pairwise Pearson matrix over four lineitem measures
-    * ([[Analytics.corrPairs]]): all six correlations from ONE
-    * partial-aggregated scan (exact decimal moments, no per-pair rescans,
-    * no float merge-order nondeterminism).
-    */
-  private def corrMatrixQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.corrPairs(t(s, dir, "lineitem"), Seq(
-      "l_discount" -> col("l_discount"),
-      "l_extendedprice" -> col("l_extendedprice"),
-      "l_quantity" -> col("l_quantity"),
-      "l_tax" -> col("l_tax")))
-
-  /** U-shape position attribution over each user's event journey
-    * ([[Analytics.positionAttribution]]): 40/20/40 credit split across
-    * ordered touches, summed per event type in exact decimal.
-    */
-  private def attributionQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.positionAttribution(t(s, dir, "events"), "user_id",
-      Seq(col("ts"), col("event_id")), "event_type")
-
-  /** Deterministic per-user modal event type ([[Analytics.modePerKey]]):
-    * most frequent, smallest-value tie-break (the builtin `mode` leaves
-    * ties unspecified — unusable against an oracle).
-    */
-  private def modeEventQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.modePerKey(t(s, dir, "events"), "user_id", "event_type")
-
-  /** Truncated 20-deep EMA (α = 0.1) of `value` per user
-    * ([[Analytics.emaTrunc]]): exact decimal weights over one shared
-    * per-key sort.
-    */
-  private def emaQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.emaTrunc(
-      t(s, dir, "events").select(col("user_id"), col("ts"), col("event_id"), col("value")),
-      "user_id", Seq(col("ts"), col("event_id")), col("value"))
-      .select(col("user_id"), col("ts"), col("event_id"), col("ema"))
-
-  /** Zero-filled per-user daily activity spine ([[Analytics.gapFillDaily]]).
-    * `day` goes out as midnight TIMESTAMP — parquet date32 and DuckDB DATE
-    * hash differently in the driver compare (same trick as
-    * q_resample_ffill).
-    */
-  private def gapfillQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.gapFillDaily(t(s, dir, "events"), "user_id", "ts")
-      .withColumn("day", col("day").cast("timestamp"))
-
-  /** Robust per-type outlier profile ([[Analytics.madOutliers]]):
-    * median / MAD / 3σ-equivalent outlier counts of `value`. The group
-    * key is the closed `event_type` vocabulary — a schema-level enum (5
-    * values in the generator), so the broadcast gate gets a LITERAL bound
-    * with headroom rather than a census job (a distinct-count scan at
-    * plan-build time would run inside every timed bench sample, and at
-    * 100 TB it is a full fact scan per plan build). The operator default
-    * (unknown count → AQE decides) stays the scale-safe path for
-    * open-vocabulary callers.
-    */
-  private def anomalyMadQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.madOutliers(t(s, dir, "events"), "event_type", col("value"),
-      nGroups = 16L)
-
-  /** Frequently-bought-together part pairs ([[Analytics.marketBasket]]):
-    * in-basket pair generation, exact-count lift, deterministic top 50.
-    * The item space is `l_partkey ⊆ part`, so the part-table row count
-    * (a footer-statistics count, no data scan) feeds the broadcast gate;
-    * a web-scale caller with an unbounded catalog leaves the default -1
-    * and AQE sizes the aggregated item-count side at runtime.
-    */
-  private def marketBasketQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.marketBasket(t(s, dir, "lineitem"), "l_orderkey", "l_partkey",
-      distinctItems = t(s, dir, "part").count())
-
-  /** Pareto frontier of orders ([[Analytics.paretoFrontierByDate]]):
-    * earliest-date / highest-value skyline via the per-date running max.
-    */
-  private def skylineQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.paretoFrontierByDate(
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice")),
-      "o_orderdate", "o_totalprice")
-
-  /** Blocked edit-distance near-dup pairs ([[Dedup.editDistancePairs]]):
-    * length-bucket × source blocking, Levenshtein ≤ 15 on 120-char
-    * prefixes.
-    */
-  private def levPairsQ(s: SparkSession, dir: String): DataFrame =
-    Dedup.editDistancePairs(t(s, dir, "documents"), "doc_id", "text",
-      Seq(col("source"), expr("n_chars div 64")), prefixLen = 120, maxDist = 15)
-
-  /** 3-hop BFS reach over the co-purchase part graph
-    * ([[graft.operators.Graph.bfsHops]]): edges are part pairs sharing ≥ 2
-    * orders, seeded at the best-connected part (max degree, smallest-key
-    * tie-break) so the walk explores the graph's densest component.
-    */
-  private def bfsReachQ(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val items = li.distinct()
-    val edges = items.groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("__arr"))
-      // the HOF pair generator is KEPT here (r14 A/B): swapping in the
-      // native PairCombos — the q_basket_triples win — re-planned the
-      // query from 12 to 19 jobs and wall 1.8 → 2.2 s at sf0.1. Order
-      // baskets average ~4 items, so the per-element re-slice overhead
-      // PairCombos removes is negligible; the profiled cost lives in the
-      // distinct + collect_set shuffles (data), not the lambda (PERF.md)
-      .select(explode(expr(
-        """flatten(transform(__arr, (x, i) ->
-          |  transform(slice(__arr, i + 2, size(__arr)), y ->
-          |    struct(x AS p1, y AS p2))))""".stripMargin)).as("__pr"))
-      .select(col("__pr.p1").as("p1"), col("__pr.p2").as("p2"))
-      .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("__c"))
-      .filter(col("__c") >= 2)
-      .select(col("p1"), col("p2"))
-    val seeds = edges.select(col("p1").as("node"))
-      .union(edges.select(col("p2").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("__deg"))
-      .orderBy(col("__deg").desc, col("node")).limit(1)
-      .select(col("node"))
-    graft.operators.Graph.bfsHops(edges, "p1", "p2", seeds, "node", maxHops = 3)
-  }
-
-  /** Benford first-digit profile of order totals: observed share per
-    * leading digit next to the theoretical log₁₀(1+1/d). The expectation
-    * constants are one Scala-computed literal table shared verbatim with
-    * the oracle — engines' libm log10 need not agree.
-    */
-  private val benfordExp: Seq[(String, Double)] =
-    (1 to 9).map(d => d.toString -> math.rint(math.log10(1.0 + 1.0 / d) * 1e6) / 1e6)
-
-  private def benfordQ(s: SparkSession, dir: String): DataFrame = {
-    val digits = t(s, dir, "orders")
-      .select(substring(col("o_totalprice").cast("long").cast("string"), 1, 1).as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("n_orders"))
-    val total = digits.agg(sum(col("n_orders")).as("__tot"))
-    val expCol = benfordExp.foldLeft(lit(null).cast("double")) {
-      case (acc, (d, e)) => when(col("digit") === d, lit(e)).otherwise(acc)
-    }
-    digits.crossJoin(broadcast(total))
-      .select(col("digit"), col("n_orders"),
-        round(col("n_orders").cast("double") / col("__tot").cast("double"), 6).as("obs_pct"),
-        expCol.as("exp_pct"))
-  }
-
-  /** Exact 5-gram Jaccard ≥ 0.8 pairs via PPJoin prefix filtering
-    * ([[Dedup.ppjoinPairs]]): the third fuzzy-dedup path — same result set
-    * as the exact inverted index (spec-pinned), candidates from the rare
-    * prefix only.
-    */
-  private def ppjoinQ(s: SparkSession, dir: String): DataFrame =
-    Dedup.ppjoinPairs(t(s, dir, "documents"), "doc_id", "text", n = 5,
-      tNum = 4, tDen = 5)
-
-  /** Per-source vocabulary fingerprint: within the global top-200 token
-    * census, each source's 5 most OVER-represented tokens by the smoothed
-    * KL contribution p_s·ln(p_s/p_g) — the "what makes this source talk
-    * differently" report a curation review reads before weighting sources.
-    * Restricted to the top-census domain (the bounded shortlist), so every
-    * per-term double is computed from exact integer counts with the
-    * identical expression on both engines; ranking uses the unrounded term.
-    * Scale shape: one (source, token) census shuffle (map-side partials, no
-    * text past the explode), a TakeOrdered top-200, broadcast-sized joins,
-    * and the bounded top-5 aggregate.
-    */
-  private def sourceFingerprintQ(s: SparkSession, dir: String): DataFrame = {
-    val stc = t(s, dir, "documents")
-      .select(col("source"), explode(TF.tokens(lower(col("text")))).as("tok"))
-      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n_s"))
-    val top = stc.groupBy(col("tok")).agg(sum(col("n_s")).as("n_g"))
-      .orderBy(col("n_g").desc, col("tok")).limit(200)
-    val ts = stc.join(top.select(col("tok")), Seq("tok"))
-      .groupBy(col("source")).agg(sum(col("n_s")).as("t_s"))
-    val tg = top.agg(sum(col("n_g")).as("t_g"))
-    val ps = (col("n_s") + lit(1L)) / (col("t_s") + lit(200.0))
-    val pg = (col("n_g") + lit(1L)) / (col("t_g") + lit(200.0))
-    val terms = stc.join(top, Seq("tok")).join(ts, Seq("source")).crossJoin(tg)
-      .select(col("source"), col("tok"), col("n_s"),
-        (ps * log(ps / pg)).as("term"))
-    Analytics.topPerKeyAgg(terms, "source",
-        Seq(negate(col("term")), col("tok")),
-        Seq("tok" -> col("tok"), "n_s" -> col("n_s"), "term" -> col("term")), 5)
-      .select(col("source"), col("tok"), col("n_s"),
-        round(col("term"), 6).as("kl_term"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Top-40 token vocabulary with cumulative corpus coverage
-    * ([[Analytics.vocabCoverage]]) over whitespace tokens of the lowered
-    * document text.
-    */
-  private def vocabCoverageQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.vocabCoverage(
-      t(s, dir, "documents").select(
-        explode(TF.tokens(lower(col("text")))).as("tok")),
-      "tok", k = 40)
-
-  /** Per-event-type ISO day-of-week seasonality
-    * ([[Analytics.dowProfile]]).
-    */
-  private def dowProfileQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.dowProfile(t(s, dir, "events"), "event_type", "ts", col("value"))
-
-  /** TPC-H Q6 shape (forecasting revenue change): a pure scan-side
-    * aggregate whose THREE predicates all push into the parquet scan
-    * (date band, discount band, quantity cap) — the canonical pushdown
-    * benchmark. Revenue sums exact decimal products.
-    */
-  private def sqlQ6(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-        col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-        col("l_quantity") < 24)
-      .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          col("l_discount").cast("decimal(4,2)")).cast("double").as("revenue"),
-        count(lit(1)).as("n_lines"))
-
-  /** TPC-H Q10 shape (returned-item reporting): customer×orders×lineitem
-    * star with the nation dim broadcast, one quarter of returned items,
-    * top 20 customers by exact-decimal revenue (distributed TakeOrdered).
-    */
-  private def sqlQ10(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-      .join(t(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .filter(col("l_returnflag") === "R" &&
-        col("o_orderdate") >= lit("1995-10-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
-      .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-      .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount")).cast("decimal(4,2)"))
-        .cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey")).limit(20)
-
-  /** Consecutive same-event runs per user ([[Analytics.runs]]):
-    * gaps-and-islands from one lag + running sum over a single window.
-    */
-  private def runsQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.runs(t(s, dir, "events"), "user_id",
-      Seq(col("ts"), col("event_id")), "event_type")
-
-  /** Supplier concentration per part brand ([[Analytics.hhi]]): HHI from
-    * exact integer share sums, the part dim broadcast onto the fact scan.
-    */
-  private def hhiQ(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_partkey"), col("l_suppkey"))
-    val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    Analytics.hhi(li.join(broadcast(p), col("l_partkey") === col("p_partkey")),
-      "p_brand", "l_suppkey")
-  }
-
-  /** Even/odd-cohort heavy-purchaser (≥ 15 purchase events) z-test
-    * ([[Analytics.twoProportionZ]]): one unit row per user, pooled
-    * two-proportion z from exact counts.
-    */
-  private def abTestQ(s: SparkSession, dir: String): DataFrame = {
-    val perUser = t(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)) >= 15, 1L)
-        .otherwise(0L).as("conv"))
-    Analytics.twoProportionZ(perUser, pmod(col("user_id"), lit(2)), col("conv"))
-  }
-
-  /** Wide→long unpivot (melt) of the four lineitem measures via `stack`,
-    * aggregated per measure in exact decimal. stack() is a generator on
-    * the scan side — no shuffle until the 4-group aggregate.
-    */
-  private def unpivotQ(s: SparkSession, dir: String): DataFrame =
-    // fan out before the stack: the 4× row multiplication + decimal
-    // partial sums are the whole cost (4 groups — the shuffle is bytes),
-    // and the single-file scan otherwise runs it all one-core
-    graft.operators.Par.fanOut(t(s, dir, "lineitem")
-        .select(col("l_quantity"), col("l_extendedprice"),
-          col("l_discount"), col("l_tax")))
-      .select(expr(
-        """stack(4,
-          |  'l_quantity', l_quantity,
-          |  'l_extendedprice', l_extendedprice,
-          |  'l_discount', l_discount,
-          |  'l_tax', l_tax) AS (measure, v)""".stripMargin))
-      .groupBy(col("measure"))
-      .agg(sum(col("v").cast("decimal(19,4)")).cast("double").as("total"),
-        count(lit(1)).as("n"))
-
-  /** Percentile-band corpus trim: per source, how many documents fall in
-    * the global [p5, p95] length band. The two exact-percentile bounds are
-    * ONE collected row (a bounded side input, like shard boundaries);
-    * the corpus itself is a single partial-aggregated pass.
-    */
-  private def lengthTrimQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("source"), col("n_chars"))
-    val b = docs.agg(expr("percentile(n_chars, 0.05)"), expr("percentile(n_chars, 0.95)")).head()
-    val (lo, hi) = (b.getDouble(0), b.getDouble(1))
-    docs.groupBy(col("source"))
-      .agg(sum(when(col("n_chars") >= lo && col("n_chars") <= hi, 1L).otherwise(0L)).as("kept"),
-        count(lit(1)).as("total"))
-      .withColumn("kept_frac",
-        round(col("kept").cast("double") / col("total").cast("double"), 6))
-  }
-
-  /** Per-source winsorized length statistics ([[Analytics.winsorizedStats]]):
-    * each source's n_chars clipped to its own discrete [p10, p90] before the
-    * mean — the robust profile that survives a handful of pathological
-    * crawl records. All integer until the final exact-int divisions.
-    */
-  private def winsorizeQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.winsorizedStats(t(s, dir, "documents"),
-        col("source"), col("n_chars"), col("doc_id"), 100, 900)
-      .withColumn("raw_mean", round(col("raw_mean"), 6))
-      .withColumn("win_mean", round(col("win_mean"), 6))
-
-  /** Per-source nucleus (top-p = 0.9) vocabulary ([[Analytics.nucleusVocab]]):
-    * how many distinct tokens carry 90% of each source's token mass — the
-    * concentration signal that separates boilerplate-heavy sources (tiny
-    * nucleus) from diverse prose.
-    */
-  private def topPVocabQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.nucleusVocab(t(s, dir, "documents"), col("source"), col("text"), 900)
-
-  /** Embedding-table per-dimension health audit ([[Analytics.embedDimStats]]):
-    * min/max/zero/negative tallies per vector position (order-independent
-    * statistics only — a distributed float SUM is summation-order-dependent
-    * and can never replay across engines).
-    */
-  private def embedDimStatsQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.embedDimStats(t(s, dir, "embeddings"), col("embedding"))
-
-  /** Embedding isotropy audit (Ethayarajh, EMNLP 2019 — anisotropic
-    * embeddings crowd into a cone and cosine loses discriminative power):
-    * the average pairwise cosine over ALL n² pairs WITHOUT any pair
-    * generation, via the identity Σᵢⱼ uᵢ·uⱼ = ‖Σu‖². Unit vectors are
-    * rounded to 6 dp and accumulated as exact DECIMAL per dimension, so
-    * the two sides of the identity — the squared component sums and the
-    * self-term diagonal — are exact and order-free; avg_cos near 0 is
-    * healthy, near 1 is representation collapse. One scan-side explode +
-    * one |dim|-row census; the all-pairs answer at ZERO pairs materialized
-    * (the 100 TB posture for a quadratic statistic).
-    */
-  private def isotropyQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val v = VF.toDouble(col("embedding"))
-    // norm BELOW the explode, normalization above it: the former
-    // `transform(v, x => round(x / VF.norm(v), 6))` embedded the O(d) norm
-    // in the per-element lambda — O(d²) per row (the q_ndcg Quantize8
-    // lesson), and the Generate's implied non-empty filter re-evaluated the
-    // whole transform a second time. The Generate boundary keeps __nrm from
-    // being collapsed back into a per-element position (a plain hoisted
-    // projection would be re-inlined by CollapseProject, which counts the
-    // single lexical reference inside the lambda as "used once").
-    // round(x/nrm, 6) → decimal(10,6) per element is arithmetic-identical.
-    val dims = emb
-      .select(VF.norm(v).as("__nrm"), posexplode(v).as(Seq("dim", "x")))
-      .select(col("dim"),
-        round(col("x") / col("__nrm"), 6).cast("decimal(10,6)").as("ud"))
-      .groupBy(col("dim"))
-      .agg(sum(col("ud")).as("s_d"), sum(col("ud") * col("ud")).as("q_d"))
-    val n = emb.agg(count(lit(1)).as("n"))
-    dims.agg(sum(col("s_d") * col("s_d")).as("norm2"), sum(col("q_d")).as("diag"))
-      .crossJoin(n)
-      .select(col("n"),
-        round(col("norm2").cast("double"), 6).as("sum_norm2"),
-        round((col("norm2") - col("diag")).cast("double") /
-          (col("n") * (col("n") - 1L)).cast("double"), 6).as("avg_cos"))
-  }
-
-  /** ZCA whitening under the driver gate, in INVARIANT form (the
-    * q_stream_recursive_parity pattern for non-SQL-expressible math): fit
-    * [[graft.similarity.Whitening]] on the embeddings (one-pass
-    * GramMatrixAgg + driver Jacobi eigen), whiten every vector distributed
-    * (d codegen'd dots per row, map-only), re-aggregate the WHITENED Gram
-    * with the same one-pass aggregate, and emit per-dimension
-    * (mean, variance, max |off-diagonal covariance|) rounded to 4 dp. The
-    * oracle is the mathematical identity the transform exists to produce —
-    * mean 0, covariance I — as a 64-row literal: a fit bug, an eigen-solver
-    * drift, or a broken matvec all hash-fail the gate. 4 dp, not the usual
-    * 6: the whitened invariant's float error is amplified by the
-    * covariance condition number (~kappa x 1e-12 for the two differing
-    * accumulation paths), and 4 dp keeps the gate deterministic for any
-    * plausibly-conditioned regeneration of the corpus.
-    */
-  private def embedWhitenQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val model = graft.similarity.Whitening.fitZca(emb, "embedding")
-    val white = graft.similarity.Whitening
-      .whiten(emb, "vec_id", "embedding", model)
-    val g = white.select(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.expressions.GramMatrixAgg(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("whitened"))))
-        .as("g"))
-      .head().getSeq[Double](0).toArray
-    val d = model.mean.length
-    val n = g(0)
-    val mean = Array.tabulate(d)(i => g(1 + i) / n)
-    val cov = Array.ofDim[Double](d, d)
-    var k = 1 + d
-    for (i <- 0 until d; j <- i until d) {
-      val c = g(k) / n - mean(i) * mean(j); cov(i)(j) = c; cov(j)(i) = c; k += 1
-    }
-    // + 0.0 folds -0.0 to 0.0 so the hash matches the oracle's literal zero
-    def r4(x: Double): Double = math.rint(x * 1e4) / 1e4 + 0.0
-    (0 until d).map { i =>
-      val off = (0 until d).filter(_ != i).map(j => math.abs(cov(i)(j))).max
-      (i.toLong, r4(mean(i)), r4(cov(i)(i)), r4(off))
-    }.toDF("dim", "mean_w", "var_w", "max_abs_offdiag")
-  }
-
-  /** Greedy k-center coreset selection under the driver gate
-    * ([[graft.similarity.Coreset.kCenterGreedy]], k = 8 over the
-    * embeddings corpus): the oracle replays the ENTIRE greedy loop as a
-    * recursive CTE — seed by smallest id, then per step a LATERAL argmax
-    * of the min cosine distance to every already-selected center
-    * (identical left-to-right IEEE dots, min over the same doubles,
-    * DESC/id tie-break) — so a drift anywhere in the selection order, the
-    * distance kernel, or the radius values hash-fails. The q_mmr_rerank
-    * oracle pattern, corpus-global.
-    */
-  private def kcenterCoresetQ(s: SparkSession, dir: String): DataFrame =
-    graft.similarity.Coreset.kCenterGreedy(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8)
-      .select(col("step"), col("id").as("vec_id"),
-        round(col("min_dist"), 6).as("min_dist"))
-
-  /** Sorted-neighborhood near-dup pairs over part names
-    * ([[Dedup.sortedNeighborPairs]], window 8) verified by the bit-exact
-    * Jaro-Winkler: the SNM blocking face the fixed-prefix/length blocks
-    * of q_jaro_pairs/q_lev_pairs don't cover. Filter on the UNROUNDED
-    * similarity, publish rounded — the repo's float contract.
-    */
-  private def snmPairsQ(s: SparkSession, dir: String): DataFrame =
-    // compute the similarity ONCE in a projection and filter on the
-    // unrounded column: filter + select are separate operators, so the
-    // filter-then-recompute form ran the O(|a|·|b|) kernel twice per
-    // candidate (subexpression elimination does not cross the boundary)
-    Dedup.sortedNeighborPairs(t(s, dir, "part"), "p_partkey", col("p_name"),
-        window = 8)
-      .select(col("a"), col("b"),
-        TF.jaroWinkler(col("ka"), col("kb")).as("__jw"))
-      .filter(col("__jw") >= 0.9)
-      .select(col("a"), col("b"), round(col("__jw"), 6).as("sim"))
-
-  /** Multi-pass SNM ([[Dedup.sortedNeighborPairsMulti]], window 8, keys =
-    * p_name, reverse(p_name), and the brand∥type∥name attribute
-    * concatenation): the Hernández/Stolfo completion of q_snm_pairs,
-    * at the ≥3 complementary passes the SIGMOD '95 method prescribes.
-    * The reversed-name pass reaches duplicates whose edit sits in the
-    * name's PREFIX (name-sorted ranks put those > window apart;
-    * suffix-sorted ranks put them adjacent). The attribute-concatenation
-    * pass re-sorts WITHIN small brand×type blocks, where a window
-    * of 8 spans most of a block — so name pairs pushed apart in BOTH
-    * global name orders still meet. Pass contributions are measured
-    * (why each pass exists): at sf0.01, pass 2 adds 224 verified pairs
-    * pass 1 cannot see and pass 3 adds 209 more that neither name order
-    * reaches. Same bit-exact Jaro-Winkler verify; names join back by id
-    * (candidates are O(n·window·passes) slim id pairs, never
-    * corpus-shaped).
-    */
-  private def snmMultipassQ(s: SparkSession, dir: String): DataFrame = {
-    val part = t(s, dir, "part")
-    val names = part.select(col("p_partkey"), col("p_name"))
-    Dedup.sortedNeighborPairsMulti(part, "p_partkey",
-        Seq(col("p_name"), reverse(col("p_name")),
-          concat_ws(" ", col("p_brand"), col("p_type"), col("p_name"))),
-        window = 8)
-      .join(names.select(col("p_partkey").as("a"), col("p_name").as("na")), "a")
-      .join(names.select(col("p_partkey").as("b"), col("p_name").as("nb")), "b")
-      // similarity computed once, filtered unrounded (see snmPairsQ)
-      .select(col("a"), col("b"),
-        TF.jaroWinkler(col("na"), col("nb")).as("__jw"))
-      .filter(col("__jw") >= 0.9)
-      .select(col("a"), col("b"), round(col("__jw"), 6).as("sim"))
-  }
-
-  /** Per-dimension energy audit of the int8 code store ([[Ann.quantize8]] —
-    * the exact codes the quantized ANN tier serves): sum, sum-of-squares,
-    * saturation (|q| = 127) and dead-zero tallies per position. This is the
-    * first-moment audit [[embedDimStatsQ]] deliberately can't provide over
-    * floats (cross-partition float sums never hash-replay) — over int8
-    * codes the sums are exact BIGINTs (≤ 127²·n, safe past 10¹⁴ rows), so
-    * collapsed or range-saturated dimensions are caught with order-exact
-    * arithmetic. One scan-side explode, map-side partials, |dim| rows out.
-    */
-  private def dimEnergyQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .select(Ann.quantize8(col("embedding")).as("qv"))
-      .select(posexplode(col("qv.q")).as(Seq("dim", "qval")))
-      .groupBy(col("dim").cast("long").as("dim"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("qval").cast("long")).as("sum_q"),
-        sum(col("qval").cast("long") * col("qval").cast("long")).as("sum_q2"),
-        sum(when(abs(col("qval")) === 127, 1L).otherwise(0L)).as("n_sat"),
-        sum(when(col("qval") === 0, 1L).otherwise(0L)).as("n_zero"))
-
-  /** Word-trigram novelty curve over 8 ingestion batches
-    * ([[Analytics.ngramNovelty]]): distinct trigrams first seen per batch —
-    * the marginal-value measurement that says when a crawl stops paying.
-    */
-  private def ngramNoveltyQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.ngramNovelty(t(s, dir, "documents"), col("doc_id"), col("text"), 3, 8)
-
-  /** Per-source token-budget curation ([[TrainingData.groupBudgetSelect]]):
-    * quality-descending selection within each source until its 5,000-token
-    * cap — the per-domain budget that q_budget_select's single global
-    * budget cannot express.
-    */
-  private def cappedSelectQ(s: SparkSession, dir: String): DataFrame =
-    TrainingData.groupBudgetSelect(
-      t(s, dir, "documents").select(col("source"), col("doc_id"),
-        TF.qualityScore(col("text")).as("quality"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens")),
-      col("source"), Seq(col("quality").desc, col("doc_id").asc),
-      col("n_tokens"), 5000L)
-
-  /** DP count release ([[Analytics.dpNoisyCounts]]) of per-language doc
-    * counts with hash-derived uniform noise on [−3, 3] — deterministic
-    * stand-in for the geometric mechanism so the oracle replays the noise.
-    */
-  private def dpCountsQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.dpNoisyCounts(t(s, dir, "documents"), col("lang"), "graft-dp-2026", 3)
-
-  /** Chi-squared independence audit ([[Analytics.chiSquareIndependence]])
-    * of language × source — "is the corpus's language mix confounded with
-    * where it was crawled". Exact integer micro-units end to end.
-    */
-  private def chi2Q(s: SparkSession, dir: String): DataFrame =
-    Analytics.chiSquareIndependence(t(s, dir, "documents"), col("lang"), col("source"))
-
-  /** Population-stability-index drift between the even- and odd-id corpus
-    * halves over power-of-2 token-length buckets — the distribution-drift
-    * alarm a pipeline runs between crawls. One partial-aggregated shuffle
-    * (the bucket census); totals are a one-row collected side input.
-    * Emits PER-BUCKET terms (exact-int-derived doubles, deterministic on
-    * any engine) rather than a cross-partition double sum; the caller adds
-    * ≤64 terms (token counts fit 63 bits → at most 64 buckets, which also
-    * fixes the +1 smoothing denominator).
-    */
-  private def psiDriftQ(s: SparkSession, dir: String): DataFrame = {
-    val counts = t(s, dir, "documents")
-      .select(pmod(col("doc_id"), lit(2L)).as("half"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("bucket_cap", TF.pow2BucketCap(col("n_tokens")))
-      .groupBy(col("bucket_cap"))
-      .agg(sum(when(col("half") === 0, 1L).otherwise(0L)).as("n_ref"),
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("n_new"))
-    val trow = counts.agg(sum(col("n_ref")), sum(col("n_new"))).head()
-    val (tr, tn) = (trow.getLong(0) + 64.0, trow.getLong(1) + 64.0)
-    val pr = (col("n_ref") + 1L).cast("double") / tr
-    val pn = (col("n_new") + 1L).cast("double") / tn
-    counts.select(col("bucket_cap"), col("n_ref"), col("n_new"),
-      round((pn - pr) * log(pn / pr), 6).as("psi_term"))
-  }
-
-  /** Two-sample KS drift ([[Analytics.ksDrift]]) between the even- and
-    * odd-id document halves over length (64-char buckets) — the
-    * threshold-free companion to [[psiDriftQ]]: PSI averages divergence
-    * over bins, KS reports the single worst CDF gap and where it sits.
-    */
-  private def ksDriftQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.ksDrift(t(s, dir, "documents"),
-      expr("n_chars div 64"), pmod(col("doc_id"), lit(2L)) === 0L)
-
-  /** Deterministic Poisson-bootstrap 95% CI
-    * ([[Analytics.poissonBootstrapCI]], b = 100) for mean tokens/doc —
-    * the uncertainty a corpus datasheet should quote next to every mean,
-    * computed in one scan with hash-derived weights so the interval
-    * replays bit-for-bit.
-    */
-  private def bootstrapCiQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.poissonBootstrapCI(
-      t(s, dir, "documents").select(col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens")),
-      col("doc_id"), col("n_tokens"), b = 100)
-
-  /** Neyman allocation ([[Analytics.neymanAllocation]]) of a 10,000-doc
-    * QA-sample budget across languages, variance-optimal for estimating
-    * mean tokens/doc: n_h ∝ N_h·σ_h with exact decimal moment sums,
-    * fixed-point ppm weights, and largest-remainder integer seats that sum
-    * to exactly 10,000.
-    */
-  private def neymanAllocQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.neymanAllocation(
-      t(s, dir, "documents").select(col("lang"),
-        TF.tokenCount(col("text")).cast("long").as("n_tokens")),
-      "lang", col("n_tokens"), sampleSize = 10000L)
-
-  /** t-closeness audit ([[Analytics.tCloseness]]) over (lang, source)
-    * quasi-groups with document length (512-char buckets) as the ordered
-    * sensitive attribute — completes the k-anonymity / l-diversity /
-    * t-closeness release-gate trio: EMD in exact ppm fixed-point, so a
-    * group whose lengths all sit in the top bucket is caught even when
-    * l-diversity passes.
-    */
-  private def tClosenessQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.tCloseness(t(s, dir, "documents"), Seq("lang", "source"),
-      expr("n_chars div 512"))
-
-  /** Per-source sentence segmentation profile: sentences split on [.!?]+
-    * runs, blank fragments dropped, average sentence length as one exact
-    * int division. The explode is scan-side (generator before the only
-    * shuffle, the per-source aggregate).
-    */
-  private def sentenceStatsQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("source"),
-        explode(filter(split(col("text"), "[.!?]+"),
-          x => length(trim(x)) > 0)).as("sent"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_sentences"),
-        sum(length(trim(col("sent")))).as("total_chars"))
-      .withColumn("avg_sentence_chars",
-        round(col("total_chars").cast("double") / col("n_sentences"), 6))
-
-  /** The bucketed-layout dividend: lineitem is written once bucketed 8 ways
-    * on l_orderkey, and the per-order aggregate over the bucketed table
-    * plans ZERO shuffle exchanges — the scan's bucket hashing already
-    * satisfies the aggregation's distribution requirement (at 100 TB this
-    * is the difference between an exabyte of shuffle and none for every
-    * downstream per-key pass; the write cost is paid once, the dividend
-    * recurs). Result must be layout-invariant: the oracle aggregates the
-    * un-bucketed parquet.
-    */
-  private def bucketedAggQ(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("\\W", "_")
-    val path = inTmpDir(s"graft_bucketed$tag")
-    t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(8, "l_orderkey").option("path", path)
-      .saveAsTable(s"li_bucketed$tag")
-    s.table(s"li_bucketed$tag")
-      .groupBy(col("l_orderkey"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("total_qty"))
-      .orderBy(col("n_items").desc, col("l_orderkey").asc)
-      .limit(10)
-  }
-
-  /** The bucketed-layout JOIN dividend: lineitem and orders both written
-    * bucketed 16 ways on the order key, then joined SHUFFLE-FREE — the
-    * sort-merge join reads co-bucketed files directly (plan-audited: the
-    * only exchange in the query is the final 3-group aggregate's). The
-    * `merge` hint pins the strategy the layout was built for (a strategy
-    * hint, not a size bet — at sf0.001 the planner would otherwise
-    * broadcast the small side and hide the demonstration); at 100 TB this
-    * join shape moves ZERO fact bytes over the wire. Oracle joins the
-    * un-bucketed parquet: layout must never change rows.
-    */
-  /** Per-JVM memo of bucketed-fixture writes: the FIRST q_bucketed_join
-    * invocation in a JVM (bench cold run / the Verify run) writes the
-    * bucketed tables; warm bench runs reuse them, so the steady-state
-    * number measures the READ-side plan (zero-exchange bucketed SMJ) —
-    * which is the thing this query exists to gate — instead of re-paying
-    * the one-time layout write on every run (r11 verdict: 2.51 s of which
-    * most was the in-query write). Layout write cost is a one-time
-    * ingest-side cost at scale, benchmarked separately by the cold run.
-    * Always writing on first touch per JVM keeps correctness under driver
-    * testdata regeneration (stale temp-dir tables never survive into a new
-    * process's results).
-    */
-  private val bucketedFixtureDone =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def bucketedJoinQ(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("\\W", "_")
-    if (bucketedFixtureDone.add(s"$tag@${s.sparkContext.applicationId}")) {
-      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_extendedprice"))
-        .write.mode("overwrite").format("parquet").bucketBy(16, "l_orderkey")
-        .sortBy("l_orderkey").option("path", inTmpDir(s"graft_bj_li$tag"))
-        .saveAsTable(s"bj_li$tag")
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"))
-        .write.mode("overwrite").format("parquet").bucketBy(16, "o_orderkey")
-        .sortBy("o_orderkey").option("path", inTmpDir(s"graft_bj_ord$tag"))
-        .saveAsTable(s"bj_ord$tag")
-    }
-    s.table(s"bj_li$tag").hint("merge")
-      .join(s.table(s"bj_ord$tag").hint("merge"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-  }
-
-  /** Interchange-format fidelity, end to end: documents written as JSONL
-    * and headered CSV, read back through the schema-on-read loaders
-    * ([[graft.sources.Tables.jsonTable]]/[[Tables.csvTable]], FAILFAST),
-    * full-outer-joined on doc_id and value-compared — `mismatches` must be
-    * 0 under the oracle's hash gate, so any quoting/escaping/type-coercion
-    * drift in either codec path fails the round, not just a spec.
-    */
-  private def formatRoundtripQ(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("\\W", "_")
-    val base = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
-    val (jPath, cPath) = (inTmpDir(s"graft_fmt_json$tag"), inTmpDir(s"graft_fmt_csv$tag"))
-    base.write.mode("overwrite").json(jPath)
-    base.write.mode("overwrite").option("header", "true").csv(cPath)
-    val j = graft.sources.Tables.jsonTable(s, jPath, base.schema)
-    val c = graft.sources.Tables.csvTable(s, cPath, base.schema)
-    j.as("j").join(c.as("c"), col("j.doc_id") === col("c.doc_id"), "full")
-      .groupBy(col("j.source").as("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("j.text") === col("c.text") &&
-          col("j.n_chars") === col("c.n_chars") &&
-          col("j.lang") === col("c.lang") &&
-          col("j.source") === col("c.source"), 0L).otherwise(1L)).as("mismatches"),
-        sum(col("j.n_chars")).as("total_chars"))
-  }
-
-  /** ORC round-trip fidelity: documents written as ORC (Spark's native
-    * writer), read back through [[graft.sources.Tables.orcTable]], and
-    * value-compared against the parquet base via a full-outer join —
-    * `mismatches` must be 0 under the oracle's hash gate, covering the
-    * second columnar codec path end to end the way [[formatRoundtripQ]]
-    * covers JSONL/CSV.
-    */
-  private def orcRoundtripQ(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("\\W", "_")
-    val base = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("text"))
-    val path = inTmpDir(s"graft_fmt_orc$tag")
-    base.write.mode("overwrite").orc(path)
-    val o = graft.sources.Tables.orcTable(s, path)
-    base.as("p").join(o.as("o"), col("p.doc_id") === col("o.doc_id"), "full")
-      .groupBy(col("p.source").as("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("p.text") === col("o.text") &&
-          col("p.n_chars") === col("o.n_chars") &&
-          col("p.lang") === col("o.lang") &&
-          col("p.source") === col("o.source"), 0L).otherwise(1L)).as("mismatches"),
-        sum(col("p.n_chars")).as("total_chars"))
-  }
-
-  /** Spearman rank correlation (tie-aware, via exact census midranks)
-    * between document length and token count: ranks come from per-value
-    * censuses (both variables are DOMAIN-bounded integers) using the same
-    * 2× midrank identity as [[Analytics.mannWhitney]] — 2·cum_before + c
-    * + 1 — so every rank is an exact integer and ρ is Pearson over exact
-    * DECIMAL(38,0) rank moments, one closed-form double. Spearman answers
-    * what [[corrMatrixQ]]'s Pearson can't: monotone-but-nonlinear
-    * dependence, robust to the heavy length tail. Scale shape: two census
-    * aggregates, two banded census self-joins, two hash joins back to
-    * rows, one global moment aggregate.
-    */
-  private def spearmanQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(col("doc_id"),
-      col("n_chars").cast("long").as("x"),
-      TF.tokenCount(col("text")).cast("long").as("y"))
-    def midranks(vcol: String, out: String): DataFrame = {
-      val census = d.groupBy(col(vcol).as("v")).agg(count(lit(1)).as("c"))
-      census
-        .join(census.select(col("v").as("v2"), col("c").as("c2")),
-          col("v2") < col("v"), "left")
-        .groupBy(col("v"), col("c")).agg(coalesce(sum(col("c2")), lit(0L)).as("cb"))
-        .select(col("v"), (col("cb") * 2L + col("c") + 1L).as(out))
-    }
-    val ranked = d
-      .join(midranks("x", "r2x").withColumnRenamed("v", "x"), "x")
-      .join(midranks("y", "r2y").withColumnRenamed("v", "y"), "y")
-    // cast EACH factor to decimal BEFORE multiplying: a BIGINT r2·r2
-    // product overflows silently once 2× midranks pass √(2^63) ≈ 3e9
-    // (n ≈ 1.5e9 rows) — the decimal product keeps the moments exact at
-    // any corpus size, which is the claim this query's scaladoc makes
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val m = ranked.agg(count(lit(1)).as("n"),
-      sum(d38(col("r2x"))).as("sx"),
-      sum(d38(col("r2x")) * d38(col("r2x"))).as("sxx"),
-      sum(d38(col("r2y"))).as("sy"),
-      sum(d38(col("r2y")) * d38(col("r2y"))).as("syy"),
-      sum(d38(col("r2x")) * d38(col("r2y"))).as("sxy"))
-    val dd = (c: Column) => c.cast("double")
-    val vx = dd(col("n")) * dd(col("sxx")) - dd(col("sx")) * dd(col("sx"))
-    val vy = dd(col("n")) * dd(col("syy")) - dd(col("sy")) * dd(col("sy"))
-    m.select(col("n"),
-      when(vx * vy > 0.0,
-        round((dd(col("n")) * dd(col("sxy")) - dd(col("sx")) * dd(col("sy"))) /
-          sqrt(vx * vy), 6))
-        .otherwise(lit(null).cast("double")).as("spearman_rho"))
-  }
-
-  /** Tie-corrected Mann–Whitney U ([[Analytics.mannWhitney]]) between the
-    * even- and odd-id document halves over length (16-char buckets) — the
-    * nonparametric LOCATION test beside [[ksDriftQ]]'s shape test: exact
-    * integer rank sums (midranks via the 2× identity), exact tie term, z
-    * as one replayed double expression.
-    */
-  private def mannWhitneyQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.mannWhitney(t(s, dir, "documents"),
-      expr("n_chars div 16"), pmod(col("doc_id"), lit(2L)) === 0L)
-
-  /** l-diversity audit — k-anonymity's stronger sibling: a quasi-identifier
-    * group is at risk not just when it is SMALL but when its sensitive
-    * attribute (here the power-of-2 length bucket standing in for one) is
-    * UNIFORM; l < 3 means an attacker who locates the group learns the
-    * sensitive value with ≤ 3-way ambiguity. Two-phase distinct aggregate:
-    * partials on (group, sensitive) combine map-side.
-    */
-  private def lDiversityQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .withColumn("sensitive", TF.pow2BucketCap(col("n_chars")))
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("sensitive")).as("l_distinct"))
-      .withColumn("at_risk", col("l_distinct") < 3)
-
-  /** The DataSource V2 connector under the driver gate: read the synthetic
-    * corpus source ([[graft.sources.v2.SyntheticDocs]]) with a doc_id range
-    * predicate (pushed down — the scan plans only the surviving id window)
-    * and a pruned column set, then aggregate per language. Every row is a
-    * pure FNV function of (seed, doc_id), so the oracle regenerates the
-    * IDENTICAL corpus slice from `range()` — a custom connector whose
-    * output is value-exact against SQL.
-    */
-  private def connectorSourceQ(s: SparkSession, dir: String): DataFrame =
-    s.read.format("graft.sources.v2.SyntheticDocs")
-      .option("n_docs", 20000L).option("n_partitions", 16).option("seed", 7L)
-      .load()
-      .filter(col("doc_id") >= 5000L && col("doc_id") < 15000L)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-
-  /** The connector's pushed-aggregate path under the driver gate: count /
-    * min / max over a MILLION-doc synthetic corpus — answered closed-form
-    * from partition bounds (one AggRange partial row, zero document rows
-    * generated; spec-audited). The oracle computes the same aggregates
-    * over `range()`.
-    */
-  private def connectorCountQ(s: SparkSession, dir: String): DataFrame =
-    s.read.format("graft.sources.v2.SyntheticDocs")
-      .option("n_docs", 1000000L).option("n_partitions", 16).option("seed", 7L)
-      .load()
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_id"),
-        max(col("doc_id")).as("last_id"))
-
-  /** Windowed funnel ([[Analytics.funnelWindowed]]): signup → view within
-    * 7 days → purchase within 7 days of the view — the per-step conversion
-    * window q_funnel's unbounded form cannot express.
-    */
-  private def funnelWindowedQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.funnelWindowed(
-      t(s, dir, "events").select("user_id", "ts", "event_type"),
-      "user_id", "ts",
-      Seq("t_signup" -> (col("event_type") === "signup"),
-        "t_view" -> (col("event_type") === "view"),
-        "t_purchase" -> (col("event_type") === "purchase")),
-      maxGapSeconds = 7L * 86400L)
-
-  /** Apriori frequent triples ([[Analytics.basketTriples]]) over part
-    * groups (l_partkey mod 50) per order — the mining level after
-    * q_market_basket's pairs, with the level-1 prune applied scan-side.
-    */
-  private def basketTriplesQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.basketTriples(t(s, dir, "lineitem"),
-      col("l_orderkey"), pmod(col("l_partkey"), lit(50L)),
-      minSupport = 5L, k = 50)
-
-  /** Windowed token-pair PMI ([[Analytics.pmiPairs]]): collocations within
-    * a ±3-token window, minCount 5, top-100 — the skip-gram count census
-    * an embedding pipeline precomputes.
-    */
-  private def pmiPairsQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.pmiPairs(t(s, dir, "documents"), col("text"),
-      window = 3, minCount = 5L, k = 100)
-
-  /** Matryoshka truncation audit: top-20 cosine retrieval using only the
-    * first 16 of 64 dims, flagged against the full-precision top-20 — the
-    * measured recall cost of the 4× cheaper index. Both rankings are the
-    * exact brute-force kernel; only the dimension slice differs.
-    */
-  private def mrlTruncationQ(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val q = queryVec(s, dir)
-    val full = Ann.bruteForceTopK(emb, "embedding", "vec_id", q, 20)
-      .select(col("vec_id"), lit(true).as("in_full"))
-    val emb16 = emb.select(col("vec_id"), slice(col("embedding"), 1, 16).as("emb16"))
-    Ann.bruteForceTopK(emb16, "emb16", "vec_id", q.take(16), 20)
-      .join(full, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cos").as("cos16"),
-        coalesce(col("in_full"), lit(false)).as("in_full"))
-  }
-
-  /** Full-outer reconciliation summary between the orders header and the
-    * per-order lineitem rollup: missing-side orphans plus a price
-    * match/mismatch split (decimal-exact lineitem totals). The classic
-    * "do the two pipelines agree" audit — one full-outer equi-join on the
-    * shared key, output bounded by the status domain.
-    */
-  private def reconcileQ(s: SparkSession, dir: String): DataFrame = {
-    val la = t(s, dir, "lineitem").groupBy(col("l_orderkey"))
-      .agg(sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("li_total"))
-    val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-    o.join(la, col("o_orderkey") === col("l_orderkey"), "full_outer")
-      .select(when(col("o_orderkey").isNull, "orphan_lineitem")
-        .when(col("l_orderkey").isNull, "no_lineitems")
-        .when(abs(col("o_totalprice") - col("li_total")) <= 0.01, "price_match")
-        .otherwise("price_mismatch").as("status"))
-      .groupBy(col("status")).agg(count(lit(1)).as("n"))
-  }
-
-  /** Upsert (MERGE-style latest-wins) of a derived change batch into the
-    * orders base: updates carry sequence 1, base 0, and
-    * [[Analytics.latestByKey]] keeps the winner per key — the general
-    * mechanism; the oracle is the closed form of this particular batch.
-    */
-  private def upsertMergeQ(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
-        lit(0L).as("__seq"))
-    val updates = base.filter(pmod(col("o_orderkey"), lit(7)) === 0)
-      .select(col("o_orderkey"),
-        // price bump in EXACT decimal: round(double*1.1, 2) hits half-way
-        // ties where Spark rounds the shortest decimal repr and DuckDB the
-        // exact binary (measured: 2 of 2143 updates flipped a cent)
-        (col("o_totalprice").cast("decimal(18,2)") + lit(BigDecimal("10.00")))
-          .cast("double").as("o_totalprice"),
-        lit("U").as("o_orderstatus"), lit(1L).as("__seq"))
-    Analytics.latestByKey(base.unionByName(updates), "o_orderkey",
-        col("__seq"), col("o_orderkey"),
-        Seq("o_totalprice" -> col("o_totalprice"),
-          "o_orderstatus" -> col("o_orderstatus")))
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-  }
-
-  /** Blocked Jaro–Winkler near-dup pairs ([[Dedup.jaroWinklerPairs]]):
-    * the native bit-exact scorer against DuckDB's own
-    * jaro_winkler_similarity as the oracle.
-    */
-  private def jaroPairsQ(s: SparkSession, dir: String): DataFrame =
-    Dedup.jaroWinklerPairs(t(s, dir, "documents"), "doc_id", "text",
-      Seq(col("source"), expr("n_chars div 64")), prefixLen = 80, minSim = 0.85)
-
-  /** One-pass table profile of orders ([[Analytics.profileTable]]):
-    * count / nulls / distinct / min / max per column, numerics formatted
-    * through exact decimals so both engines print identical strings.
-    */
-  private def profileQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.profileTable(t(s, dir, "orders"), Seq(
-      "o_orderkey" -> col("o_orderkey"),
-      "o_custkey" -> col("o_custkey"),
-      "o_orderstatus" -> col("o_orderstatus"),
-      "o_totalprice" -> col("o_totalprice").cast("decimal(18,2)"),
-      "o_orderpriority" -> col("o_orderpriority")))
-
-  /** Deequ-style data-quality checks over orders⊕lineitem: uniqueness,
-    * completeness, domain membership, range, and referential integrity —
-    * one row per check with the exact violation count. The orders-side
-    * checks share ONE aggregate pass; referential integrity is a
-    * left-anti join counted. A constraint suite, not a metric sample:
-    * violations are exact longs at any scale.
-    */
-  private def dqChecksQ(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"))
-    val a = o.agg(
-      (count(lit(1)) - countDistinct(col("o_orderkey"))).as("__dup"),
-      (count(lit(1)) - count(col("o_custkey"))).as("__nullck"),
-      sum(when(!col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L)).as("__dom"),
-      sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L)).as("__price"),
-      sum(when(col("o_orderdate") < lit("1990-01-01").cast("timestamp") ||
-        col("o_orderdate") >= lit("2010-01-01").cast("timestamp"), 1L).otherwise(0L))
-        .as("__range"))
-    val orphans = li.join(o.select(col("o_orderkey")),
-        col("l_orderkey") === col("o_orderkey"), "left_anti")
-      .agg(count(lit(1)).as("__v"))
-      .select(lit("lineitem_ref_integrity").as("check_name"), col("__v").as("violations"))
-    val checks = Seq(
-      "orderkey_unique" -> "__dup", "custkey_complete" -> "__nullck",
-      "status_domain" -> "__dom", "totalprice_positive" -> "__price",
-      "orderdate_range" -> "__range")
-    a.select(explode(array(checks.map { case (n, c) =>
-        struct(lit(n).as("check_name"), col(c).as("violations")) }: _*)).as("__r"))
-      .select(col("__r.*"))
-      .unionByName(orphans)
-      .withColumn("passed", col("violations") === 0)
-  }
-
-  /** TPC-H Q18 shape (large-volume customers): orders whose total lineitem
-    * quantity exceeds 250, joined back to customer — the group-filter-
-    * join-back pattern with the quantity aggregate reused for output.
-    */
-  private def sqlQ18(s: SparkSession, dir: String): DataFrame = {
-    val big = t(s, dir, "lineitem").groupBy(col("l_orderkey"))
-      .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("qty"))
-      .filter(col("qty") > 250)
-    // broadcast the QUALIFYING-KEY aggregate, not orders: unhinted,
-    // Catalyst's static size estimate put the whole orders table under the
-    // broadcast threshold (BuildLeft of 150k×4 rows per run) while the
-    // having-filtered aggregate — a few hundred rows — streamed. The hint
-    // is also the 100 TB shape stated explicitly: orders never fits a
-    // broadcast there, the qty>250 survivors always do (AQE would find
-    // this at runtime; the hint makes it the plan everywhere). Partial
-    // aggregation before the exchange is confirmed in the plan
-    // (HashAggregate partial_sum under the shuffle).
-    t(s, dir, "orders")
-      .join(broadcast(big), col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-        col("o_orderdate"), col("o_totalprice"), col("qty"))
-  }
-
-  /** TPC-H Q17 shape (small-quantity-order revenue): the correlated
-    * aggregate subquery `l_quantity < 0.2·avg(quantity per part)`
-    * DECORRELATED into a per-part aggregate joined back — what Catalyst's
-    * subquery rewrite produces, written directly. The per-part side is
-    * |parts| rows, a broadcast at dimension scale; the brand filter pushes
-    * into the part scan.
-    */
-  private def sqlQ17(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
-    val avgQ = li.groupBy(col("l_partkey")).agg(avg(col("l_quantity")).as("__aq"))
-    val brand = t(s, dir, "part").filter(col("p_brand") === "Brand#11")
-      .select(col("p_partkey"))
-    li.join(broadcast(brand), col("l_partkey") === col("p_partkey"))
-      .join(avgQ, "l_partkey")
-      .filter(col("l_quantity") < lit(0.2) * col("__aq"))
-      .agg((sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double") / lit(7.0))
-          .as("avg_yearly"),
-        count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q4 shape (order-priority checking): count per priority of 1996
-    * orders with at least one line shipped strictly after the order date.
-    * The EXISTS correlated subquery decorrelates to a LEFT SEMI join on
-    * the order key — never duplicates orders, lineitem enters as a
-    * two-column projection, and the census shuffles |priorities| rows.
-    */
-  private def sqlQ4(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
-    o.join(li, col("o_orderkey") === col("l_orderkey") &&
-        col("l_shipdate") > col("o_orderdate"), "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"))
-  }
-
-  /** TPC-H Q14 shape (promotion effect): promo share of Q1-1996 revenue as
-    * one conditional aggregation over the part-joined lineitem — exact
-    * decimal revenue, a single double division at the end.
-    */
-  private def sqlQ14(s: SparkSession, dir: String): DataFrame = {
-    val rev = col("l_extendedprice").cast("decimal(18,2)") *
-      (lit(1) - col("l_discount")).cast("decimal(4,2)")
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-      .join(t(s, dir, "part").select(col("p_partkey"), col("p_type")),
-        col("l_partkey") === col("p_partkey"))
-      .agg(round(lit(100.0) *
-          sum(when(col("p_type") === "PROMO", rev)).cast("double") /
-          sum(rev).cast("double"), 6).as("promo_revenue_pct"),
-        count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q19 shape (discounted revenue, disjunctive bands): three
-    * (brand, size band, quantity band) disjuncts evaluated INSIDE the join
-    * condition so non-matching pairs never materialize.
-    */
-  private def sqlQ19(s: SparkSession, dir: String): DataFrame = {
-    val rev = col("l_extendedprice").cast("decimal(18,2)") *
-      (lit(1) - col("l_discount")).cast("decimal(4,2)")
-    val li = t(s, dir, "lineitem").select(col("l_partkey"), col("l_quantity"),
-      col("l_extendedprice"), col("l_discount"))
-    val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"), col("p_size"))
-    li.join(p, col("l_partkey") === col("p_partkey") && (
-        (col("p_brand") === "Brand#11" && col("p_size").between(1, 15) && col("l_quantity").between(1, 11)) ||
-        (col("p_brand") === "Brand#22" && col("p_size").between(1, 25) && col("l_quantity").between(10, 20)) ||
-        (col("p_brand") === "Brand#33" && col("p_size").between(1, 35) && col("l_quantity").between(20, 30))))
-      .agg(sum(rev).cast("double").as("revenue"), count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q15 shape (top supplier): per-supplier exact-decimal revenue for
-    * Q1-1996, the max re-joined via a single-row broadcast (the view +
-    * scalar subquery of the original, decorrelated by hand). Ties all
-    * survive, exactly like the reference query; the decimal equality is
-    * exact on both engines, so the tie set is deterministic.
-    */
-  private def sqlQ15(s: SparkSession, dir: String): DataFrame = {
-    val rev = t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-      .groupBy(col("l_suppkey"))
-      .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-        (lit(1) - col("l_discount")).cast("decimal(4,2)")).as("__rev"))
-    val top = rev.agg(max(col("__rev")).as("__max"))
-    rev.crossJoin(broadcast(top))
-      .filter(col("__rev") === col("__max"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"),
-        col("__rev").cast("double").as("total_revenue"))
-  }
-
-  /** TPC-H Q7 shape (volume shipping): bilateral trade between two nations
-    * — supplier's nation on one side, customer's on the other, both
-    * directions, revenue per (supp_nation, cust_nation, year). The two
-    * nation legs are separate broadcast joins of a 25-row table filtered
-    * to the pair; the pair-exclusion predicate sits after both joins so
-    * only the two qualifying name combinations aggregate.
-    */
-  private def sqlQ7(s: SparkSession, dir: String): DataFrame = {
-    val rev = col("l_extendedprice").cast("decimal(18,2)") *
-      (lit(1) - col("l_discount")).cast("decimal(4,2)")
-    val pair = Seq("NATION_18", "NATION_19")
-    val n1 = t(s, dir, "nation").filter(col("n_name").isin(pair: _*))
-      .select(col("n_nationkey").as("__sn"), col("n_name").as("supp_nation"))
-    val n2 = t(s, dir, "nation").filter(col("n_name").isin(pair: _*))
-      .select(col("n_nationkey").as("__cn"), col("n_name").as("cust_nation"))
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .select(col("l_orderkey"), col("l_suppkey"),
-        year(col("l_shipdate")).as("l_year"), rev.as("__rev"))
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n1), col("s_nationkey") === col("__sn"))
-      .join(broadcast(n2), col("c_nationkey") === col("__cn"))
-      .filter(col("supp_nation") =!= col("cust_nation"))
-      .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-      .agg(sum(col("__rev")).cast("double").as("revenue"),
-        count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q8 shape (national market share): NATION_3's share of 1996-1997
-    * PROMO-part revenue sold into EUROPE, per year — the CASE-inside-SUM
-    * share aggregation. Share numerator and denominator are the same exact
-    * decimal sum; one double division (6-dp round) at the very end.
-    */
-  private def sqlQ8(s: SparkSession, dir: String): DataFrame = {
-    val rev = col("l_extendedprice").cast("decimal(18,2)") *
-      (lit(1) - col("l_discount")).cast("decimal(4,2)")
-    val euroCust = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      .join(broadcast(t(s, dir, "nation")
-          .select(col("n_nationkey").as("__cn"), col("n_regionkey"))),
-        col("c_nationkey") === col("__cn"))
-      .join(broadcast(t(s, dir, "region").filter(col("r_name") === "EUROPE")
-          .select(col("r_regionkey"))),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"))
-    val suppNation = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      .join(broadcast(t(s, dir, "nation")
-          .select(col("n_nationkey").as("__sn"), col("n_name").as("supp_nation"))),
-        col("s_nationkey") === col("__sn"))
-      .select(col("s_suppkey"), col("supp_nation"))
-    t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), rev.as("__rev"))
-      .join(broadcast(t(s, dir, "part").filter(col("p_type") === "PROMO")
-          .select(col("p_partkey"))),
-        col("l_partkey") === col("p_partkey"))
-      .join(t(s, dir, "orders")
-          .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-          .select(col("o_orderkey"), col("o_custkey"),
-            year(col("o_orderdate")).as("o_year")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(euroCust, col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(suppNation, col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("o_year"))
-      .agg(round(sum(when(col("supp_nation") === "NATION_3", col("__rev"))).cast("double") /
-          sum(col("__rev")).cast("double"), 6).as("mkt_share"),
-        count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q9 shape (product-type profit): profit per (supplier nation,
-    * year) over 'widget' parts. This dataset carries no partsupp table, so
-    * the supply-cost term is the documented proxy `0.5 * p_retailprice *
-    * l_quantity`; to keep the arithmetic EXACT across engines the halving
-    * happens once, in double, after the decimal sum: sum(2*rev - cost)/2.
-    */
-  private def sqlQ9(s: SparkSession, dir: String): DataFrame = {
-    val rev = col("l_extendedprice").cast("decimal(18,2)") *
-      (lit(1) - col("l_discount")).cast("decimal(4,2)")
-    val cost = col("p_retailprice").cast("decimal(18,2)") *
-      col("l_quantity").cast("decimal(18,2)")
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")
-          .filter(col("p_name").like("%widget%"))
-          .select(col("p_partkey"), col("p_retailprice"))),
-        col("l_partkey") === col("p_partkey"))
-      .join(t(s, dir, "orders")
-          .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(s, dir, "nation")
-          .select(col("n_nationkey"), col("n_name").as("nation"))),
-        col("s_nationkey") === col("n_nationkey"))
-      .groupBy(col("nation"), col("o_year"))
-      .agg((sum(lit(2) * rev - cost).cast("double") / lit(2.0)).as("sum_profit"),
-        count(lit(1)).as("n_lines"))
-  }
-
-  /** TPC-H Q11 shape (important stock): parts whose traded value through
-    * suppliers of three nations exceeds 1/1000 of the total — the
-    * scalar-subquery threshold. The threshold compare is kept in EXACT
-    * decimal by cross-multiplying (1000*val > total) instead of
-    * materializing a fractional threshold; the one-row total broadcasts.
-    */
-  private def sqlQ11(s: SparkSession, dir: String): DataFrame = {
-    val nations = Seq("NATION_1", "NATION_2", "NATION_3")
-    val supp = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      .join(broadcast(t(s, dir, "nation").filter(col("n_name").isin(nations: _*))
-          .select(col("n_nationkey"))),
-        col("s_nationkey") === col("n_nationkey"), "left_semi")
-      .select(col("s_suppkey"))
-    val value = t(s, dir, "lineitem")
-      .select(col("l_partkey"), col("l_suppkey"),
-        (col("l_extendedprice").cast("decimal(18,2)") *
-          col("l_quantity").cast("decimal(18,2)")).as("__v"))
-      .join(supp, col("l_suppkey") === col("s_suppkey"), "left_semi")
-      .groupBy(col("l_partkey")).agg(sum(col("__v")).as("__val"))
-    val total = value.agg(sum(col("__val")).as("__total"))
-    value.crossJoin(broadcast(total))
-      .filter(col("__val") * lit(1000) > col("__total"))
-      .select(col("l_partkey").as("part_key"),
-        col("__val").cast("double").as("value"))
-  }
-
-  /** TPC-H Q12 shape (shipping bands vs priority): this dataset has no
-    * l_shipmode/commitdate/receiptdate, so the band is lateness itself —
-    * shipped more than 60 days after the order date — and the measure is
-    * the priority-conditional line counts of the original.
-    */
-  private def sqlQ12(s: SparkSession, dir: String): DataFrame = {
-    val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(when(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "LATE").otherwise("ONTIME").as("ship_band"))
-      .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-        sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-  }
-
-  /** TPC-H Q13 shape (customer order-count distribution): LEFT OUTER join
-    * with the filter INSIDE the join condition (customers with zero
-    * qualifying orders must survive with count 0), then the
-    * count-of-counts second aggregation.
-    */
-  private def sqlQ13(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").select(col("c_custkey"))
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderpriority")),
-        col("c_custkey") === col("o_custkey") &&
-          col("o_orderpriority") =!= "4-NOT SPECIFIED", "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-  }
-
-  /** TPC-H Q16 shape (supplier count by part attributes): distinct
-    * suppliers per (brand, type, size) over a NOT-IN-excluded supplier
-    * set. The NOT IN decorrelates to a LEFT ANTI join — never a filter on
-    * a collected list — and the exclusion subquery side stays unhinted so
-    * the planner sizes it (supplier is 10^5·SF rows at TPC-H scale).
-    */
-  private def sqlQ16(s: SparkSession, dir: String): DataFrame = {
-    val excluded = t(s, dir, "supplier")
-      .filter(col("s_acctbal") < 2000.0).select(col("s_suppkey"))
-    t(s, dir, "lineitem").select(col("l_partkey"), col("l_suppkey"))
-      .join(excluded, col("l_suppkey") === col("s_suppkey"), "left_anti")
-      .join(t(s, dir, "part")
-          .filter(col("p_brand") =!= "Brand#11" && !col("p_type").like("MEDIUM%") &&
-            col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35))
-          .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-  }
-
-  /** TPC-H Q20 shape (part-promotion suppliers): suppliers that shipped
-    * MORE than half of their all-time volume of 'small…' parts during 1996
-    * — the original's availqty-vs-half-of-shipped threshold re-expressed
-    * on shipment history (no partsupp table here). The nested subquery
-    * chain decorrelates to one conditional aggregation per
-    * (supplier, part) and a LEFT SEMI join into supplier; the half
-    * threshold is the exact-decimal cross-multiply 2*q96 > qall.
-    */
-  private def sqlQ20(s: SparkSession, dir: String): DataFrame = {
-    val in96 = col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-      col("l_shipdate") < lit("1997-01-01").cast("timestamp")
-    val qualifying = t(s, dir, "lineitem")
-      .select(col("l_partkey"), col("l_suppkey"), col("l_shipdate"),
-        col("l_quantity").cast("decimal(18,2)").as("__q"))
-      .join(broadcast(t(s, dir, "part").filter(col("p_name").like("small%"))
-          .select(col("p_partkey"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("l_suppkey"), col("l_partkey"))
-      .agg(sum(when(in96, col("__q"))).as("__q96"), sum(col("__q")).as("__qall"))
-      .filter(col("__q96") * lit(2) > col("__qall"))
-      .select(col("l_suppkey"))
-    t(s, dir, "supplier")
-      .join(qualifying, col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select(col("s_suppkey"), col("s_name"))
-  }
-
-  /** TPC-H Q21 shape (suppliers who kept orders waiting): the sole late
-    * shipper on a multi-supplier finished order. The EXISTS / NOT EXISTS
-    * pair over lineitem decorrelates into ONE per-order aggregate —
-    * distinct suppliers and distinct LATE suppliers — joined back to the
-    * late lines; "late" is shipped >90 days after the order date (no
-    * receipt/commit dates in this dataset). No self-join of lineitem
-    * against itself: the order-scoped census replaces both subqueries.
-    */
-  private def sqlQ21(s: SparkSession, dir: String): DataFrame = {
-    val lo = t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .withColumn("__late",
-        col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
-    val perOrder = lo.groupBy(col("l_orderkey").as("__ok"))
-      .agg(countDistinct(col("l_suppkey")).as("__n_supp"),
-        countDistinct(when(col("__late"), col("l_suppkey"))).as("__n_late"))
-      .filter(col("__n_supp") >= 2 && col("__n_late") === 1)
-      .select(col("__ok"))
-    lo.filter(col("__late"))
-      .join(perOrder, col("l_orderkey") === col("__ok"), "left_semi")
-      .join(t(s, dir, "supplier").select(col("s_suppkey"), col("s_name")),
-        col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_name"))
-      .agg(count(lit(1)).as("numwait"))
-  }
-
-  /** TPC-H Q22 shape (global sales opportunity): wealthy customers with no
-    * RECENT orders (none since 1999 — every customer here has some order,
-    * so the lapse cutoff keeps the anti join meaningful), bucketed by a
-    * synthetic country code (c_custkey mod 7 — the dataset has no phone
-    * column). The scalar-subquery average threshold
-    * is applied by exact cross-multiplication (bal*n > sum) so no
-    * engine-specific double averaging can flip a boundary customer, and
-    * the NOT EXISTS decorrelates to a LEFT ANTI join against orders.
-    */
-  private def sqlQ22(s: SparkSession, dir: String): DataFrame = {
-    val codes = Seq(1, 2, 4)
-    val cust = t(s, dir, "customer")
-      .select(col("c_custkey"), (col("c_custkey") % 7).as("cntrycode"),
-        col("c_acctbal").cast("decimal(18,2)").as("__bal"))
-      .filter(col("cntrycode").isin(codes: _*))
-    val stats = cust.filter(col("__bal") > 0)
-      .agg(sum(col("__bal")).as("__s"), count(lit(1)).as("__n"))
-    cust
-      .join(t(s, dir, "orders")
-          .filter(col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-          .select(col("o_custkey")),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .crossJoin(broadcast(stats))
-      .filter(col("__bal") * col("__n") > col("__s"))
-      .groupBy(col("cntrycode"))
-      .agg(count(lit(1)).as("numcust"),
-        sum(col("__bal")).cast("double").as("totacctbal"))
-  }
-
-  /** TPC-H Q2 flavor (min-cost supplier per part): the correlated
-    * min-subquery decorrelated into ONE aggregation — min(struct(price,
-    * suppkey)) picks the cheapest line per part with a deterministic
-    * supplier tie-break, no window, no self-join; dims join after the
-    * aggregation so they see |parts| rows, not |lineitem|.
-    */
-  private def minCostSupplierQ(s: SparkSession, dir: String): DataFrame = {
-    val best = t(s, dir, "lineitem")
-      .groupBy(col("l_partkey"))
-      .agg(min(struct(col("l_extendedprice"), col("l_suppkey"))).as("__b"))
-      .select(col("l_partkey"),
-        col("__b.l_extendedprice").as("min_price"),
-        col("__b.l_suppkey").as("supp_key"))
-    best
-      .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .join(t(s, dir, "supplier").select(col("s_suppkey"), col("s_name")),
-        col("supp_key") === col("s_suppkey"))
-      .select(col("l_partkey").as("part_key"), col("p_brand"),
-        col("s_name"), col("min_price"))
-  }
-
-  /** Per-user time-weighted average of `value` (TWAP): each observation is
-    * held until the next one; weight = microseconds held (exact longs ×
-    * exact decimal values — both sums exact), one division per user. The
-    * last observation per user carries no weight; single-event users have
-    * no span (dropped by both sides).
-    */
-  private def twapQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.twap(t(s, dir, "events"), "user_id", "ts",
-      Seq(col("event_id")), col("value"))
-
-  /** Peak concurrent sessions ([[Analytics.peakConcurrency]]): 30-minute
-    * session windows swept as +1/−1 deltas through the range-sharded
-    * global prefix sum.
-    */
-  private def peakConcurrencyQ(s: SparkSession, dir: String): DataFrame = {
-    val sess = t(s, dir, "events")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("__n"))
-      .select(col("session_window.start").as("st"), col("session_window.end").as("en"))
-    Analytics.peakConcurrency(sess, col("st"), col("en"))
-  }
-
-  /** CUSUM changepoint per event type: the day where the cumulative
-    * deviation of daily value-sums from the type's mean peaks. Raw events
-    * aggregate to CALENDAR grain first (one partial-aggregated shuffle),
-    * so the sequential CUSUM scan runs over ≤ |days| rows per type —
-    * bounded by the calendar at any data scale. The statistic
-    * |n·cumₖ − k·S| is pure exact-decimal/long arithmetic, so the argmax
-    * (ties → earliest day) is deterministic; it divides by n once for
-    * display.
-    */
-  private def cusumShiftQ(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("s"))
-    val tot = daily.groupBy(col("event_type"))
-      .agg(sum(col("s")).as("__tot"), count(lit(1)).as("__n"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    val c = daily
-      .withColumn("__cum", sum(col("s")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__k", row_number().over(w))
-      .join(broadcast(tot), "event_type")
-      .withColumn("__stat", abs(col("__n").cast("decimal(10,0)") * col("__cum") -
-        col("__k").cast("decimal(10,0)") * col("__tot")))
-    c.withColumn("__rn", row_number().over(
-        Window.partitionBy(col("event_type")).orderBy(col("__stat").desc, col("day"))))
-      .filter(col("__rn") === 1)
-      .select(col("event_type"), col("day").cast("timestamp").as("shift_day"),
-        round(col("__stat").cast("double") / col("__n").cast("double"), 6).as("cusum_stat"))
-  }
-
-  /** Lag-1 autocorrelation of daily total revenue: consecutive-day pairs
-    * from one lead() over the calendar-bounded daily aggregate, correlated
-    * by the exact-moment machinery ([[Analytics.corrPairs]]).
-    */
-  private def autocorrQ(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-    val pairs = daily
-      .withColumn("rev_next", lead(col("rev"), 1).over(Window.orderBy(col("day"))))
-      .filter(col("rev_next").isNotNull)
-    Analytics.corrPairs(pairs, Seq("rev" -> col("rev"), "rev_next" -> col("rev_next")))
-  }
-
-  /** Funnel conversion summary: per stage — users reached, conversion from
-    * the previous stage, and the median seconds from stage 1 (exact micros
-    * into one interpolated percentile; the single division to seconds and
-    * the conversion ratio are one IEEE op each). One aggregate over the
-    * funnel table; rows unpivot from the single aggregate row.
-    */
-  private def funnelStatsQ(s: SparkSession, dir: String): DataFrame = {
-    val f = funnelQ(s, dir)
-    val a = f.agg(
-      count(col("t_signup")).as("__n1"),
-      count(col("t_view")).as("__n2"),
-      count(col("t_purchase")).as("__n3"),
-      expr("percentile(unix_micros(t_view) - unix_micros(t_signup), 0.5)").as("__m2"),
-      expr("percentile(unix_micros(t_purchase) - unix_micros(t_signup), 0.5)").as("__m3"))
-    val d = (c: Column) => c.cast("double")
-    a.select(explode(array(
-        struct(lit("signup").as("stage"), col("__n1").as("n_reached"),
-          lit(null).cast("double").as("conv_from_prev"), lit(0.0).as("med_secs_from_first")),
-        struct(lit("view").as("stage"), col("__n2").as("n_reached"),
-          round(d(col("__n2")) / d(col("__n1")), 6).as("conv_from_prev"),
-          round(col("__m2") / lit(1e6), 6).as("med_secs_from_first")),
-        struct(lit("purchase").as("stage"), col("__n3").as("n_reached"),
-          round(d(col("__n3")) / d(col("__n2")), 6).as("conv_from_prev"),
-          round(col("__m3") / lit(1e6), 6).as("med_secs_from_first")))).as("__r"))
-      .select(col("__r.*"))
-  }
-
-  /** Month-over-month and year-over-year revenue growth: exact-decimal
-    * monthly sums, two lags over the CALENDAR-bounded month table, one
-    * guarded division each.
-    */
-  private def growthRatesQ(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "orders")
-      .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("__rev"))
-    val w = Window.orderBy(col("month"))
-    def growth(lagN: Int): Column = {
-      val prev = lag(col("__rev"), lagN).over(w)
-      when(prev.isNotNull && prev > 0,
-        round((col("__rev").cast("double") - prev.cast("double")) / prev.cast("double"), 6))
-        .otherwise(lit(null).cast("double"))
-    }
-    m.select(col("month"), col("__rev").cast("double").as("revenue"),
-      growth(1).as("mom"), growth(12).as("yoy"))
-  }
-
-  /** 7-day trailing correlation between daily revenue and daily order
-    * count: exact-decimal frame sums (ROWS 6 PRECEDING — engines'
-    * frame-evaluation association is irrelevant for exact types), the
-    * Pearson closed form per row, NULL where a window side is constant.
-    * The input is the calendar-bounded daily aggregate.
-    */
-  private def rollingCorrQ(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("decimal(19,4)").as("__x"),
-        count(lit(1)).cast("decimal(19,4)").as("__y"))
-    val w = Window.orderBy(col("day")).rowsBetween(-6, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
-    val (n, sx, sy, sxy, sxx, syy) = (
-      count(lit(1)).over(w), sum(col("__x")).over(w), sum(col("__y")).over(w),
-      sum(col("__x") * col("__y")).over(w), sum(col("__x") * col("__x")).over(w),
-      sum(col("__y") * col("__y")).over(w))
-    val num = d(n) * d(sxy) - d(sx) * d(sy)
-    val dx = d(n) * d(sxx) - d(sx) * d(sx)
-    val dy = d(n) * d(syy) - d(sy) * d(sy)
-    daily.select(col("day").cast("timestamp").as("day"),
-      when(dx > 0 && dy > 0, round(num / sqrt(dx * dy), 6))
-        .otherwise(lit(null).cast("double")).as("roll_corr"))
-  }
-
-  /** Exact order-statistic SELECTION without a global sort: the lower/upper
-    * median and the discrete p90 of order totals picked by their exact
-    * global rank through the range-sharded [[Analytics.rangedRank]] — the
-    * 100 TB path to EXACT quantiles (`percentile()` buffers a group's
-    * values in one aggregator; KLL approximates; this selects the k-th of
-    * 10¹¹ rows with a boundary sample plus one partitioned rank pass and
-    * a rank-literal filter). Target ranks come from the rank pass's own
-    * total-count column, so nothing is collected.
-    */
-  private def medianSelectQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.rangedRank(
-        t(s, dir, "orders").select(col("o_totalprice"), col("o_orderkey")),
-        Seq.empty, Seq(col("o_totalprice"), col("o_orderkey")))
-      .filter(expr("rn = (n_part + 1) div 2 OR rn = (n_part + 2) div 2 " +
-        "OR rn = (n_part * 9 + 9) div 10"))
-      .select(
-        when(col("rn") === expr("(n_part + 1) div 2"), "median_lo")
-          .when(col("rn") === expr("(n_part + 2) div 2"), "median_hi")
-          .otherwise("p90").as("stat"),
-        col("rn").cast("long").as("rn"),
-        round(col("o_totalprice"), 6).as("value"))
-
-  /** Per-GROUP exact median by rank selection: the lower median of token
-    * count for every language, picked by exact per-group rank through the
-    * same range-sharded machinery as [[medianSelectQ]] — the grouped
-    * variant `percentile()` can't do memory-bounded (it buffers each
-    * group's values in one aggregator; this holds nothing beyond the
-    * boundary sample and per-shard prefix table at ANY group size or
-    * skew). Target rank comes from the rank pass's own per-group total.
-    */
-  private def groupMedianQ(s: SparkSession, dir: String): DataFrame =
-    Analytics.rangedRank(
-        t(s, dir, "documents").select(col("lang"),
-          TF.tokenCount(col("text")).cast("long").as("n_tokens"),
-          col("doc_id")),
-        Seq("lang"), Seq(col("n_tokens"), col("doc_id")))
-      .filter(expr("rn = (n_part + 1) div 2"))
-      .select(col("lang"), col("n_part").cast("long").as("n_docs"),
-        col("rn").cast("long").as("rn"), col("n_tokens").as("median_tokens"))
-
-  /** Systematic 1% sample over the quality-ordered frame: every 100th
-    * document of the (quality DESC, id) order — the classic survey design
-    * that guarantees even coverage of the quality spectrum (a uniform
-    * hash sample can cluster; the systematic frame cannot), ranked by the
-    * same range-sharded machinery, no global sort.
-    */
-  private def systematicSampleQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-      TF.qualityScore(col("text")).as("quality"))
-    Analytics.rangedRank(d, Seq.empty, Seq(negate(col("quality")), col("doc_id")))
-      .filter(pmod(col("rn") - 1L, lit(100L)) === 0L)
-      .select(col("rn").cast("long").as("rn"), col("doc_id"), col("source"),
-        col("quality"))
-  }
-
-  /** Revenue-concentration deciles (the 80/20 curve): users ranked by
-    * exact-decimal monetary total through the range-sharded global NTILE
-    * (no single-reducer window at any user count), then per-decile sums
-    * and the cumulative share over the 10-row decile table.
-    */
-  private def powerUsersQ(s: SparkSession, dir: String): DataFrame = {
-    val monetary = t(s, dir, "events").groupBy(col("user_id"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("__m"))
-    val ranked = Analytics.rangedRank(monetary, Seq.empty,
-        Seq(negate(col("__m")), col("user_id")))
-      .withColumn("decile", Analytics.ntileOf(col("rn"), col("n_part"), 10))
-    val d = ranked.groupBy(col("decile"))
-      .agg(count(lit(1)).as("n_users"), sum(col("__m")).as("__dm"))
-    val tot = d.agg(sum(col("__dm")).as("__t"))
-    val w = Window.orderBy(col("decile"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d.crossJoin(broadcast(tot))
-      .select(col("decile"), col("n_users"),
-        col("__dm").cast("double").as("decile_revenue"),
-        round(sum(col("__dm")).over(w).cast("double") / col("__t").cast("double"), 6)
-          .as("cum_share"))
-  }
-
-  /** Daily new-vs-returning unique users: each user's first-seen day is a
-    * per-user aggregate joined back on the same key partitioning.
-    */
-  private def newVsReturningQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "events")
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val first = d.groupBy(col("user_id")).agg(min(col("day")).as("__d0"))
-    d.join(first, "user_id")
-      .groupBy(col("day").cast("timestamp").as("day"))
-      .agg(sum(when(col("day") === col("__d0"), 1L).otherwise(0L)).as("new_users"),
-        sum(when(col("day") > col("__d0"), 1L).otherwise(0L)).as("returning_users"))
-  }
-
-  /** Cohort LTV curves: per signup-day cohort, the cumulative
-    * exact-decimal revenue per user at each age. The running sum windows
-    * over the (cohort × age) matrix — bounded by the calendar squared,
-    * never the data.
-    */
-  private def ltvCohortQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val cohorts = ev.groupBy(col("user_id")).agg(min(to_date(col("ts"))).as("__cohort"))
-    val sz = cohorts.groupBy(col("__cohort")).agg(count(lit(1)).as("__n"))
-    val r = ev.join(cohorts, "user_id")
-      .groupBy(col("__cohort"),
-        datediff(to_date(col("ts")), col("__cohort")).cast("long").as("age"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("__rev"))
-    val w = Window.partitionBy(col("__cohort")).orderBy(col("age"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    r.join(broadcast(sz), "__cohort")
-      .select(col("__cohort").cast("timestamp").as("cohort_day"), col("age"),
-        round(sum(col("__rev")).over(w).cast("double") / col("__n").cast("double"), 6)
-          .as("ltv_per_user"))
-  }
-
-  /** Embedding-norm profile per label: count and the min / median / max
-    * L2 norm. Per-row norms use the native dot (left-to-right fold, the
-    * [[graft.expressions.DotProduct]] ↔ list_sum parity every vector
-    * oracle relies on) rounded at 6 dp; the cross-row aggregates are all
-    * SELECTION-based (min/max/interpolated median) — no float summation
-    * across rows anywhere, so no merge-order nondeterminism.
-    */
-  private def normProfileQ(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .select(col("label"),
-        round(sqrt(VF.dot(col("embedding").cast("array<double>"),
-          col("embedding").cast("array<double>"))), 6).as("__nrm"))
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n_vecs"),
-        min(col("__nrm")).as("min_norm"),
-        expr("percentile(__nrm, 0.5)").as("p50_norm"),
-        max(col("__nrm")).as("max_norm"))
-
-  /** Seasonally-adjusted revenue anomalies: the 10 days whose revenue
-    * deviates most from their OWN weekday's mean — raw daily outliers
-    * mostly rediscover the weekly cycle; subtracting the day-of-week level
-    * first is the one-step seasonal adjustment that surfaces genuine
-    * anomalies. Exactness: daily revenues and weekday sums are exact
-    * decimals; the residual numerator `rev·n_dow − sum_dow` stays an exact
-    * decimal (no mean division until the end), so ranking is engine-exact
-    * with one rounded double at output.
-    */
-  private def seasonalResidQ(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-      .withColumn("dow",
-        (((dayofweek(col("day")) + lit(5)) % lit(7)) + lit(1)).cast("long"))
-    val byDow = daily.groupBy(col("dow"))
-      .agg(sum(col("rev")).as("sum_dow"), count(lit(1)).as("n_dow"))
-    daily.join(byDow, "dow")
-      .select(col("day").cast("timestamp").as("day"), col("dow"),
-        col("rev").cast("double").as("revenue"),
-        round((col("rev") * col("n_dow") - col("sum_dow")).cast("double") /
-          col("n_dow").cast("double"), 6).as("resid"))
-      .orderBy(abs(col("resid")).desc, col("day"))
-      .limit(10)
-  }
-
-  /** Weekend-vs-weekday order value: Welch's t from EXACT decimal moments
-    * (one conditional-sum pass; variance closed forms divide doubles of
-    * exact sums — the same no-float-merge discipline as
-    * [[Analytics.olsTrend]]), with the Welch–Satterthwaite dof.
-    */
-  /** Randomization test for the weekend effect: the observed
-    * weekend-vs-weekday mean-value difference against 200 hash-derived
-    * random relabelings (randomization inference — the assumption-free
-    * companion to [[weekendEffectQ]]'s Welch t: no normality, no variance
-    * model, the null is "labels don't matter"). Every per-relabeling
-    * group sum is an exact decimal (one ×200 scan-side generator,
-    * map-side partials, 200 census rows), each mean difference ONE double
-    * expression, and the p-value the standard (1 + #{|perm| ≥ |obs|}) /
-    * (B + 1) — all deterministic from the order-key hash, so the p-value
-    * itself replays bit-for-bit.
-    */
-  private def permTestQ(s: SparkSession, dir: String): DataFrame = {
-    val b = 200
-    val isW = (((dayofweek(col("o_orderdate")) + lit(5)) % lit(7)) + lit(1)) >= 6
-    // exact LONG cents, not DECIMAL(19,4): the ×200 generator pushes 30M
-    // rows at sf0.1 through FOUR conditional sums, and long partials run
-    // ~5× the decimal aggregator's throughput (measured 7.9 → 1.6 s warm,
-    // solo); 2-dp money ×100 rounds to an exact integer on both engines
-    // fan out the 3-column base: the ×200 generator + 30M conditional long
-    // sums all execute BEFORE any exchange (the groupBy(b) partials
-    // collapse to 200 rows/partition), so on a single-file orders scan the
-    // whole permutation kernel ran one-core; the exchange ships 150k slim
-    // rows, the kernel then runs 32-way
-    val base = graft.operators.Par.fanOut(
-      t(s, dir, "orders").select(col("o_orderkey"),
-        round(col("o_totalprice") * 100.0).cast("long").as("y"), isW.as("w")), Seq("o_orderkey"))
-    val d = (c: Column) => c.cast("double")
-    // diffs stay in cents (scale cancels in the |perm| >= |obs| compare);
-    // only the published obs_diff converts back to currency units
-    def diff(nA: Column, sA: Column, nB: Column, sB: Column): Column =
-      d(sA) / d(nA) - d(sB) / d(nB)
-    val obs = base.agg(
-        sum(when(col("w"), 1L).otherwise(0L)).as("na"),
-        sum(when(col("w"), col("y"))).as("sa"),
-        sum(when(!col("w"), 1L).otherwise(0L)).as("nb"),
-        sum(when(!col("w"), col("y"))).as("sb"))
-      .select(diff(col("na"), col("sa"), col("nb"), col("sb")).as("obs_diff"))
-    // explode a CONSTANT literal array, not sequence(): sequence() builds a
-    // fresh 200-element array PER ROW (measured 7.9 s warm at sf0.1); the
-    // literal is one shared ArrayData the generator just iterates
-    val reps = base.select(col("o_orderkey"), col("y"),
-      explode(typedlit((0 until b).toArray)).as("b"))
-    // per-(row, relabeling) coin: the Knuth multiplicative-mod-prime mix
-    // q_randomized_response uses — integer-only, so the ×200 generator
-    // costs arithmetic, not string hashing, on both engines
-    val flip = pmod(pmod(col("o_orderkey") * b + col("b"), lit(1000000007L)) *
-      lit(2654435761L), lit(1000000007L)) % 2L === 0L
-    val perms = reps
-      .groupBy(col("b"))
-      .agg(sum(when(flip, 1L).otherwise(0L)).as("na"),
-        sum(when(flip, col("y"))).as("sa"),
-        sum(when(!flip, 1L).otherwise(0L)).as("nb"),
-        sum(when(!flip, col("y"))).as("sb"))
-      .select(col("b"), diff(col("na"), col("sa"), col("nb"), col("sb")).as("pd"))
-    perms.crossJoin(obs)
-      .agg(count(lit(1)).as("b_perms"),
-        sum(when(abs(col("pd")) >= abs(col("obs_diff")), 1L).otherwise(0L)).as("n_ge"),
-        max(col("obs_diff")).as("od"))
-      .select(col("b_perms"), round(col("od") / 100.0, 6).as("obs_diff"), col("n_ge"),
-        round((col("n_ge") + 1L).cast("double") /
-          (col("b_perms") + 1L).cast("double"), 6).as("p_value"))
-  }
-
-  private def weekendEffectQ(s: SparkSession, dir: String): DataFrame = {
-    val isW = (((dayofweek(col("o_orderdate")) + lit(5)) % lit(7)) + lit(1)) >= 6
-    val y = col("o_totalprice").cast("decimal(19,4)")
-    val a = t(s, dir, "orders").agg(
-      sum(when(isW, 1L).otherwise(0L)).as("n_wknd"),
-      sum(when(isW, y)).as("__s1"), sum(when(isW, y * y)).as("__q1"),
-      sum(when(!isW, 1L).otherwise(0L)).as("n_wkday"),
-      sum(when(!isW, y)).as("__s2"), sum(when(!isW, y * y)).as("__q2"))
-    val d = (c: Column) => c.cast("double")
-    def varOf(n: Column, sy: Column, syy: Column): Column =
-      (d(n) * d(syy) - d(sy) * d(sy)) / (d(n) * (d(n) - lit(1.0)))
-    val (n1, n2) = (col("n_wknd"), col("n_wkday"))
-    val v1 = varOf(n1, col("__s1"), col("__q1"))
-    val v2 = varOf(n2, col("__s2"), col("__q2"))
-    val se2 = v1 / d(n1) + v2 / d(n2)
-    a.select(n1, n2,
-      round(d(col("__s1")) / d(n1), 6).as("mean_wknd"),
-      round(d(col("__s2")) / d(n2), 6).as("mean_wkday"),
-      round((d(col("__s1")) / d(n1) - d(col("__s2")) / d(n2)) / sqrt(se2), 6).as("t_stat"),
-      round(se2 * se2 / ((v1 / d(n1)) * (v1 / d(n1)) / (d(n1) - lit(1.0)) +
-        (v2 / d(n2)) * (v2 / d(n2)) / (d(n2) - lit(1.0))), 6).as("dof"))
-  }
-
-  /** Fuzzy-dedup cluster-size histogram: how many near-dup components
-    * exist at each multiplicity, singletons included — the dedup REPORT
-    * (savings breakdown) on top of the resolved component table. Sizes
-    * and the singleton remainder are two partial aggregates over the
-    * (bounded) resolution output; the corpus count is the shared census
-    * helper.
-    */
-  private def dupSizesQ(s: SparkSession, dir: String): DataFrame = {
-    val comp = dedupResolve(s, dir)
-      .groupBy(col("keep_id")).agg(count(lit(1)).as("cluster_size"))
-    val hist = comp.groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
-    val singles = comp.agg(coalesce(sum(col("cluster_size")), lit(0L)).as("__p"))
-      .select(lit(1L).as("cluster_size"),
-        (lit(tableCount(s, dir, "documents")) - col("__p")).as("n_clusters"))
-    hist.unionByName(singles)
-  }
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(start)
 
   // ------------------------------------------------------------- contract
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    topologyTransactions(spark, "/root/testdata/sf0.001")
+    ReferenceQueries.topologyTransactions(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_filter_project"      -> (filterProject(_, _)),
-    "q_donation_rescale"    -> (donationRescale(_, _)),
-    "q_merge_union"         -> (mergeUnion(_, _)),
-    "q_topology_experiment" -> (topologyTransactions(_, _)),
-    "q_stream_parity"       -> (streamParityQ(_, _)),
-    "q_stream_stateful_parity" -> (streamStatefulParityQ(_, _)),
-    "q_stream_dedup_parity" -> (streamDedupParityQ(_, _)),
-    "q_stream_funnel_parity" -> (streamFunnelParityQ(_, _)),
-    "q_stream_window_parity" -> (streamWindowParityQ(_, _)),
-    "q_stream_join_parity"  -> (streamJoinParityQ(_, _)),
-    "q_stream_sessionize_parity" -> (streamSessionizeParityQ(_, _)),
-    "q_stream_kmv_parity"   -> (streamKmvParityQ(_, _)),
-    "q_stream_recursive_parity" -> (streamRecursiveParityQ(_, _)),
-    "q_topology_dot"        -> (topologyDotQ(_, _)),
-    "q_topology_validate"   -> (topologyValidateQ(_, _)),
-    "q_repl_walkthrough"    -> (replWalkthroughQ(_, _)),
-    "q1_agg"                -> (q1Agg(_, _)),
-    "q_join_agg"            -> (joinAgg(_, _)),
-    "q_window_hourly"       -> (windowHourly(_, _)),
-    "q_topk_orders"         -> (topkOrders(_, _)),
-    "q_sessionize"          -> (sessionizeQ(_, _)),
-    "q_event_transitions"   -> (eventTransitionsQ(_, _)),
-    "q_rfm_segments"        -> (rfmSegmentsQ(_, _)),
-    "q_regr_trend"          -> (regrTrendQ(_, _)),
-    "q_corr_matrix"         -> (corrMatrixQ(_, _)),
-    "q_attribution"         -> (attributionQ(_, _)),
-    "q_mode_event"          -> (modeEventQ(_, _)),
-    "q_ema"                 -> (emaQ(_, _)),
-    "q_gapfill"             -> (gapfillQ(_, _)),
-    "q_anomaly_mad"         -> (anomalyMadQ(_, _)),
-    "q_market_basket"       -> (marketBasketQ(_, _)),
-    "q_skyline"             -> (skylineQ(_, _)),
-    "q_lev_pairs"           -> (levPairsQ(_, _)),
-    "q_jaro_pairs"          -> (jaroPairsQ(_, _)),
-    "q_bfs_reach"           -> (bfsReachQ(_, _)),
-    "q_benford"             -> (benfordQ(_, _)),
-    "q_ppjoin"              -> (ppjoinQ(_, _)),
-    "q_sql_q6"              -> (sqlQ6(_, _)),
-    "q_runs"                -> (runsQ(_, _)),
-    "q_unpivot"             -> (unpivotQ(_, _)),
-    "q_length_trim"         -> (lengthTrimQ(_, _)),
-    "q_reconcile"           -> (reconcileQ(_, _)),
-    "q_upsert_merge"        -> (upsertMergeQ(_, _)),
-    "q_hhi"                 -> (hhiQ(_, _)),
-    "q_ab_test"             -> (abTestQ(_, _)),
-    "q_sql_q10"             -> (sqlQ10(_, _)),
-    "q_sql_q18"             -> (sqlQ18(_, _)),
-    "q_sql_q17"             -> (sqlQ17(_, _)),
-    "q_sql_q4"              -> (sqlQ4(_, _)),
-    "q_sql_q14"             -> (sqlQ14(_, _)),
-    "q_sql_q15"             -> (sqlQ15(_, _)),
-    "q_sql_q19"             -> (sqlQ19(_, _)),
-    "q_sql_q7"              -> (sqlQ7(_, _)),
-    "q_sql_q8"              -> (sqlQ8(_, _)),
-    "q_sql_q9"              -> (sqlQ9(_, _)),
-    "q_sql_q11"             -> (sqlQ11(_, _)),
-    "q_sql_q12"             -> (sqlQ12(_, _)),
-    "q_sql_q13"             -> (sqlQ13(_, _)),
-    "q_sql_q16"             -> (sqlQ16(_, _)),
-    "q_sql_q20"             -> (sqlQ20(_, _)),
-    "q_sql_q21"             -> (sqlQ21(_, _)),
-    "q_sql_q22"             -> (sqlQ22(_, _)),
-    "q_min_cost_supplier"   -> (minCostSupplierQ(_, _)),
-    "q_twap"                -> (twapQ(_, _)),
-    "q_cusum_shift"         -> (cusumShiftQ(_, _)),
-    "q_funnel_stats"        -> (funnelStatsQ(_, _)),
-    "q_power_users"         -> (powerUsersQ(_, _)),
-    "q_norm_profile"        -> (normProfileQ(_, _)),
-    "q_weekend_effect"      -> (weekendEffectQ(_, _)),
-    "q_dup_sizes"           -> (dupSizesQ(_, _)),
-    "q_new_vs_returning"    -> (newVsReturningQ(_, _)),
-    "q_ltv_cohort"          -> (ltvCohortQ(_, _)),
-    "q_growth_rates"        -> (growthRatesQ(_, _)),
-    "q_rolling_corr"        -> (rollingCorrQ(_, _)),
-    "q_autocorr"            -> (autocorrQ(_, _)),
-    "q_peak_concurrency"    -> (peakConcurrencyQ(_, _)),
-    "q_profile"             -> (profileQ(_, _)),
-    "q_dq_checks"           -> (dqChecksQ(_, _)),
-    "q_vocab_coverage"      -> (vocabCoverageQ(_, _)),
-    "q_dow_profile"         -> (dowProfileQ(_, _)),
-    "q_event_paths"         -> (eventPathsQ(_, _)),
-    "q_moving_avg"          -> (movingAvgQ(_, _)),
-    "q_zorder_layout"       -> (zorderLayoutQ(_, _)),
-    "q_rank_orders"         -> (rankOrders(_, _)),
-    "q_ntile"               -> (ntileQ(_, _)),
-    "q_daily_delta"         -> (dailyDeltaQ(_, _)),
-    "q_percent_rank"        -> (percentRankQ(_, _)),
-    "q_except_all"          -> (exceptAllQ(_, _)),
-    "q_histogram"           -> (histogramQ(_, _)),
-    "q_rollup_revenue"      -> (rollupRevenue(_, _)),
-    "q_anti_join"           -> (antiJoin(_, _)),
-    "q_semi_join"           -> (semiJoin(_, _)),
-    "q_salted_join"         -> (saltedJoinQ(_, _)),
-    "q_bloom_join"          -> (bloomJoinQ(_, _)),
-    "q_skew_report"         -> (skewReportQ(_, _)),
-    "q_partition_plan"      -> (partitionPlanQ(_, _)),
-    "q_shard_balance"       -> (shardBalanceQ(_, _)),
-    "q_median_select"       -> (medianSelectQ(_, _)),
-    "q_group_median"        -> (groupMedianQ(_, _)),
-    "q_systematic_sample"   -> (systematicSampleQ(_, _)),
-    "q_asof_join"           -> (asofJoinQ(_, _)),
-    "q_asof_tolerance"      -> (asofToleranceQ(_, _)),
-    "q_pivot"               -> (pivotQ(_, _)),
-    "q_json_extract"        -> (jsonExtractQ(_, _)),
-    "q_sql_q3"              -> (sqlQ3(_, _)),
-    "q_monthly_revenue"     -> (monthlyRevenueQ(_, _)),
-    "q_cube"                -> (cubeQ(_, _)),
-    "q_grouping_sets"       -> (groupingSetsQ(_, _)),
-    "q_above_avg"           -> (aboveAvgQ(_, _)),
-    "q_range_join"          -> (rangeJoinQ(_, _)),
-    "q_except"              -> (exceptQ(_, _)),
-    "q_intersect"           -> (intersectQ(_, _)),
-    "q_ivf_topk"            -> (ivfTopkQ(_, _)),
-    "q_ann_recall"          -> (annRecallQ(_, _)),
-    "q_kmeans_assign"       -> (kmeansAssignQ(_, _)),
-    "q_part_brands"         -> (partBrandsQ(_, _)),
-    "q_dedup_exact"         -> (dedupExact(_, _)),
-    "q_tile_dupes"          -> (tileDupesQ(_, _)),
-    "q_ngram_jaccard"       -> (ngramJaccard(_, _)),
-    "q_jaccard_sweep"       -> (jaccardSweepQ(_, _)),
-    "q_lang_confusion"      -> (langConfusionQ(_, _)),
-    "q_k_anonymity"         -> (kAnonymityQ(_, _)),
-    "q_ivf_balance"         -> (ivfBalanceQ(_, _)),
-    "q_minhash_lsh"         -> (minhashLsh(_, _)),
-    "q_dedup_resolve"       -> (dedupResolve(_, _)),
-    "q_simhash_pairs"       -> (simhashPairs(_, _)),
-    "q_embed_near_dup"      -> (embedNearDup(_, _)),
-    "q_embed_near_dup_auto" -> (embedNearDupAuto(_, _)),
-    "q_embed_near_dup_lsh"  -> (embedNearDupLsh(_, _)),
-    "q_semantic_dedup"      -> (semanticDedupQ(_, _)),
-    "q_token_count"         -> (tokenCounts(_, _)),
-    "q_length_buckets"      -> (lengthBucketsQ(_, _)),
-    "q_text_quality"        -> (textQuality(_, _)),
-    "q_lang_id"             -> (langIdQ(_, _)),
-    "q_fingerprint"         -> (fingerprintQ(_, _)),
-    "q_quality_score"       -> (qualityScoreQ(_, _)),
-    "q_subword_count"       -> (subwordCountQ(_, _)),
-    "q_dup_by_source"       -> (dupBySourceQ(_, _)),
-    "q_dedup_normalized"    -> (dedupNormalized(_, _)),
-    "q_distinct_users"      -> (distinctUsers(_, _)),
-    "q_percentiles"         -> (percentilesQ(_, _)),
-    "q_tfidf"               -> (tfidfQ(_, _)),
-    "q_repetition"          -> (repetitionQ(_, _)),
-    "q_text_stats"          -> (textStatsQ(_, _)),
-    "q_approx_distinct"     -> (approxDistinctQ(_, _)),
-    "q_kmv_distinct"        -> (kmvDistinctQ(_, _)),
-    "q_ams_f2"              -> (amsF2Q(_, _)),
-    "q_kmv_jaccard"         -> (kmvJaccardQ(_, _)),
-    "q_quality_residuals"   -> (qualityResidualsQ(_, _)),
-    "q_hll_rollup"          -> (hllRollupQ(_, _)),
-    "q_kll_rollup"          -> (kllRollupQ(_, _)),
-    "q_theta_intersect"     -> (thetaIntersectQ(_, _)),
-    "q_approx_percentiles"  -> (approxPercentilesQ(_, _)),
-    "q_label_centroids"     -> (labelCentroids(_, _)),
-    "q_topk_cosine"         -> (topkCosine(_, _)),
-    "q_ann_lsh"             -> (annLsh(_, _)),
-    "q_multimodal_bytes"    -> (multimodalBytes(_, _)),
-    "q_multimodal_meta"     -> (multimodalMeta(_, _)),
-    "q_multimodal_frames"   -> (multimodalFrames(_, _)),
-    "q_image_features"      -> (imageFeaturesQ(_, _)),
-    "q_audio_meta"          -> (audioMetaQ(_, _)),
-    "q_audio_features"      -> (audioFeaturesQ(_, _)),
-    "q_curate_multimodal"   -> (curateMultimodalQ(_, _)),
-    "q_decontaminate"       -> (decontaminateQ(_, _)),
-    "q_bloom_decontaminate" -> (bloomDecontaminateQ(_, _)),
-    "q_mix_corpus"          -> (mixCorpusQ(_, _)),
-    "q_leakage_split"       -> (leakageSplitQ(_, _)),
-    "q_time_split"          -> (timeSplitQ(_, _)),
-    "q_leakfree_split"      -> (leakFreeSplitQ(_, _)),
-    "q_repetition_gopher"   -> (repetitionGopherQ(_, _)),
-    "q_repeated_spans"      -> (repeatedSpansQ(_, _)),
-    "q_remove_spans"        -> (removeSpansQ(_, _)),
-    "q_dedup_resolve_best"  -> (dedupResolveBestQ(_, _)),
-    "q_decontaminate_spans" -> (decontaminateSpansQ(_, _)),
-    "q_top_frac_quality"    -> (topFracQualityQ(_, _)),
-    "q_perplexity"          -> (perplexityQ(_, _)),
-    "q_curate_corpus"       -> (curateCorpusQ(_, _)),
-    "q_top_quality_docs"    -> (topQualityDocsQ(_, _)),
-    "q_oov_rate"            -> (oovRateQ(_, _)),
-    "q_pack_budgeted"       -> (packBudgetedQ(_, _)),
-    "q_train_split"         -> (trainSplitQ(_, _)),
-    "q_stratified_sample"   -> (stratifiedSampleQ(_, _)),
-    "q_hash_reservoir"      -> (hashReservoirQ(_, _)),
-    "q_fuzzy_decontaminate" -> (fuzzyDecontaminateQ(_, _)),
-    "q_semantic_decontaminate" -> (semanticDecontaminateQ(_, _)),
-    "q_semantic_decontaminate_lsh" -> (semanticDecontaminateLshQ(_, _)),
-    "q_chunk_docs"          -> (chunkDocsQ(_, _)),
-    "q_importance_weights"  -> (importanceWeightsQ(_, _)),
-    "q_ann_quantized"       -> (annQuantizedQ(_, _)),
-    "q_gopher_filter"       -> (gopherFilterQ(_, _)),
-    "q_dsir_sample"         -> (dsirSampleQ(_, _)),
-    "q_dedup_incremental"   -> (dedupIncrementalQ(_, _)),
-    "q_ivf_quantized"       -> (ivfQuantizedQ(_, _)),
-    "q_chunk_dedup"         -> (chunkDedupQ(_, _)),
-    "q_curate_corpus_v2"    -> (curateCorpusV2Q(_, _)),
-    "q_redact_pii"          -> (redactPiiQ(_, _)),
-    "q_remove_boilerplate"  -> (removeBoilerplateQ(_, _)),
-    "q_upsample_epochs"     -> (upsampleEpochsQ(_, _)),
-    "q_heavy_hitters"       -> (heavyHittersQ(_, _)),
-    "q_countmin"            -> (countMinQ(_, _)),
-    "q_token_entropy"       -> (tokenEntropyQ(_, _)),
-    "q_vocab_growth"        -> (vocabGrowthQ(_, _)),
-    "q_join_size_est"       -> (joinSizeEstQ(_, _)),
-    "q_zone_map"            -> (zoneMapQ(_, _)),
-    "q_randomized_response" -> (randomizedResponseQ(_, _)),
-    "q_doc_containment"     -> (docContainmentQ(_, _)),
-    "q_silhouette"          -> (silhouetteQ(_, _)),
-    "q_ccnet_buckets"       -> (ccnetBucketsQ(_, _)),
-    "q_pack_shuffled"       -> (packShuffledQ(_, _)),
-    "q_paragraph_dedup"     -> (paragraphDedupQ(_, _)),
-    "q_image_dhash"         -> (imageDhashQ(_, _)),
-    "q_pq_topk"             -> (pqTopkQ(_, _)),
-    "q_ivf_pq"              -> (ivfPqQ(_, _)),
-    "q_bm25_topk"           -> (bm25Q(_, _)),
-    "q_hybrid_rrf"          -> (hybridRrfQ(_, _)),
-    "q_inverted_index"      -> (invertedIndexQ(_, _)),
-    "q_temperature_mix"     -> (temperatureMixQ(_, _)),
-    "q_unimax_mix"          -> (unimaxMixQ(_, _)),
-    "q_cluster_mix"         -> (clusterMixQ(_, _)),
-    "q_mmr_rerank"          -> (mmrQ(_, _)),
-    "q_budget_select"       -> (budgetSelectQ(_, _)),
-    "q_knn_graph"           -> (knnGraphQ(_, _)),
-    "q_hard_negatives"      -> (hardNegativesQ(_, _)),
-    "q_corpus_datasheet"    -> (corpusDatasheetQ(_, _)),
-    "q_embed_outliers"      -> (embedOutliersQ(_, _)),
-    "q_quality_calibrated"  -> (qualityCalibratedQ(_, _)),
-    "q_seq_windows"         -> (seqWindowsQ(_, _)),
-    "q_window_hopping"      -> (windowHoppingQ(_, _)),
-    "q_latest_by_key"       -> (latestByKeyQ(_, _)),
-    "q_session_agg"         -> (sessionAggQ(_, _)),
-    "q_window_sliding"      -> (windowSlidingQ(_, _)),
-    "q_table_join"          -> (tableJoinQ(_, _)),
-    "q_cohort_retention"    -> (cohortRetentionQ(_, _)),
-    "q_stickiness"          -> (stickinessQ(_, _)),
-    "q_watermark_audit"     -> (watermarkAuditQ(_, _)),
-    "q_gap_histogram"       -> (gapHistogramQ(_, _)),
-    "q_curriculum"          -> (curriculumQ(_, _)),
-    "q_source_fingerprint"  -> (sourceFingerprintQ(_, _)),
-    "q_churn_cohort"        -> (churnCohortQ(_, _)),
-    "q_hazard_curve"        -> (hazardCurveQ(_, _)),
-    "q_seasonal_resid"      -> (seasonalResidQ(_, _)),
-    "q_perm_test"           -> (permTestQ(_, _)),
-    "q_srm_check"           -> (srmCheckQ(_, _)),
-    "q_gini_tokens"         -> (giniTokensQ(_, _)),
-    "q_resample_ffill"      -> (resampleFfillQ(_, _)),
-    "q_funnel"              -> (funnelQ(_, _)),
-    "q_ohlc_bars"           -> (ohlcBarsQ(_, _)),
-    "q_interval_join"       -> (intervalJoinQ(_, _)),
-    "q_scd2"                -> (scd2Q(_, _)),
-    "q_bpe_pairs"           -> (bpePairsQ(_, _)),
-    "q_bpe_train"           -> (bpeTrainQ(_, _)),
-    "q_bpe_fertility"       -> (bpeFertilityQ(_, _)),
-    "q_mutual_info"         -> (mutualInfoQ(_, _)),
-    "q_span_corruption"     -> (spanCorruptQ(_, _)),
-    "q_pagerank"            -> (pageRankQ(_, _)),
-    "q_triangle_count"      -> (triangleCountQ(_, _)),
-    "q_link_predict"        -> (linkPredictQ(_, _)),
-    "q_mutual_knn"          -> (mutualKnnQ(_, _)),
-    "q_bitext_mine"         -> (bitextMineQ(_, _)),
-    "q_ndcg"                -> (ndcgQ(_, _)),
-    "q_mrr"                 -> (mrrQ(_, _)),
-    "q_assortativity"       -> (assortativityQ(_, _)),
-    "q_transitivity"        -> (transitivityQ(_, _)),
-    "q_lang_entropy"        -> (langEntropyQ(_, _)),
-    "q_knn_classify"        -> (knnClassifyQ(_, _)),
-    "q_weighted_sample"     -> (weightedSampleQ(_, _)),
-    "q_sql_q5"              -> (sqlQ5(_, _)),
-    "q_cross_source_overlap" -> (crossSourceOverlapQ(_, _)),
-    "q_winsorize"           -> (winsorizeQ(_, _)),
-    "q_top_p_vocab"         -> (topPVocabQ(_, _)),
-    "q_embed_dim_stats"     -> (embedDimStatsQ(_, _)),
-    "q_dim_energy"          -> (dimEnergyQ(_, _)),
-    "q_isotropy"            -> (isotropyQ(_, _)),
-    "q_embed_whiten"        -> (embedWhitenQ(_, _)),
-    "q_snm_pairs"           -> (snmPairsQ(_, _)),
-    "q_snm_multipass"       -> (snmMultipassQ(_, _)),
-    "q_kcenter_coreset"     -> (kcenterCoresetQ(_, _)),
-    "q_ivf_probe_sweep"     -> (ivfProbeSweepQ(_, _)),
-    "q_ngram_novelty"       -> (ngramNoveltyQ(_, _)),
-    "q_capped_select"       -> (cappedSelectQ(_, _)),
-    "q_dp_counts"           -> (dpCountsQ(_, _)),
-    "q_chi2_independence"   -> (chi2Q(_, _)),
-    "q_mrl_truncation"      -> (mrlTruncationQ(_, _)),
-    "q_psi_drift"           -> (psiDriftQ(_, _)),
-    "q_ks_drift"            -> (ksDriftQ(_, _)),
-    "q_mann_whitney"        -> (mannWhitneyQ(_, _)),
-    "q_spearman"            -> (spearmanQ(_, _)),
-    "q_orc_roundtrip"       -> (orcRoundtripQ(_, _)),
-    "q_t_closeness"         -> (tClosenessQ(_, _)),
-    "q_neyman_alloc"        -> (neymanAllocQ(_, _)),
-    "q_bootstrap_ci"        -> (bootstrapCiQ(_, _)),
-    "q_sentence_stats"      -> (sentenceStatsQ(_, _)),
-    "q_bucketed_agg"        -> (bucketedAggQ(_, _)),
-    "q_bucketed_join"       -> (bucketedJoinQ(_, _)),
-    "q_format_roundtrip"    -> (formatRoundtripQ(_, _)),
-    "q_pmi_pairs"           -> (pmiPairsQ(_, _)),
-    "q_l_diversity"         -> (lDiversityQ(_, _)),
-    "q_connector_source"    -> (connectorSourceQ(_, _)),
-    "q_connector_count"     -> (connectorCountQ(_, _)),
-    "q_basket_triples"      -> (basketTriplesQ(_, _)),
-    "q_funnel_windowed"     -> (funnelWindowedQ(_, _)))
-
-  /** Shared SQL fragments for the oracle strings. */
-  private val duckToks =
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> len(x) > 0)"
-  /** Full-replay oracle for [[graft.pipeline.BpeTrainer.train]]: the
-    * training loop statically unrolled as a CTE chain — round r's pair
-    * census `p{r}` over the evolving symbol table `r{r-1}`, the argmax
-    * `best{r}` (count desc, then lexicographic — the trainer's exact
-    * tie-break), and the merged table `r{r}` via the IDENTICAL greedy
-    * leftmost string fold (`list_reduce` ↔ Spark's `aggregate` HOF). The
-    * learned rules and their selection-time counts must match value-exactly
-    * — a strictly stronger gate than checking the final vocabulary, since
-    * one divergent round would cascade into every later pick.
+  /** Every registry query, family by family, each defined once next to its
+    * oracle; construction requires distinct names. Lazy, like the maps
+    * below: a family reads members of this object while it initialises.
     */
-  private def duckBpeTrainSql(rounds: Int): String =
-    "WITH " + duckBpeCtes(rounds) + "\n" + (1 to rounds).map { r =>
-      s"SELECT CAST($r AS BIGINT) AS merge_round, a AS left_sym, b AS right_sym, cnt AS pair_count FROM best$r"
-    }.mkString("\nUNION ALL\n")
+  lazy val registry: Seq[QueryDef] = QueryDef.registry(Seq(
+    ReferenceQueries, StreamGateQueries, SqlShapeQueries, LayoutQueries, AnalyticsQueries,
+    StatisticsQueries, SketchQueries, GraphQueries, DedupQueries, SimilarityQueries,
+    TextQueries, TrainingDataQueries, MultimodalQueries).flatMap(_.defs))
 
-  /** The unrolled-training CTE chain alone (census, r0..r{rounds},
-    * p{r}/best{r} per round) — shared by the train oracle and the fertility
-    * oracle, which reads the final symbol table `r{rounds}`.
-    */
-  private def duckBpeCtes(rounds: Int): String = {
-    val head =
-      """census AS (
-        |  SELECT w AS word, count(*) AS freq
-        |  FROM (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> len(x) > 0)) AS w FROM documents)
-        |  GROUP BY 1),
-        |r0 AS (SELECT word, freq, [word[i] FOR i IN range(1, len(word)+1)] AS syms FROM census)""".stripMargin
-    val roundCtes = (1 to rounds).map { r =>
-      s"""p$r AS (
-         |  SELECT freq, unnest([struct_pack(a := syms[i], b := syms[i+1]) FOR i IN range(1, len(syms))]) AS pr
-         |  FROM r${r - 1}),
-         |best$r AS (
-         |  SELECT pr.a AS a, pr.b AS b, CAST(sum(freq) AS BIGINT) AS cnt
-         |  FROM p$r GROUP BY 1, 2 ORDER BY cnt DESC, a, b LIMIT 1),
-         |r$r AS (
-         |  SELECT s.word, s.freq,
-         |    CASE WHEN len(s.syms) <= 1 THEN s.syms
-         |    ELSE string_split(list_reduce(s.syms, (acc, x) ->
-         |      CASE WHEN regexp_extract(acc, '[^ ]*$$') = B.a AND x = B.b
-         |           THEN acc || x ELSE acc || ' ' || x END), ' ')
-         |    END AS syms
-         |  FROM r${r - 1} s, best$r B)""".stripMargin
-    }
-    (head +: roundCtes).mkString(",\n")
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(d => d.name -> d.build).toMap
 
-  /** CTE chain producing exact 5-gram Jaccard pairs ≥ 0.8 as `jpairs(a, b,
-    * jaccard)` — shared by the jaccard/minhash oracles and (wrapped in a
-    * recursive CTE) the connected-components oracle.
-    */
-  private val duckShingleCtes =
-    s"""toksrc AS (
-       |  SELECT doc_id, $duckToks AS w FROM documents
-       |), sh AS (
-       |  SELECT doc_id, list_distinct([array_to_string(w[i:i+4], ' ') FOR i IN range(1, len(w)-3)]) AS shingles
-       |  FROM toksrc WHERE len(w) >= 5
-       |), inv AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-       |pairs AS (
-       |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-       |  FROM inv x JOIN inv y ON x.s = y.s AND x.doc_id < y.doc_id GROUP BY 1, 2
-       |), jpairs AS (
-       |  SELECT a, b, round(inter / (sa.n + sb.n - inter), 6) AS jaccard
-       |  FROM pairs
-       |  JOIN (SELECT doc_id, len(shingles) AS n FROM sh) sa ON a = sa.doc_id
-       |  JOIN (SELECT doc_id, len(shingles) AS n FROM sh) sb ON b = sb.doc_id
-       |  WHERE round(inter / (sa.n + sb.n - inter), 6) >= 0.8
-       |)""".stripMargin
-  private val duckShingleCte =
-    s"WITH $duckShingleCtes\nSELECT a, b, jaccard FROM jpairs"
-  /** Exact Jaccard with the hot-shingle guard replayed: shingles whose
-    * document frequency exceeds `max(64, n/100)` (Dedup.autoDocFreqCap) are
-    * excluded from the INTERSECTION counts but not the set sizes — mirroring
-    * ngramJaccardPairs' default-on guard exactly. Oracle for q_ngram_jaccard
-    * (the uncapped `duckShingleCtes` stays the oracle for the minhash and
-    * resolve queries, whose banding handles hot shingles by bucket caps
-    * instead of dropping them).
-    */
-  // shared pair-set CTE (hot-shingle-capped exact Jaccard, no threshold) —
-  // the single-threshold oracle and the sweep oracle read the same jp set
-  private val duckJaccardPairsCte =
-    s"""WITH toksrc AS (
-       |  SELECT doc_id, $duckToks AS w FROM documents
-       |), sh AS (
-       |  SELECT doc_id, list_distinct([array_to_string(w[i:i+4], ' ') FOR i IN range(1, len(w)-3)]) AS shingles
-       |  FROM toksrc WHERE len(w) >= 5
-       |), inv0 AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-       |cap AS (SELECT greatest(64, count(*) // 100) AS v FROM documents),
-       |hot AS (SELECT s FROM inv0 GROUP BY s HAVING count(*) > (SELECT v FROM cap)),
-       |inv AS (SELECT * FROM inv0 WHERE s NOT IN (SELECT s FROM hot)),
-       |pairs AS (
-       |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-       |  FROM inv x JOIN inv y ON x.s = y.s AND x.doc_id < y.doc_id GROUP BY 1, 2
-       |), jp AS (
-       |  SELECT a, b, round(inter / (sa.n + sb.n - inter), 6) AS jaccard
-       |  FROM pairs
-       |  JOIN (SELECT doc_id, len(shingles) AS n FROM sh) sa ON a = sa.doc_id
-       |  JOIN (SELECT doc_id, len(shingles) AS n FROM sh) sb ON b = sb.doc_id
-       |)""".stripMargin
-  private val duckCappedJaccardSql =
-    duckJaccardPairsCte + "\nSELECT a, b, jaccard FROM jp WHERE jaccard >= 0.8"
-  /** Directed containment over the same hot-capped pair set — oracle for
-    * q_doc_containment ([[graft.dedup.Dedup.containmentPairs]]).
-    */
-  private val duckContainmentSql =
-    duckJaccardPairsCte +
-      """, cp AS (
-        |  SELECT a, b,
-        |    round(inter / sa.n, 6) AS contain_ab,
-        |    round(inter / sb.n, 6) AS contain_ba,
-        |    round(inter / (sa.n + sb.n - inter), 6) AS jaccard
-        |  FROM pairs
-        |  JOIN (SELECT doc_id, len(shingles) AS n FROM sh) sa ON a = sa.doc_id
-        |  JOIN (SELECT doc_id, len(shingles) AS n FROM sh) sb ON b = sb.doc_id
-        |)
-        |SELECT a, b, contain_ab, contain_ba, jaccard FROM cp
-        |WHERE greatest(contain_ab, contain_ba) >= 0.5""".stripMargin
-  private val duckJaccardSweepSql =
-    duckJaccardPairsCte +
-      """
-        |SELECT count(*) FILTER (WHERE jaccard >= 0.5) AS n_ge_50,
-        |  count(*) FILTER (WHERE jaccard >= 0.6) AS n_ge_60,
-        |  count(*) FILTER (WHERE jaccard >= 0.7) AS n_ge_70,
-        |  count(*) FILTER (WHERE jaccard >= 0.8) AS n_ge_80
-        |FROM jp""".stripMargin
-  /** Connected components over the exact-Jaccard pair graph (min label per
-    * component) — the oracle for [[dedupResolve]]. Valid because the minhash
-    * pair set is itself oracle-verified equal to the exact pair set
-    * (q_minhash_lsh), so both engines resolve the same graph.
-    */
-  private val duckResolveCte =
-    s"""WITH RECURSIVE $duckShingleCtes,
-       |edges AS (SELECT a AS u, b AS v FROM jpairs UNION SELECT b, a FROM jpairs),
-       |walk(id, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, w.lbl FROM edges e JOIN walk w ON e.v = w.id
-       |)
-       |SELECT id, MIN(lbl) AS keep_id FROM walk GROUP BY id""".stripMargin
-  private val duckCos =
-    """list_sum([CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE) FOR i IN range(1, 65)]) /
-      |(sqrt(list_sum([CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE) FOR i IN range(1, 65)])) *
-      | sqrt(list_sum([CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE) FOR i IN range(1, 65)])))""".stripMargin
-
-  /** Exact cosine near-dup pairs — shared by q_embed_near_dup and the
-    * cost-dispatched q_embed_near_dup_auto (same semantics, one string to
-    * keep in sync).
-    */
-  private val duckNearDupSql =
-    s"""SELECT x.vec_id AS a, y.vec_id AS b, round($duckCos, 6) AS cos
-       |FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-       |WHERE round($duckCos, 6) >= 0.45""".stripMargin
-
-  /** Int8-quantized top-20 replay, with an optional corpus WHERE clause
-    * (empty = brute force over all vectors; a label filter = the IVF probe).
-    */
-  private def duckQuantizedTopkSql(corpusWhere: String): String =
-    s"""WITH qv AS (
-       |  SELECT list_max([abs(CAST(x AS DOUBLE)) FOR x IN embedding]) AS qmx, embedding
-       |  FROM embeddings WHERE vec_id = 0
-       |), qq AS (
-       |  SELECT CASE WHEN qmx > 0 THEN qmx/127.0 ELSE 1.0 END AS qscale,
-       |    [CAST(round(CAST(x AS DOUBLE) / (CASE WHEN qmx > 0 THEN qmx/127.0 ELSE 1.0 END)) AS BIGINT) FOR x IN embedding] AS q
-       |  FROM qv
-       |), c AS (
-       |  SELECT vec_id, list_max([abs(CAST(x AS DOUBLE)) FOR x IN embedding]) AS mx, embedding
-       |  FROM embeddings $corpusWhere
-       |), cq AS (
-       |  SELECT vec_id, CASE WHEN mx > 0 THEN mx/127.0 ELSE 1.0 END AS scale,
-       |    [CAST(round(CAST(x AS DOUBLE) / (CASE WHEN mx > 0 THEN mx/127.0 ELSE 1.0 END)) AS BIGINT) FOR x IN embedding] AS q
-       |  FROM c)
-       |SELECT cq.vec_id,
-       |  round(cq.scale * qq.qscale * list_sum([cq.q[i] * qq.q[i] FOR i IN range(1, 65)]), 6) AS qscore
-       |FROM cq CROSS JOIN qq
-       |ORDER BY qscore DESC, cq.vec_id LIMIT 20""".stripMargin
-
-  /** DSIR hashed-unigram LLR CTE chain (target = the `doc_id % 7` slice),
-    * shared by q_importance_weights and q_dsir_sample.
-    */
-  private lazy val duckImportanceCtes =
-    s"""WITH toksrc AS (
-       |  SELECT doc_id, $duckToks AS w FROM documents
-       |), tok AS (
-       |  SELECT doc_id, unnest(w) AS tk, generate_subscripts(w, 1) AS ord FROM toksrc
-       |), tb AS (
-       |  SELECT doc_id, ord, CAST(${duckFnvU("tk")} % 4096 AS BIGINT) AS b FROM tok
-       |), tc AS (SELECT b, count(*) AS c FROM tb WHERE doc_id % 7 = 0 GROUP BY 1
-       |), rc AS (SELECT b, count(*) AS c FROM tb GROUP BY 1
-       |), tot AS (
-       |  SELECT (SELECT count(*) FROM tb WHERE doc_id % 7 = 0) AS tt,
-       |         (SELECT count(*) FROM tb) AS rt
-       |), wts AS (
-       |  SELECT r.b,
-       |    ln((coalesce(tc.c, 0) + 1.0) / (tot.tt + 4096.0))
-       |      - ln((r.c + 1.0) / (tot.rt + 4096.0)) AS wt
-       |  FROM rc r LEFT JOIN tc ON tc.b = r.b CROSS JOIN tot
-       |), docw AS (
-       |  SELECT tb.doc_id,
-       |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list(wts.wt ORDER BY tb.ord)), (a, x) -> a + x), 6) AS llr
-       |  FROM tb JOIN wts ON wts.b = tb.b GROUP BY tb.doc_id)""".stripMargin
-
-  private val duckImportanceSelect =
-    """SELECT d.doc_id, coalesce(dw.llr, 0.0) AS llr
-      |FROM documents d LEFT JOIN docw dw ON dw.doc_id = d.doc_id""".stripMargin
-
-  /** SemDeDup oracle: replay the fixed-centroid assignment (the
-    * q_kmeans_assign technique), restrict the exact cosine pair graph to
-    * within-cluster pairs, resolve components with the recursive min-label
-    * CTE (the q_dedup_resolve technique), and default untouched docs to
-    * keeping themselves.
-    */
-  private val duckSemanticDedupSql =
-    s"""WITH RECURSIVE c AS (
-       |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS cemb
-       |  FROM embeddings WHERE vec_id < 10),
-       |s AS (
-       |  SELECT e.vec_id, c.cidx,
-       |    list_sum([CAST(e.embedding[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) * -2.0
-       |    + list_sum([CAST(c.cemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) AS d
-       |  FROM embeddings e CROSS JOIN c),
-       |asg AS (
-       |  SELECT vec_id, CAST(cidx AS BIGINT) AS list FROM (
-       |    SELECT vec_id, cidx, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cidx) AS rn FROM s
-       |  ) WHERE rn = 1),
-       |p AS (
-       |  SELECT x.vec_id AS a, y.vec_id AS b
-       |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-       |  JOIN asg ax ON ax.vec_id = x.vec_id
-       |  JOIN asg ay ON ay.vec_id = y.vec_id AND ax.list = ay.list
-       |  WHERE round($duckCos, 6) >= 0.45),
-       |edges AS (SELECT a AS u, b AS v FROM p UNION SELECT b, a FROM p),
-       |walk(id, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, w.lbl FROM edges e JOIN walk w ON e.v = w.id),
-       |comp AS (SELECT id, MIN(lbl) AS keep_id FROM walk GROUP BY id)
-       |SELECT a.vec_id, a.list, COALESCE(cp.keep_id, a.vec_id) AS keep_id
-       |FROM asg a LEFT JOIN comp cp ON cp.id = a.vec_id""".stripMargin
-
-  /** FNV-1a 64 of an ASCII varchar SQL expression as an unsigned HUGEINT —
-    * the round-2 replication technique proven by q_multimodal_meta: the
-    * wrapping 64-bit multiply runs mod 2^64 in HUGEINT, and the byte xor
-    * touches only the low 8 bits so it runs as BIGINT xor on `h % 256`.
-    * Valid because the corpus is ASCII (`ord(char) == byte`, asserted by
-    * q_multimodal_bytes matching octet_length to len).
-    */
-  private def duckFnvU(v: String): String =
-    s"""list_reduce(
-       |    list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |      [CAST(ord($v[i]) AS HUGEINT) FOR i IN range(1, len($v)+1)]),
-       |    (a, b) -> ((a - (a % 256) + xor(CAST(a % 256 AS BIGINT), CAST(b AS BIGINT))) * 1099511628211) % 18446744073709551616)""".stripMargin
-
-  /** Unsigned HUGEINT (mod 2^64) → signed BIGINT reinterpretation. */
-  private def duckU2S(v: String): String =
-    s"CASE WHEN $v >= 9223372036854775808 THEN CAST($v - 18446744073709551616 AS BIGINT) ELSE CAST($v AS BIGINT) END"
-
-  /** Exact cosine top-20 for query vector 0 — shared by q_topk_cosine and
-    * (because radius-1 multiprobe makes the LSH shortlist a superset of the
-    * true top-20 at verify scale) q_ann_lsh.
-    */
-  private val duckTopkSql =
-    s"""WITH x AS (SELECT * FROM embeddings WHERE vec_id = 0)
-       |SELECT y.vec_id AS vec_id, round($duckCos, 6) AS cos
-       |FROM embeddings y, x
-       |ORDER BY cos DESC, y.vec_id LIMIT 20""".stripMargin
-
-  /** Full DuckDB recomputation of the FNV-tokened 64-bit simhash and the
-    * exact hamming ≤ 3 pair set: per-token FNV in HUGEINT → per-bit ±1
-    * votes → sign-packed signature → all-pairs `bit_count(xor(...))`.
-    * All-pairs is fine at verify scale (500 docs → 125k pairs); Spark's
-    * pigeonhole blocking must reproduce it exactly (zero false negatives by
-    * construction, candidates exact-filtered).
-    */
-  private val duckSimhashSql =
-    s"""WITH RECURSIVE pw(b, p) AS (
-       |  SELECT 0, CAST(1 AS HUGEINT) UNION ALL SELECT b+1, p*2 FROM pw WHERE b < 63
-       |),
-       |toksrc AS (SELECT doc_id, $duckToks AS w FROM documents),
-       |tok AS (SELECT doc_id, unnest(w) AS tk FROM toksrc),
-       |th AS (SELECT doc_id, ${duckFnvU("tk")} AS hu FROM tok),
-       |votes AS (
-       |  SELECT doc_id, pw.b, SUM(CASE WHEN (hu // pw.p) % 2 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM th CROSS JOIN pw GROUP BY 1, 2
-       |),
-       |sims AS (
-       |  SELECT doc_id, SUM(CASE WHEN v >= 0 THEN pw.p ELSE CAST(0 AS HUGEINT) END) AS su
-       |  FROM votes JOIN pw ON votes.b = pw.b GROUP BY 1
-       |),
-       |simv AS (SELECT doc_id, ${duckU2S("su")} AS sh FROM sims)
-       |SELECT x.doc_id AS a, y.doc_id AS b,
-       |  CAST(bit_count(xor(x.sh, y.sh)) AS BIGINT) AS hamming
-       |FROM simv x JOIN simv y ON x.doc_id < y.doc_id
-       |WHERE bit_count(xor(x.sh, y.sh)) <= 3""".stripMargin
-
-  /** Per-doc quality score — shared by q_quality_score and (wrapped in a
-    * per-language window) q_top_quality_docs.
-    */
-  private val duckQualitySql =
-    s"""WITH q AS (
-       |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS raw_toks,
-       |    $duckToks AS low_toks
-       |  FROM documents
-       |)
-       |SELECT doc_id, round(
-       |  least(len(text) / 500.0, 1.0) * 0.3
-       |  + (CASE WHEN (CASE WHEN len(text) > 0
-       |       THEN CAST(len(text) - len(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE) / len(text)
-       |       ELSE 0.0 END) <= 0.2 THEN 1.0 ELSE 0.0 END) * 0.2
-       |  + least((CASE WHEN len(low_toks) > 0
-       |       THEN CAST(len(list_filter(low_toks, x -> list_contains(${sqlList(TF.stopwords("en"))}, x))) AS DOUBLE) / len(low_toks)
-       |       ELSE 0.0 END) * 5.0, 1.0) * 0.3
-       |  + (CASE WHEN (CASE WHEN len(raw_toks) > 0
-       |       THEN CAST(list_sum(list_transform(raw_toks, x -> len(x))) AS DOUBLE) / len(raw_toks)
-       |       ELSE 0.0 END) BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END) * 0.2,
-       |  6) AS quality
-       |FROM q""".stripMargin
-
-  /** 5-gram containment report — shared by q_decontaminate and (identical
-    * output, bloom-prefiltered plan) q_bloom_decontaminate.
-    */
-  private val duckDecontaminateSql =
-    s"""WITH toksrc AS (
-       |  SELECT doc_id, $duckToks AS w FROM documents
-       |), sh AS (
-       |  SELECT doc_id, list_distinct([array_to_string(w[i:i+4], ' ') FOR i IN range(1, len(w)-3)]) AS shingles
-       |  FROM toksrc WHERE len(w) >= 5
-       |), bs AS (
-       |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 4 = 0
-       |), hits AS (
-       |  SELECT t.doc_id, t.n_shingles, COUNT(*) AS n_shared
-       |  FROM (SELECT doc_id, len(shingles) AS n_shingles, unnest(shingles) AS s
-       |        FROM sh WHERE doc_id % 4 != 0) t
-       |  JOIN bs USING (s) GROUP BY 1, 2
-       |)
-       |SELECT doc_id, n_shared,
-       |  round(CAST(n_shared AS DOUBLE) / n_shingles, 6) AS containment
-       |FROM hits""".stripMargin
-
-  // the classifier expression, shared by duckLangId and duckLangConfusion —
-  // one definition so a heuristic change can never silently diverge the two
-  private val duckLangCases = TF.stopwords.toSeq.sortBy(_._1).map {
-    case (lang, words) =>
-      s"{'s': len(list_intersect(toks, ${sqlList(words)})) / ${words.size}.0, 'l': '$lang'}"
-  }.mkString(", ")
-
-  private val duckLangId =
-    s"""WITH t AS (SELECT doc_id, list_distinct($duckToks) AS toks FROM documents)
-       |SELECT doc_id, (list_sort([$duckLangCases])[-1]).l AS lang_guess FROM t""".stripMargin
-
-  // fixed first-10-centroid nearest-centroid assignment (identical
-  // left-to-right double arithmetic to KMeans.Model.assign) ending in CTE
-  // `a(vec_id, list)` — shared by q_kmeans_assign and q_ivf_balance
-  private val duckKmeansAssignCte =
-    """WITH c AS (
-      |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS cemb
-      |  FROM embeddings WHERE vec_id < 10),
-      |s AS (
-      |  SELECT e.vec_id, c.cidx,
-      |    list_sum([CAST(e.embedding[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) * -2.0
-      |    + list_sum([CAST(c.cemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) AS d
-      |  FROM embeddings e CROSS JOIN c
-      |),
-      |a AS (
-      |  SELECT vec_id, CAST(cidx AS BIGINT) AS list FROM (
-      |    SELECT vec_id, cidx, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cidx) AS rn FROM s
-      |  ) WHERE rn = 1)""".stripMargin
-
-  /** Replayable trained-IVF CTE chain — DuckDB replay of
-    * [[graft.similarity.KMeans.fitReplayable]] + spill assignment + probe
-    * list ranking, CTE-for-CTE: hash-sampled seeds (same pmod-ppm ordering,
-    * ties by vec_id), `iters` unrolled Lloyd rounds (same `-2·v·c + |c|²`
-    * argmin with (d, cidx) ties, same round(Σ/n, 6) means, empty lists keep
-    * the previous centroid via COALESCE), then spill postings (rank ≤
-    * `spill`). Ends in: `cent(cidx, cemb)` — final centroids;
-    * `asg(vec_id, cidx)` — postings; `plr(qid, cidx, lrank)` — per-probe
-    * centroid cosine ranking. Shared by q_ann_recall and q_ivf_probe_sweep.
-    */
-  private def duckIvfCtes(k: Int, iters: Int, spill: Int): String = {
-    val fnvU = duckFnvU("('ivf#' || CAST(vec_id AS VARCHAR))")
-    val u = s"((${duckU2S(fnvU)} % 1000000) + 1000000) % 1000000"
-    val score =
-      """list_sum([CAST(e.embedding[i] AS DOUBLE) * c.cemb[i] FOR i IN range(1, 65)]) * -2.0
-        |    + list_sum([c.cemb[i] * c.cemb[i] FOR i IN range(1, 65)])""".stripMargin
-    val sb = new StringBuilder
-    sb.append(
-      s"""seeds AS (
-         |  SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS cemb
-         |  FROM embeddings ORDER BY $u, vec_id LIMIT $k),
-         |c0 AS (
-         |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx, cemb FROM seeds)""".stripMargin)
-    for (it <- 1 to iters) {
-      sb.append(
-        s""",
-           |s$it AS (
-           |  SELECT e.vec_id, c.cidx, $score AS d
-           |  FROM embeddings e CROSS JOIN c${it - 1} c),
-           |a$it AS (
-           |  SELECT vec_id, cidx FROM (
-           |    SELECT vec_id, cidx,
-           |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cidx) AS rn
-           |    FROM s$it) WHERE rn = 1),
-           |m$it AS (
-           |  SELECT a.cidx, g.i AS dim,
-           |    round(SUM(CAST(e.embedding[g.i] AS DOUBLE)) / COUNT(*), 6) AS cd
-           |  FROM a$it a, embeddings e, generate_series(1, 64) AS g(i)
-           |  WHERE e.vec_id = a.vec_id
-           |  GROUP BY 1, 2),
-           |mm$it AS (SELECT cidx, list(cd ORDER BY dim) AS cemb FROM m$it GROUP BY 1),
-           |c$it AS (
-           |  SELECT p.cidx, COALESCE(n.cemb, p.cemb) AS cemb
-           |  FROM c${it - 1} p LEFT JOIN mm$it n ON n.cidx = p.cidx)""".stripMargin)
-    }
-    sb.append(
-      s""",
-         |cent AS (SELECT cidx, cemb FROM c$iters),
-         |sf AS (
-         |  SELECT e.vec_id, c.cidx, $score AS d
-         |  FROM embeddings e CROSS JOIN cent c),
-         |asg AS (
-         |  SELECT vec_id, cidx FROM (
-         |    SELECT vec_id, cidx,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cidx) AS rn
-         |    FROM sf) WHERE rn <= $spill),
-         |plr AS (
-         |  SELECT qid, cidx,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY ccos DESC, cidx) AS lrank
-         |  FROM (
-         |    SELECT q.vec_id AS qid, c.cidx,
-         |      list_sum([CAST(q.embedding[i] AS DOUBLE) * c.cemb[i] FOR i IN range(1, 65)]) /
-         |      (sqrt(list_sum([CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE) FOR i IN range(1, 65)])) *
-         |       sqrt(list_sum([c.cemb[i] * c.cemb[i] FOR i IN range(1, 65)]))) AS ccos
-         |    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 10))""".stripMargin)
-    sb.toString
-  }
-
-  private val duckLangConfusion = {
-    s"""WITH t AS (SELECT lang, list_distinct($duckToks) AS toks FROM documents),
-       |p AS (SELECT lang, (list_sort([$duckLangCases])[-1]).l AS lang_guess FROM t),
-       |conf AS (SELECT lang, lang_guess, count(*) AS n FROM p GROUP BY 1, 2),
-       |tot AS (SELECT lang, sum(n) AS t FROM conf GROUP BY 1)
-       |SELECT conf.lang, lang_guess, n, round(CAST(n AS DOUBLE) / t, 6) AS frac
-       |FROM conf JOIN tot ON conf.lang = tot.lang""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_filter_project" ->
-      """SELECT o_orderkey AS key, o_custkey AS user_id, o_totalprice AS amount
-        |FROM orders WHERE o_totalprice >= 250000""".stripMargin,
-    "q_donation_rescale" ->
-      """SELECT event_id AS key, user_id, CAST(TRUNC((value*100)/100) AS INT) AS amount
-        |FROM events WHERE value*100 >= 10000""".stripMargin,
-    "q_merge_union" ->
-      """SELECT o_custkey AS user_id, CAST(TRUNC(o_totalprice) AS INT) AS amount
-        |FROM orders WHERE o_totalprice >= 250000
-        |UNION ALL
-        |SELECT user_id, CAST(TRUNC((value*100)/100) AS INT) AS amount
-        |FROM events WHERE value*100 >= 10000""".stripMargin,
-    "q_topology_experiment" ->
-      """SELECT o_orderkey AS key, o_custkey AS user_id, CAST(TRUNC(o_totalprice) AS INT) AS amount
-        |FROM orders WHERE o_totalprice >= 100
-        |UNION ALL
-        |SELECT event_id AS key, user_id, CAST(TRUNC((value*100)/100) AS INT) AS amount
-        |FROM events WHERE value*100 >= 10000""".stripMargin,
-    // stream parity: the LIVE streaming run must produce the batch
-    // experiment's exact multiset — one oracle string serves both faces
-    "q_stream_parity" ->
-      """SELECT o_orderkey AS key, o_custkey AS user_id, CAST(TRUNC(o_totalprice) AS INT) AS amount
-        |FROM orders WHERE o_totalprice >= 100
-        |UNION ALL
-        |SELECT event_id AS key, user_id, CAST(TRUNC((value*100)/100) AS INT) AS amount
-        |FROM events WHERE value*100 >= 10000""".stripMargin,
-    // the batch q_asof_join SQL verbatim: the live flatMapGroupsWithState
-    // runtime over 3 ordered micro-batches must compute exactly what the
-    // batch AS-OF operator computes
-    "q_stream_stateful_parity" ->
-      """SELECT p.event_id, p.user_id, p.value, v.value AS prior_view_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') v
-        |  ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-    // live dropDuplicatesWithinWatermark with a span-covering retention ==
-    // batch DISTINCT over the key columns (see streamDedupParityQ)
-    "q_stream_dedup_parity" ->
-      """SELECT DISTINCT user_id, event_type,
-        |  CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day FROM events""".stripMargin,
-    // the batch q_funnel SQL verbatim: live mapGroupsWithState over 3
-    // ordered micro-batches must compute exactly the batch funnel
-    "q_stream_funnel_parity" ->
-      """WITH s1 AS (
-        |  SELECT user_id, ts, event_type,
-        |    MIN(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), s2 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'view' AND ts > t_signup
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_view FROM s1
-        |), s3 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts > t_view
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_purchase FROM s2
-        |)
-        |SELECT user_id, MAX(t_signup) AS t_signup, MAX(t_view) AS t_view,
-        |  MAX(t_purchase) AS t_purchase
-        |FROM s3 GROUP BY user_id""".stripMargin,
-    // watermark-closed tumbling windows: the live append-mode emission =
-    // batch day buckets restricted to windows the final watermark
-    // (max ts − 1 h) closed; day buckets are epoch-aligned on both sides
-    "q_stream_window_parity" ->
-      """WITH b AS (SELECT date_trunc('day', ts) AS ws, event_type,
-        |  CAST(value AS DECIMAL(18,2)) AS v FROM events)
-        |SELECT ws, event_type, COUNT(*) AS n, CAST(SUM(v) AS DOUBLE) AS total
-        |FROM b GROUP BY ws, event_type
-        |HAVING ws + INTERVAL 1 DAY <= (SELECT MAX(ts) - INTERVAL 1 HOUR FROM events)""".stripMargin,
-    // the batch q_interval_join SQL verbatim: live stream-stream join
-    // state over 3 ordered micro-batches == the batch interval join
-    "q_stream_join_parity" ->
-      """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS lt
-        |           FROM events WHERE event_type = 'purchase'),
-        |     v AS (SELECT user_id, epoch_us(ts) AS rt, value
-        |           FROM events WHERE event_type = 'view')
-        |SELECT p.event_id, p.user_id, COUNT(*) AS n_views,
-        |  CAST(SUM(CAST(v.value AS DECIMAL(18,2))) AS DOUBLE) AS view_total
-        |FROM p JOIN v ON p.user_id = v.user_id
-        |  AND v.rt >= p.lt - 3600000000 AND v.rt <= p.lt
-        |GROUP BY 1, 2""".stripMargin,
-    // the batch q_kmv_distinct SQL verbatim: KMV state is a pure set
-    // function (k smallest distinct hashes, arrival-order independent),
-    // so the live final snapshot must equal the batch sketch value-exactly
-    "q_stream_kmv_parity" ->
-      s"""WITH hu AS (
-         |  SELECT DISTINCT event_type, ${duckFnvU("CAST(user_id AS VARCHAR)")} AS hu
-         |  FROM events
-         |), h AS (
-         |  SELECT event_type, ${duckU2S("hu")} AS h FROM hu
-         |), r AS (
-         |  SELECT event_type, h,
-         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
-         |  FROM h
-         |), t AS (
-         |  SELECT event_type, CAST(max(rn) AS BIGINT) AS kmv_k,
-         |    max_by(h, rn) AS h_k
-         |  FROM r WHERE rn <= 256 GROUP BY 1
-         |)
-         |SELECT event_type, kmv_k, h_k,
-         |  CASE WHEN kmv_k < 256 THEN CAST(kmv_k AS DOUBLE)
-         |  ELSE round(255.0 / ((CAST(h_k AS DOUBLE) + 9223372036854775808.0)
-         |    / 18446744073709551616.0), 6) END AS est_distinct
-         |FROM t""".stripMargin,
-    // invariant gate for the NON-SQL-expressible recursive folds (see
-    // streamRecursiveParityQ): zero live-vs-twin mismatches, row counts
-    // anchored to DuckDB's own count of events — one row per op
-    "q_stream_recursive_parity" ->
-      """SELECT 'anomaly' AS op, (SELECT count(*) FROM events) AS n_rows,
-        |  CAST(0 AS BIGINT) AS n_mismatch
-        |UNION ALL
-        |SELECT 'ema', (SELECT count(*) FROM events), 0
-        |UNION ALL
-        |SELECT 'rate_limit', (SELECT count(*) FROM events), 0""".stripMargin,
-    // live sessionize == batch sessions at MILLISECOND precision (the
-    // operator's state is Timestamp.getTime ms): gap decisions diff
-    // epoch_ms; start/end are ms-truncated; each user's LAST session is
-    // emitted only if the final watermark (max ts − 1 h) strictly passed
-    // its last+gap timeout — every other session was closed in-stream
-    "q_stream_sessionize_parity" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 1800000 THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), s AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS seq
-        |  FROM x
-        |), g AS (
-        |  SELECT user_id, seq, COUNT(*) AS n_events,
-        |    date_trunc('milliseconds', MIN(ts)) AS session_start,
-        |    date_trunc('milliseconds', MAX(ts)) AS session_end,
-        |    MAX(seq) OVER (PARTITION BY user_id) AS max_seq
-        |  FROM s GROUP BY user_id, seq
-        |)
-        |SELECT user_id, n_events, session_start, session_end
-        |FROM g
-        |WHERE seq < max_seq
-        |   OR epoch_ms(session_end) + 1800000 <
-        |      (SELECT epoch_ms(MAX(ts) - INTERVAL 1 HOUR) FROM events)""".stripMargin,
-    // T4: the DOT literals ARE the oracle — any drift in node sorting,
-    // shapes, edge order, or the overlay's per-entity experiment rows
-    // (sample rows, truncation, row counts) hash-mismatches at the driver
-    // gate. '\n' inside the single-quoted SQL string is the literal
-    // backslash-n DOT label escape, exactly as toDot emits it.
-    "q_topology_dot" ->
-      """SELECT * FROM (VALUES
-        |('bare', 'digraph topology {
-        |  "humble-donation-made" [shape=cylinder];
-        |  "large-donation-stream" [shape=box];
-        |  "large-purchase-stream" [shape=box];
-        |  "large-transaction-made" [shape=cylinder];
-        |  "purchase-made" [shape=cylinder];
-        |  "purchase-made" -> "large-purchase-stream";
-        |  "humble-donation-made" -> "large-donation-stream";
-        |  "large-purchase-stream" -> "large-transaction-made";
-        |  "large-donation-stream" -> "large-transaction-made";
-        |}'),
-        |('overlay', 'digraph topology {
-        |  "humble-donation-made" [shape=cylinder, label="humble-donation-made\n(10, 5000, 201)\n(11, 20000, 202)\n[2 rows]"];
-        |  "large-donation-stream" [shape=box, label="large-donation-stream\n(11, 202, 200)\n[1 rows]"];
-        |  "large-purchase-stream" [shape=box, label="large-purchase-stream\n(2, 102, 500)\n(4, 104, 1000)\n[2 rows]"];
-        |  "large-transaction-made" [shape=cylinder, label="large-transaction-made\n(2, 102, 500)\n(4, 104, 1000)\n(11, 202, 200)\n[3 rows]"];
-        |  "purchase-made" [shape=cylinder, label="purchase-made\n(1, 10.0, 101, 1)\n(2, 500.0, 102, 3)\n(3, 50.0, 103, 2)\n[4 rows]"];
-        |  "purchase-made" -> "large-purchase-stream";
-        |  "humble-donation-made" -> "large-donation-stream";
-        |  "large-purchase-stream" -> "large-transaction-made";
-        |  "large-donation-stream" -> "large-transaction-made";
-        |}')) AS t(variant, dot)""".stripMargin,
-    "q_topology_validate" ->
-      """SELECT * FROM (VALUES
-        |  ('valid', true, ''),
-        |  ('cycle', false, 'acyclic'),
-        |  ('undeclared', false, 'undeclared'),
-        |  ('self-edge', false, 'self-edges'),
-        |  ('orphan-stream', false, 'no input edge')) AS t(probe, ok, err)""".stripMargin,
-    "q_repl_walkthrough" ->
-      """SELECT * FROM (VALUES
-        |  (2, 102, 500), (4, 104, 1000)) AS t("key", user_id, amount)""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus, SUM(l_quantity) AS sum_qty,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_join_agg" ->
-      """SELECT n_name, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |COUNT(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    // the salted join must be result-invariant — same oracle as q_join_agg
-    "q_bloom_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey AND c_acctbal > 9000
-        |GROUP BY 1""".stripMargin,
-    "q_salted_join" ->
-      """SELECT n_name, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |COUNT(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q_window_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, COUNT(*) AS n,
-        |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_topk_orders" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q_sessionize" ->
-      """WITH x AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), s AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM x)
-        |SELECT user_id, session_seq, COUNT(*) AS n_events,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end
-        |FROM s GROUP BY user_id, session_seq""".stripMargin,
-    "q_event_transitions" ->
-      """WITH x AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |c AS (
-        |  SELECT prev AS prev_state, event_type AS state, count(*) AS n_transitions
-        |  FROM x WHERE prev IS NOT NULL GROUP BY 1, 2)
-        |SELECT prev_state, state, n_transitions,
-        |  round(CAST(n_transitions AS DOUBLE) /
-        |        CAST(SUM(n_transitions) OVER (PARTITION BY prev_state) AS DOUBLE), 6) AS prob
-        |FROM c""".stripMargin,
-    "q_rfm_segments" ->
-      """WITH mx AS (SELECT max(CAST(ts AS DATE)) AS maxd FROM events),
-        |u AS (SELECT user_id,
-        |        CAST(date_diff('day', max(CAST(ts AS DATE)), maxd) AS BIGINT) AS recency_days,
-        |        count(*) AS frequency,
-        |        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS monetary
-        |      FROM events, mx GROUP BY user_id, maxd),
-        |sc AS (SELECT user_id, recency_days, frequency, monetary,
-        |        CAST(NTILE(4) OVER (ORDER BY recency_days, user_id) AS BIGINT) AS r,
-        |        CAST(NTILE(4) OVER (ORDER BY frequency, user_id) AS BIGINT) AS f,
-        |        CAST(NTILE(4) OVER (ORDER BY monetary, user_id) AS BIGINT) AS m
-        |       FROM u)
-        |SELECT user_id, recency_days, frequency, monetary, r, f, m,
-        |  r * 100 + f * 10 + m AS segment
-        |FROM sc""".stripMargin,
-    // exact decimal/long moment sums on both sides; closed forms divide
-    // doubles of exact sums once — no regr_* builtins (float merge order)
-    "q_regr_trend" ->
-      """WITH j AS (
-        |  SELECT c_mktsegment,
-        |    CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-        |    CAST(o_totalprice AS DECIMAL(19,4)) AS y
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |m AS (
-        |  SELECT c_mktsegment, count(*) AS n,
-        |    sum(x) AS sx, sum(x*x) AS sxx,
-        |    sum(y) AS sy, sum(y*y) AS syy, sum(y*x) AS sxy
-        |  FROM j GROUP BY 1),
-        |e AS (
-        |  SELECT c_mktsegment, n,
-        |    CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE) AS num,
-        |    CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) AS dx,
-        |    CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) AS dy,
-        |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd
-        |  FROM m)
-        |SELECT c_mktsegment, n AS n_obs,
-        |  round(num / NULLIF(dx, 0), 6) AS slope,
-        |  round((syd - (num / NULLIF(dx, 0)) * sxd) / CAST(n AS DOUBLE), 6) AS intercept,
-        |  round(num * num / NULLIF(dx * dy, 0), 6) AS r2
-        |FROM e""".stripMargin,
-    "q_corr_matrix" ->
-      s"""WITH d AS (
-         |  SELECT CAST(l_discount AS DECIMAL(19,6)) AS a,
-         |         CAST(l_extendedprice AS DECIMAL(19,6)) AS b,
-         |         CAST(l_quantity AS DECIMAL(19,6)) AS c,
-         |         CAST(l_tax AS DECIMAL(19,6)) AS e
-         |  FROM lineitem),
-         |m AS (
-         |  SELECT count(*) AS n,
-         |    sum(a) AS s_l_discount, sum(b) AS s_l_extendedprice,
-         |    sum(c) AS s_l_quantity, sum(e) AS s_l_tax,
-         |    sum(a*a) AS q_l_discount, sum(b*b) AS q_l_extendedprice,
-         |    sum(c*c) AS q_l_quantity, sum(e*e) AS q_l_tax,
-         |    sum(a*b) AS p_l_discount__l_extendedprice,
-         |    sum(a*c) AS p_l_discount__l_quantity,
-         |    sum(a*e) AS p_l_discount__l_tax,
-         |    sum(b*c) AS p_l_extendedprice__l_quantity,
-         |    sum(b*e) AS p_l_extendedprice__l_tax,
-         |    sum(c*e) AS p_l_quantity__l_tax
-         |  FROM d)
-         |${Seq(("l_discount", "l_extendedprice"), ("l_discount", "l_quantity"),
-                ("l_discount", "l_tax"), ("l_extendedprice", "l_quantity"),
-                ("l_extendedprice", "l_tax"), ("l_quantity", "l_tax"))
-               .map { case (x, y) => duckCorrArm(x, y) }.mkString("\nUNION ALL\n")}""".stripMargin,
-    // integer picocredits: truncating integer division is identical in
-    // every engine; decimal-exact sums divide by 1e12 once in double
-    "q_attribution" ->
-      """WITH x AS (
-        |  SELECT event_type,
-        |    row_number() OVER w AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT event_type,
-        |  round(CAST(sum(CASE WHEN n = 1 THEN 1000000000000
-        |                      WHEN n = 2 THEN 500000000000
-        |                      WHEN rn = 1 OR rn = n THEN 400000000000
-        |                      ELSE 200000000000 // (n - 2) END) AS DOUBLE) / 1e12, 6) AS credit,
-        |  count(*) AS n_touches
-        |FROM x GROUP BY 1""".stripMargin,
-    "q_mode_event" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT user_id, event_type, cnt,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY cnt DESC, event_type) AS rn
-        |  FROM c)
-        |SELECT user_id, event_type AS mode_val, cnt AS mode_n FROM r WHERE rn = 1""".stripMargin,
-    // all-integer EMA: cents × (0.9^k·10^19) integer weights, identical
-    // lag-term expansion on both sides, two IEEE divisions at the end
-    "q_ema" ->
-      s"""WITH b AS (
-         |  SELECT user_id, ts, event_id,
-         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS DECIMAL(14,0)) AS xv
-         |  FROM events)
-         |SELECT user_id, ts, event_id,
-         |  round(CAST(${duckEmaNum(20, BigDecimal("0.9"))} AS DOUBLE) /
-         |        CAST(${duckEmaDen(20, BigDecimal("0.9"))} AS DOUBLE) / 100.0, 6) AS ema
-         |FROM b
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-    "q_gapfill" ->
-      """WITH daily AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |spine AS (
-        |  SELECT user_id,
-        |    CAST(unnest(generate_series(min(day), max(day), INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM daily GROUP BY user_id)
-        |SELECT s.user_id, CAST(s.day AS TIMESTAMP) AS day, coalesce(d.n, 0) AS n_ev
-        |FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day""".stripMargin,
-    "q_anomaly_mad" ->
-      """WITH m AS (SELECT event_type, median(value) AS med FROM events GROUP BY 1),
-        |d AS (SELECT e.event_type, e.value, m.med, abs(e.value - m.med) AS adev
-        |      FROM events e JOIN m USING (event_type)),
-        |md AS (SELECT event_type, median(adev) AS mad FROM d GROUP BY 1)
-        |SELECT d.event_type,
-        |  round(min(d.med), 6) AS med,
-        |  round(min(md.mad), 6) AS mad,
-        |  CAST(sum(CASE WHEN d.adev > 3 * 1.4826 * md.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-        |  count(*) AS n_total
-        |FROM d JOIN md USING (event_type)
-        |GROUP BY 1""".stripMargin,
-    "q_market_basket" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |n AS (SELECT count(DISTINCT l_orderkey) AS nb FROM li),
-        |pc AS (SELECT l_partkey, count(*) AS np FROM li GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS n_ab
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p1, p2, n_ab,
-        |  round(CAST(n_ab AS DOUBLE) * CAST(nb AS DOUBLE) /
-        |        (CAST(c1.np AS DOUBLE) * CAST(c2.np AS DOUBLE)), 6) AS lift
-        |FROM pairs, n
-        |JOIN pc c1 ON p1 = c1.l_partkey
-        |JOIN pc c2 ON p2 = c2.l_partkey
-        |ORDER BY lift DESC, p1, p2 LIMIT 50""".stripMargin,
-    "q_skyline" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day, max(o_totalprice) AS dmax
-        |  FROM orders GROUP BY 1),
-        |p AS (
-        |  SELECT day, dmax,
-        |    max(dmax) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prior_max
-        |  FROM daily)
-        |SELECT o_orderkey, o_orderdate, o_totalprice
-        |FROM orders JOIN p ON CAST(o_orderdate AS DATE) = p.day
-        |WHERE o_totalprice = p.dmax AND (p.prior_max IS NULL OR o_totalprice > p.prior_max)""".stripMargin,
-    "q_jaro_pairs" ->
-      """WITH b AS (
-        |  SELECT doc_id, substring(text, 1, 80) AS t, source, n_chars // 64 AS lb
-        |  FROM documents)
-        |SELECT x.doc_id AS a, y.doc_id AS b,
-        |  round(jaro_winkler_similarity(x.t, y.t), 6) AS jw
-        |FROM b x JOIN b y ON x.source = y.source AND x.lb = y.lb AND x.doc_id < y.doc_id
-        |WHERE jaro_winkler_similarity(x.t, y.t) >= 0.85""".stripMargin,
-    "q_lev_pairs" ->
-      """WITH b AS (
-        |  SELECT doc_id, substring(text, 1, 120) AS t, source, n_chars // 64 AS lb
-        |  FROM documents)
-        |SELECT x.doc_id AS a, y.doc_id AS b, levenshtein(x.t, y.t) AS edit_dist
-        |FROM b x JOIN b y ON x.source = y.source AND x.lb = y.lb AND x.doc_id < y.doc_id
-        |WHERE levenshtein(x.t, y.t) <= 15""".stripMargin,
-    "q_bfs_reach" ->
-      """WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |e0 AS (
-        |  SELECT a.l_partkey AS s, b.l_partkey AS d
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |e AS (SELECT s, d FROM e0 UNION SELECT d, s FROM e0),
-        |walk(node, hops) AS (
-        |  (SELECT s, 0 FROM e GROUP BY s ORDER BY count(*) DESC, s LIMIT 1)
-        |  UNION
-        |  SELECT e.d, w.hops + 1 FROM walk w JOIN e ON e.s = w.node WHERE w.hops < 3)
-        |SELECT node, CAST(min(hops) AS INT) AS hops FROM walk GROUP BY 1""".stripMargin,
-    "q_benford" ->
-      s"""WITH d AS (
-         |  SELECT substring(CAST(CAST(TRUNC(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1) AS digit
-         |  FROM orders),
-         |c AS (SELECT digit, count(*) AS n_orders FROM d GROUP BY 1),
-         |t AS (SELECT CAST(sum(n_orders) AS BIGINT) AS tot FROM c)
-         |SELECT digit, n_orders,
-         |  round(CAST(n_orders AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS obs_pct,
-         |  CASE digit ${benfordExp.map { case (d, e) =>
-              s"WHEN '$d' THEN CAST($e AS DOUBLE)" }.mkString(" ")} END AS exp_pct
-         |FROM c, t""".stripMargin,
-    // PPJoin is candidate-generation only — the result contract is the
-    // same exact uncapped 5-gram Jaccard the minhash queries verify against
-    "q_ppjoin" -> duckShingleCte,
-    "q_vocab_coverage" ->
-      s"""WITH toks AS (SELECT unnest($duckToks) AS tok FROM documents),
-         |c AS (SELECT tok, count(*) AS n FROM toks GROUP BY 1),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
-         |r AS (SELECT tok, n,
-         |        row_number() OVER (ORDER BY n DESC, tok) AS rnk,
-         |        sum(n) OVER (ORDER BY n DESC, tok
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |      FROM c)
-         |SELECT tok, n, CAST(rnk AS INT) AS rnk,
-         |  round(CAST(cum AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS cum_share
-         |FROM r, t WHERE rnk <= 40""".stripMargin,
-    "q_dow_profile" ->
-      """WITH a AS (
-        |  SELECT event_type, CAST(isodow(CAST(ts AS DATE)) AS BIGINT) AS dow,
-        |    count(*) AS n_ev,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT event_type, CAST(sum(n_ev) AS BIGINT) AS tot FROM a GROUP BY 1)
-        |SELECT a.event_type, dow, n_ev,
-        |  round(sum_v / CAST(n_ev AS DOUBLE), 6) AS avg_v,
-        |  round(CAST(n_ev AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share
-        |FROM a JOIN t USING (event_type)""".stripMargin,
-    "q_event_paths" ->
-      """WITH x AS (
-        |  SELECT user_id,
-        |    lag(event_type, 2) OVER w AS s1,
-        |    lag(event_type, 1) OVER w AS s2,
-        |    event_type AS s3
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT s1, s2, s3, count(*) AS n_paths
-        |FROM x WHERE s1 IS NOT NULL GROUP BY 1, 2, 3""".stripMargin,
-    "q_moving_avg" ->
-      """SELECT user_id, ts, event_id,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS mov_sum,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) /
-        |    CAST(COUNT(*) OVER w AS DOUBLE) AS mov_avg
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
-    // z-order twin: identical integer range-id scaling and bit interleave
-    // (expanded to 16 shift/mask terms below), identical 64-way NTILE cut
-    "q_zorder_layout" ->
-      s"""WITH b AS (
-         |  SELECT min(l_partkey) AS minp, max(l_partkey) AS maxp,
-         |         min(l_suppkey) AS mins, max(l_suppkey) AS maxs
-         |  FROM lineitem),
-         |n AS (
-         |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         |    ((l_partkey - minp) * 65536) // (maxp - minp + 1) AS xn,
-         |    ((l_suppkey - mins) * 65536) // (maxs - mins + 1) AS yn
-         |  FROM lineitem, b),
-         |z AS (
-         |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         |    ${duckInterleave("xn", "yn", 16)} AS zv
-         |  FROM n),
-         |r AS (
-         |  SELECT l_partkey, l_suppkey,
-         |    CAST(NTILE(64) OVER (ORDER BY zv, l_orderkey, l_linenumber) AS BIGINT) AS zbucket
-         |  FROM z)
-         |SELECT zbucket, count(*) AS n_rows,
-         |  min(l_partkey) AS min_part, max(l_partkey) AS max_part,
-         |  min(l_suppkey) AS min_supp, max(l_suppkey) AS max_supp
-         |FROM r GROUP BY zbucket""".stripMargin,
-    "q_rank_orders" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "q_ntile" ->
-      """SELECT o_orderstatus, tile, COUNT(*) AS n_orders,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM (SELECT o_orderstatus, o_totalprice,
-        |  CAST(NTILE(4) OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS tile
-        |  FROM orders)
-        |GROUP BY 1, 2""".stripMargin,
-    "q_daily_delta" ->
-      """WITH d AS (
-        |  SELECT date_trunc('day', o_orderdate) AS day,
-        |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1)
-        |SELECT day, CAST(rev AS DOUBLE) AS revenue,
-        |CAST(lag(rev) OVER (ORDER BY day) AS DOUBLE) AS prev_revenue,
-        |CAST(rev - lag(rev) OVER (ORDER BY day) AS DOUBLE) AS delta
-        |FROM d""".stripMargin,
-    "q_rollup_revenue" ->
-      """SELECT COALESCE(CAST(r_name AS VARCHAR), 'ALL') AS r_name,
-        |  COALESCE(CAST(n_name AS VARCHAR), 'ALL') AS n_name,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)""".stripMargin,
-    "q_anti_join" ->
-      """SELECT c_custkey FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin,
-    "q_semi_join" ->
-      """SELECT c_custkey FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin,
-    "q_asof_join" ->
-      """SELECT p.event_id, p.user_id, p.value, v.value AS prior_view_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') v
-        |  ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-    "q_asof_tolerance" ->
-      """SELECT p.event_id, p.user_id, p.value, v.value AS prior_view_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') v
-        |  ON p.user_id = v.user_id AND p.ts >= v.ts
-        |WHERE p.ts - v.ts <= INTERVAL 24 HOUR""".stripMargin,
-    "q_pivot" ->
-      """SELECT CAST(user_id % 10 AS INT) AS user_bucket,
-        |CAST(SUM(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS click,
-        |CAST(SUM(CASE WHEN event_type = 'error' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS error,
-        |CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase,
-        |CAST(SUM(CASE WHEN event_type = 'signup' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS signup,
-        |CAST(SUM(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS "view"
-        |FROM events GROUP BY 1""".stripMargin,
-    "q_sql_q3" -> sqlQ3Text,
-    "q_unpivot" ->
-      """WITH u AS (
-        |  SELECT 'l_quantity' AS measure, l_quantity AS v FROM lineitem
-        |  UNION ALL SELECT 'l_extendedprice', l_extendedprice FROM lineitem
-        |  UNION ALL SELECT 'l_discount', l_discount FROM lineitem
-        |  UNION ALL SELECT 'l_tax', l_tax FROM lineitem)
-        |SELECT measure, CAST(sum(CAST(v AS DECIMAL(19,4))) AS DOUBLE) AS total,
-        |  count(*) AS n
-        |FROM u GROUP BY 1""".stripMargin,
-    "q_length_trim" ->
-      """WITH b AS (SELECT quantile_cont(n_chars, 0.05) AS lo,
-        |                  quantile_cont(n_chars, 0.95) AS hi FROM documents)
-        |SELECT source,
-        |  CAST(sum(CASE WHEN n_chars >= lo AND n_chars <= hi THEN 1 ELSE 0 END) AS BIGINT) AS kept,
-        |  count(*) AS total,
-        |  round(CAST(sum(CASE WHEN n_chars >= lo AND n_chars <= hi THEN 1 ELSE 0 END) AS DOUBLE) /
-        |        CAST(count(*) AS DOUBLE), 6) AS kept_frac
-        |FROM documents, b GROUP BY source""".stripMargin,
-    "q_reconcile" ->
-      """WITH la AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS li_total
-        |  FROM lineitem GROUP BY 1)
-        |SELECT CASE WHEN o_orderkey IS NULL THEN 'orphan_lineitem'
-        |            WHEN l_orderkey IS NULL THEN 'no_lineitems'
-        |            WHEN abs(o_totalprice - li_total) <= 0.01 THEN 'price_match'
-        |            ELSE 'price_mismatch' END AS status,
-        |  count(*) AS n
-        |FROM orders FULL OUTER JOIN la ON o_orderkey = l_orderkey
-        |GROUP BY 1""".stripMargin,
-    "q_upsert_merge" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 7 = 0
-        |       THEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) + 10.00 AS DOUBLE)
-        |       ELSE o_totalprice END AS o_totalprice,
-        |  CASE WHEN o_orderkey % 7 = 0 THEN 'U' ELSE o_orderstatus END AS o_orderstatus
-        |FROM orders""".stripMargin,
-    "q_sql_q18" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem GROUP BY 1
-        |  HAVING CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "q_weekend_effect" ->
-      """WITH b AS (
-        |  SELECT CAST(o_totalprice AS DECIMAL(19,4)) AS y,
-        |    isodow(CAST(o_orderdate AS DATE)) >= 6 AS w
-        |  FROM orders),
-        |m AS (SELECT
-        |  CAST(sum(CASE WHEN w THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |  sum(CASE WHEN w THEN y END) AS s1, sum(CASE WHEN w THEN y*y END) AS q1,
-        |  CAST(sum(CASE WHEN NOT w THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |  sum(CASE WHEN NOT w THEN y END) AS s2, sum(CASE WHEN NOT w THEN y*y END) AS q2
-        | FROM b),
-        |e AS (SELECT n1, n2,
-        |  CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS m1,
-        |  CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS m2,
-        |  (CAST(n1 AS DOUBLE)*CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)*CAST(s1 AS DOUBLE)) /
-        |    (CAST(n1 AS DOUBLE)*(CAST(n1 AS DOUBLE) - 1.0)) AS v1,
-        |  (CAST(n2 AS DOUBLE)*CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)*CAST(s2 AS DOUBLE)) /
-        |    (CAST(n2 AS DOUBLE)*(CAST(n2 AS DOUBLE) - 1.0)) AS v2
-        | FROM m),
-        |f AS (SELECT n1, n2, m1, m2, v1, v2,
-        |  v1 / CAST(n1 AS DOUBLE) + v2 / CAST(n2 AS DOUBLE) AS se2
-        | FROM e)
-        |SELECT n1 AS n_wknd, n2 AS n_wkday,
-        |  round(m1, 6) AS mean_wknd, round(m2, 6) AS mean_wkday,
-        |  round((m1 - m2) / sqrt(se2), 6) AS t_stat,
-        |  round(se2 * se2 / ((v1 / CAST(n1 AS DOUBLE)) * (v1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1.0) +
-        |    (v2 / CAST(n2 AS DOUBLE)) * (v2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1.0)), 6) AS dof
-        |FROM f""".stripMargin,
-    "q_dup_sizes" ->
-      s"""WITH RECURSIVE $duckShingleCtes,
-         |edges AS (SELECT a AS u, b AS v FROM jpairs UNION SELECT b, a FROM jpairs),
-         |walk(id, lbl) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, w.lbl FROM edges e JOIN walk w ON e.v = w.id),
-         |r AS (SELECT id, MIN(lbl) AS keep_id FROM walk GROUP BY id),
-         |cs AS (SELECT keep_id, count(*) AS cluster_size FROM r GROUP BY 1),
-         |h AS (SELECT cluster_size, count(*) AS n_clusters FROM cs GROUP BY 1),
-         |p AS (SELECT CAST(coalesce(sum(cluster_size), 0) AS BIGINT) AS np FROM cs),
-         |t AS (SELECT count(*) AS nd FROM documents)
-         |SELECT cluster_size, n_clusters FROM h
-         |UNION ALL SELECT CAST(1 AS BIGINT), nd - np FROM p, t""".stripMargin,
-    "q_norm_profile" ->
-      """WITH b AS (
-        |  SELECT label,
-        |    round(sqrt(list_sum([CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-        |      FOR i IN range(1, 65)])), 6) AS nrm
-        |  FROM embeddings)
-        |SELECT label, count(*) AS n_vecs,
-        |  min(nrm) AS min_norm, median(nrm) AS p50_norm, max(nrm) AS max_norm
-        |FROM b GROUP BY 1""".stripMargin,
-    "q_power_users" ->
-      """WITH u AS (
-        |  SELECT user_id, sum(CAST(value AS DECIMAL(18,2))) AS m
-        |  FROM events GROUP BY 1),
-        |r AS (SELECT user_id, m,
-        |        CAST(NTILE(10) OVER (ORDER BY m DESC, user_id) AS BIGINT) AS decile
-        |      FROM u),
-        |d AS (SELECT decile, count(*) AS n_users, sum(m) AS dm FROM r GROUP BY 1),
-        |t AS (SELECT sum(dm) AS tt FROM d)
-        |SELECT decile, n_users, CAST(dm AS DOUBLE) AS decile_revenue,
-        |  round(CAST(sum(dm) OVER (ORDER BY decile ROWS UNBOUNDED PRECEDING) AS DOUBLE) /
-        |        CAST(tt AS DOUBLE), 6) AS cum_share
-        |FROM d, t""".stripMargin,
-    "q_new_vs_returning" ->
-      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS d0 FROM d GROUP BY 1)
-        |SELECT CAST(day AS TIMESTAMP) AS day,
-        |  CAST(sum(CASE WHEN day = d0 THEN 1 ELSE 0 END) AS BIGINT) AS new_users,
-        |  CAST(sum(CASE WHEN day > d0 THEN 1 ELSE 0 END) AS BIGINT) AS returning_users
-        |FROM d JOIN f USING (user_id) GROUP BY 1""".stripMargin,
-    "q_ltv_cohort" ->
-      """WITH c AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort FROM events GROUP BY 1),
-        |sz AS (SELECT cohort, count(*) AS n FROM c GROUP BY 1),
-        |r AS (SELECT c.cohort,
-        |        CAST(date_diff('day', c.cohort, CAST(e.ts AS DATE)) AS BIGINT) AS age,
-        |        sum(CAST(e.value AS DECIMAL(18,2))) AS rev
-        |      FROM events e JOIN c USING (user_id) GROUP BY 1, 2)
-        |SELECT CAST(r.cohort AS TIMESTAMP) AS cohort_day, age,
-        |  round(CAST(sum(rev) OVER (PARTITION BY r.cohort ORDER BY age
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) /
-        |        CAST(n AS DOUBLE), 6) AS ltv_per_user
-        |FROM r JOIN sz ON r.cohort = sz.cohort""".stripMargin,
-    "q_funnel_stats" ->
-      """WITH s1 AS (
-        |  SELECT user_id, ts, event_type,
-        |    MIN(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), s2 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'view' AND ts > t_signup
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_view FROM s1
-        |), s3 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts > t_view
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_purchase FROM s2
-        |), f AS (
-        |  SELECT user_id, MAX(t_signup) AS t_signup, MAX(t_view) AS t_view,
-        |    MAX(t_purchase) AS t_purchase
-        |  FROM s3 GROUP BY user_id
-        |), a AS (
-        |  SELECT count(t_signup) AS n1, count(t_view) AS n2, count(t_purchase) AS n3,
-        |    median(epoch_us(t_view) - epoch_us(t_signup)) AS m2,
-        |    median(epoch_us(t_purchase) - epoch_us(t_signup)) AS m3
-        |  FROM f)
-        |SELECT 'signup' AS stage, n1 AS n_reached,
-        |  CAST(NULL AS DOUBLE) AS conv_from_prev, 0.0 AS med_secs_from_first FROM a
-        |UNION ALL
-        |SELECT 'view', n2, round(CAST(n2 AS DOUBLE) / CAST(n1 AS DOUBLE), 6),
-        |  round(m2 / 1e6, 6) FROM a
-        |UNION ALL
-        |SELECT 'purchase', n3, round(CAST(n3 AS DOUBLE) / CAST(n2 AS DOUBLE), 6),
-        |  round(m3 / 1e6, 6) FROM a""".stripMargin,
-    "q_growth_rates" ->
-      """WITH m AS (
-        |  SELECT date_trunc('month', o_orderdate) AS month,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1)
-        |SELECT month, CAST(rev AS DOUBLE) AS revenue,
-        |  CASE WHEN lag(rev) OVER w IS NOT NULL AND lag(rev) OVER w > 0
-        |    THEN round((CAST(rev AS DOUBLE) - CAST(lag(rev) OVER w AS DOUBLE)) /
-        |               CAST(lag(rev) OVER w AS DOUBLE), 6) END AS mom,
-        |  CASE WHEN lag(rev, 12) OVER w IS NOT NULL AND lag(rev, 12) OVER w > 0
-        |    THEN round((CAST(rev AS DOUBLE) - CAST(lag(rev, 12) OVER w AS DOUBLE)) /
-        |               CAST(lag(rev, 12) OVER w AS DOUBLE), 6) END AS yoy
-        |FROM m WINDOW w AS (ORDER BY month)""".stripMargin,
-    "q_rolling_corr" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(19,4)) AS x,
-        |    CAST(count(*) AS DECIMAL(19,4)) AS y
-        |  FROM orders GROUP BY 1),
-        |c AS (
-        |  SELECT day,
-        |    count(*) OVER w AS n, sum(x) OVER w AS sx, sum(y) OVER w AS sy,
-        |    sum(x*y) OVER w AS sxy, sum(x*x) OVER w AS sxx, sum(y*y) OVER w AS syy
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)),
-        |e AS (
-        |  SELECT day,
-        |    CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE) AS num,
-        |    CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) AS dx,
-        |    CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) AS dy
-        |  FROM c)
-        |SELECT CAST(day AS TIMESTAMP) AS day,
-        |  CASE WHEN dx > 0 AND dy > 0 THEN round(num / sqrt(dx * dy), 6) END AS roll_corr
-        |FROM e""".stripMargin,
-    "q_cusum_shift" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    sum(CAST(value AS DECIMAL(18,2))) AS s
-        |  FROM events GROUP BY 1, 2),
-        |tot AS (SELECT event_type, sum(s) AS tot_s, count(*) AS n FROM daily GROUP BY 1),
-        |c AS (SELECT event_type, day,
-        |    sum(s) OVER (PARTITION BY event_type ORDER BY day ROWS UNBOUNDED PRECEDING) AS cum,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS k
-        |  FROM daily),
-        |j AS (SELECT c.event_type, day,
-        |    abs(CAST(n AS DECIMAL(10,0)) * CAST(cum AS DECIMAL(28,2)) -
-        |        CAST(k AS DECIMAL(10,0)) * CAST(tot_s AS DECIMAL(28,2))) AS stat, n
-        |  FROM c JOIN tot USING (event_type)),
-        |r AS (SELECT event_type, day, stat, n,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY stat DESC, day) AS rn
-        |  FROM j)
-        |SELECT event_type, CAST(day AS TIMESTAMP) AS shift_day,
-        |  round(CAST(stat AS DOUBLE) / CAST(n AS DOUBLE), 6) AS cusum_stat
-        |FROM r WHERE rn = 1""".stripMargin,
-    "q_autocorr" ->
-      s"""WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1),
-        |p0 AS (SELECT day, rev, lead(rev) OVER (ORDER BY day) AS rev_next FROM daily),
-        |d AS (SELECT CAST(rev AS DECIMAL(19,6)) AS a, CAST(rev_next AS DECIMAL(19,6)) AS b
-        |      FROM p0 WHERE rev_next IS NOT NULL),
-        |m AS (SELECT count(*) AS n, sum(a) AS s_rev, sum(b) AS s_rev_next,
-        |  sum(a*a) AS q_rev, sum(b*b) AS q_rev_next, sum(a*b) AS p_rev__rev_next FROM d)
-        |${duckCorrArm("rev", "rev_next")}""".stripMargin,
-    "q_twap" ->
-      """WITH x AS (
-        |  SELECT user_id, CAST(value AS DECIMAL(12,2)) AS v,
-        |    lead(epoch_us(ts)) OVER w - epoch_us(ts) AS dt
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id,
-        |  CAST(sum(dt) AS BIGINT) AS span_micros,
-        |  CASE WHEN sum(dt) > 0
-        |    THEN round(CAST(sum(v * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE), 6)
-        |    ELSE NULL END AS twap
-        |FROM x WHERE dt IS NOT NULL GROUP BY 1""".stripMargin,
-    "q_peak_concurrency" ->
-      """WITH x AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), se AS (
-        |  SELECT user_id, ts,
-        |    SUM(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM x
-        |), iv AS (
-        |  SELECT epoch_us(MIN(ts)) AS st,
-        |    epoch_us(MAX(ts) + INTERVAL 30 MINUTE) AS en
-        |  FROM se GROUP BY user_id, session_seq
-        |), d AS (
-        |  SELECT st AS t, 1 AS delta FROM iv
-        |  UNION ALL SELECT en, -1 FROM iv
-        |), c AS (
-        |  SELECT t, sum(delta) OVER (ORDER BY t, delta ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM d
-        |), m AS (SELECT max(cum) AS peak FROM c)
-        |SELECT CAST(min(m.peak) AS BIGINT) AS peak, make_timestamp(min(c.t)) AS peak_at
-        |FROM c, m WHERE c.cum = m.peak""".stripMargin,
-    "q_sql_q17" ->
-      """WITH a AS (SELECT l_partkey, avg(l_quantity) AS aq FROM lineitem GROUP BY 1)
-        |SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
-        |  count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN part p ON l.l_partkey = p.p_partkey
-        |JOIN a ON l.l_partkey = a.l_partkey
-        |WHERE p.p_brand = 'Brand#11' AND l.l_quantity < 0.2 * a.aq""".stripMargin,
-    "q_sql_q4" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders o
-        |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01' AND o.o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
-        |GROUP BY 1""".stripMargin,
-    "q_sql_q14" ->
-      """SELECT round(100.0 *
-        |  CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2)) END) AS DOUBLE) /
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS DOUBLE), 6)
-        |  AS promo_revenue_pct,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
-    "q_sql_q15" ->
-      """WITH r AS (
-        |  SELECT l_suppkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, CAST(rev AS DOUBLE) AS total_revenue
-        |FROM r JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE rev = (SELECT max(rev) FROM r)""".stripMargin,
-    "q_sql_q19" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#22' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#33' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q_sql_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  EXTRACT(year FROM l_shipdate) AS l_year,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND ((n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
-        |    OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18'))
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q_sql_q8" ->
-      """SELECT EXTRACT(year FROM o_orderdate) AS o_year,
-        |  round(CAST(SUM(CASE WHEN n1.n_name = 'NATION_3'
-        |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2)) END) AS DOUBLE) /
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS DOUBLE), 6)
-        |    AS mkt_share,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |WHERE p_type = 'PROMO'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND EXISTS (SELECT 1 FROM customer c
-        |              JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-        |              JOIN region ON n2.n_regionkey = r_regionkey
-        |              WHERE c.c_custkey = o_custkey AND r_name = 'EUROPE')
-        |GROUP BY 1""".stripMargin,
-    "q_sql_q9" ->
-      """SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
-        |  CAST(SUM(2 * CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))
-        |         - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / 2.0
-        |    AS sum_profit,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%widget%'
-        |GROUP BY 1, 2""".stripMargin,
-    "q_sql_q11" ->
-      """WITH v AS (
-        |  SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS val
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (SELECT s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |                      WHERE n_name IN ('NATION_1','NATION_2','NATION_3'))
-        |  GROUP BY 1)
-        |SELECT l_partkey AS part_key, CAST(val AS DOUBLE) AS value
-        |FROM v WHERE val * 1000 > (SELECT SUM(val) FROM v)""".stripMargin,
-    "q_sql_q12" ->
-      """SELECT CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY THEN 'LATE' ELSE 'ONTIME' END AS ship_band,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1""".stripMargin,
-    "q_sql_q13" ->
-      """WITH c_orders AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '4-NOT SPECIFIED'
-        |  GROUP BY 1)
-        |SELECT c_count, count(*) AS custdist FROM c_orders GROUP BY 1""".stripMargin,
-    "q_sql_q16" ->
-      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#11' AND p_type NOT LIKE 'MEDIUM%'
-        |  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 2000.0)
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q_sql_q20" ->
-      """WITH agg AS (
-        |  SELECT l_suppkey, l_partkey,
-        |    SUM(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |        THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS q96,
-        |    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qall
-        |  FROM lineitem
-        |  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-        |  GROUP BY 1, 2)
-        |SELECT s_suppkey, s_name FROM supplier
-        |WHERE s_suppkey IN (SELECT l_suppkey FROM agg WHERE q96 * 2 > qall)""".stripMargin,
-    "q_sql_q21" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY 1""".stripMargin,
-    "q_sql_q22" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, c_custkey % 7 AS cntrycode, CAST(c_acctbal AS DECIMAL(18,2)) AS bal
-        |  FROM customer WHERE c_custkey % 7 IN (1, 2, 4)),
-        |stats AS (SELECT SUM(bal) AS s, count(*) AS n FROM cust WHERE bal > 0)
-        |SELECT cntrycode, count(*) AS numcust, CAST(SUM(bal) AS DOUBLE) AS totacctbal
-        |FROM cust, stats
-        |WHERE bal * n > s
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '1999-01-01')
-        |GROUP BY 1""".stripMargin,
-    "q_min_cost_supplier" ->
-      """WITH m AS (SELECT l_partkey, min(l_extendedprice) AS min_price FROM lineitem GROUP BY 1),
-        |b AS (SELECT l.l_partkey, m.min_price, min(l.l_suppkey) AS supp_key
-        |      FROM lineitem l JOIN m ON l.l_partkey = m.l_partkey AND l.l_extendedprice = m.min_price
-        |      GROUP BY 1, 2)
-        |SELECT b.l_partkey AS part_key, p_brand, s_name, min_price
-        |FROM b JOIN part ON b.l_partkey = p_partkey
-        |JOIN supplier ON b.supp_key = s_suppkey""".stripMargin,
-    "q_profile" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS o_totalprice,
-        |             o_orderpriority FROM orders)
-        |SELECT 'o_orderkey' AS col_name, count(*) AS n_rows,
-        |  count(*) - count(o_orderkey) AS n_nulls,
-        |  count(DISTINCT o_orderkey) AS n_distinct,
-        |  CAST(min(o_orderkey) AS VARCHAR) AS min_s, CAST(max(o_orderkey) AS VARCHAR) AS max_s
-        |FROM b
-        |UNION ALL
-        |SELECT 'o_custkey', count(*), count(*) - count(o_custkey),
-        |  count(DISTINCT o_custkey),
-        |  CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR) FROM b
-        |UNION ALL
-        |SELECT 'o_orderstatus', count(*), count(*) - count(o_orderstatus),
-        |  count(DISTINCT o_orderstatus),
-        |  CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR) FROM b
-        |UNION ALL
-        |SELECT 'o_totalprice', count(*), count(*) - count(o_totalprice),
-        |  count(DISTINCT o_totalprice),
-        |  CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR) FROM b
-        |UNION ALL
-        |SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-        |  count(DISTINCT o_orderpriority),
-        |  CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR) FROM b""".stripMargin,
-    "q_dq_checks" ->
-      """WITH a AS (
-        |  SELECT
-        |    count(*) - count(DISTINCT o_orderkey) AS dup,
-        |    count(*) - count(o_custkey) AS nullck,
-        |    CAST(sum(CASE WHEN o_orderstatus NOT IN ('O','F','P') THEN 1 ELSE 0 END) AS BIGINT) AS dom,
-        |    CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS price,
-        |    CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '1990-01-01'
-        |              OR o_orderdate >= TIMESTAMP '2010-01-01' THEN 1 ELSE 0 END) AS BIGINT) AS rng
-        |  FROM orders),
-        |orphans AS (
-        |  SELECT count(*) AS v FROM lineitem
-        |  WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)),
-        |c AS (
-        |  SELECT 'orderkey_unique' AS check_name, dup AS violations FROM a
-        |  UNION ALL SELECT 'custkey_complete', nullck FROM a
-        |  UNION ALL SELECT 'status_domain', dom FROM a
-        |  UNION ALL SELECT 'totalprice_positive', price FROM a
-        |  UNION ALL SELECT 'orderdate_range', rng FROM a
-        |  UNION ALL SELECT 'lineitem_ref_integrity', v FROM orphans)
-        |SELECT check_name, violations, violations = 0 AS passed FROM c""".stripMargin,
-    "q_runs" ->
-      """WITH x AS (
-        |  SELECT user_id, event_type,
-        |    row_number() OVER w AS rn,
-        |    CASE WHEN lag(event_type) OVER w IS NULL
-        |           OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS brk
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |y AS (
-        |  SELECT user_id, event_type, rn,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY rn
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-        |  FROM x)
-        |SELECT user_id, event_type, count(*) AS run_len,
-        |  CAST(min(rn) AS BIGINT) AS start_pos
-        |FROM y GROUP BY user_id, event_type, run""".stripMargin,
-    "q_hhi" ->
-      """WITH j AS (
-        |  SELECT p_brand, l_suppkey FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |c AS (SELECT p_brand, l_suppkey, count(*) AS n FROM j GROUP BY 1, 2),
-        |a AS (SELECT p_brand, count(*) AS n_members,
-        |        CAST(sum(n) AS BIGINT) AS tot, CAST(sum(n*n) AS BIGINT) AS sq
-        |      FROM c GROUP BY 1)
-        |SELECT p_brand, n_members,
-        |  round(CAST(sq AS DOUBLE) / (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE)), 6) AS hhi
-        |FROM a""".stripMargin,
-    "q_ab_test" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 15
-        |         THEN 1 ELSE 0 END AS conv
-        |  FROM events GROUP BY 1),
-        |g AS (SELECT
-        |  CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |  CAST(sum(CASE WHEN user_id % 2 = 0 THEN conv ELSE 0 END) AS BIGINT) AS c_a,
-        |  CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |  CAST(sum(CASE WHEN user_id % 2 = 1 THEN conv ELSE 0 END) AS BIGINT) AS c_b
-        | FROM u),
-        |e AS (SELECT n_a, c_a, n_b, c_b,
-        |  CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-        |  CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb,
-        |  (CAST(c_a AS DOUBLE) + CAST(c_b AS DOUBLE)) /
-        |    (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) AS pool
-        | FROM g)
-        |SELECT n_a, c_a, n_b, c_b,
-        |  round(pa, 6) AS rate_a, round(pb, 6) AS rate_b,
-        |  round((pa - pb) / sqrt(pool * (1.0 - pool) *
-        |    (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))), 6) AS z,
-        |  abs((pa - pb) / sqrt(pool * (1.0 - pool) *
-        |    (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))) > 1.96 AS significant
-        |FROM e""".stripMargin,
-    "q_sql_q6" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-        |COUNT(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q_sql_q10" ->
-      """SELECT c_custkey, c_name, n_name,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |AND o_orderdate >= TIMESTAMP '1995-10-01' AND o_orderdate < TIMESTAMP '1996-01-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q_json_extract" ->
-      """SELECT event_type, CAST(SUM(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-        |COUNT(CAST(props->>'k' AS BIGINT)) AS n_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_monthly_revenue" ->
-      """SELECT date_trunc('month', o_orderdate) AS month,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |COUNT(*) AS n_orders
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q_cube" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
-        |COALESCE(l_linestatus, 'ALL') AS l_linestatus, COUNT(*) AS n
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
-        |COALESCE(l_linestatus, 'ALL') AS l_linestatus,
-        |SUM(l_quantity) AS sum_qty, COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""".stripMargin,
-    "q_above_avg" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM (
-        |  SELECT o_orderkey, o_custkey, o_totalprice,
-        |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey) AS cust_sum,
-        |    COUNT(*) OVER (PARTITION BY o_custkey) AS cust_n
-        |  FROM orders) WHERE CAST(o_totalprice AS DECIMAL(18,2)) * cust_n > cust_sum""".stripMargin,
-    "q_range_join" ->
-      """SELECT band, COUNT(*) AS n_orders,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders JOIN (VALUES ('low', 0.0, 150000.0), ('mid', 150000.0, 300000.0),
-        |  ('high', 300000.0, 450000.0), ('extreme', 450000.0, 1e9)) AS bands(band, lo, hi)
-        |ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY band""".stripMargin,
-    "q_percent_rank" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |round(percent_rank() OVER w, 6) AS pr,
-        |round(cume_dist() OVER w, 6) AS cd
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)""".stripMargin,
-    "q_except_all" ->
-      """SELECT custkey, COUNT(*) AS n FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  EXCEPT ALL
-        |  SELECT o_custkey FROM orders WHERE o_totalprice > 300000
-        |) GROUP BY custkey""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(FLOOR(o_totalprice / 25000) AS BIGINT) AS bucket, COUNT(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q_except" ->
-      """SELECT o_custkey AS custkey FROM orders
-        |EXCEPT SELECT o_custkey FROM orders WHERE o_totalprice > 300000""".stripMargin,
-    "q_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT SELECT s_nationkey FROM supplier""".stripMargin,
-    "q_part_brands" ->
-      """SELECT p_brand, COUNT(*) AS n_parts,
-        |round(CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_price,
-        |MAX(p_size) AS max_size
-        |FROM part WHERE p_type LIKE '%AND%'
-        |GROUP BY p_brand""".stripMargin,
-    "q_dedup_exact" ->
-      "SELECT text, MIN(doc_id) AS doc_id FROM documents GROUP BY text",
-    "q_dedup_normalized" ->
-      """SELECT trim(regexp_replace(regexp_replace(lower(text), '[.,;:!?]', '', 'g'), '\s+', ' ', 'g')) AS norm_text,
-        |MIN(doc_id) AS doc_id FROM documents GROUP BY 1""".stripMargin,
-    // dup attribution: identical normalization, identical FNV fingerprint,
-    // per-source share of fingerprint-colliding docs
-    "q_dup_by_source" ->
-      s"""WITH nrm AS (
-         |  SELECT doc_id, source,
-         |    trim(regexp_replace(regexp_replace(lower(text), '[.,;:!?]', '', 'g'), '\\s+', ' ', 'g')) AS k
-         |  FROM documents
-         |), h AS (
-         |  SELECT doc_id, source, ${duckU2S(duckFnvU("k"))} AS hk FROM nrm
-         |), c AS (SELECT hk, COUNT(*) AS cnt FROM h GROUP BY 1)
-         |SELECT source, COUNT(*) AS n_docs,
-         |  CAST(SUM(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-         |  round(CAST(SUM(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / CAST(COUNT(*) AS DOUBLE), 6) AS dup_rate
-         |FROM h JOIN c USING (hk) GROUP BY 1""".stripMargin,
-    "q_distinct_users" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_percentiles" ->
-      """SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med,
-        |round(quantile_cont(value, 0.95), 6) AS p95
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_tfidf" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest($duckToks) AS term FROM documents
-         |), tf AS (
-         |  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
-         |), dfreq AS (
-         |  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-         |)
-         |SELECT doc_id, tf.term, tf, df, rn FROM (
-         |  SELECT doc_id, term, tf,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tf DESC, term) AS rn
-         |  FROM tf) tf JOIN dfreq ON tf.term = dfreq.term
-         |WHERE rn <= 5""".stripMargin,
-    "q_text_stats" ->
-      s"""SELECT doc_id,
-         |CASE WHEN len($duckToks) > 0
-         |  THEN round(CAST(len(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE) / len($duckToks), 6)
-         |  ELSE 0.0 END AS mean_word_len,
-         |CASE WHEN len(text) > 0
-         |  THEN round(CAST(len(text) - len(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / len(text), 6)
-         |  ELSE 0.0 END AS upper_frac
-         |FROM documents""".stripMargin,
-    "q_repetition" ->
-      s"""WITH toksrc AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), bg AS (
-         |  SELECT doc_id, unnest([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS bg
-         |  FROM toksrc WHERE len(w) >= 2
-         |), c AS (
-         |  SELECT doc_id, bg, COUNT(*) AS c FROM bg GROUP BY 1, 2
-         |)
-         |SELECT doc_id, CAST(MAX(c) AS BIGINT) AS top_bigram_n,
-         |  CAST(SUM(c) AS BIGINT) AS n_bigrams,
-         |  round(CAST(MAX(c) AS DOUBLE) / SUM(c), 6) AS top_bigram_frac
-         |FROM c GROUP BY doc_id""".stripMargin,
-    "q_ngram_jaccard" -> duckCappedJaccardSql,
-    "q_jaccard_sweep" -> duckJaccardSweepSql,
-    "q_lang_confusion" -> duckLangConfusion,
-    "q_k_anonymity" ->
-      """SELECT lang, source, count(*) AS n, count(*) < 5 AS at_risk
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-    "q_skew_report" ->
-      """WITH c AS (SELECT user_id, count(*) AS n_rows FROM events GROUP BY 1),
-        |g AS (SELECT sum(n_rows) AS tot FROM c)
-        |SELECT user_id, n_rows,
-        |  round(CAST(n_rows AS DOUBLE) / tot, 6) AS frac,
-        |  CAST(n_rows AS DOUBLE) * CAST(n_rows AS DOUBLE) AS self_join_rows
-        |FROM c, g ORDER BY n_rows DESC, user_id LIMIT 10""".stripMargin,
-    "q_partition_plan" ->
-      """SELECT lang, source, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |  CAST((sum(n_chars) + 16383) // 16384 AS BIGINT) AS files
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-    // exact rank selection: the oracle's one-reducer window replays the
-    // range-sharded global rank; identical div arithmetic for the targets
-    "q_median_select" ->
-      """WITH r AS (
-        |  SELECT o_totalprice AS v,
-        |    ROW_NUMBER() OVER (ORDER BY o_totalprice, o_orderkey) AS rn,
-        |    COUNT(*) OVER () AS n
-        |  FROM orders
-        |)
-        |SELECT CASE WHEN rn = (n + 1) // 2 THEN 'median_lo'
-        |            WHEN rn = (n + 2) // 2 THEN 'median_hi'
-        |            ELSE 'p90' END AS stat,
-        |  CAST(rn AS BIGINT) AS rn, round(v, 6) AS value
-        |FROM r
-        |WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2 OR rn = (n * 9 + 9) // 10""".stripMargin,
-    // grouped exact median: per-lang rank + count windows replay the
-    // range-sharded per-group rank, identical target-rank arithmetic
-    "q_group_median" ->
-      s"""WITH d AS (
-         |  SELECT lang, CAST(len($duckToks) AS BIGINT) AS n_tokens, doc_id
-         |  FROM documents
-         |), r AS (
-         |  SELECT lang, n_tokens,
-         |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_tokens, doc_id) AS rn,
-         |    COUNT(*) OVER (PARTITION BY lang) AS n
-         |  FROM d
-         |)
-         |SELECT lang, CAST(n AS BIGINT) AS n_docs, CAST(rn AS BIGINT) AS rn,
-         |  n_tokens AS median_tokens
-         |FROM r WHERE rn = (n + 1) // 2""".stripMargin,
-    // systematic 1% over the (quality DESC, id) frame; rank replay via the
-    // quality CTE, stride filter identical
-    "q_systematic_sample" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |d AS (
-         |  SELECT doc.doc_id, doc.source, q.quality
-         |  FROM documents doc JOIN dq q ON q.doc_id = doc.doc_id
-         |), r AS (
-         |  SELECT doc_id, source, quality,
-         |    ROW_NUMBER() OVER (ORDER BY quality DESC, doc_id) AS rn
-         |  FROM d
-         |)
-         |SELECT CAST(rn AS BIGINT) AS rn, doc_id, source, quality
-         |FROM r WHERE (rn - 1) % 100 = 0""".stripMargin,
-    // LPT round-robin shard deal: global rank by (tokens DESC, id) dealt
-    // mod 16; the oracle's one-reducer window replays the range-sharded rank
-    "q_shard_balance" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS n_tokens FROM documents
-         |), r AS (
-         |  SELECT n_tokens,
-         |    ROW_NUMBER() OVER (ORDER BY n_tokens DESC, doc_id) AS rn
-         |  FROM d
-         |)
-         |SELECT (rn - 1) % 16 AS shard, COUNT(*) AS n_docs,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-         |FROM r GROUP BY 1""".stripMargin,
-    "q_minhash_lsh"   -> duckShingleCte,
-    "q_dedup_resolve" -> duckResolveCte,
-    // same recursive components; the survivor is the quality-DESC, id-ASC
-    // pick per component (mirrors min(struct(-score, id)))
-    "q_dedup_resolve_best" ->
-      s"""WITH RECURSIVE $duckShingleCtes,
-         |edges AS (SELECT a AS u, b AS v FROM jpairs UNION SELECT b, a FROM jpairs),
-         |walk(id, lbl) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, w.lbl FROM edges e JOIN walk w ON e.v = w.id
-         |),
-         |comp AS (SELECT id, MIN(lbl) AS root FROM walk GROUP BY id),
-         |dq AS ($duckQualitySql),
-         |win AS (
-         |  SELECT root, id AS keep_id FROM (
-         |    SELECT c.root, c.id,
-         |      ROW_NUMBER() OVER (PARTITION BY c.root ORDER BY dq.quality DESC, c.id ASC) AS rn
-         |    FROM comp c JOIN dq ON dq.doc_id = c.id
-         |  ) WHERE rn = 1
-         |)
-         |SELECT c.id, w.keep_id FROM comp c JOIN win w USING (root)""".stripMargin,
-    // components rebuilt via the recursive exact-Jaccard CTE, every doc
-    // rooted (singletons at themselves), split = FNV hash of the ROOT —
-    // so the oracle also proves no near-dup pair straddles a split
-    "q_leakfree_split" ->
-      s"""WITH RECURSIVE $duckShingleCtes,
-         |edges AS (SELECT a AS u, b AS v FROM jpairs UNION SELECT b, a FROM jpairs),
-         |walk(id, lbl) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.u, w.lbl FROM edges e JOIN walk w ON e.v = w.id
-         |),
-         |comp AS (SELECT id, MIN(lbl) AS root FROM walk GROUP BY id),
-         |ass AS (
-         |  SELECT d.doc_id, COALESCE(c.root, d.doc_id) AS root
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-         |), hh AS (
-         |  SELECT doc_id, root, ${duckFnvU("CAST(root AS VARCHAR)")} AS hu FROM ass
-         |), hs AS (
-         |  SELECT doc_id, root, ((${duckU2S("hu")} % 100) + 100) % 100 AS bucket FROM hh
-         |)
-         |SELECT doc_id, root,
-         |  CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM hs""".stripMargin,
-    "q_label_centroids" ->
-      """SELECT label, i - 1 AS dim, COUNT(*) AS n,
-        |round(SUM(CAST(embedding[i] AS DOUBLE)) / COUNT(*), 6) AS centroid
-        |FROM embeddings, generate_series(1, 64) AS g(i)
-        |GROUP BY label, i""".stripMargin,
-    "q_embed_near_dup"      -> duckNearDupSql,
-    "q_embed_near_dup_auto" -> duckNearDupSql,
-    "q_token_count" ->
-      s"""SELECT lang, CAST(SUM(len($duckToks)) AS BIGINT) AS total_tokens, COUNT(*) AS n_docs
-         |FROM documents GROUP BY lang""".stripMargin,
-    // integer power-of-2 bucket twin: same 1 << length(bin(n-1)) closed form
-    "q_length_buckets" ->
-      s"""WITH d AS (SELECT CAST(len($duckToks) AS BIGINT) AS n_tokens FROM documents),
-         |b AS (SELECT n_tokens,
-         |        CASE WHEN n_tokens <= 1 THEN 1
-         |             ELSE (CAST(1 AS BIGINT) << length(bin(n_tokens - 1))) END AS bucket_cap
-         |      FROM d)
-         |SELECT bucket_cap, count(*) AS n_docs,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-         |  CAST(bucket_cap * count(*) - SUM(n_tokens) AS BIGINT) AS padding_waste,
-         |  round(CAST(bucket_cap * count(*) - SUM(n_tokens) AS DOUBLE) /
-         |        CAST(bucket_cap * count(*) AS DOUBLE), 6) AS waste_frac
-         |FROM b GROUP BY bucket_cap""".stripMargin,
-    "q_text_quality" ->
-      s"""SELECT doc_id,
-         |CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0)) AS BIGINT) AS n_tokens,
-         |CAST(len(text) - len(regexp_replace(text, '[.,;:!?]', '', 'g')) AS BIGINT) AS n_punct,
-         |CAST(len(list_filter($duckToks, x -> list_contains(${sqlList(TF.stopwords("en"))}, x))) AS BIGINT) AS n_stop
-         |FROM documents""".stripMargin,
-    "q_lang_id" -> duckLangId,
-    "q_quality_score" -> duckQualitySql,
-    "q_subword_count" ->
-      """SELECT doc_id, CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT) AS n_subwords
-        |FROM documents""".stripMargin,
-    "q_fingerprint" ->
-      """SELECT doc_id,
-        |list_reduce(list_prepend(CAST(5381 AS BIGINT), [CAST(ord(text[i]) AS BIGINT) FOR i IN range(1, len(text)+1)]),
-        |  (a, x) -> (a * 31 + x) % 1000000007) AS fp
-        |FROM documents""".stripMargin,
-    "q_topk_cosine" -> duckTopkSql,
-    "q_ann_lsh" -> duckTopkSql,
-    "q_embed_near_dup_lsh" -> duckNearDupSql,
-    "q_semantic_dedup" -> duckSemanticDedupSql,
-    "q_simhash_pairs" -> duckSimhashSql,
-    "q_stratified_sample" ->
-      s"""WITH h AS (
-         |  SELECT doc_id, lang, ${duckFnvU("CAST(doc_id AS VARCHAR)")} AS hu FROM documents
-         |), hs AS (SELECT doc_id, lang, ${duckU2S("hu")} AS hsv FROM h)
-         |SELECT doc_id, lang FROM hs
-         |WHERE ((hsv % 1000) + 1000) % 1000 <
-         |  CASE lang WHEN 'en' THEN 500 WHEN 'de' THEN 250 WHEN 'fr' THEN 250
-         |            WHEN 'es' THEN 250 WHEN 'zh' THEN 250 ELSE 0 END""".stripMargin,
-    // bottom-k hash reservoir: the oracle replays the identical signed
-    // fnv1a64 order, so per-stratum membership AND rank hash-match
-    "q_hash_reservoir" ->
-      s"""WITH h AS (
-         |  SELECT lang, doc_id, ${duckU2S(duckFnvU("CAST(doc_id AS VARCHAR)"))} AS hs
-         |  FROM documents),
-         |r AS (SELECT lang, doc_id,
-         |        row_number() OVER (PARTITION BY lang ORDER BY hs, doc_id) AS rn
-         |      FROM h)
-         |SELECT lang, doc_id, rn FROM r WHERE rn <= 10""".stripMargin,
-    "q_approx_distinct" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_users_exact, true AS hll_in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-    // KMV Jaccard: bottom-256 signatures per key replayed in signed hash
-    // order; shared-in-union-bottom-k estimator and the exact
-    // distinct-join Jaccard both value-gated
-    "q_kmv_jaccard" ->
-      s"""WITH ev AS (
-         |  SELECT event_type,
-         |    CAST(user_id AS VARCHAR) || '#' || CAST(CAST(ts AS DATE) AS VARCHAR) AS uv
-         |  FROM events
-         |), hu AS (
-         |  SELECT DISTINCT event_type AS t, ${duckFnvU("uv")} AS hu FROM ev
-         |), hs AS (SELECT t, ${duckU2S("hu")} AS h FROM hu),
-         |r AS (
-         |  SELECT t, h, ROW_NUMBER() OVER (PARTITION BY t ORDER BY h) AS rn FROM hs
-         |), bot AS (SELECT t, h FROM r WHERE rn <= 256),
-         |tp AS (
-         |  SELECT x.t AS a, y.t AS b
-         |  FROM (SELECT DISTINCT t FROM hs) x JOIN (SELECT DISTINCT t FROM hs) y
-         |    ON x.t < y.t
-         |), tg AS (
-         |  SELECT a, b, h, MAX(ia) AS ia, MAX(ib) AS ib FROM (
-         |    SELECT tp.a, tp.b, bot.h, 1 AS ia, 0 AS ib FROM tp JOIN bot ON bot.t = tp.a
-         |    UNION ALL
-         |    SELECT tp.a, tp.b, bot.h, 0 AS ia, 1 AS ib FROM tp JOIN bot ON bot.t = tp.b
-         |  ) GROUP BY 1, 2, 3
-         |), u AS (
-         |  SELECT a, b, ia, ib,
-         |    ROW_NUMBER() OVER (PARTITION BY a, b ORDER BY h) AS rn
-         |  FROM tg
-         |), e AS (
-         |  SELECT a, b, CAST(SUM(ia * ib) AS BIGINT) AS kmv_shared,
-         |    COUNT(*) AS kmv_union_k
-         |  FROM u WHERE rn <= 256 GROUP BY 1, 2
-         |), sets AS (
-         |  SELECT DISTINCT event_type AS t, uv AS v FROM ev
-         |), sz AS (SELECT t, COUNT(*) AS n FROM sets GROUP BY 1),
-         |itr AS (
-         |  SELECT s1.t AS a, s2.t AS b, COUNT(*) AS n_inter
-         |  FROM sets s1 JOIN sets s2 ON s1.v = s2.v AND s1.t < s2.t GROUP BY 1, 2
-         |), x AS (
-         |  SELECT tp.a, tp.b, CAST(COALESCE(itr.n_inter, 0) AS BIGINT) AS n_inter,
-         |    CAST(sa.n + sb.n - COALESCE(itr.n_inter, 0) AS BIGINT) AS n_union
-         |  FROM tp JOIN sz sa ON sa.t = tp.a JOIN sz sb ON sb.t = tp.b
-         |  LEFT JOIN itr ON itr.a = tp.a AND itr.b = tp.b
-         |)
-         |SELECT e.a, e.b, kmv_shared, kmv_union_k,
-         |  round(CAST(kmv_shared AS DOUBLE) / CAST(kmv_union_k AS DOUBLE), 6) AS jacc_est,
-         |  n_inter, n_union,
-         |  round(CAST(n_inter AS DOUBLE) / CAST(n_union AS DOUBLE), 6) AS jacc_exact
-         |FROM e JOIN x USING (a, b)""".stripMargin,
-    // AMS F2: nine sign sums replayed from the identical hash parity,
-    // squares and the median-of-9 by exact rank — value-gated, unusual
-    // for a sketch
-    "q_ams_f2" ->
-      s"""WITH k AS (SELECT CAST(user_id AS VARCHAR) AS k FROM events),
-         |rep AS (
-         |  SELECT k.k, g.e FROM k CROSS JOIN (SELECT unnest(range(0, 9)) AS e) g
-         |), h AS (
-         |  SELECT e, ${duckU2S(duckFnvU("('ams' || CAST(e AS VARCHAR) || '#' || k)"))} AS hs
-         |  FROM rep
-         |), s AS (
-         |  SELECT e, SUM(1 - 2 * (((hs % 2) + 2) % 2)) AS se FROM h GROUP BY 1
-         |), est AS (SELECT e, se * se AS est FROM s),
-         |r AS (
-         |  SELECT e, est,
-         |    (SELECT COUNT(*) FROM est e2
-         |     WHERE e2.est < est.est OR (e2.est = est.est AND e2.e < est.e)) AS rk
-         |  FROM est
-         |), x AS (
-         |  SELECT CAST(SUM(c * c) AS BIGINT) AS exact_f2
-         |  FROM (SELECT COUNT(*) AS c FROM events GROUP BY user_id)
-         |), m AS (SELECT CAST(est AS BIGINT) AS ams_f2 FROM r WHERE rk = 4)
-         |SELECT exact_f2, ams_f2,
-         |  round(CAST(ams_f2 - exact_f2 AS DOUBLE) / CAST(exact_f2 AS DOUBLE) * 100.0, 6) AS rel_err_pct
-         |FROM x CROSS JOIN m""".stripMargin,
-    // KMV: full summary replay — the k-th smallest distinct FNV hash per
-    // key in signed order, then the identical one-expression estimate;
-    // below k the sketch IS the exact count
-    "q_kmv_distinct" ->
-      s"""WITH hu AS (
-         |  SELECT DISTINCT event_type, ${duckFnvU("CAST(user_id AS VARCHAR)")} AS hu
-         |  FROM events
-         |), h AS (
-         |  SELECT event_type, ${duckU2S("hu")} AS h FROM hu
-         |), r AS (
-         |  SELECT event_type, h,
-         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
-         |  FROM h
-         |), t AS (
-         |  SELECT event_type, CAST(max(rn) AS BIGINT) AS kmv_k,
-         |    max_by(h, rn) AS h_k
-         |  FROM r WHERE rn <= 256 GROUP BY 1
-         |)
-         |SELECT event_type, kmv_k, h_k,
-         |  CASE WHEN kmv_k < 256 THEN CAST(kmv_k AS DOUBLE)
-         |  ELSE round(255.0 / ((CAST(h_k AS DOUBLE) + 9223372036854775808.0)
-         |    / 18446744073709551616.0), 6) END AS est_distinct
-         |FROM t""".stripMargin,
-    // sketch-merge contract: the merged-rollup estimate must land in the
-    // 5-sigma band around the exact distinct count (estimate bytes are
-    // DataSketches-internal — the CONTRACT is portable, the registers not)
-    "q_hll_rollup" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_users_exact,
-        |  true AS hll_merged_in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-    // merged-KLL contract: p50/p95 from the day-sketch union must sit in
-    // the exact ±5%-rank band (KLL compaction is randomized — values are
-    // not portable, the rank contract is)
-    "q_kll_rollup" ->
-      """SELECT event_type, COUNT(*) AS n, true AS p50_in_band,
-        |  true AS p95_in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-    // theta-intersection contract: exact pairwise distinct-user overlap +
-    // the in-band flag (sketch registers are impl-internal; the estimates
-    // are exact-mode at this scale, so the band is headroom)
-    "q_theta_intersect" ->
-      """WITH d AS (SELECT DISTINCT event_type, user_id FROM events)
-        |SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |  count(*) AS n_exact, true AS theta_in_band
-        |FROM d a JOIN d b
-        |  ON a.user_id = b.user_id AND a.event_type < b.event_type
-        |GROUP BY 1, 2""".stripMargin,
-    "q_approx_percentiles" ->
-      """SELECT event_type, COUNT(*) AS n, true AS p50_in_band, true AS p95_in_band
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_ivf_topk" ->
-      s"""WITH x AS (SELECT * FROM embeddings WHERE vec_id = 0)
-         |SELECT y.vec_id AS vec_id, round($duckCos, 6) AS cos
-         |FROM embeddings y, x WHERE y.label = x.label
-         |ORDER BY cos DESC, y.vec_id LIMIT 20""".stripMargin,
-    // ANN recall replayed value-exactly INCLUDING the training: the
-    // duckIvfCtes chain re-derives seeds, Lloyd rounds, spill postings,
-    // and probe list ranks CTE-for-CTE; exact top-20 = all-pairs cosine
-    // rank, IVF top-20 = the same rank over the deduped union of the 8
-    // probed posting lists; recall = |intersection| / 20
-    "q_ann_recall" ->
-      s"""WITH ${duckIvfCtes(16, 2, 2)},
-         |x AS (SELECT vec_id AS qid, embedding FROM embeddings
-         |      WHERE vec_id < 10),
-         |ex AS (SELECT x.qid, y.vec_id AS did,
-         |         row_number() OVER (PARTITION BY x.qid
-         |           ORDER BY ($duckCos) DESC, y.vec_id) AS rn
-         |       FROM x, embeddings y WHERE y.vec_id <> x.qid),
-         |cand AS (SELECT DISTINCT pl.qid, a.vec_id AS did
-         |         FROM plr pl JOIN asg a ON a.cidx = pl.cidx
-         |         WHERE pl.lrank <= 8 AND a.vec_id <> pl.qid),
-         |iv AS (SELECT qid, did FROM (
-         |         SELECT cd.qid, cd.did,
-         |           row_number() OVER (PARTITION BY cd.qid
-         |             ORDER BY ($duckCos) DESC, cd.did) AS rn
-         |         FROM cand cd
-         |         JOIN embeddings x ON x.vec_id = cd.qid
-         |         JOIN embeddings y ON y.vec_id = cd.did) WHERE rn <= 20),
-         |h AS (SELECT e.qid, count(*) AS n_hit
-         |      FROM (SELECT qid, did FROM ex WHERE rn <= 20) e
-         |      JOIN iv i ON i.qid = e.qid AND i.did = e.did
-         |      GROUP BY 1)
-         |SELECT x.qid, COALESCE(h.n_hit, 0) AS n_hit,
-         |  round(CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / 20.0, 6) AS recall
-         |FROM x LEFT JOIN h ON h.qid = x.qid""".stripMargin,
-    // tile postings replay: identical 32-char non-overlapping tiling,
-    // identical FNV fingerprints, identical [2, 50] document-frequency cap
-    "q_tile_dupes" ->
-      s"""WITH tl AS (
-         |  SELECT DISTINCT doc_id,
-         |    ${duckFnvU("substr(text, CAST((k-1)*32 + 1 AS BIGINT), 32)")} AS fp
-         |  FROM documents, unnest(range(1, len(text) // 32 + 1)) AS u(k)
-         |  WHERE len(text) >= 32),
-         |ok AS (SELECT fp FROM tl GROUP BY fp HAVING count(*) BETWEEN 2 AND 50),
-         |p AS (SELECT doc_id, tl.fp FROM tl JOIN ok ON ok.fp = tl.fp)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-         |FROM p a JOIN p b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-    // group-hash split replay: same fnv('split#' || user) % 16 buckets,
-    // same 12/2/2 carve, same data-derived leak audit
-    "q_leakage_split" ->
-      s"""WITH tg AS (
-         |  SELECT user_id,
-         |    CASE WHEN m < 12 THEN 'train' WHEN m < 14 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM (SELECT user_id,
-         |          CAST(${duckFnvU("('split#' || CAST(user_id AS VARCHAR))")} % 16 AS BIGINT) AS m
-         |        FROM events)),
-         |a AS (SELECT max(k) AS mx FROM
-         |        (SELECT user_id, count(DISTINCT split) AS k FROM tg GROUP BY 1))
-         |SELECT split, count(*) AS n_events, count(DISTINCT user_id) AS n_users,
-         |  (SELECT mx FROM a) = 1 AS leak_free
-         |FROM tg GROUP BY 1""".stripMargin,
-    "q_multimodal_bytes" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |CAST(len(text) AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    "q_decontaminate" -> duckDecontaminateSql,
-    "q_bloom_decontaminate" -> duckDecontaminateSql,
-    // mixture construction replayed in full: token census, binding-stratum
-    // minimum M = min(T_s / p_s), integer thresholds round(p_s*M/T_s*1e6)
-    // (shares are exact binary fractions and the division order matches the
-    // Scala expression, so the doubles are bit-identical), then the FNV
-    // content-hash keep rule. CAST to DOUBLE everywhere — a bare 0.5
-    // literal is DECIMAL in DuckDB and would change the arithmetic.
-    "q_mix_corpus" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang, len($duckToks) AS nt FROM documents
-         |  WHERE lang IN ('en','fr','es','zh','de')
-         |), census AS (
-         |  SELECT lang, sum(nt) AS t FROM tok GROUP BY lang
-         |), mm AS (
-         |  SELECT min(CAST(t AS DOUBLE) /
-         |    (CASE lang WHEN 'en' THEN CAST(0.5 AS DOUBLE) ELSE CAST(0.125 AS DOUBLE) END)) AS m
-         |  FROM census
-         |), thr AS (
-         |  SELECT lang, CAST(round(
-         |    (CASE lang WHEN 'en' THEN CAST(0.5 AS DOUBLE) ELSE CAST(0.125 AS DOUBLE) END)
-         |      * mm.m / CAST(t AS DOUBLE) * 1000000, 0) AS BIGINT) AS th
-         |  FROM census, mm
-         |), hh AS (
-         |  SELECT k.doc_id, k.lang, k.nt, thr.th,
-         |    ${duckFnvU("CAST(k.doc_id AS VARCHAR)")} AS hu
-         |  FROM tok k JOIN thr ON thr.lang = k.lang
-         |), keepd AS (
-         |  SELECT lang, nt FROM (SELECT lang, nt, th, ${duckU2S("hu")} AS hsv FROM hh)
-         |  WHERE ((hsv % 1000000) + 1000000) % 1000000 < th
-         |)
-         |SELECT lang, count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS n_tokens
-         |FROM keepd GROUP BY lang""".stripMargin,
-    "q_curate_corpus" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |train AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 != 0),
-         |keep AS (
-         |  SELECT MIN(doc_id) AS doc_id FROM (
-         |    SELECT doc_id,
-         |      trim(regexp_replace(regexp_replace(lower(text), '[.,;:!?]', '', 'g'), '\\s+', ' ', 'g')) AS k
-         |    FROM train) GROUP BY k
-         |),
-         |q AS (
-         |  SELECT t.doc_id, t.text FROM train t
-         |  JOIN keep USING (doc_id)
-         |  JOIN dq ON t.doc_id = dq.doc_id
-         |  WHERE dq.quality >= 0.6
-         |),
-         |toksrc AS (SELECT doc_id, $duckToks AS w FROM documents),
-         |sh AS (
-         |  SELECT doc_id, list_distinct([array_to_string(w[i:i+4], ' ') FOR i IN range(1, len(w)-3)]) AS shingles
-         |  FROM toksrc WHERE len(w) >= 5
-         |),
-         |bs AS (SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 4 = 0),
-         |contaminated AS (
-         |  SELECT DISTINCT t.doc_id
-         |  FROM (SELECT doc_id, unnest(shingles) AS s FROM sh
-         |        WHERE doc_id IN (SELECT doc_id FROM q)) t
-         |  JOIN bs USING (s)
-         |),
-         |clean AS (
-         |  SELECT doc_id, text FROM q
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-         |),
-         |c AS (
-         |  SELECT doc_id, len($duckToks) AS n_tokens,
-         |    SUM(len($duckToks)) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum_after
-         |  FROM clean
-         |)
-         |SELECT CAST(FLOOR((cum_after - n_tokens) / 2000.0) AS BIGINT) AS pack_id,
-         |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-         |FROM c GROUP BY 1""".stripMargin,
-    "q_top_quality_docs" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |j AS (SELECT d.lang, dq.doc_id, dq.quality
-         |      FROM dq JOIN documents d ON dq.doc_id = d.doc_id)
-         |SELECT lang, doc_id, quality, rn FROM (
-         |  SELECT lang, doc_id, quality,
-         |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY quality DESC, doc_id) AS rn
-         |  FROM j
-         |) WHERE rn <= 5""".stripMargin,
-    "q_oov_rate" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($duckToks) AS tok FROM documents),
-         |vocab AS (
-         |  SELECT tok FROM (
-         |    SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY tok
-         |    ORDER BY cnt DESC, tok LIMIT 20)
-         |),
-         |f AS (
-         |  SELECT t.doc_id, CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END AS oov
-         |  FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
-         |)
-         |SELECT doc_id, COUNT(*) AS n_tokens, CAST(SUM(oov) AS BIGINT) AS n_oov,
-         |  round(CAST(SUM(oov) AS DOUBLE) / COUNT(*), 6) AS oov_frac
-         |FROM f GROUP BY doc_id""".stripMargin,
-    "q_pack_budgeted" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, len($duckToks) AS n_tokens FROM documents
-         |), c AS (
-         |  SELECT doc_id, n_tokens,
-         |    SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum_after
-         |  FROM d
-         |)
-         |SELECT CAST(FLOOR((cum_after - n_tokens) / 2000.0) AS BIGINT) AS pack_id,
-         |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-         |FROM c GROUP BY 1""".stripMargin,
-    "q_train_split" ->
-      s"""WITH f AS (
-         |  SELECT doc_id,
-         |    list_reduce(list_prepend(CAST(5381 AS BIGINT), [CAST(ord(text[i]) AS BIGINT) FOR i IN range(1, len(text)+1)]),
-         |      (a, x) -> (a * 31 + x) % 1000000007) % 100 AS bucket,
-         |    len($duckToks) AS n_tokens
-         |  FROM documents
-         |)
-         |SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-         |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-         |FROM f GROUP BY 1""".stripMargin,
-    // SRM: the train_split hash CTE, chi2 numerator as exact integers via
-    // the LCD trick (w in {80,10,10} -> multipliers {1,8,8}), one division
-    "q_srm_check" ->
-      s"""WITH f AS (
-         |  SELECT doc_id,
-         |    list_reduce(list_prepend(CAST(5381 AS BIGINT), [CAST(ord(text[i]) AS BIGINT) FOR i IN range(1, len(text)+1)]),
-         |      (a, x) -> (a * 31 + x) % 1000000007) % 100 AS bucket
-         |  FROM documents
-         |), s AS (
-         |  SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val'
-         |    ELSE 'test' END AS split, COUNT(*) AS n_docs
-         |  FROM f GROUP BY 1
-         |), t AS (SELECT SUM(n_docs) AS n FROM s),
-         |x AS (
-         |  SELECT s.split, s.n_docs, t.n,
-         |    s.n_docs * 100 - t.n * (CASE WHEN s.split = 'train' THEN 80 ELSE 10 END) AS dev,
-         |    CASE WHEN s.split = 'train' THEN 1 ELSE 8 END AS mult
-         |  FROM s CROSS JOIN t
-         |), g AS (
-         |  SELECT n, SUM(dev * dev * mult) AS num,
-         |    CAST(SUM(CASE WHEN split = 'train' THEN n_docs ELSE 0 END) AS BIGINT) AS n_train,
-         |    CAST(SUM(CASE WHEN split = 'val' THEN n_docs ELSE 0 END) AS BIGINT) AS n_val,
-         |    CAST(SUM(CASE WHEN split = 'test' THEN n_docs ELSE 0 END) AS BIGINT) AS n_test
-         |  FROM x GROUP BY 1
-         |)
-         |SELECT CAST(n AS BIGINT) AS n, n_train, n_val, n_test,
-         |  round(CAST(num AS DOUBLE) / CAST(n * 8000 AS DOUBLE), 6) AS chi2,
-         |  CAST(num AS DOUBLE) / CAST(n * 8000 AS DOUBLE) > 5.991 AS srm_flag
-         |FROM g""".stripMargin,
-    // dense embedding decontamination: identical left-to-right dots
-    // (list_sum comprehension == DotProduct), per-train max, threshold
-    // compared on the UNROUNDED max exactly like the operator
-    "q_semantic_decontaminate" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS tid, max($duckCos) AS mc
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id % 4 != 0 AND y.vec_id % 4 = 0
-         |  GROUP BY 1)
-         |SELECT tid AS vec_id, round(mc, 6) AS max_bench_cos,
-         |  mc >= 0.35 AS contaminated
-         |FROM p""".stripMargin,
-    // the LSH face emits exactly the dense face's contaminated slice with
-    // exact candidate scores (see semanticDecontaminateLshQ) — the oracle
-    // is the dense max-cosine SQL filtered to the 0.45 threshold
-    "q_semantic_decontaminate_lsh" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS tid, max($duckCos) AS mc
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id % 4 != 0 AND y.vec_id % 4 = 0
-         |  GROUP BY 1)
-         |SELECT tid AS vec_id, round(mc, 6) AS max_bench_cos,
-         |  TRUE AS contaminated
-         |FROM p WHERE mc >= 0.45""".stripMargin,
-    "q_fuzzy_decontaminate" ->
-      s"""WITH toksrc AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), sh AS (
-         |  SELECT doc_id, list_distinct([array_to_string(w[i:i+4], ' ') FOR i IN range(1, len(w)-3)]) AS shingles
-         |  FROM toksrc WHERE len(w) >= 5
-         |), b AS (
-         |  SELECT doc_id AS bench_id, shingles AS bsh FROM sh WHERE doc_id % 7 = 0
-         |), x AS (
-         |  SELECT t.doc_id, b.bench_id,
-         |    len(list_intersect(t.shingles, b.bsh)) AS inter,
-         |    len(t.shingles) AS nt, len(b.bsh) AS nb
-         |  FROM sh t CROSS JOIN b WHERE t.doc_id != b.bench_id)
-         |SELECT doc_id, bench_id, round(inter / (nt + nb - inter), 6) AS jaccard
-         |FROM x WHERE round(inter / (nt + nb - inter), 6) >= 0.8""".stripMargin,
-    "q_chunk_docs" ->
-      s"""WITH toksrc AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), t AS (
-         |  SELECT doc_id, w, len(w) AS n FROM toksrc WHERE len(w) > 0
-         |), st AS (
-         |  SELECT doc_id, w, n, unnest(range(0, n, 16)) AS start FROM t)
-         |SELECT doc_id, CAST(start // 16 AS BIGINT) AS chunk_index,
-         |  CAST(least(32, n - start) AS BIGINT) AS chunk_tokens,
-         |  array_to_string(w[start+1:start+32], ' ') AS chunk_text
-         |FROM st""".stripMargin,
-    // Quantization replay: per-vector symmetric int8 codes
-    // (scale = max|v|/127, q_i = round(v_i/scale) — both engines round
-    // half-away-from-zero), BIGINT dot, one (scale·qscale)·dot rescale.
-    "q_ann_quantized" -> duckQuantizedTopkSql(""),
-    "q_ivf_quantized" -> duckQuantizedTopkSql(
-      "WHERE label = (SELECT label FROM embeddings WHERE vec_id = 0)"),
-    // Gopher rules: every threshold is evaluated in integer arithmetic
-    // (cross-multiplied), so the booleans are engine-exact — no float
-    // ratio near a boundary.
-    "q_gopher_filter" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text, $duckToks AS w FROM documents
-         |), m AS (
-         |  SELECT doc_id, len(w) AS words,
-         |    coalesce(list_sum([len(x) FOR x IN w]), 0) AS chars,
-         |    len(text) - len(replace(text, '#', '')) AS hashes,
-         |    (len(text) - len(replace(text, '...', ''))) // 3
-         |      + (len(text) - len(replace(text, '…', ''))) AS dots,
-         |    greatest(len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0]), 1) AS nlines,
-         |    len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0 AND regexp_matches(trim(l), '^[-*•]')]) AS bullets,
-         |    len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0 AND regexp_matches(rtrim(l), '(\\.\\.\\.|…)$$')]) AS ells,
-         |    len([x FOR x IN w IF regexp_matches(x, '[a-z]')]) AS alphaw,
-         |    len(list_intersect(list_distinct(w), ['the','be','to','of','and','that','have','with'])) AS stops
-         |  FROM t)
-         |SELECT doc_id,
-         |  words >= 50 AND words <= 100000 AS f_wc,
-         |  chars >= words*3 AND chars <= words*10 AS f_mwl,
-         |  hashes*10 <= words AND dots*10 <= words AS f_symbol,
-         |  bullets*10 <= nlines*9 AS f_bullet,
-         |  ells*10 <= nlines*3 AS f_ellipsis,
-         |  alphaw*5 >= words*4 AS f_alpha,
-         |  stops >= 2 AS f_stop,
-         |  (words >= 50 AND words <= 100000) AND (chars >= words*3 AND chars <= words*10)
-         |    AND (hashes*10 <= words AND dots*10 <= words)
-         |    AND bullets*10 <= nlines*9 AND ells*10 <= nlines*3
-         |    AND alphaw*5 >= words*4 AND stops >= 2 AS keep
-         |FROM m""".stripMargin,
-    // fnv1a64 bucket: buckets = 4096 is a power of two, so Spark's
-    // pmod(signed, 4096) and the unsigned HUGEINT's % 4096 both select the
-    // low 12 bits — no signed reinterpretation needed. The weight formula is
-    // the ln of the smoothed ratio (one expression shape on both engines)
-    // and per-doc summation is left-to-right in token order (list_reduce ↔
-    // aggregate), keeping the rounded doubles bit-stable.
-    "q_importance_weights" -> s"$duckImportanceCtes\n$duckImportanceSelect",
-    // DSIR selection on top of the importance scores: Gumbel key
-    // g = -ln(-ln(u)) with u = (fnv(id) mod 2^20 + 0.5)/2^20 — the same
-    // content-addressed determinism as q_stratified_sample, so the oracle
-    // replays the full Gumbel-top-k draw.
-    "q_dsir_sample" ->
-      s"""$duckImportanceCtes,
-         |scored AS ($duckImportanceSelect)
-         |SELECT doc_id, llr,
-         |  round(llr - ln(-ln((CAST(${duckFnvU("CAST(doc_id AS VARCHAR)")} % 1048576 AS BIGINT) + 0.5) / 1048576.0)), 6) AS score
-         |FROM scored ORDER BY score DESC, doc_id LIMIT 100""".stripMargin,
-    // chunk layout replayed (stride = chunk → non-overlapping), full windows
-    // only, then the FNV-1a fingerprint recomputed in HUGEINT and reduced to
-    // the signed BIGINT Spark emits
-    "q_chunk_dedup" ->
-      s"""WITH toksrc AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), t AS (
-         |  SELECT doc_id, w, len(w) AS n FROM toksrc WHERE len(w) > 0
-         |), st AS (
-         |  SELECT doc_id, n, w, unnest(range(0, n, 16)) AS start FROM t
-         |), ch AS (
-         |  SELECT doc_id, array_to_string(w[start+1:start+16], ' ') AS chunk_text
-         |  FROM st WHERE least(16, n - start) = 16
-         |), fp AS (
-         |  SELECT doc_id, ${duckU2S(duckFnvU("chunk_text"))} AS chunk_fp FROM ch)
-         |SELECT chunk_fp, count(*) AS n_occurrences,
-         |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS first_doc
-         |FROM fp GROUP BY chunk_fp HAVING count(*) > 1""".stripMargin,
-    "q_dedup_incremental" ->
-      s"""WITH toksrc AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), sh AS (
-         |  SELECT doc_id, list_distinct([array_to_string(w[i:i+4], ' ') FOR i IN range(1, len(w)-3)]) AS shingles
-         |  FROM toksrc WHERE len(w) >= 5
-         |), dup AS (
-         |  SELECT DISTINCT f.doc_id
-         |  FROM sh f JOIN sh c ON f.doc_id % 7 = 0 AND c.doc_id % 7 != 0
-         |  WHERE round(len(list_intersect(f.shingles, c.shingles))
-         |    / (len(f.shingles) + len(c.shingles) - len(list_intersect(f.shingles, c.shingles))), 6) >= 0.8)
-         |SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-         |FROM documents d
-         |WHERE d.doc_id % 7 = 0 AND d.doc_id NOT IN (SELECT doc_id FROM dup)""".stripMargin,
-    // curation v2 replay: dedup keep-set, Gopher A1.1 keep rule (verbatim
-    // from q_gopher_filter), the full hashed-bigram nll chain (verbatim from
-    // q_perplexity, renamed CTEs), the literal band [0, 7.85], the surgical
-    // span rewrite against the benchmark quarter (verbatim from
-    // q_decontaminate_spans, scoped to banded docs), and packing over the
-    // REWRITTEN text — all five stages and their interactions
-    "q_curate_corpus_v2" ->
-      s"""WITH train AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 != 0),
-         |keep AS (
-         |  SELECT MIN(doc_id) AS doc_id FROM (
-         |    SELECT doc_id,
-         |      trim(regexp_replace(regexp_replace(lower(text), '[.,;:!?]', '', 'g'), '\\s+', ' ', 'g')) AS k
-         |    FROM train) GROUP BY k
-         |),
-         |gt AS (
-         |  SELECT tr.doc_id, tr.text, $duckToks AS w FROM train tr JOIN keep USING (doc_id)
-         |), gm AS (
-         |  SELECT doc_id, len(w) AS words,
-         |    coalesce(list_sum([len(x) FOR x IN w]), 0) AS chars,
-         |    len(text) - len(replace(text, '#', '')) AS hashes,
-         |    (len(text) - len(replace(text, '...', ''))) // 3
-         |      + (len(text) - len(replace(text, '…', ''))) AS dots,
-         |    greatest(len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0]), 1) AS nlines,
-         |    len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0 AND regexp_matches(trim(l), '^[-*•]')]) AS bullets,
-         |    len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0 AND regexp_matches(rtrim(l), '(\\.\\.\\.|…)$$')]) AS ells,
-         |    len([x FOR x IN w IF regexp_matches(x, '[a-z]')]) AS alphaw
-         |  FROM gt
-         |), gk AS (
-         |  SELECT doc_id FROM gm
-         |  WHERE (words >= 50 AND words <= 100000) AND (chars >= words*3 AND chars <= words*10)
-         |    AND (hashes*10 <= words AND dots*10 <= words)
-         |    AND bullets*10 <= nlines*9 AND ells*10 <= nlines*3
-         |    AND alphaw*5 >= words*4
-         |),
-         |ptok AS (SELECT doc_id, $duckToks AS w FROM documents),
-         |ppos AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS ord,
-         |    w[i - 1] AS prev, w[i] AS tok, len(w) - 1 AS npos
-         |  FROM ptok, unnest(range(2, len(w) + 1)) AS u(i) WHERE len(w) >= 2
-         |), ppb AS (
-         |  SELECT doc_id, ord, npos, prev || ' ' || tok AS bg, prev FROM ppos
-         |), ppk AS (
-         |  SELECT doc_id, ord, npos,
-         |    CAST(${duckFnvU("bg")} % 16384 AS BIGINT) AS b2,
-         |    CAST(${duckFnvU("prev")} % 16384 AS BIGINT) AS b1
-         |  FROM ppb
-         |), pcb AS (
-         |  SELECT b2 AS b, count(*) AS c FROM ppk WHERE doc_id % 5 = 0 GROUP BY 1
-         |), pcc AS (
-         |  SELECT b1 AS b, count(*) AS c FROM ppk WHERE doc_id % 5 = 0 GROUP BY 1
-         |), pterm AS (
-         |  SELECT ppk.doc_id, ppk.ord, ppk.npos,
-         |    ln(coalesce(pcb.c, 0) + 1.0) - ln(coalesce(pcc.c, 0) + 16384.0) AS t
-         |  FROM ppk LEFT JOIN pcb ON pcb.b = ppk.b2 LEFT JOIN pcc ON pcc.b = ppk.b1
-         |), pnll AS (
-         |  SELECT doc_id, round((-(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list(t ORDER BY ord)), (a, x) -> a + x))) / npos, 6) AS nll
-         |  FROM pterm GROUP BY doc_id, npos
-         |),
-         |banded AS (
-         |  SELECT tr.doc_id, tr.text FROM train tr JOIN gk USING (doc_id)
-         |  LEFT JOIN pnll s ON s.doc_id = tr.doc_id
-         |  WHERE coalesce(s.nll, 0.0) >= 0.0 AND coalesce(s.nll, 0.0) <= 7.85
-         |),
-         |bt AS (
-         |  SELECT doc_id, text, list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS w FROM banded
-         |), benchw AS (
-         |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS w FROM documents WHERE doc_id % 4 = 0
-         |), ssp0 AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    lower(array_to_string(list_slice(w, i + 1, i + 16), ' ')) AS gram
-         |  FROM bt, unnest(range(0, len(w) - 16 + 1)) AS u(i) WHERE len(w) >= 16
-         |), ssp AS (
-         |  SELECT doc_id, pos, ${duckFnvU("gram")} AS hu FROM ssp0
-         |), ssps AS (
-         |  SELECT doc_id, pos, ${duckU2S("hu")} AS span_fp FROM ssp
-         |), bsp0 AS (
-         |  SELECT lower(array_to_string(list_slice(w, i + 1, i + 16), ' ')) AS gram
-         |  FROM benchw, unnest(range(0, len(w) - 16 + 1)) AS u(i) WHERE len(w) >= 16
-         |), bsp AS (
-         |  SELECT ${duckFnvU("gram")} AS hu FROM bsp0
-         |), bfp AS (
-         |  SELECT DISTINCT ${duckU2S("hu")} AS span_fp FROM bsp
-         |), cut AS (
-         |  SELECT s.doc_id, s.pos FROM ssps s JOIN bfp USING (span_fp)
-         |), tok AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS i, w[i + 1] AS tk
-         |  FROM bt, unnest(range(0, len(w))) AS u(i)
-         |  WHERE doc_id IN (SELECT doc_id FROM cut)
-         |), kept AS (
-         |  SELECT tk.doc_id, tk.i, tk.tk FROM tok tk
-         |  WHERE NOT EXISTS (SELECT 1 FROM cut c
-         |    WHERE c.doc_id = tk.doc_id AND tk.i >= c.pos AND tk.i < c.pos + 16)
-         |), rew AS (
-         |  SELECT b.doc_id,
-         |    CASE WHEN b.doc_id IN (SELECT doc_id FROM cut)
-         |         THEN COALESCE(k.t2, '') ELSE b.text END AS rw
-         |  FROM bt b LEFT JOIN (
-         |    SELECT doc_id, string_agg(tk, ' ' ORDER BY i) AS t2 FROM kept GROUP BY doc_id
-         |  ) k ON k.doc_id = b.doc_id
-         |), pc AS (
-         |  SELECT doc_id,
-         |    len(list_filter(string_split_regex(trim(rw), '\\s+'), x -> len(x) > 0)) AS n_tokens,
-         |    SUM(len(list_filter(string_split_regex(trim(rw), '\\s+'), x -> len(x) > 0)))
-         |      OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum_after
-         |  FROM rew
-         |)
-         |SELECT CAST(FLOOR((cum_after - n_tokens) / 2000.0) AS BIGINT) AS pack_id,
-         |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-         |FROM pc GROUP BY 1""".stripMargin,
-    // shuffled packing: the same cumulative-window replay as q_pack_budgeted
-    // but ordered by the content-hash shuffle key — both engines order by
-    // the identical signed 64-bit FNV, so pack boundaries match exactly
-    "q_pack_shuffled" ->
-      s"""WITH s0 AS (
-         |  SELECT 'seed42#' || CAST(doc_id AS VARCHAR) AS hk,
-         |    len($duckToks) AS n_tokens FROM documents
-         |), d AS (
-         |  SELECT ${duckU2S(duckFnvU("hk"))} AS shuffle_key, n_tokens FROM s0
-         |), c AS (
-         |  SELECT shuffle_key, n_tokens,
-         |    SUM(n_tokens) OVER (ORDER BY shuffle_key ROWS UNBOUNDED PRECEDING) AS cum_after
-         |  FROM d
-         |)
-         |SELECT CAST(FLOOR((cum_after - n_tokens) / 2000.0) AS BIGINT) AS pack_id,
-         |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-         |FROM c GROUP BY 1""".stripMargin,
-    // CCNet tercile buckets: the q_perplexity nll chain verbatim, then
-    // NTILE(3) over (nll, doc_id) — Spark's closed-form ntileOf replays SQL
-    // NTILE exactly (proven by q_ntile) — and the per-bucket census
-    "q_ccnet_buckets" ->
-      s"""WITH toksrc AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), pos AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS ord,
-         |    w[i - 1] AS prev, w[i] AS tok, len(w) - 1 AS npos
-         |  FROM toksrc, unnest(range(2, len(w) + 1)) AS u(i) WHERE len(w) >= 2
-         |), pb AS (
-         |  SELECT doc_id, ord, npos, prev || ' ' || tok AS bg, prev FROM pos
-         |), pk AS (
-         |  SELECT doc_id, ord, npos,
-         |    CAST(${duckFnvU("bg")} % 16384 AS BIGINT) AS b2,
-         |    CAST(${duckFnvU("prev")} % 16384 AS BIGINT) AS b1
-         |  FROM pb
-         |), cb AS (
-         |  SELECT b2 AS b, count(*) AS c FROM pk WHERE doc_id % 5 = 0 GROUP BY 1
-         |), cc AS (
-         |  SELECT b1 AS b, count(*) AS c FROM pk WHERE doc_id % 5 = 0 GROUP BY 1
-         |), term AS (
-         |  SELECT pk.doc_id, pk.ord, pk.npos,
-         |    ln(coalesce(cb.c, 0) + 1.0) - ln(coalesce(cc.c, 0) + 16384.0) AS t
-         |  FROM pk LEFT JOIN cb ON cb.b = pk.b2 LEFT JOIN cc ON cc.b = pk.b1
-         |), docs AS (
-         |  SELECT doc_id, round((-(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list(t ORDER BY ord)), (a, x) -> a + x))) / npos, 6) AS nll
-         |  FROM term GROUP BY doc_id, npos
-         |), sc AS (
-         |  SELECT d.doc_id, coalesce(s.nll, 0.0) AS nll, len($duckToks) AS nt
-         |  FROM documents d LEFT JOIN docs s ON s.doc_id = d.doc_id
-         |), tl AS (
-         |  SELECT doc_id, nt,
-         |    CAST(NTILE(3) OVER (ORDER BY nll, doc_id) AS BIGINT) AS tile
-         |  FROM sc
-         |)
-         |SELECT CASE WHEN tile = 1 THEN 'head' WHEN tile = 2 THEN 'middle'
-         |            ELSE 'tail' END AS bucket,
-         |  COUNT(*) AS n_docs, CAST(SUM(nt) AS BIGINT) AS n_tokens
-         |FROM tl GROUP BY 1""".stripMargin,
-    // exact integer census, float only at the surface: H = ln N - Σ c·ln c / N
-    "q_token_entropy" ->
-      s"""WITH tok AS (SELECT lang, unnest($duckToks) AS tok FROM documents),
-         |c AS (SELECT lang, tok, count(*) AS c FROM tok GROUP BY 1, 2)
-         |SELECT lang, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS vocab,
-         |  round(ln(CAST(sum(c) AS DOUBLE))
-         |    - sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)))
-         |      / CAST(sum(c) AS DOUBLE), 6) AS entropy_nats
-         |FROM c GROUP BY 1""".stripMargin,
-    "q_vocab_growth" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($duckToks) AS tok FROM documents),
-         |fs AS (SELECT tok, min(doc_id) AS fd FROM tok GROUP BY 1)
-         |SELECT CAST(th AS BIGINT) AS prefix_docs,
-         |  CAST(sum(CASE WHEN fd < th THEN 1 ELSE 0 END) AS BIGINT) AS vocab
-         |FROM fs, unnest([100, 200, 300, 400, 500]) AS u(th)
-         |GROUP BY 1""".stripMargin,
-    // CM inner-product replay: both sketches rebuilt cell-by-cell, the
-    // row-wise dot products and their min matched value-exactly, next to
-    // the exact Σ cnt_v·cnt_p inner product
-    "q_join_size_est" ->
-      s"""WITH it AS (SELECT CAST(user_id AS VARCHAR) AS item, event_type
-         |            FROM events WHERE event_type IN ('view', 'purchase')),
-         |hs AS (SELECT item, event_type,
-         |         CAST(${duckFnvU("item")} % 64 AS BIGINT) AS b1,
-         |         1 + 2 * CAST(${duckFnvU("(item || '#cm2')")} % 32 AS BIGINT) AS b2
-         |       FROM it),
-         |pr AS (SELECT event_type, i, (b1 + i * b2) % 64 AS bucket
-         |       FROM hs, range(0, 4) AS r(i)),
-         |cells AS (SELECT event_type, i, bucket, count(*) AS c
-         |          FROM pr GROUP BY 1, 2, 3),
-         |dot AS (SELECT a.i, sum(a.c * b.c) AS p
-         |        FROM cells a JOIN cells b
-         |          ON a.i = b.i AND a.bucket = b.bucket
-         |         AND a.event_type = 'view' AND b.event_type = 'purchase'
-         |        GROUP BY 1),
-         |-- every sketch row participates in the min: a row whose bucket
-         |-- sets are disjoint (or an empty side) has product 0, as in the
-         |-- array arithmetic — without this the min skips absent rows
-         |alld AS (SELECT r.i, COALESCE(d.p, 0) AS p
-         |         FROM range(0, 4) AS r(i) LEFT JOIN dot d ON d.i = r.i),
-         |est AS (SELECT CAST(min(p) AS BIGINT) AS cm_est FROM alld),
-         |ex AS (SELECT CAST(COALESCE(sum(v.c * p.c), 0) AS BIGINT) AS n_exact
-         |       FROM (SELECT item, count(*) AS c FROM it
-         |             WHERE event_type = 'view' GROUP BY 1) v
-         |       JOIN (SELECT item, count(*) AS c FROM it
-         |             WHERE event_type = 'purchase' GROUP BY 1) p
-         |         ON p.item = v.item)
-         |SELECT ex.n_exact, est.cm_est, est.cm_est >= ex.n_exact AS over_ok
-         |FROM ex, est""".stripMargin,
-    "q_zone_map" ->
-      """WITH assign AS (
-        |  SELECT l_shipdate,
-        |    CAST(l_orderkey % 64 AS BIGINT) AS f_arrival,
-        |    CAST(year(l_shipdate)*12 + month(l_shipdate) - 1 AS BIGINT) AS f_date,
-        |    CASE WHEN l_shipdate >= TIMESTAMP '1998-01-01'
-        |          AND l_shipdate <  TIMESTAMP '1998-07-01' THEN 1 ELSE 0 END AS hit
-        |  FROM lineitem
-        |), fanned AS (
-        |  SELECT 'arrival' AS layout, f_arrival AS file_id, l_shipdate AS v, hit FROM assign
-        |  UNION ALL
-        |  SELECT 'date_sorted', f_date, l_shipdate, hit FROM assign
-        |), files AS (
-        |  SELECT layout, file_id, count(*) AS rows_in_file,
-        |    min(v) AS mn, max(v) AS mx, sum(hit) AS hits
-        |  FROM fanned GROUP BY 1, 2
-        |)
-        |SELECT layout, count(*) AS n_files,
-        |  count(*) FILTER (WHERE mx >= TIMESTAMP '1998-01-01'
-        |                     AND mn <  TIMESTAMP '1998-07-01') AS files_scanned,
-        |  CAST(COALESCE(sum(rows_in_file) FILTER (WHERE mx >= TIMESTAMP '1998-01-01'
-        |                     AND mn <  TIMESTAMP '1998-07-01'), 0) AS BIGINT) AS rows_scanned,
-        |  CAST(sum(hits) AS BIGINT) AS selected_rows,
-        |  round(CAST(count(*) FILTER (WHERE mx >= TIMESTAMP '1998-01-01'
-        |                     AND mn <  TIMESTAMP '1998-07-01') AS DOUBLE) / count(*), 6) AS scan_frac
-        |FROM files GROUP BY 1""".stripMargin,
-    "q_randomized_response" ->
-      """WITH f AS (
-        |  SELECT (user_id % 10) AS cohort,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS bit,
-        |    ((event_id % 1000000007) * 2654435761) % 1000000007 % 4 AS coin
-        |  FROM events
-        |), rr AS (
-        |  SELECT cohort, bit,
-        |    CASE WHEN coin = 0 THEN 1 - bit ELSE bit END AS reported FROM f
-        |)
-        |SELECT cohort, count(*) AS n,
-        |  CAST(sum(bit) AS BIGINT) AS true_positives,
-        |  CAST(sum(reported) AS BIGINT) AS reported_positives,
-        |  CAST(4*sum(reported) - count(*) AS DOUBLE) / 2 AS debiased_estimate
-        |FROM rr GROUP BY 1""".stripMargin,
-    "q_doc_containment" -> duckContainmentSql,
-    "q_time_split" ->
-      """WITH e AS (SELECT epoch_us(ts) AS us FROM events),
-        |b AS (SELECT min(us) AS mn, max(us) AS mx FROM e),
-        |w AS (SELECT us, mn + (mx - mn + 1) // 3 AS b1,
-        |        mn + ((mx - mn + 1) * 2) // 3 AS b2
-        |      FROM e, b),
-        |a AS (SELECT
-        |  sum(CASE WHEN us < b1 - 21600000000 THEN 1 ELSE 0 END) AS t1,
-        |  sum(CASE WHEN us >= b1 - 21600000000 AND us < b1 THEN 1 ELSE 0 END) AS e1,
-        |  sum(CASE WHEN us >= b1 AND us < b2 THEN 1 ELSE 0 END) AS v1,
-        |  sum(CASE WHEN us < b2 - 21600000000 THEN 1 ELSE 0 END) AS t2,
-        |  sum(CASE WHEN us >= b2 - 21600000000 AND us < b2 THEN 1 ELSE 0 END) AS e2,
-        |  sum(CASE WHEN us >= b2 THEN 1 ELSE 0 END) AS v2
-        |FROM w)
-        |SELECT CAST(1 AS BIGINT) AS fold, CAST(t1 AS BIGINT) AS train_rows,
-        |  CAST(e1 AS BIGINT) AS embargoed_rows, CAST(v1 AS BIGINT) AS val_rows FROM a
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(t2 AS BIGINT), CAST(e2 AS BIGINT),
-        |  CAST(v2 AS BIGINT) FROM a""".stripMargin,
-    // centroid-silhouette replay: centroids rank by the ASSIGNMENT's exact
-    // −2vc+|c|² score (same tie-break); the constant |v|² joins only after
-    // selection, same grouping as the Spark expression — then sqrt/ratio,
-    // per-cluster means to 6dp
-    "q_silhouette" ->
-      """WITH c AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS cemb
-        |  FROM embeddings WHERE vec_id < 10),
-        |s AS (
-        |  SELECT e.vec_id, c.cidx,
-        |    list_sum([CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE) FOR i IN range(1, 65)]) AS vn,
-        |    list_sum([CAST(e.embedding[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) * -2.0
-        |    + list_sum([CAST(c.cemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) AS d
-        |  FROM embeddings e CROSS JOIN c),
-        |r AS (SELECT vec_id, cidx, vn, d,
-        |        row_number() OVER (PARTITION BY vec_id ORDER BY d, cidx) AS rn
-        |      FROM s),
-        |ab AS (SELECT vec_id,
-        |         max(CASE WHEN rn = 1 THEN cidx END) AS list,
-        |         sqrt(greatest(max(CASE WHEN rn = 1 THEN vn + d END), 0)) AS a,
-        |         sqrt(greatest(max(CASE WHEN rn = 2 THEN vn + d END), 0)) AS b
-        |       FROM r WHERE rn <= 2 GROUP BY 1)
-        |SELECT CAST(list AS BIGINT) AS list, count(*) AS n_vecs,
-        |  round(avg(CASE WHEN greatest(a, b) = 0 THEN 0.0
-        |                 ELSE (b - a) / greatest(a, b) END), 6) AS mean_silhouette
-        |FROM ab GROUP BY 1""".stripMargin,
-    // count-min FULL replay: DuckDB rebuilds the 4×64 sketch from every
-    // occurrence (d bucket increments each, double-hashed with power-of-two
-    // moduli so unsigned % == floorMod) and probes min-over-rows — the
-    // estimates match VALUE-exactly, a strictly stronger gate than the
-    // in-band sketch contracts
-    "q_countmin" ->
-      s"""WITH it AS (SELECT CAST(user_id AS VARCHAR) AS item FROM events),
-         |hs AS (SELECT item,
-         |         CAST(${duckFnvU("item")} % 64 AS BIGINT) AS b1,
-         |         1 + 2 * CAST(${duckFnvU("(item || '#cm2')")} % 32 AS BIGINT) AS b2
-         |       FROM it),
-         |pr AS (SELECT item, i, (b1 + i * b2) % 64 AS bucket
-         |       FROM hs, range(0, 4) AS r(i)),
-         |cells AS (SELECT i, bucket, count(*) AS c FROM pr GROUP BY 1, 2),
-         |est AS (SELECT p.item, min(c.c) AS cm_est
-         |        FROM (SELECT DISTINCT item, i, bucket FROM pr) p
-         |        JOIN cells c ON c.i = p.i AND c.bucket = p.bucket
-         |        GROUP BY 1),
-         |ex AS (SELECT item, count(*) AS n_exact FROM it GROUP BY 1),
-         |top AS (SELECT item, n_exact FROM ex ORDER BY n_exact DESC, item LIMIT 20)
-         |SELECT t.item AS user_id, t.n_exact, e.cm_est,
-         |  e.cm_est >= t.n_exact AS over_ok
-         |FROM top t JOIN est e ON e.item = t.item""".stripMargin,
-    // heavy-hitters contract replay: the synthesized Zipf stream is a pure
-    // function of (doc_id, position) — DuckDB rebuilds it, takes the EXACT
-    // census, and expects exactly the guaranteed-heavy rows with both
-    // contract flags true (pmod == unsigned % for the 2^10 modulus)
-    "q_heavy_hitters" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, len($duckToks) AS nt FROM documents
-         |), st AS (
-         |  SELECT CAST(doc_id AS VARCHAR) || '#' || CAST(i AS VARCHAR) AS hk
-         |  FROM d, unnest(range(0, nt)) AS u(i) WHERE nt > 0
-         |), hm AS (
-         |  SELECT CAST(${duckFnvU("hk")} % 1024 AS BIGINT) AS m FROM st
-         |), tk AS (
-         |  SELECT CASE WHEN m < 512 THEN 't0' WHEN m < 768 THEN 't1'
-         |              WHEN m < 896 THEN 't2' WHEN m < 960 THEN 't3'
-         |              WHEN m < 992 THEN 't4' WHEN m < 1008 THEN 't5'
-         |              WHEN m < 1016 THEN 't6'
-         |              ELSE 'cold' || CAST(m - 1016 AS VARCHAR) END AS item
-         |  FROM hm
-         |), nn AS (SELECT count(*) AS n FROM tk),
-         |ex AS (SELECT item, count(*) AS exact_count FROM tk GROUP BY item)
-         |SELECT item, exact_count, true AS under_ok, true AS band_ok
-         |FROM ex, nn WHERE exact_count * 9 > nn.n""".stripMargin,
-    // epoch-upsampling replay: census over the targeted strata, multiplicity
-    // r = share * factor * T / t in the engine's exact float op order,
-    // floor(r) full copies via unnest(range), the fractional copy by the
-    // same FNV(doc_id) mod-resolution rule as q_mix_corpus
-    "q_upsample_epochs" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang, len($duckToks) AS nt FROM documents
-         |  WHERE lang IN ('en','zh')
-         |), census AS (
-         |  SELECT lang, sum(nt) AS t FROM tok GROUP BY lang
-         |), tt AS (
-         |  SELECT sum(t) AS tot FROM census
-         |), rr AS (
-         |  SELECT lang,
-         |    CAST(0.5 AS DOUBLE) * CAST(2.0 AS DOUBLE) * CAST(tt.tot AS DOUBLE) / CAST(t AS DOUBLE) AS r
-         |  FROM census, tt
-         |), par AS (
-         |  SELECT lang, CAST(floor(r) AS BIGINT) AS nfull,
-         |    CAST(round((r - floor(r)) * 1000000, 0) AS BIGINT) AS th
-         |  FROM rr
-         |), hh AS (
-         |  SELECT k.doc_id, k.lang, par.nfull, par.th,
-         |    ${duckFnvU("CAST(k.doc_id AS VARCHAR)")} AS hu
-         |  FROM tok k JOIN par ON par.lang = k.lang
-         |), nn AS (
-         |  SELECT doc_id, lang,
-         |    nfull + CASE WHEN ((hsv % 1000000) + 1000000) % 1000000 < th
-         |                 THEN 1 ELSE 0 END AS n
-         |  FROM (SELECT doc_id, lang, nfull, th, ${duckU2S("hu")} AS hsv FROM hh)
-         |)
-         |SELECT doc_id, lang, CAST(u.c AS BIGINT) AS copy
-         |FROM nn, unnest(range(0, n)) AS u(c)""".stripMargin,
-    // boilerplate-line replay: same synthesized wrapper, line census by
-    // trimmed-lowered FNV fingerprint over non-blank lines, drop lines in
-    // >= 30 distinct docs, re-join kept lines (blank ones included) with
-    // newlines; docs losing no line pass through byte-identically
-    "q_remove_boilerplate" ->
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 10 = 7 THEN text
-         |         ELSE 'NOTICE: auto-generated export from ' || source || chr(10) || chr(10)
-         |           || text || chr(10) || 'contact support at example dot org' END AS raw
-         |  FROM documents
-         |), lpos AS (
-         |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, ln[i] AS line
-         |  FROM (SELECT doc_id, string_split(raw, chr(10)) AS ln FROM p),
-         |    unnest(range(1, len(ln) + 1)) AS u(i)
-         |), nb0 AS (
-         |  SELECT doc_id, pos, lower(trim(line)) AS nline FROM lpos WHERE len(trim(line)) > 0
-         |), nb1 AS (
-         |  SELECT doc_id, pos, ${duckFnvU("nline")} AS hu FROM nb0
-         |), nb AS (
-         |  SELECT doc_id, pos, ${duckU2S("hu")} AS line_fp FROM nb1
-         |), boiler AS (
-         |  SELECT line_fp FROM nb GROUP BY line_fp HAVING count(DISTINCT doc_id) >= 30
-         |), cut AS (
-         |  SELECT nb.doc_id, nb.pos FROM nb JOIN boiler USING (line_fp)
-         |), kept AS (
-         |  SELECT l.doc_id, l.pos, l.line FROM lpos l
-         |  WHERE l.doc_id IN (SELECT doc_id FROM cut)
-         |    AND NOT EXISTS (SELECT 1 FROM cut c
-         |      WHERE c.doc_id = l.doc_id AND c.pos = l.pos)
-         |), agg AS (
-         |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS t2 FROM kept GROUP BY doc_id
-         |)
-         |SELECT p.doc_id,
-         |  CASE WHEN p.doc_id IN (SELECT doc_id FROM cut)
-         |       THEN COALESCE(a.t2, '') ELSE p.raw END AS text
-         |FROM p LEFT JOIN agg a ON a.doc_id = p.doc_id""".stripMargin,
-    // the synthesized PII column is a pure function of doc_id (string
-    // concat + lpad — identical builtins on both engines) and the redaction
-    // chain is TF.redactPii's exact regexes with 'g' — RE2-compatible by
-    // construction (no lookarounds/backreferences)
-    "q_redact_pii" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 2 THEN 'clean note ' || CAST(doc_id AS VARCHAR)
-        |         ELSE 'reach u' || CAST(doc_id AS VARCHAR) || '@mail' || CAST(doc_id % 7 AS VARCHAR)
-        |           || '.org or https://ex' || CAST(doc_id % 5 AS VARCHAR) || '.com/d?id='
-        |           || CAST(doc_id AS VARCHAR) || ' tel +1 (415) 555-0'
-        |           || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || ' end' END AS raw
-        |  FROM documents)
-        |SELECT doc_id, raw,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(raw,
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      'https?://[^\s]+', '<URL>', 'g'),
-        |    '\+?([0-9][()\-\. ]*){6,}[0-9]', '<PHONE>', 'g') AS redacted
-        |FROM p""".stripMargin,
-    "q_kmeans_assign" ->
-      (duckKmeansAssignCte + "\nSELECT vec_id, list FROM a"),
-    "q_ivf_balance" ->
-      (duckKmeansAssignCte +
-        """,
-          |sz AS (SELECT list, count(*) AS n_vecs FROM a GROUP BY 1),
-          |g AS (SELECT sum(n_vecs) AS tot, max(n_vecs) AS mx,
-          |        (SELECT count(*) FROM c) AS k FROM sz)
-          |SELECT list, n_vecs,
-          |  round(CAST(n_vecs AS DOUBLE) / tot, 6) AS frac,
-          |  round(CAST(mx * k AS DOUBLE) / tot, 6) AS imbalance
-          |FROM sz, g""".stripMargin),
-    "q_multimodal_frames" ->
-      """SELECT doc_id AS media_id,
-        |CAST(unnest([i FOR i IN range(0, octet_length(encode(text)) // 1024 + 1, 3)]) AS BIGINT) AS frame_index
-        |FROM documents""".stripMargin,
-    // every stride-1 window regenerated, FNV-fingerprinted in HUGEINT,
-    // reduced to the signed BIGINT Spark emits; repeats = fps in >= 2 docs
-    "q_repeated_spans" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), tt AS (
-         |  SELECT doc_id, w, len(w) AS n FROM t WHERE len(w) >= 16
-         |), sp0 AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    array_to_string(list_slice(w, i + 1, i + 16), ' ') AS gram
-         |  FROM tt, unnest(range(0, n - 16 + 1)) AS u(i)
-         |), sp AS (
-         |  SELECT doc_id, pos, ${duckFnvU("gram")} AS hu FROM sp0
-         |), sps AS (
-         |  SELECT doc_id, pos, ${duckU2S("hu")} AS span_fp FROM sp
-         |), rep AS (
-         |  SELECT span_fp, count(DISTINCT doc_id) AS n_docs FROM sps
-         |  GROUP BY span_fp HAVING count(DISTINCT doc_id) >= 2
-         |)
-         |SELECT s.doc_id, s.pos, s.span_fp, r.n_docs
-         |FROM sps s JOIN rep r USING (span_fp)""".stripMargin,
-    // hashed-bigram LM replayed end to end: target bigram/context bucket
-    // histograms recomputed (pmod == unsigned % for the 2^14 bucket count),
-    // per-position term = ln(c2+1) - ln(c1+B) joined from the histograms,
-    // per-doc summation ordered by position (list ORDER BY ord), negate
-    // then divide — the exact float op order of the engine
-    "q_perplexity" ->
-      s"""WITH toksrc AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), pos AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS ord,
-         |    w[i - 1] AS prev, w[i] AS tok, len(w) - 1 AS npos
-         |  FROM toksrc, unnest(range(2, len(w) + 1)) AS u(i) WHERE len(w) >= 2
-         |), pb AS (
-         |  SELECT doc_id, ord, npos, prev || ' ' || tok AS bg, prev FROM pos
-         |), pk AS (
-         |  SELECT doc_id, ord, npos,
-         |    CAST(${duckFnvU("bg")} % 16384 AS BIGINT) AS b2,
-         |    CAST(${duckFnvU("prev")} % 16384 AS BIGINT) AS b1
-         |  FROM pb
-         |), cb AS (
-         |  SELECT b2 AS b, count(*) AS c FROM pk WHERE doc_id % 5 = 0 GROUP BY 1
-         |), cc AS (
-         |  SELECT b1 AS b, count(*) AS c FROM pk WHERE doc_id % 5 = 0 GROUP BY 1
-         |), term AS (
-         |  SELECT pk.doc_id, pk.ord, pk.npos,
-         |    ln(coalesce(cb.c, 0) + 1.0) - ln(coalesce(cc.c, 0) + 16384.0) AS t
-         |  FROM pk LEFT JOIN cb ON cb.b = pk.b2 LEFT JOIN cc ON cc.b = pk.b1
-         |), docs AS (
-         |  SELECT doc_id, round((-(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list(t ORDER BY ord)), (a, x) -> a + x))) / npos, 6) AS nll
-         |  FROM term GROUP BY doc_id, npos
-         |)
-         |SELECT d.doc_id, coalesce(s.nll, 0.0) AS nll
-         |FROM documents d LEFT JOIN docs s ON s.doc_id = d.doc_id""".stripMargin,
-    // rank-based fractional gate: row_number over (quality DESC, doc_id)
-    // per language + the integer keep rule — no quantile interpolation to
-    // disagree on
-    "q_top_frac_quality" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |r AS (
-         |  SELECT d.doc_id, d.lang, dq.quality AS q,
-         |    ROW_NUMBER() OVER (PARTITION BY d.lang ORDER BY dq.quality DESC, d.doc_id) AS rn,
-         |    COUNT(*) OVER (PARTITION BY d.lang) AS n
-         |  FROM documents d JOIN dq ON dq.doc_id = d.doc_id
-         |)
-         |SELECT doc_id, lang, q FROM r WHERE rn * 10 <= n * 3""".stripMargin,
-    // cross-corpus span removal: train windows whose fingerprint appears in
-    // the benchmark quarter become cuts (ALL occurrences), token kept iff
-    // uncovered, text re-joined; train docs absent from the cut list pass
-    // through with their ORIGINAL text byte-identically (whitespace intact —
-    // only documents that actually lose a span are token-rejoined)
-    "q_decontaminate_spans" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text, list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS w FROM documents WHERE doc_id % 4 != 0
-         |), bt AS (
-         |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS w FROM documents WHERE doc_id % 4 = 0
-         |), sp0 AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    lower(array_to_string(list_slice(w, i + 1, i + 16), ' ')) AS gram
-         |  FROM t, unnest(range(0, len(w) - 16 + 1)) AS u(i) WHERE len(w) >= 16
-         |), sp AS (
-         |  SELECT doc_id, pos, ${duckFnvU("gram")} AS hu FROM sp0
-         |), sps AS (
-         |  SELECT doc_id, pos, ${duckU2S("hu")} AS span_fp FROM sp
-         |), bsp0 AS (
-         |  SELECT lower(array_to_string(list_slice(w, i + 1, i + 16), ' ')) AS gram
-         |  FROM bt, unnest(range(0, len(w) - 16 + 1)) AS u(i) WHERE len(w) >= 16
-         |), bsp AS (
-         |  SELECT ${duckFnvU("gram")} AS hu FROM bsp0
-         |), bfp AS (
-         |  SELECT DISTINCT ${duckU2S("hu")} AS span_fp FROM bsp
-         |), cut AS (
-         |  SELECT s.doc_id, s.pos FROM sps s JOIN bfp USING (span_fp)
-         |), tok AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS i, w[i + 1] AS tk
-         |  FROM t, unnest(range(0, len(w))) AS u(i)
-         |  WHERE doc_id IN (SELECT doc_id FROM cut)
-         |), kept AS (
-         |  SELECT tk.doc_id, tk.i, tk.tk FROM tok tk
-         |  WHERE NOT EXISTS (SELECT 1 FROM cut c
-         |    WHERE c.doc_id = tk.doc_id AND tk.i >= c.pos AND tk.i < c.pos + 16)
-         |)
-         |SELECT t.doc_id,
-         |  CASE WHEN t.doc_id IN (SELECT doc_id FROM cut)
-         |       THEN COALESCE(k.text, '') ELSE t.text END AS text
-         |FROM t LEFT JOIN (
-         |  SELECT doc_id, string_agg(tk, ' ' ORDER BY i) AS text FROM kept GROUP BY doc_id
-         |) k ON k.doc_id = t.doc_id""".stripMargin,
-    // the removal replay: same stride-1 census, first occurrence per fp by
-    // (doc_id, pos), all other occurrences become cuts, token kept iff no
-    // cut covers its index, text re-joined in token order (a doc losing
-    // every token emits ''); docs with NO cuts keep their ORIGINAL text
-    // byte-identically — whitespace intact
-    "q_remove_spans" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text, list_filter(string_split_regex(trim(text), '\\s+'), x -> len(x) > 0) AS w FROM documents
-         |), tt AS (
-         |  SELECT doc_id, w, len(w) AS n FROM t WHERE len(w) >= 16
-         |), sp0 AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |    lower(array_to_string(list_slice(w, i + 1, i + 16), ' ')) AS gram
-         |  FROM tt, unnest(range(0, n - 16 + 1)) AS u(i)
-         |), sp AS (
-         |  SELECT doc_id, pos, ${duckFnvU("gram")} AS hu FROM sp0
-         |), sps AS (
-         |  SELECT doc_id, pos, ${duckU2S("hu")} AS span_fp FROM sp
-         |), rep AS (
-         |  SELECT span_fp FROM sps GROUP BY span_fp HAVING count(DISTINCT doc_id) >= 2
-         |), occ AS (
-         |  SELECT s.doc_id, s.pos, s.span_fp,
-         |    ROW_NUMBER() OVER (PARTITION BY s.span_fp ORDER BY s.doc_id, s.pos) AS rn
-         |  FROM sps s JOIN rep USING (span_fp)
-         |), cut AS (
-         |  SELECT doc_id, pos FROM occ WHERE rn > 1
-         |), tok AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS i, w[i + 1] AS tk
-         |  FROM t, unnest(range(0, len(w))) AS u(i)
-         |  WHERE doc_id IN (SELECT doc_id FROM cut)
-         |), kept AS (
-         |  SELECT tk.doc_id, tk.i, tk.tk FROM tok tk
-         |  WHERE NOT EXISTS (SELECT 1 FROM cut c
-         |    WHERE c.doc_id = tk.doc_id AND tk.i >= c.pos AND tk.i < c.pos + 16)
-         |)
-         |SELECT t.doc_id,
-         |  CASE WHEN t.doc_id IN (SELECT doc_id FROM cut)
-         |       THEN COALESCE(k.text, '') ELSE t.text END AS text
-         |FROM t LEFT JOIN (
-         |  SELECT doc_id, string_agg(tk, ' ' ORDER BY i) AS text FROM kept GROUP BY doc_id
-         |) k ON k.doc_id = t.doc_id""".stripMargin,
-    // each n-gram census rebuilt with unnest + group; tie-break (count DESC,
-    // gram ASC) matches the expression's smallest-gram rule; docs too short
-    // for an n-gram are absent from the census -> COALESCE 0 = the
-    // expression's [0,0,0] return; thresholds in the same integer arithmetic
-    "q_repetition_gopher" -> {
-      def census(n: Int) =
-        s"""SELECT doc_id, cnt * len(gram) AS cov FROM (
-           |    SELECT doc_id, gram, count(*) AS cnt,
-           |      ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY count(*) DESC, gram ASC) AS rn
-           |    FROM (
-           |      SELECT doc_id, array_to_string(list_slice(w, i, i + $n - 1), ' ') AS gram
-           |      FROM t, unnest(range(1, len(w) - $n + 2)) AS u(i)
-           |    ) GROUP BY doc_id, gram
-           |  ) WHERE rn = 1""".stripMargin
-      s"""WITH t AS (
-         |  SELECT doc_id, $duckToks AS w, len(text) AS chars FROM documents
-         |), g2 AS (
-         |  ${census(2)}
-         |), g3 AS (
-         |  ${census(3)}
-         |), g4 AS (
-         |  ${census(4)}
-         |)
-         |SELECT t.doc_id,
-         |  COALESCE(g2.cov, 0) * 5  <= t.chars     AS f_top2,
-         |  COALESCE(g3.cov, 0) * 50 <= t.chars * 9 AS f_top3,
-         |  COALESCE(g4.cov, 0) * 25 <= t.chars * 4 AS f_top4,
-         |  (COALESCE(g2.cov, 0) * 5  <= t.chars AND
-         |   COALESCE(g3.cov, 0) * 50 <= t.chars * 9 AND
-         |   COALESCE(g4.cov, 0) * 25 <= t.chars * 4) AS keep
-         |FROM t
-         |LEFT JOIN g2 ON g2.doc_id = t.doc_id
-         |LEFT JOIN g3 ON g3.doc_id = t.doc_id
-         |LEFT JOIN g4 ON g4.doc_id = t.doc_id""".stripMargin
-    },
-    // Real decoded-pixel features replayed without a codec: the engine
-    // renders each doc as a 24x16 PNG from a closed-form mod-256 pixel
-    // formula, ImageIO-decodes it, and computes channel means + an 8-bin
-    // BT.601 luminance histogram from the raster. PNG is lossless, so this
-    // SQL regenerates the same grid arithmetically; the REAL cast mirrors
-    // the engine's Array[Float] storage (round6 of float-of-double on both
-    // sides).
-    // the three modality verdicts composed: dHash canonical (pixels →
-    // pooled luminance → bit pack → min per cluster), decoded-PCM RMS band,
-    // Gopher A1.1 keep — all replayed arithmetically over the lossless
-    // fixtures, then doc_id-joined exactly like the engine
-    "q_curate_multimodal" ->
-      s"""WITH px AS (
-         |  SELECT d.doc_id, x.x, y.y,
-         |    (CAST((d.doc_id*31 + x.x*7 + y.y*13) % 256 AS BIGINT)*299 +
-         |     CAST((d.doc_id*17 + x.x*11 + y.y*5) % 256 AS BIGINT)*587 +
-         |     CAST((d.doc_id*29 + x.x*3 + y.y*19) % 256 AS BIGINT)*114) // 1000 AS lum
-         |  FROM documents d,
-         |       (SELECT unnest(range(24)) AS x) x,
-         |       (SELECT unnest(range(16)) AS y) y
-         |), blk AS (
-         |  SELECT doc_id, (x*9)//24 AS gx, (y*8)//16 AS gy,
-         |    SUM(lum) AS s, COUNT(*) AS c
-         |  FROM px GROUP BY 1, 2, 3
-         |), bits AS (
-         |  SELECT a.doc_id, CAST(a.gy*8 + a.gx AS BIGINT) AS bitpos
-         |  FROM blk a JOIN blk b ON a.doc_id = b.doc_id AND b.gx = a.gx + 1 AND b.gy = a.gy
-         |  WHERE a.gx < 8 AND b.s * a.c > a.s * b.c
-         |), hv AS (
-         |  SELECT d.doc_id,
-         |    CAST(COALESCE(SUM(CASE WHEN bitpos >= 32 THEN CAST(1 AS BIGINT) << (bitpos - 32) END), 0) AS HUGEINT)
-         |      * 4294967296 +
-         |    CAST(COALESCE(SUM(CASE WHEN bitpos < 32 THEN CAST(1 AS BIGINT) << bitpos END), 0) AS HUGEINT) AS hu
-         |  FROM (SELECT DISTINCT doc_id FROM px) d
-         |  LEFT JOIN bits USING (doc_id) GROUP BY d.doc_id
-         |), img AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY hu) AS canon FROM hv)
-         |  WHERE doc_id = canon
-         |), ah AS (
-         |  SELECT doc_id,
-         |    ${duckFnvU("('aud|' || CAST(doc_id AS VARCHAR))")} AS seed
-         |  FROM documents
-         |), ap AS (
-         |  SELECT doc_id, CAST(seed % 65536 AS BIGINT) AS s0,
-         |    1 + CAST((seed // 65536) % 32749 AS BIGINT) AS step
-         |  FROM ah
-         |), asm AS (
-         |  SELECT doc_id, ((s0 + step * t) % 65536) - 32768 AS v
-         |  FROM ap, unnest(range(0, 800)) AS u(t)
-         |), aud AS (
-         |  SELECT doc_id, sqrt(CAST(SUM(v * v) AS DOUBLE) / COUNT(*)) AS rms
-         |  FROM asm GROUP BY doc_id
-         |  HAVING rms >= 18910 AND rms <= 18930
-         |), gt AS (
-         |  SELECT doc_id, text, $duckToks AS w FROM documents
-         |), gm AS (
-         |  SELECT doc_id, len(w) AS words,
-         |    coalesce(list_sum([len(x) FOR x IN w]), 0) AS chars,
-         |    len(text) - len(replace(text, '#', '')) AS hashes,
-         |    (len(text) - len(replace(text, '...', ''))) // 3
-         |      + (len(text) - len(replace(text, '…', ''))) AS dots,
-         |    greatest(len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0]), 1) AS nlines,
-         |    len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0 AND regexp_matches(trim(l), '^[-*•]')]) AS bullets,
-         |    len([l FOR l IN string_split(text, chr(10)) IF len(trim(l)) > 0 AND regexp_matches(rtrim(l), '(\\.\\.\\.|…)$$')]) AS ells,
-         |    len([x FOR x IN w IF regexp_matches(x, '[a-z]')]) AS alphaw
-         |  FROM gt
-         |), gk AS (
-         |  SELECT doc_id FROM gm
-         |  WHERE (words >= 50 AND words <= 100000) AND (chars >= words*3 AND chars <= words*10)
-         |    AND (hashes*10 <= words AND dots*10 <= words)
-         |    AND bullets*10 <= nlines*9 AND ells*10 <= nlines*3
-         |    AND alphaw*5 >= words*4
-         |)
-         |SELECT img.doc_id, round(aud.rms, 6) AS rms
-         |FROM img JOIN aud USING (doc_id) JOIN gk USING (doc_id)""".stripMargin,
-    // closed-form container constants — the engine must recover them by
-    // actually parsing the RIFF/WAVE bytes it generated
-    "q_audio_meta" ->
-      """SELECT doc_id, 8000 AS sample_rate, 1 AS channels,
-        |  16 AS bits_per_sample, CAST(800 AS BIGINT) AS n_samples,
-        |  CAST(100000 AS BIGINT) AS duration_us, TRUE AS decoded
-        |FROM documents""".stripMargin,
-    // the sawtooth PCM replayed arithmetically: seed from FNV-1a("aud|id"),
-    // s[t] = ((s0 + step*t) mod 2^16) - 2^15; features are exact integer
-    // sums with one IEEE division (+ sqrt) at the end
-    "q_audio_features" ->
-      s"""WITH h AS (
-         |  SELECT doc_id,
-         |    ${duckFnvU("('aud|' || CAST(doc_id AS VARCHAR))")} AS seed
-         |  FROM documents
-         |), p AS (
-         |  SELECT doc_id, CAST(seed % 65536 AS BIGINT) AS s0,
-         |    1 + CAST((seed // 65536) % 32749 AS BIGINT) AS step
-         |  FROM h
-         |), s AS (
-         |  SELECT doc_id, t, ((s0 + step * t) % 65536) - 32768 AS v
-         |  FROM p, unnest(range(0, 800)) AS u(t)
-         |), z AS (
-         |  SELECT doc_id, t, v,
-         |    lag(v) OVER (PARTITION BY doc_id ORDER BY t) AS pv
-         |  FROM s
-         |)
-         |SELECT doc_id, COUNT(*) AS n_samples, MAX(abs(v)) AS peak,
-         |  CAST(SUM(CASE WHEN pv IS NOT NULL AND ((v >= 0) <> (pv >= 0))
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings,
-         |  round(sqrt(CAST(SUM(v * v) AS DOUBLE) / COUNT(*)), 6) AS rms,
-         |  round(CAST(SUM(v) AS DOUBLE) / COUNT(*), 6) AS mean
-         |FROM z GROUP BY doc_id""".stripMargin,
-    "q_image_features" ->
-      """WITH px AS (
-        |  SELECT d.doc_id,
-        |    CAST((d.doc_id*31 + x.x*7 + y.y*13) % 256 AS INTEGER) AS r,
-        |    CAST((d.doc_id*17 + x.x*11 + y.y*5) % 256 AS INTEGER) AS g,
-        |    CAST((d.doc_id*29 + x.x*3 + y.y*19) % 256 AS INTEGER) AS b
-        |  FROM documents d,
-        |       (SELECT unnest(range(24)) AS x) x,
-        |       (SELECT unnest(range(16)) AS y) y
-        |), lb AS (
-        |  SELECT doc_id, r, g, b,
-        |    ((r*299 + g*587 + b*114) // 1000) * 8 // 256 AS bin
-        |  FROM px
-        |)
-        |SELECT doc_id,
-        |  round(CAST(CAST(CAST(sum(r) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS mean_r,
-        |  round(CAST(CAST(CAST(sum(g) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS mean_g,
-        |  round(CAST(CAST(CAST(sum(b) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS mean_b,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=0 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h0,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=1 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h1,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=2 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h2,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=3 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h3,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=4 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h4,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=5 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h5,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=6 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h6,
-        |  round(CAST(CAST(CAST(sum(CASE WHEN bin=7 THEN 1 ELSE 0 END) AS DOUBLE)/384.0 AS REAL) AS DOUBLE), 6) AS h7
-        |FROM lb GROUP BY doc_id""".stripMargin,
-    // FNV-1a replicated in DuckDB: HUGEINT arithmetic mod 2^64 for the
-    // wrapping multiply; byte xor touches only the low 8 bits so it runs as
-    // BIGINT xor on (h % 256). Valid because the corpus is ASCII
-    // (octet_length == len, asserted by q_multimodal_bytes matching), so
-    // ord(char) == byte. Verifies the decode-stub plumbing end to end:
-    // width/height are floorMod of the signed/shifted hash.
-    "q_multimodal_meta" ->
-      """WITH h AS (
-        |  SELECT doc_id, octet_length(encode(text)) AS nb, list_reduce(
-        |    list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |      [CAST(ord(text[i]) AS HUGEINT) FOR i IN range(1, len(text)+1)]),
-        |    (a, b) -> ((a - (a % 256) + xor(CAST(a % 256 AS BIGINT), CAST(b AS BIGINT))) * 1099511628211) % 18446744073709551616
-        |  ) AS hu
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id, nb, hu,
-        |    CASE WHEN hu >= 9223372036854775808 THEN CAST(hu - 18446744073709551616 AS BIGINT)
-        |         ELSE CAST(hu AS BIGINT) END AS hsv
-        |  FROM h
-        |)
-        |SELECT doc_id AS media_id, 'image/png' AS mime,
-        |  CAST(640 + ((hsv % 1280) + 1280) % 1280 AS INT) AS width,
-        |  CAST(360 + (hu // 4294967296) % 720 AS INT) AS height,
-        |  CAST(nb AS BIGINT) AS n_bytes, hsv AS sha_like
-        |FROM hs""".stripMargin,
-    // paragraph dedup: the q_remove_boilerplate line chain (synthesize →
-    // split → fingerprint non-blank lines) but with the FIRST-KEEPER rule —
-    // row_number over (line_fp ORDER BY doc_id, pos) replays Spark's
-    // min(struct(doc_id, pos)) exactly; docs with no cut pass through raw
-    "q_paragraph_dedup" ->
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    'From the ' || source || ' collection' || chr(10) || text ||
-         |    CASE WHEN doc_id % 4 = 0 THEN chr(10) || 'Subscribe for updates at example dot org' ELSE '' END ||
-         |    chr(10) || 'All rights reserved' AS raw
-         |  FROM documents
-         |), lpos AS (
-         |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, ln[i] AS line
-         |  FROM (SELECT doc_id, string_split(raw, chr(10)) AS ln FROM p),
-         |    unnest(range(1, len(ln) + 1)) AS u(i)
-         |), nb0 AS (
-         |  SELECT doc_id, pos, lower(trim(line)) AS nline FROM lpos WHERE len(trim(line)) > 0
-         |), nb1 AS (
-         |  SELECT doc_id, pos, ${duckFnvU("nline")} AS hu FROM nb0
-         |), nb AS (
-         |  SELECT doc_id, pos, ${duckU2S("hu")} AS line_fp FROM nb1
-         |), rk AS (
-         |  SELECT doc_id, pos,
-         |    row_number() OVER (PARTITION BY line_fp ORDER BY doc_id, pos) AS rn,
-         |    count(*) OVER (PARTITION BY line_fp) AS cnt
-         |  FROM nb
-         |), cut AS (
-         |  SELECT doc_id, pos FROM rk WHERE cnt >= 2 AND rn > 1
-         |), kept AS (
-         |  SELECT l.doc_id, l.pos, l.line FROM lpos l
-         |  WHERE l.doc_id IN (SELECT doc_id FROM cut)
-         |    AND NOT EXISTS (SELECT 1 FROM cut c
-         |      WHERE c.doc_id = l.doc_id AND c.pos = l.pos)
-         |), agg AS (
-         |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS t2 FROM kept GROUP BY doc_id
-         |)
-         |SELECT p.doc_id,
-         |  CASE WHEN p.doc_id IN (SELECT doc_id FROM cut)
-         |       THEN COALESCE(a.t2, '') ELSE p.raw END AS text
-         |FROM p LEFT JOIN agg a ON a.doc_id = p.doc_id""".stripMargin,
-    // dHash replayed with INTEGER arithmetic only: the q_image_features
-    // pixel generator, per-pixel BT.601 luminance, 9x8 block pooling by
-    // floor mapping, adjacent-column comparison by cross-multiplying sums
-    // against counts (no division), bits packed via two BIGINT halves into
-    // one unsigned HUGEINT, reduced to Spark's signed BIGINT
-    "q_image_dhash" ->
-      s"""WITH px AS (
-         |  SELECT d.doc_id, x.x, y.y,
-         |    (CAST((d.doc_id*31 + x.x*7 + y.y*13) % 256 AS BIGINT)*299 +
-         |     CAST((d.doc_id*17 + x.x*11 + y.y*5) % 256 AS BIGINT)*587 +
-         |     CAST((d.doc_id*29 + x.x*3 + y.y*19) % 256 AS BIGINT)*114) // 1000 AS lum
-         |  FROM documents d,
-         |       (SELECT unnest(range(24)) AS x) x,
-         |       (SELECT unnest(range(16)) AS y) y
-         |), blk AS (
-         |  SELECT doc_id, (x*9)//24 AS gx, (y*8)//16 AS gy,
-         |    SUM(lum) AS s, COUNT(*) AS c
-         |  FROM px GROUP BY 1, 2, 3
-         |), bits AS (
-         |  SELECT a.doc_id, CAST(a.gy*8 + a.gx AS BIGINT) AS bitpos
-         |  FROM blk a JOIN blk b ON a.doc_id = b.doc_id AND b.gx = a.gx + 1 AND b.gy = a.gy
-         |  WHERE a.gx < 8 AND b.s * a.c > a.s * b.c
-         |), hv AS (
-         |  SELECT d.doc_id,
-         |    CAST(COALESCE(SUM(CASE WHEN bitpos >= 32 THEN CAST(1 AS BIGINT) << (bitpos - 32) END), 0) AS HUGEINT)
-         |      * 4294967296 +
-         |    CAST(COALESCE(SUM(CASE WHEN bitpos < 32 THEN CAST(1 AS BIGINT) << bitpos END), 0) AS HUGEINT) AS hu
-         |  FROM (SELECT DISTINCT doc_id FROM px) d
-         |  LEFT JOIN bits USING (doc_id) GROUP BY d.doc_id
-         |), h AS (
-         |  SELECT doc_id, ${duckU2S("hu")} AS dhash FROM hv
-         |)
-         |SELECT doc_id, dhash,
-         |  MIN(doc_id) OVER (PARTITION BY dhash) AS canonical_id
-         |FROM h""".stripMargin,
-    // PQ replayed end to end: fixed codebooks (first 16 vectors, sliced
-    // into 8 subspaces), encode = per-subspace argmin of the same
-    // -2·dot + |c|² expansion (list_sum == Spark's l-t-r dot, proven by
-    // q_kmeans_assign), query LUT = exact per-subspace squared distances,
-    // ADC = ordered left-fold over the 8 looked-up entries, shortlist 40
-    // by (adc, vec_id), exact-cosine re-score of only those, final 10
-    "q_pq_topk" -> duckPqSql("", "embeddings"),
-    // IVF + PQ: the q_kmeans_assign chain restricts the corpus to the
-    // query's 3 nearest coarse lists (assignment d = -2·dot + |c|², probe
-    // ranking = full |c − q|² — each replayed in its exact arithmetic
-    // shape), then the identical PQ chain runs over the restricted set
-    "q_ivf_pq" -> duckPqSql(
-      s"""kc AS (
-         |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS kcidx, embedding AS kce
-         |  FROM embeddings WHERE vec_id < 10
-         |), xq AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |asg0 AS (
-         |  SELECT e.vec_id, k.kcidx,
-         |    list_sum([CAST(e.embedding[i] AS DOUBLE) * CAST(k.kce[i] AS DOUBLE) FOR i IN range(1, 65)]) * -2.0
-         |    + list_sum([CAST(k.kce[i] AS DOUBLE) * CAST(k.kce[i] AS DOUBLE) FOR i IN range(1, 65)]) AS d
-         |  FROM embeddings e CROSS JOIN kc k
-         |), asg AS (
-         |  SELECT vec_id, kcidx AS list FROM (
-         |    SELECT vec_id, kcidx, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, kcidx) AS rn
-         |    FROM asg0) WHERE rn = 1
-         |), pl AS (
-         |  SELECT kcidx FROM (
-         |    SELECT k.kcidx,
-         |      list_sum([(CAST(k.kce[i] AS DOUBLE) - CAST(q.qe[i] AS DOUBLE))
-         |              * (CAST(k.kce[i] AS DOUBLE) - CAST(q.qe[i] AS DOUBLE)) FOR i IN range(1, 65)]) AS pd
-         |    FROM kc k, xq q) ORDER BY pd, kcidx LIMIT 3
-         |), restricted AS (
-         |  SELECT e.* FROM embeddings e JOIN asg a ON a.vec_id = e.vec_id
-         |  WHERE a.list IN (SELECT kcidx FROM pl)
-         |),
-         |""".stripMargin, "restricted"),
-    // BM25 with exact-binary constants (k1 = 1.5, b = 0.75 → 2.5, 0.25,
-    // 0.75 all exact doubles, so the SQL literals equal the Scala ones
-    // bit-for-bit); Σ|d| is censused as a BIGINT (order-independent), idf
-    // arguments are integer-derived, and the three per-term scores sum
-    // left-to-right on both engines
-    "q_bm25_topk" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), st AS (
-         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS dl,
-         |    CAST(len(list_filter(w, x -> x = 'spark')) AS DOUBLE) AS tf0,
-         |    CAST(len(list_filter(w, x -> x = 'join')) AS DOUBLE) AS tf1,
-         |    CAST(len(list_filter(w, x -> x = 'window')) AS DOUBLE) AS tf2
-         |  FROM toks
-         |), g AS (
-         |  SELECT CAST(COUNT(*) AS DOUBLE) AS nd,
-         |    CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl,
-         |    CAST(SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-         |    CAST(SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-         |    CAST(SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-         |  FROM st
-         |), c AS (
-         |  SELECT nd, avgdl,
-         |    ln((nd - df0 + CAST(0.5 AS DOUBLE)) / (df0 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) AS idf0,
-         |    ln((nd - df1 + CAST(0.5 AS DOUBLE)) / (df1 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) AS idf1,
-         |    ln((nd - df2 + CAST(0.5 AS DOUBLE)) / (df2 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) AS idf2
-         |  FROM g
-         |), sc AS (
-         |  SELECT s.doc_id,
-         |    c.idf0 * (s.tf0 * CAST(2.5 AS DOUBLE)) / (s.tf0 + CAST(1.5 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * s.dl / c.avgdl)) +
-         |    c.idf1 * (s.tf1 * CAST(2.5 AS DOUBLE)) / (s.tf1 + CAST(1.5 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * s.dl / c.avgdl)) +
-         |    c.idf2 * (s.tf2 * CAST(2.5 AS DOUBLE)) / (s.tf2 + CAST(1.5 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * s.dl / c.avgdl)) AS raw
-         |  FROM st s, c
-         |)
-         |SELECT doc_id, round(raw, 6) AS score FROM sc
-         |ORDER BY raw DESC, doc_id LIMIT 20""".stripMargin,
-    // RRF hybrid retrieval: the q_bm25_topk CTEs at k=50 (top-50 selected
-    // by RAW score like the engine, ranks assigned over the ROUNDED
-    // output like rrfFuse), the q_topk_cosine CTE at k=50 with the query
-    // row excluded, then score(d) = 1/(60+rank) summed text-term-first —
-    // the engine's exact left-fold float order; absent ranks surface as 0
-    "q_hybrid_rrf" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, $duckToks AS w FROM documents
-         |), st AS (
-         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS dl,
-         |    CAST(len(list_filter(w, x -> x = 'spark')) AS DOUBLE) AS tf0,
-         |    CAST(len(list_filter(w, x -> x = 'join')) AS DOUBLE) AS tf1,
-         |    CAST(len(list_filter(w, x -> x = 'window')) AS DOUBLE) AS tf2
-         |  FROM toks
-         |), g AS (
-         |  SELECT CAST(COUNT(*) AS DOUBLE) AS nd,
-         |    CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl,
-         |    CAST(SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-         |    CAST(SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-         |    CAST(SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-         |  FROM st
-         |), c AS (
-         |  SELECT nd, avgdl,
-         |    ln((nd - df0 + CAST(0.5 AS DOUBLE)) / (df0 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) AS idf0,
-         |    ln((nd - df1 + CAST(0.5 AS DOUBLE)) / (df1 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) AS idf1,
-         |    ln((nd - df2 + CAST(0.5 AS DOUBLE)) / (df2 + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)) AS idf2
-         |  FROM g
-         |), sc AS (
-         |  SELECT s.doc_id,
-         |    c.idf0 * (s.tf0 * CAST(2.5 AS DOUBLE)) / (s.tf0 + CAST(1.5 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * s.dl / c.avgdl)) +
-         |    c.idf1 * (s.tf1 * CAST(2.5 AS DOUBLE)) / (s.tf1 + CAST(1.5 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * s.dl / c.avgdl)) +
-         |    c.idf2 * (s.tf2 * CAST(2.5 AS DOUBLE)) / (s.tf2 + CAST(1.5 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE) * s.dl / c.avgdl)) AS raw
-         |  FROM st s, c
-         |), bmtop AS (
-         |  SELECT doc_id AS id, round(raw, 6) AS score FROM sc
-         |  ORDER BY raw DESC, doc_id LIMIT 50
-         |), bmrank AS (
-         |  SELECT id, row_number() OVER (ORDER BY score DESC, id) AS rank_text FROM bmtop
-         |), x AS (
-         |  SELECT * FROM embeddings WHERE vec_id = 0
-         |), ctop AS (
-         |  SELECT y.vec_id AS id, round($duckCos, 6) AS cos
-         |  FROM embeddings y, x WHERE y.vec_id <> 0
-         |  ORDER BY cos DESC, y.vec_id LIMIT 50
-         |), crank AS (
-         |  SELECT id, row_number() OVER (ORDER BY cos DESC, id) AS rank_vec FROM ctop
-         |), fused AS (
-         |  SELECT COALESCE(b.id, v.id) AS id, b.rank_text, v.rank_vec,
-         |    (CASE WHEN b.rank_text IS NULL THEN CAST(0.0 AS DOUBLE)
-         |          ELSE CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(b.rank_text AS DOUBLE)) END)
-         |    + (CASE WHEN v.rank_vec IS NULL THEN CAST(0.0 AS DOUBLE)
-         |            ELSE CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(v.rank_vec AS DOUBLE)) END) AS rrf_raw
-         |  FROM bmrank b FULL OUTER JOIN crank v ON b.id = v.id
-         |)
-         |SELECT id, COALESCE(rank_text, 0) AS rank_text,
-         |  COALESCE(rank_vec, 0) AS rank_vec, round(rrf_raw, 6) AS rrf
-         |FROM fused ORDER BY rrf_raw DESC, id LIMIT 10""".stripMargin,
-    // cluster-balanced UniMax: the q_kmeans_assign CTE labels each doc with
-    // its nearest fixed centroid, then the q_unimax_mix waterline/emission
-    // runs over cluster strata instead of languages (cluster ids compared
-    // as VARCHAR on both sides; capacity column renamed c2 to dodge the
-    // centroid CTE's name)
-    "q_cluster_mix" ->
-      s"""WITH c AS (
-         |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS cemb
-         |  FROM embeddings WHERE vec_id < 10
-         |), s AS (
-         |  SELECT e.vec_id, c.cidx,
-         |    list_sum([CAST(e.embedding[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) * -2.0
-         |    + list_sum([CAST(c.cemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE) FOR i IN range(1, 65)]) AS d
-         |  FROM embeddings e CROSS JOIN c
-         |), asg AS (
-         |  SELECT vec_id AS doc_id, CAST(cidx AS VARCHAR) AS clus FROM (
-         |    SELECT vec_id, cidx, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cidx) AS rn FROM s
-         |  ) WHERE rn = 1
-         |), tok AS (
-         |  SELECT d.doc_id, a.clus, len($duckToks) AS nt
-         |  FROM documents d JOIN asg a USING (doc_id)
-         |), census AS (
-         |  SELECT clus, CAST(sum(nt) AS BIGINT) AS t FROM tok GROUP BY clus
-         |), tt AS (
-         |  SELECT CAST(sum(t) AS BIGINT) AS tot FROM census
-         |), cap AS (
-         |  SELECT clus, t, 2.0 * CAST(t AS DOUBLE) AS c2 FROM census
-         |), ordx AS (
-         |  SELECT clus, t, c2,
-         |    row_number() OVER (ORDER BY c2, clus) AS i,
-         |    count(*) OVER () AS k,
-         |    COALESCE(sum(c2) OVER (ORDER BY c2, clus
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0) AS cb
-         |  FROM cap
-         |), wl AS (
-         |  SELECT th FROM (
-         |    SELECT i, c2, (1.5 * CAST(tt.tot AS DOUBLE) - cb) / (k - i + 1) AS th
-         |    FROM ordx, tt
-         |  ) WHERE th <= c2 ORDER BY i LIMIT 1
-         |), alloc AS (
-         |  SELECT clus, t,
-         |    (CASE WHEN (SELECT th FROM wl) IS NULL THEN c2
-         |          ELSE least(c2, (SELECT th FROM wl)) END) / CAST(t AS DOUBLE) AS r
-         |  FROM ordx
-         |), par AS (
-         |  SELECT clus, CAST(floor(r) AS BIGINT) AS nfull,
-         |    CAST(round((r - floor(r)) * 1000000, 0) AS BIGINT) AS th FROM alloc
-         |), hh AS (
-         |  SELECT d.doc_id, d.clus, d.nt, par.nfull, par.th,
-         |    ${duckFnvU("CAST(d.doc_id AS VARCHAR)")} AS hu
-         |  FROM tok d JOIN par USING (clus)
-         |), nn AS (
-         |  SELECT doc_id, clus, nt,
-         |    nfull + CASE WHEN ((hsv % 1000000) + 1000000) % 1000000 < th
-         |                 THEN 1 ELSE 0 END AS n
-         |  FROM (SELECT doc_id, clus, nt, nfull, th, ${duckU2S("hu")} AS hsv FROM hh)
-         |)
-         |SELECT clus AS cluster, count(*) AS n_rows, CAST(sum(nt) AS BIGINT) AS n_tokens
-         |FROM nn, unnest(range(0, n)) AS u(cp) GROUP BY clus""".stripMargin,
-    // Inverted index: exact df/cf per term; postings replayed as the
-    // row_number-by-doc_id prefix — the bounded aggregate keeps the k
-    // SMALLEST (doc_id) structs, i.e. exactly rn <= k
-    "q_inverted_index" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, unnest($duckToks) AS term FROM documents
-         |), tf AS (
-         |  SELECT term, doc_id, count(*) AS tf FROM tok GROUP BY term, doc_id
-         |), agg AS (
-         |  SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-         |  FROM tf GROUP BY term
-         |), post AS (
-         |  SELECT term, doc_id,
-         |    ROW_NUMBER() OVER (PARTITION BY term ORDER BY doc_id) AS pos
-         |  FROM tf
-         |)
-         |SELECT a.term, a.df, a.cf, p.pos, p.doc_id
-         |FROM agg a JOIN post p USING (term)
-         |WHERE p.pos <= 15""".stripMargin,
-    // α-temperature mixture, α = 1/2: shares w = sqrt(census tokens)
-    // (sqrt is IEEE-correctly-rounded — engine-portable where pow is not),
-    // normalizer Σw as the l-t-r fold in sorted stratum order, then the
-    // q_mix_corpus binding-stratum + integer-threshold + FNV keep rule
-    "q_temperature_mix" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang, len($duckToks) AS nt FROM documents
-         |  WHERE lang IN ('de','en','es','fr','zh')
-         |), census AS (
-         |  SELECT lang, CAST(sum(nt) AS BIGINT) AS t FROM tok GROUP BY lang
-         |), wv AS (
-         |  SELECT lang, t, sqrt(CAST(t AS DOUBLE)) AS w FROM census
-         |), wt AS (
-         |  SELECT list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |    list(w ORDER BY lang)), (a, b) -> a + b) AS wt FROM wv
-         |), pv AS (
-         |  SELECT lang, t, w / wt.wt AS p FROM wv, wt
-         |), mm AS (
-         |  SELECT min(CAST(t AS DOUBLE) / p) AS m FROM pv
-         |), thr AS (
-         |  SELECT lang, CAST(round(p * mm.m / CAST(t AS DOUBLE) * 1000000, 0) AS BIGINT) AS th
-         |  FROM pv, mm
-         |), hh AS (
-         |  SELECT k.doc_id, k.lang, k.nt, thr.th,
-         |    ${duckFnvU("CAST(k.doc_id AS VARCHAR)")} AS hu
-         |  FROM tok k JOIN thr ON thr.lang = k.lang
-         |), keepd AS (
-         |  SELECT lang, nt FROM (SELECT lang, nt, th, ${duckU2S("hu")} AS hsv FROM hh)
-         |  WHERE ((hsv % 1000000) + 1000000) % 1000000 < th
-         |)
-         |SELECT lang, count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS n_tokens
-         |FROM keepd GROUP BY lang""".stripMargin,
-    // UniMax water-filling replay: capacities c = 2.0 * census tokens are
-    // exact integer-valued doubles, so the windowed cumulative sum equals
-    // the engine's left-to-right fold regardless of summation order; the
-    // water level is the FIRST (ascending capacity, lang tiebreak)
-    // equal-share candidate (B - cum)/(k - i + 1) that fits under its own
-    // cap (NULL = budget covers total capacity, all capped); per-stratum
-    // epochs r = min(c, theta)/t, then the q_upsample_epochs emission:
-    // floor(r) full copies via unnest(range) + the FNV fractional copy
-    "q_unimax_mix" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang, len($duckToks) AS nt FROM documents
-         |  WHERE lang IN ('de','en','es','fr','zh')
-         |), census AS (
-         |  SELECT lang, CAST(sum(nt) AS BIGINT) AS t FROM tok GROUP BY lang
-         |), tt AS (
-         |  SELECT CAST(sum(t) AS BIGINT) AS tot FROM census
-         |), cap AS (
-         |  SELECT lang, t, 2.0 * CAST(t AS DOUBLE) AS c FROM census
-         |), ord AS (
-         |  SELECT lang, t, c,
-         |    row_number() OVER (ORDER BY c, lang) AS i,
-         |    count(*) OVER () AS k,
-         |    COALESCE(sum(c) OVER (ORDER BY c, lang
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0) AS cb
-         |  FROM cap
-         |), wl AS (
-         |  SELECT th FROM (
-         |    SELECT i, c, (1.5 * CAST(tt.tot AS DOUBLE) - cb) / (k - i + 1) AS th
-         |    FROM ord, tt
-         |  ) WHERE th <= c ORDER BY i LIMIT 1
-         |), alloc AS (
-         |  SELECT lang, t,
-         |    (CASE WHEN (SELECT th FROM wl) IS NULL THEN c
-         |          ELSE least(c, (SELECT th FROM wl)) END) / CAST(t AS DOUBLE) AS r
-         |  FROM ord
-         |), par AS (
-         |  SELECT lang, CAST(floor(r) AS BIGINT) AS nfull,
-         |    CAST(round((r - floor(r)) * 1000000, 0) AS BIGINT) AS th FROM alloc
-         |), hh AS (
-         |  SELECT d.doc_id, d.lang, d.nt, par.nfull, par.th,
-         |    ${duckFnvU("CAST(d.doc_id AS VARCHAR)")} AS hu
-         |  FROM tok d JOIN par ON par.lang = d.lang
-         |), nn AS (
-         |  SELECT doc_id, lang, nt,
-         |    nfull + CASE WHEN ((hsv % 1000000) + 1000000) % 1000000 < th
-         |                 THEN 1 ELSE 0 END AS n
-         |  FROM (SELECT doc_id, lang, nt, nfull, th, ${duckU2S("hu")} AS hsv FROM hh)
-         |)
-         |SELECT lang, count(*) AS n_rows, CAST(sum(nt) AS BIGINT) AS n_tokens
-         |FROM nn, unnest(range(0, n)) AS u(c) GROUP BY lang""".stripMargin,
-    // MMR: candidates = exact-cosine top-40 (query row excluded), then the
-    // greedy argmax replayed as a recursive CTE — the selected-id list is
-    // the recursion state, each step's marginal score = λ·rel − (1−λ)·
-    // max-pair-cosine against the selection (pair dots via list_zip:
-    // comprehensions cannot capture correlated columns), ties to smallest
-    // id via ORDER BY ... LIMIT 1
-    "q_mmr_rerank" ->
-      s"""WITH RECURSIVE xq AS (
-         |  SELECT [CAST(x.embedding[i] AS DOUBLE) FOR i IN range(1, 65)] AS qv
-         |  FROM embeddings x WHERE x.vec_id = 0
-         |), cand AS (
-         |  SELECT *, sqrt(list_sum(list_transform(vec, v -> v * v))) AS nrm FROM (
-         |    SELECT e.vec_id AS id,
-         |      [CAST(e.embedding[i] AS DOUBLE) FOR i IN range(1, 65)] AS vec,
-         |      list_sum([CAST(e.embedding[i] AS DOUBLE) * q.qv[i] FOR i IN range(1, 65)]) /
-         |      (sqrt(list_sum([CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE) FOR i IN range(1, 65)])) *
-         |       sqrt(list_sum([q.qv[i] * q.qv[i] FOR i IN range(1, 65)]))) AS rel
-         |    FROM embeddings e, xq q WHERE e.vec_id != 0)
-         |  ORDER BY rel DESC, id LIMIT 40
-         |), sel(step, id, mmr, ids) AS (
-         |  SELECT 1, w.id, w.mmr, [w.id] FROM (
-         |    SELECT id, CAST(0.5 AS DOUBLE) * rel - CAST(0.5 AS DOUBLE) * CAST(0 AS DOUBLE) AS mmr
-         |    FROM cand ORDER BY mmr DESC, id LIMIT 1) w
-         |  UNION ALL
-         |  SELECT s.step + 1, w.id, w.mmr, list_append(s.ids, w.id)
-         |  FROM sel s, LATERAL (
-         |    SELECT c.id,
-         |      CAST(0.5 AS DOUBLE) * c.rel - CAST(0.5 AS DOUBLE) * (
-         |        SELECT max(list_sum(list_transform(list_zip(c.vec, p.vec),
-         |            z -> z[1] * z[2])) / (c.nrm * p.nrm))
-         |        FROM cand p WHERE list_contains(s.ids, p.id)) AS mmr
-         |    FROM cand c WHERE NOT list_contains(s.ids, c.id)
-         |    ORDER BY mmr DESC, c.id LIMIT 1) w
-         |  WHERE s.step < 10
-         |)
-         |SELECT step, id AS vec_id, round(mmr, 6) AS mmr FROM sel""".stripMargin,
-    // Budget selection: the greedy quality-priority prefix replayed as ONE
-    // global cumulative window (the oracle may single-thread; the operator
-    // must not) — priority = 6dp quality DESC ≡ the Spark side's negated
-    // ascending key, inclusive running total, strict <= budget cut
-    "q_budget_select" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |tok AS (SELECT doc_id, len($duckToks) AS nt FROM documents),
-         |j AS (
-         |  SELECT d.doc_id, d.quality, CAST(t.nt AS BIGINT) AS n_tokens
-         |  FROM dq d JOIN tok t USING (doc_id)
-         |), c AS (
-         |  SELECT doc_id, quality, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (ORDER BY quality DESC, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-         |  FROM j
-         |)
-         |SELECT doc_id, quality, n_tokens, cum_tokens FROM c
-         |WHERE cum_tokens <= 15000""".stripMargin,
-    // k-NN graph: the bounded aggregate's rows are exactly the
-    // row_number-over-cosine prefix per source vector
-    "q_knn_graph" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 200 AND y.vec_id != x.vec_id
-         |), r AS (
-         |  SELECT src, dst, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM p
-         |)
-         |SELECT src, dst, round(cos, 6) AS cos, rn FROM r WHERE rn <= 5""".stripMargin,
-    "q_hard_negatives" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, x.label AS src_label,
-         |    y.vec_id AS neg, y.label AS neg_label, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 100 AND y.vec_id != x.vec_id AND y.label != x.label
-         |), r AS (
-         |  SELECT src, src_label, neg, neg_label, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, neg) AS rn
-         |  FROM p
-         |)
-         |SELECT src, src_label, neg, neg_label, round(cos, 6) AS cos, rn
-         |FROM r WHERE rn <= 3""".stripMargin,
-    // Datasheet rollup: exact integer census per (source, lang) grouping
-    // set; averages divide two exact BIGINTs, quality spread via min/max —
-    // no float aggregate whose value depends on partition order
-    "q_corpus_datasheet" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |base AS (
-         |  SELECT d.source, d.lang, len($duckToks) AS nt, len(d.text) AS nc, q.quality
-         |  FROM documents d JOIN dq q USING (doc_id)
-         |)
-         |SELECT COALESCE(CAST(source AS VARCHAR), 'ALL') AS source,
-         |  COALESCE(CAST(lang AS VARCHAR), 'ALL') AS lang,
-         |  count(*) AS n_docs,
-         |  CAST(sum(nt) AS BIGINT) AS n_tokens,
-         |  round(CAST(CAST(sum(nc) AS BIGINT) AS DOUBLE) / count(*), 6) AS avg_chars,
-         |  min(quality) AS min_quality,
-         |  max(quality) AS max_quality
-         |FROM base
-         |GROUP BY ROLLUP(source, lang)""".stripMargin,
-    // Outliers: centroid = round(sum/count, 6) per dim (the operator's
-    // quantization contract — exact parity then follows for every distance
-    // because both engines square-difference IDENTICAL inputs l-t-r),
-    // ranked by raw d2 desc with id tiebreak
-    "q_embed_outliers" ->
-      """WITH c AS (
-        |  SELECT label, i, round(SUM(CAST(embedding[i] AS DOUBLE)) / COUNT(*), 6) AS cd
-        |  FROM embeddings, generate_series(1, 64) AS g(i)
-        |  GROUP BY label, i
-        |), cent AS (
-        |  SELECT label, list(cd ORDER BY i) AS cv FROM c GROUP BY label
-        |), d AS (
-        |  SELECT e.vec_id, e.label,
-        |    list_sum([ (CAST(e.embedding[i] AS DOUBLE) - cent.cv[i])
-        |             * (CAST(e.embedding[i] AS DOUBLE) - cent.cv[i]) FOR i IN range(1, 65)]) AS d2
-        |  FROM embeddings e JOIN cent USING (label)
-        |), r AS (
-        |  SELECT label, vec_id, d2,
-        |    ROW_NUMBER() OVER (PARTITION BY label ORDER BY d2 DESC, vec_id) AS rn
-        |  FROM d
-        |)
-        |SELECT label, vec_id, round(d2, 6) AS d2, rn FROM r WHERE rn <= 5""".stripMargin,
-    // Rank calibration: percent_rank is (rn−1)/(n−1) of the global row
-    // number — identical closed form on both engines (q_percent_rank
-    // precedent), partitioned by source over the (quality, doc_id) total order
-    "q_quality_calibrated" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |j AS (
-         |  SELECT d.doc_id, d.source, q.quality
-         |  FROM documents d JOIN dq q USING (doc_id)
-         |)
-         |SELECT doc_id, source, quality,
-         |  round(percent_rank() OVER (PARTITION BY source ORDER BY quality, doc_id), 6) AS q_rank
-         |FROM j""".stripMargin,
-    // source fingerprint: (source, token) census restricted to the global
-    // top-200; smoothed KL contribution per pair from exact counts, top-5
-    // per source ranked on the unrounded term
-    "q_source_fingerprint" ->
-      s"""WITH tk AS (SELECT source, unnest($duckToks) AS tok FROM documents),
-         |stc AS (SELECT source, tok, COUNT(*) AS n_s FROM tk GROUP BY 1, 2),
-         |top AS (
-         |  SELECT tok, SUM(n_s) AS n_g FROM stc GROUP BY 1
-         |  ORDER BY n_g DESC, tok LIMIT 200
-         |), ts AS (
-         |  SELECT source, SUM(n_s) AS t_s
-         |  FROM stc JOIN top USING (tok) GROUP BY 1
-         |), tg AS (SELECT SUM(n_g) AS t_g FROM top),
-         |term AS (
-         |  SELECT stc.source, stc.tok, CAST(stc.n_s AS BIGINT) AS n_s,
-         |    ((stc.n_s + 1) / (ts.t_s + 200.0)) *
-         |      ln(((stc.n_s + 1) / (ts.t_s + 200.0)) / ((top.n_g + 1) / (tg.t_g + 200.0))) AS term
-         |  FROM stc JOIN top USING (tok) JOIN ts USING (source) CROSS JOIN tg
-         |), r AS (
-         |  SELECT source, tok, n_s, round(term, 6) AS kl_term,
-         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY term DESC, tok) AS rn
-         |  FROM term
-         |)
-         |SELECT source, tok, n_s, kl_term, CAST(rn AS BIGINT) AS rn
-         |FROM r WHERE rn <= 5""".stripMargin,
-    // quality~length residuals: the olsTrend moment/closed-form replay on
-    // the global group, residuals from the PUBLISHED (rounded) fit, top-20
-    // by |residual| with id tiebreak
-    "q_quality_residuals" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |d AS (
-         |  SELECT doc.doc_id, doc.n_chars, q.quality
-         |  FROM documents doc JOIN dq q ON q.doc_id = doc.doc_id
-         |), j AS (
-         |  SELECT CAST(n_chars AS DECIMAL(20,0)) AS x,
-         |    CAST(quality AS DECIMAL(19,4)) AS y
-         |  FROM d
-         |), m AS (
-         |  SELECT count(*) AS n, sum(x) AS sx, sum(x*x) AS sxx,
-         |    sum(y) AS sy, sum(y*x) AS sxy
-         |  FROM j
-         |), e AS (
-         |  SELECT CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE) AS num,
-         |    CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) AS dx,
-         |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-         |    CAST(n AS DOUBLE) AS nd
-         |  FROM m
-         |), f AS (
-         |  SELECT round(num / NULLIF(dx, 0), 6) AS slope,
-         |    round((syd - (num / NULLIF(dx, 0)) * sxd) / nd, 6) AS intercept
-         |  FROM e
-         |)
-         |SELECT doc_id, n_chars, quality,
-         |  round(quality - (slope * n_chars + intercept), 6) AS residual
-         |FROM d CROSS JOIN f
-         |ORDER BY abs(round(quality - (slope * n_chars + intercept), 6)) DESC, doc_id
-         |LIMIT 20""".stripMargin,
-    // curriculum interleave: per-source (quality DESC, id) ranks dealt
-    // round-robin across the sorted source census; first 1000 positions
-    "q_curriculum" ->
-      s"""WITH dq AS ($duckQualitySql),
-         |d AS (
-         |  SELECT doc.doc_id, doc.source, q.quality
-         |  FROM documents doc JOIN dq q ON q.doc_id = doc.doc_id
-         |), srcs AS (
-         |  SELECT source, ROW_NUMBER() OVER (ORDER BY source) - 1 AS idx,
-         |    COUNT(*) OVER () AS k
-         |  FROM (SELECT DISTINCT source FROM documents)
-         |), r AS (
-         |  SELECT doc_id, source,
-         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY quality DESC, doc_id) AS rn
-         |  FROM d
-         |)
-         |SELECT CAST((r.rn - 1) * s.k + s.idx AS BIGINT) AS position,
-         |  r.doc_id, r.source, CAST(r.rn AS BIGINT) AS rn
-         |FROM r JOIN srcs s USING (source)
-         |WHERE (r.rn - 1) * s.k + s.idx < 1000""".stripMargin,
-    // Sequence windows: global inclusive prefix sum in doc_id order, then
-    // each doc emits one row per overlapped 512-token window — all-integer
-    // arithmetic, floor-division == `//` on non-negative BIGINTs
-    "q_seq_windows" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS nt FROM documents
-         |), c AS (
-         |  SELECT doc_id, nt,
-         |    CAST(SUM(nt) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |  FROM tok
-         |), s AS (
-         |  SELECT doc_id, nt, cum, cum - nt AS strt FROM c WHERE nt > 0
-         |), e AS (
-         |  SELECT doc_id, nt, cum, strt,
-         |    unnest(range(strt // 512, (cum - 1) // 512 + 1)) AS seq_id
-         |  FROM s
-         |)
-         |SELECT seq_id, doc_id,
-         |  greatest(CAST(0 AS BIGINT), strt - seq_id * 512) AS doc_off,
-         |  least(cum, (seq_id + 1) * 512) - greatest(strt, seq_id * 512) AS n_toks
-         |FROM e""".stripMargin,
-    // Hopping windows: an event at epoch-micros e lands in every window
-    // whose slide-aligned start s satisfies e − size < s <= e — replayed as
-    // an integer range over window indices (epochs positive, so floor
-    // division == `//`)
-    "q_window_hopping" ->
-      """WITH ev AS (
-        |  SELECT epoch_us(ts) AS eu, event_type, value FROM events
-        |), w AS (
-        |  SELECT event_type, value,
-        |    unnest(range((eu - 7200000000) // 1800000000 + 1,
-        |                 eu // 1800000000 + 1)) AS k
-        |  FROM ev
-        |)
-        |SELECT make_timestamp(k * 1800000000) AS win_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM w GROUP BY 1, 2""".stripMargin,
-    // KTable compaction: the single latest record per key, ties to the
-    // larger event_id (the log-offset rule)
-    "q_latest_by_key" ->
-      """SELECT user_id, ts, event_id, event_type, value FROM (
-        |  SELECT user_id, ts, event_id, event_type, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-    // session_window islands: a new session starts at gap >= 30 min
-    // (touching [ts, ts+gap) windows do NOT merge — note >=, where the
-    // window-function sessionize uses >); end = last event + gap
-    "q_session_agg" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000 THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), s AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM x)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |  MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM s GROUP BY user_id, session_seq""".stripMargin,
-    "q_cohort_retention" ->
-      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |f AS (SELECT user_id, MIN(day) AS cohort_day FROM d GROUP BY user_id)
-        |SELECT CAST(cohort_day AS TIMESTAMP) AS cohort_day,
-        |  date_diff('day', cohort_day, day) AS age_days,
-        |  COUNT(DISTINCT user_id) AS n_users
-        |FROM d JOIN f USING (user_id) GROUP BY 1, 2""".stripMargin,
-    // DAU/MAU: exact integer counts, one rounded double ratio; months as
-    // date_trunc TIMESTAMP on both engines (the DATE-contract rule)
-    "q_stickiness" ->
-      """WITH d AS (
-        |  SELECT date_trunc('month', ts) AS month, CAST(ts AS DATE) AS day,
-        |    user_id FROM events
-        |), dau AS (
-        |  SELECT month, day, COUNT(DISTINCT user_id) AS dau FROM d GROUP BY 1, 2
-        |), m AS (
-        |  SELECT month, CAST(SUM(dau) AS BIGINT) AS sum_dau,
-        |    COUNT(*) AS n_days FROM dau GROUP BY 1
-        |), mau AS (
-        |  SELECT date_trunc('month', ts) AS month,
-        |    COUNT(DISTINCT user_id) AS mau FROM events GROUP BY 1
-        |)
-        |SELECT month, sum_dau, n_days, mau,
-        |  round(CAST(sum_dau AS DOUBLE) / CAST(n_days * mau AS DOUBLE), 6) AS stickiness
-        |FROM m JOIN mau USING (month)""".stripMargin,
-    // watermark audit: lateness vs the per-user running max in ARRIVAL
-    // order (event_id), exact micros; p99 via the same interpolated
-    // percentile contract as q_percentiles
-    "q_watermark_audit" ->
-      """WITH e AS (
-        |  SELECT event_type, user_id, event_id, epoch_us(ts) AS us FROM events
-        |), l AS (
-        |  SELECT event_type,
-        |    GREATEST(0, COALESCE(MAX(us) OVER (PARTITION BY user_id
-        |      ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      - us, 0)) AS late_us
-        |  FROM e
-        |)
-        |SELECT event_type, COUNT(*) AS n_events,
-        |  CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-        |  CAST(MAX(late_us) AS BIGINT) AS max_late_us,
-        |  round(quantile_cont(late_us, 0.99), 6) AS p99_late_us
-        |FROM l GROUP BY 1""".stripMargin,
-    // inter-event gap census in power-of-2 second buckets (the psi/l-div
-    // bucket-cap formula), share as one double division
-    "q_gap_histogram" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-        |), g0 AS (
-        |  SELECT us - LAG(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS d
-        |  FROM e
-        |), g AS (SELECT d // 1000000 AS gap_s FROM g0 WHERE d IS NOT NULL),
-        |b AS (
-        |  SELECT CASE WHEN gap_s <= 1 THEN 1
-        |    ELSE (CAST(1 AS BIGINT) << length(bin(gap_s - 1))) END AS gap_cap_s
-        |  FROM g
-        |), c AS (SELECT gap_cap_s, COUNT(*) AS n_gaps FROM b GROUP BY 1),
-        |t AS (SELECT SUM(n_gaps) AS tot FROM c)
-        |SELECT gap_cap_s, n_gaps,
-        |  round(CAST(n_gaps AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share
-        |FROM c, t""".stripMargin,
-    // randomization test: the Knuth modular coin per (row, relabeling),
-    // exact decimal group sums per relabeling, mean diffs and the p-value
-    // as the identical double expressions
-    "q_perm_test" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, CAST(round(o_totalprice * 100.0) AS BIGINT) AS y,
-        |    isodow(CAST(o_orderdate AS DATE)) >= 6 AS w
-        |  FROM orders
-        |), obs AS (
-        |  SELECT CAST(SUM(CASE WHEN w THEN y END) AS DOUBLE)
-        |       / CAST(SUM(CASE WHEN w THEN 1 ELSE 0 END) AS DOUBLE)
-        |       - CAST(SUM(CASE WHEN NOT w THEN y END) AS DOUBLE)
-        |       / CAST(SUM(CASE WHEN NOT w THEN 1 ELSE 0 END) AS DOUBLE) AS obs_diff
-        |  FROM base
-        |), rep AS (
-        |  SELECT base.o_orderkey, base.y, g.b
-        |  FROM base CROSS JOIN (SELECT unnest(range(0, 200)) AS b) g
-        |), f AS (
-        |  SELECT b, y,
-        |    (((o_orderkey * 200 + b) % 1000000007) * 2654435761) % 1000000007 % 2 = 0 AS fl
-        |  FROM rep
-        |), p AS (
-        |  SELECT b,
-        |    CAST(SUM(CASE WHEN fl THEN y END) AS DOUBLE)
-        |    / CAST(SUM(CASE WHEN fl THEN 1 ELSE 0 END) AS DOUBLE)
-        |    - CAST(SUM(CASE WHEN NOT fl THEN y END) AS DOUBLE)
-        |    / CAST(SUM(CASE WHEN NOT fl THEN 1 ELSE 0 END) AS DOUBLE) AS pd
-        |  FROM f GROUP BY 1
-        |)
-        |SELECT COUNT(*) AS b_perms,
-        |  round((SELECT obs_diff FROM obs) / 100.0, 6) AS obs_diff,
-        |  CAST(SUM(CASE WHEN abs(pd) >= abs((SELECT obs_diff FROM obs)) THEN 1 ELSE 0 END) AS BIGINT) AS n_ge,
-        |  round(CAST(SUM(CASE WHEN abs(pd) >= abs((SELECT obs_diff FROM obs)) THEN 1 ELSE 0 END) + 1 AS DOUBLE)
-        |    / CAST(COUNT(*) + 1 AS DOUBLE), 6) AS p_value
-        |FROM p""".stripMargin,
-    // seasonal residuals: exact decimal numerator rev*n_dow - sum_dow (no
-    // mean division until output), isodow == the Spark ISO formula
-    "q_seasonal_resid" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1
-        |), dd AS (
-        |  SELECT day, rev, CAST(isodow(day) AS BIGINT) AS dow FROM daily
-        |), bd AS (
-        |  SELECT dow, SUM(rev) AS sum_dow, COUNT(*) AS n_dow FROM dd GROUP BY 1
-        |)
-        |SELECT CAST(day AS TIMESTAMP) AS day, dow, CAST(rev AS DOUBLE) AS revenue,
-        |  round(CAST(rev * n_dow - sum_dow AS DOUBLE) / CAST(n_dow AS DOUBLE), 6) AS resid
-        |FROM dd JOIN bd USING (dow)
-        |ORDER BY abs(round(CAST(rev * n_dow - sum_dow AS DOUBLE) / CAST(n_dow AS DOUBLE), 6)) DESC, day
-        |LIMIT 10""".stripMargin,
-    // hazard curve: per-user first/conversion aggregate, day census,
-    // at-risk via the strictly-before banded cumulative, one division
-    "q_hazard_curve" ->
-      """WITH u AS (
-        |  SELECT user_id, min(ts) AS first_ts,
-        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS conv_ts
-        |  FROM events GROUP BY 1
-        |), na AS (SELECT COUNT(*) AS n_users FROM u),
-        |c AS (
-        |  SELECT CAST(CAST(conv_ts AS DATE) - CAST(first_ts AS DATE) AS BIGINT) AS t,
-        |    COUNT(*) AS d
-        |  FROM u WHERE conv_ts IS NOT NULL GROUP BY 1
-        |), cb AS (
-        |  SELECT c.t, c.d, COALESCE(SUM(c2.d), 0) AS cb
-        |  FROM c LEFT JOIN c c2 ON c2.t < c.t GROUP BY c.t, c.d
-        |)
-        |SELECT t, CAST(n_users - cb AS BIGINT) AS n_at_risk, d,
-        |  round(CAST(d AS DOUBLE) / CAST(n_users - cb AS DOUBLE), 6) AS hazard
-        |FROM cb CROSS JOIN na""".stripMargin,
-    // Gini: ascending-token global rank (the oracle's one-reducer window
-    // replays the range-sharded rank), exact rank-weighted sum, one
-    // double expression
-    "q_gini_tokens" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS x FROM documents
-         |), r AS (
-         |  SELECT x, ROW_NUMBER() OVER (ORDER BY x, doc_id) AS rn FROM d
-         |), m AS (
-         |  SELECT COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sum_tokens,
-         |    SUM(rn * x) AS rx
-         |  FROM r
-         |)
-         |SELECT n, sum_tokens,
-         |  round(2.0 * CAST(rx AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(sum_tokens AS DOUBLE))
-         |    - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS gini
-         |FROM m""".stripMargin,
-    // inactivity churn: per-user first/last, ISO-Monday cohort weeks
-    // (date_trunc('week') on both engines), strict < against max_ts − 14d
-    "q_churn_cohort" ->
-      """WITH mx AS (SELECT max(ts) AS mx FROM events),
-        |u AS (SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts
-        |      FROM events GROUP BY 1)
-        |SELECT date_trunc('week', first_ts) AS cohort_week,
-        |  COUNT(*) AS users,
-        |  CAST(SUM(CASE WHEN last_ts < mx - INTERVAL 14 DAY THEN 1 ELSE 0 END) AS BIGINT) AS churned,
-        |  round(CAST(SUM(CASE WHEN last_ts < mx - INTERVAL 14 DAY THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE), 6) AS churn_rate
-        |FROM u CROSS JOIN mx GROUP BY 1""".stripMargin,
-    // dense user x day grid over the global span; LOCF via IGNORE NULLS,
-    // null before a user's first observation in both engines
-    "q_resample_ffill" ->
-      """WITH b AS (SELECT CAST(CAST(MIN(ts) AS DATE) AS TIMESTAMP) AS d0,
-        |             CAST(CAST(MAX(ts) AS DATE) AS TIMESTAMP) AS d1 FROM events),
-        |u AS (SELECT DISTINCT user_id FROM events),
-        |g AS (SELECT u.user_id,
-        |        CAST(unnest(generate_series(b.d0, b.d1, INTERVAL 1 DAY)) AS DATE) AS day
-        |      FROM u, b),
-        |dc AS (SELECT user_id, CAST(ts AS DATE) AS day,
-        |         arg_max(value, event_id) AS close
-        |       FROM events GROUP BY 1, 2)
-        |SELECT g.user_id, CAST(g.day AS TIMESTAMP) AS day,
-        |  last_value(dc.close IGNORE NULLS) OVER (PARTITION BY g.user_id
-        |    ORDER BY g.day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-        |  ) AS close
-        |FROM g LEFT JOIN dc USING (user_id, day)""".stripMargin,
-    // each stage gates on the previous stage's completion; ts > NULL never
-    // fires, so an incomplete funnel stays null from the broken stage on
-    "q_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, ts, event_type,
-        |    MIN(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), s2 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'view' AND ts > t_signup
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_view FROM s1
-        |), s3 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts > t_view
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_purchase FROM s2
-        |)
-        |SELECT user_id, MAX(t_signup) AS t_signup, MAX(t_view) AS t_view,
-        |  MAX(t_purchase) AS t_purchase
-        |FROM s3 GROUP BY user_id""".stripMargin,
-    // open/close keyed by the unique event sequence — deterministic arg_min
-    "q_ohlc_bars" ->
-      """SELECT event_type, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day,
-        |  arg_min(value, event_id) AS open, MAX(value) AS high,
-        |  MIN(value) AS low, arg_max(value, event_id) AS close,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // trailing RANGE frame, both bounds inclusive — DuckDB's timestamp
-    // RANGE frame and Spark's epoch-micros RANGE frame admit identical sets
-    "q_window_sliding" ->
-      """SELECT event_id, user_id, ts,
-        |  COUNT(*) OVER w AS n_window,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS total
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |  RANGE BETWEEN INTERVAL 10 MINUTE PRECEDING AND CURRENT ROW)""".stripMargin,
-    // two rn=1 compactions FULL JOINed; ties broken by (ts, event_id) desc
-    "q_table_join" ->
-      """WITH p AS (
-        |  SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
-        |    value AS purchase_value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events WHERE event_type = 'purchase'
-        |), v AS (
-        |  SELECT user_id, event_id AS view_id, ts AS view_ts,
-        |    value AS view_value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events WHERE event_type = 'view'
-        |)
-        |SELECT user_id, purchase_id, purchase_ts, purchase_value,
-        |  view_id, view_ts, view_value
-        |FROM (SELECT * EXCLUDE rn FROM p WHERE rn = 1)
-        |  FULL JOIN (SELECT * EXCLUDE rn FROM v WHERE rn = 1) USING (user_id)""".stripMargin,
-    // JoinWindows [purchase − 1h, purchase], both bounds inclusive
-    "q_interval_join" ->
-      """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS lt
-        |           FROM events WHERE event_type = 'purchase'),
-        |     v AS (SELECT user_id, epoch_us(ts) AS rt, value
-        |           FROM events WHERE event_type = 'view')
-        |SELECT p.event_id, p.user_id, COUNT(*) AS n_views,
-        |  CAST(SUM(CAST(v.value AS DECIMAL(18,2))) AS DOUBLE) AS view_total
-        |FROM p JOIN v ON p.user_id = v.user_id
-        |  AND v.rt >= p.lt - 3600000000 AND v.rt <= p.lt
-        |GROUP BY 1, 2""".stripMargin,
-    "q_scd2" ->
-      """SELECT user_id, event_id, event_type, ts AS valid_from,
-        |  LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-        |FROM events""".stripMargin,
-    // words aggregated first, then pairs exploded per distinct word —
-    // range(1, len) is [1, len), matching Spark's inclusive sequence(1, len−1)
-    "q_bpe_pairs" ->
-      """WITH w AS (
-        |  SELECT w, COUNT(*) AS wc FROM (
-        |    SELECT unnest(string_split_regex(lower(text), '\s+')) AS w FROM documents)
-        |  WHERE regexp_matches(w, '^[a-z]+$') AND len(w) >= 2 GROUP BY w
-        |), p AS (
-        |  SELECT substring(w, CAST(i AS INT), 2) AS pair, wc
-        |  FROM w, unnest(range(1, len(w))) AS t(i)
-        |)
-        |SELECT pair, CAST(SUM(wc) AS BIGINT) AS n FROM p
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 50""".stripMargin,
-    "q_bpe_train" -> duckBpeTrainSql(8),
-    // full string replay of the block-confined span corruption: per-block
-    // FNV starts, mask arithmetic, sentinel numbering, and target spans —
-    // DuckDB list slices w[a:b] are INCLUSIVE (a 3-span is [p : p+2])
-    "q_span_corruption" ->
-      s"""WITH tok AS (SELECT doc_id, $duckToks AS w FROM documents),
-         |base AS (SELECT doc_id, w, len(w) AS n FROM tok),
-         |stt AS (SELECT doc_id, w, n,
-         |  [CAST(${duckFnvU("(CAST(doc_id AS VARCHAR) || '#' || CAST(j AS VARCHAR))")} % 8 AS BIGINT)
-         |   FOR j IN range(0, CASE WHEN n > 0 THEN (n-1)//10 + 1 ELSE 0 END)] AS sts
-         |  FROM base)
-         |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-         |  CAST(len([ii FOR ii IN range(1, n+1)
-         |    IF ((ii-1)//10)*10 + sts[(ii-1)//10 + 1] + 3 <= n
-         |       AND (ii-1)%10 >= sts[(ii-1)//10 + 1]
-         |       AND (ii-1)%10 < sts[(ii-1)//10 + 1] + 3]) AS BIGINT) AS n_masked,
-         |  array_to_string(list_filter([
-         |    CASE WHEN NOT (((ii-1)//10)*10 + sts[(ii-1)//10 + 1] + 3 <= n
-         |                   AND (ii-1)%10 >= sts[(ii-1)//10 + 1]
-         |                   AND (ii-1)%10 < sts[(ii-1)//10 + 1] + 3)
-         |         THEN w[ii]
-         |         WHEN (ii-1)%10 = sts[(ii-1)//10 + 1]
-         |         THEN '<extra_id_' || CAST((ii-1)//10 AS VARCHAR) || '>'
-         |         ELSE NULL END
-         |    FOR ii IN range(1, n+1)], x -> x IS NOT NULL), ' ') AS corrupted,
-         |  array_to_string(['<extra_id_' || CAST(j AS VARCHAR) || '> ' ||
-         |      array_to_string(w[j*10 + sts[j+1] + 1 : j*10 + sts[j+1] + 3], ' ')
-         |    FOR j IN range(0, len(sts)) IF j*10 + sts[j+1] + 3 <= n], ' ') AS targets
-         |FROM stt""".stripMargin,
-    // fertility reads the unrolled chain's FINAL symbol table r8: every doc
-    // token is in the census by construction, so encode(word) == r8.syms
-    "q_bpe_fertility" ->
-      s"""WITH ${duckBpeCtes(8)},
-         |dtok AS (SELECT lang, unnest($duckToks) AS w FROM documents)
-         |SELECT lang, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(len(r8.syms)) AS BIGINT) AS n_subwords,
-         |  round(CAST(sum(len(r8.syms)) AS DOUBLE) / count(*), 6) AS fertility
-         |FROM dtok JOIN r8 ON dtok.w = r8.word GROUP BY 1""".stripMargin,
-    "q_mutual_info" ->
-      """WITH cells AS (SELECT lang, source, count(*) AS cxy FROM documents GROUP BY 1, 2),
-        |mx AS (SELECT lang, sum(cxy) AS cx FROM cells GROUP BY 1),
-        |my AS (SELECT source, sum(cxy) AS cy FROM cells GROUP BY 1),
-        |tot AS (SELECT sum(cxy) AS n FROM cells),
-        |mi AS (
-        |  SELECT CAST(max(n) AS BIGINT) AS n_docs,
-        |    round(sum(CAST(cxy AS DOUBLE) / CAST(n AS DOUBLE)
-        |      * ln(CAST(cxy AS DOUBLE) * CAST(n AS DOUBLE)
-        |        / (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)))), 6) AS mi_nats
-        |  FROM cells JOIN mx USING (lang) JOIN my USING (source), tot),
-        |hx AS (SELECT round(ln(CAST(max(n) AS DOUBLE))
-        |    - sum(CAST(cx AS DOUBLE) * ln(CAST(cx AS DOUBLE))) / CAST(max(n) AS DOUBLE), 6) AS h_lang
-        |  FROM mx, tot),
-        |hy AS (SELECT round(ln(CAST(max(n) AS DOUBLE))
-        |    - sum(CAST(cy AS DOUBLE) * ln(CAST(cy AS DOUBLE))) / CAST(max(n) AS DOUBLE), 6) AS h_source
-        |  FROM my, tot)
-        |SELECT n_docs, mi_nats, h_lang, h_source FROM mi, hx, hy""".stripMargin,
-    // triangle counts: the q_knn_graph CTE rebuilt exactly, symmetrized to
-    // a<b undirected edges, then the textbook ordered triangle join —
-    // e1(a,b), e2(a,c) b<c, closed by e3(b,c) — counts each triangle once;
-    // corners exploded for per-vertex totals. The engine's degree-ordered
-    // wedge algorithm must reproduce this exact-join answer.
-    "q_triangle_count" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 200 AND y.vec_id != x.vec_id
-         |), r AS (
-         |  SELECT src, dst,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM p
-         |), e AS (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM r WHERE rn <= 5
-         |), tri AS (
-         |  SELECT e1.a AS p, e1.b AS q, e2.b AS r
-         |  FROM e e1
-         |  JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-         |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b
-         |)
-         |SELECT v, CAST(count(*) AS BIGINT) AS triangles
-         |FROM (SELECT unnest([p, q, r]) AS v FROM tri) GROUP BY v""".stripMargin,
-    // transitivity: the triangle CTE counts each triangle once at its
-    // min-id corner (t3 = 3T); wedges from the exact degree census
-    "q_transitivity" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 200 AND y.vec_id != x.vec_id
-         |), r AS (
-         |  SELECT src, dst,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM p
-         |), e AS (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM r WHERE rn <= 5
-         |), tri AS (
-         |  SELECT e1.a AS p, e1.b AS q, e2.b AS r
-         |  FROM e e1
-         |  JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-         |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b
-         |), t3 AS (SELECT CAST(3 * COUNT(*) AS BIGINT) AS t3 FROM tri),
-         |adj AS (SELECT a AS w FROM e UNION ALL SELECT b FROM e),
-         |deg AS (SELECT w, COUNT(*) AS d FROM adj GROUP BY 1),
-         |w2 AS (SELECT CAST(SUM(d * (d - 1)) AS BIGINT) AS w2 FROM deg)
-         |SELECT t3, w2,
-         |  CASE WHEN w2 > 0 THEN round(2.0 * CAST(t3 AS DOUBLE) / CAST(w2 AS DOUBLE), 6)
-         |  ELSE NULL END AS transitivity
-         |FROM t3 CROSS JOIN w2""".stripMargin,
-    // per-source language entropy: ordered fold over the lang-sorted
-    // census, the ln(2) constant embedded as the same literal both sides
-    "q_lang_entropy" ->
-      s"""WITH c AS (
-         |  SELECT source, lang, COUNT(*) AS c FROM documents GROUP BY 1, 2
-         |), g AS (
-         |  SELECT source, CAST(SUM(c) AS BIGINT) AS n_docs, COUNT(*) AS n_langs,
-         |    list(struct_pack(l := lang, c := CAST(c AS DOUBLE)) ORDER BY lang) AS lst
-         |  FROM c GROUP BY 1
-         |)
-         |SELECT source, n_docs, n_langs,
-         |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |    [ -(e.c / CAST(n_docs AS DOUBLE)) *
-         |      (ln(e.c / CAST(n_docs AS DOUBLE)) / ${math.log(2.0)}) FOR e IN lst]),
-         |    (x, y) -> x + y), 6) AS entropy_bits
-         |FROM g""".stripMargin,
-    // link prediction: the same knn CTE symmetrized, degrees from the
-    // both-ways adjacency, centers pruned at deg > 64 (part of the
-    // semantics, replayed), wedges u < v through each surviving center,
-    // RA credit = 10^12 // deg (truncating integer division — exact on
-    // both engines), existing edges removed by NOT EXISTS on (a, b)
-    "q_link_predict" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 200 AND y.vec_id != x.vec_id
-         |), r AS (
-         |  SELECT src, dst,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM p
-         |), e AS (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM r WHERE rn <= 5
-         |), adj AS (
-         |  SELECT a AS w, b AS n FROM e UNION ALL SELECT b, a FROM e
-         |), deg AS (
-         |  SELECT w AS v, COUNT(*) AS d FROM adj GROUP BY w
-         |), aw AS (
-         |  SELECT adj.w, adj.n, deg.d FROM adj JOIN deg ON deg.v = adj.w
-         |  WHERE deg.d <= 64
-         |), wdg AS (
-         |  SELECT x.n AS u, y.n AS v, x.d
-         |  FROM aw x JOIN aw y ON x.w = y.w AND x.n < y.n
-         |), cand AS (
-         |  SELECT u, v, CAST(COUNT(*) AS BIGINT) AS common_neighbors,
-         |    CAST(SUM(1000000000000 // d) AS BIGINT) AS ra_pico
-         |  FROM wdg GROUP BY u, v
-         |)
-         |SELECT u, v, common_neighbors, ra_pico FROM cand
-         |WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = cand.u AND e.b = cand.v)""".stripMargin,
-    // mutual-kNN: the closed <300 subgraph's top-5 lists replayed on the
-    // identical double cosine; a pair survives iff both directed edges
-    // exist, and each direction's row_number is carried through
-    "q_mutual_knn" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 300 AND y.vec_id < 300 AND y.vec_id != x.vec_id
-         |), r AS (
-         |  SELECT src, dst,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM p
-         |), e AS (SELECT src, dst, rn FROM r WHERE rn <= 5)
-         |SELECT f.src AS a, f.dst AS b, CAST(f.rn AS BIGINT) AS rank_ab,
-         |  CAST(g.rn AS BIGINT) AS rank_ba
-         |FROM e f JOIN e g ON g.src = f.dst AND g.dst = f.src
-         |WHERE f.src < f.dst""".stripMargin,
-    // MRR: the exact top-1 looked up in the quantized top-10 ranking;
-    // rr = 1/position (0 outside), per query — no cross-query float mean
-    "q_mrr" ->
-      s"""WITH c0 AS (
-         |  SELECT vec_id, list_max([abs(CAST(x AS DOUBLE)) FOR x IN embedding]) AS mx,
-         |    embedding FROM embeddings
-         |), c AS (
-         |  SELECT vec_id, CASE WHEN mx > 0 THEN mx/127.0 ELSE 1.0 END AS scale,
-         |    [CAST(round(CAST(x AS DOUBLE) / (CASE WHEN mx > 0 THEN mx/127.0 ELSE 1.0 END)) AS BIGINT)
-         |     FOR x IN embedding] AS q
-         |  FROM c0
-         |), qs AS (SELECT vec_id AS src, scale AS qscale, q AS qq FROM c WHERE vec_id < 5),
-         |p AS (
-         |  SELECT qs.src, c.vec_id AS dst,
-         |    round(c.scale * qs.qscale *
-         |      list_sum([c.q[i] * qs.qq[i] FOR i IN range(1, len(c.q)+1)]), 6) AS qscore
-         |  FROM qs JOIN c ON c.vec_id != qs.src
-         |), a AS (
-         |  SELECT src, dst, arank FROM (
-         |    SELECT src, dst,
-         |      ROW_NUMBER() OVER (PARTITION BY src ORDER BY qscore DESC, dst) AS arank
-         |    FROM p) WHERE arank <= 10
-         |), ex0 AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 5 AND y.vec_id != x.vec_id
-         |), e1 AS (
-         |  SELECT src, dst FROM (
-         |    SELECT src, dst,
-         |      ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |    FROM ex0) WHERE rn = 1
-         |)
-         |SELECT e1.src AS vec_id, e1.dst AS true_nn,
-         |  CAST(COALESCE(a.arank, 0) AS BIGINT) AS found_at,
-         |  CASE WHEN a.arank IS NOT NULL THEN round(1.0 / CAST(a.arank AS DOUBLE), 6)
-         |  ELSE 0.0 END AS rr
-         |FROM e1 LEFT JOIN a ON a.src = e1.src AND a.dst = e1.dst""".stripMargin,
-    // nDCG@10: quantize replay for the ANN ranking, exact-cos replay for
-    // relevance, DCG as an ORDERED list_reduce over the arank-sorted list
-    // with the SAME discount literals the Spark side embeds
-    "q_ndcg" ->
-      s"""WITH c0 AS (
-         |  SELECT vec_id, list_max([abs(CAST(x AS DOUBLE)) FOR x IN embedding]) AS mx,
-         |    embedding FROM embeddings
-         |), c AS (
-         |  SELECT vec_id, CASE WHEN mx > 0 THEN mx/127.0 ELSE 1.0 END AS scale,
-         |    [CAST(round(CAST(x AS DOUBLE) / (CASE WHEN mx > 0 THEN mx/127.0 ELSE 1.0 END)) AS BIGINT)
-         |     FOR x IN embedding] AS q
-         |  FROM c0
-         |), qs AS (SELECT vec_id AS src, scale AS qscale, q AS qq FROM c WHERE vec_id < 5),
-         |p AS (
-         |  SELECT qs.src, c.vec_id AS dst,
-         |    round(c.scale * qs.qscale *
-         |      list_sum([c.q[i] * qs.qq[i] FOR i IN range(1, len(c.q)+1)]), 6) AS qscore
-         |  FROM qs JOIN c ON c.vec_id != qs.src
-         |), a0 AS (
-         |  SELECT src, dst,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY qscore DESC, dst) AS arank
-         |  FROM p
-         |), a AS (SELECT * FROM a0 WHERE arank <= 10),
-         |ex0 AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 5 AND y.vec_id != x.vec_id
-         |), ex AS (
-         |  SELECT src, dst,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS erank
-         |  FROM ex0
-         |), r AS (
-         |  SELECT a.src, a.arank, COALESCE(11 - e.erank, 0) AS rel
-         |  FROM a LEFT JOIN (SELECT * FROM ex WHERE erank <= 10) e
-         |    ON e.src = a.src AND e.dst = a.dst
-         |), l AS (
-         |  SELECT src, list(struct_pack(a := arank, r := CAST(rel AS DOUBLE))
-         |    ORDER BY arank) AS lst
-         |  FROM r GROUP BY 1
-         |), g AS (
-         |  SELECT src, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |    [e.r * (${ndcgDiscounts.mkString("[", ", ", "]")})[e.a] FOR e IN lst]),
-         |    (x, y) -> x + y) AS dcg
-         |  FROM l
-         |)
-         |SELECT src AS vec_id, round(dcg, 6) AS dcg,
-         |  round(dcg / $ndcgIdeal, 6) AS ndcg
-         |FROM g""".stripMargin,
-    // margin mining: both directed knn-4 passes replayed on the identical
-    // double cosine; neighborhood sums over the 6dp-rounded cosines as
-    // exact DECIMAL(10,6); margin = one double expression; best per x by
-    // (margin DESC, y)
-    "q_bitext_mine" ->
-      s"""WITH pxy AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.label = 0 AND y.label = 1
-         |), rxy AS (
-         |  SELECT src, dst, round(cos, 6) AS rc,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM pxy
-         |), kxy AS (SELECT * FROM rxy WHERE rn <= 4),
-         |pyx AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.label = 1 AND y.label = 0
-         |), ryx AS (
-         |  SELECT src, round(cos, 6) AS rc,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM pyx
-         |), kyx AS (SELECT * FROM ryx WHERE rn <= 4),
-         |sx AS (SELECT src AS xid, SUM(CAST(rc AS DECIMAL(10,6))) AS sx,
-         |              COUNT(*) AS nx FROM kxy GROUP BY 1),
-         |sy AS (SELECT src AS yid, SUM(CAST(rc AS DECIMAL(10,6))) AS sy,
-         |              COUNT(*) AS ny FROM kyx GROUP BY 1),
-         |cand AS (
-         |  SELECT kxy.src AS x, kxy.dst AS y, kxy.rc AS cos,
-         |    round(kxy.rc / ((CAST(sx.sx AS DOUBLE) / sx.nx
-         |                     + CAST(sy.sy AS DOUBLE) / sy.ny) / 2.0), 6) AS margin
-         |  FROM kxy JOIN sx ON sx.xid = kxy.src JOIN sy ON sy.yid = kxy.dst
-         |), best AS (
-         |  SELECT x, y, cos, margin,
-         |    ROW_NUMBER() OVER (PARTITION BY x ORDER BY margin DESC, y) AS brn
-         |  FROM cand
-         |)
-         |SELECT x, y, cos, margin FROM best WHERE brn = 1""".stripMargin,
-    // degree assortativity: the link-predict knn CTE symmetrized, exact
-    // BIGINT moment sums over the both-ways stub list, Newman's r as one
-    // left-to-right double expression over those integers
-    "q_assortativity" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 200 AND y.vec_id != x.vec_id
-         |), r AS (
-         |  SELECT src, dst,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM p
-         |), e AS (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM r WHERE rn <= 5
-         |), adj AS (
-         |  SELECT a AS w, b AS n FROM e UNION ALL SELECT b, a FROM e
-         |), deg AS (
-         |  SELECT w AS v, COUNT(*) AS d FROM adj GROUP BY w
-         |), st AS (
-         |  SELECT dx.d AS dx, dy.d AS dy
-         |  FROM adj JOIN deg dx ON dx.v = adj.w JOIN deg dy ON dy.v = adj.n
-         |), s AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS m2, CAST(SUM(dx) AS BIGINT) AS sx,
-         |    CAST(SUM(dx*dy) AS BIGINT) AS sxy, CAST(SUM(dx*dx) AS BIGINT) AS sx2
-         |  FROM st
-         |)
-         |SELECT m2, sx, sxy, sx2,
-         |  CASE WHEN m2*sx2 - sx*sx = 0 THEN NULL ELSE
-         |    round((CAST(m2 AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) /
-         |          (CAST(m2 AS DOUBLE)*CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)), 6)
-         |  END AS assortativity
-         |FROM s""".stripMargin,
-    // k-NN plurality vote: neighbor ranking replayed on the identical
-    // double cosine, votes as exact counts, winner = (votes DESC, label)
-    // row_number 1 — the engine's min-struct argmax must agree
-    "q_knn_classify" ->
-      s"""WITH p AS (
-         |  SELECT x.vec_id AS src, y.vec_id AS dst, y.label AS nl, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id >= 200 AND x.vec_id < 300 AND y.vec_id < 200
-         |), r AS (
-         |  SELECT src, nl,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-         |  FROM p
-         |), v AS (
-         |  SELECT src, nl AS pred_label, CAST(COUNT(*) AS BIGINT) AS votes
-         |  FROM r WHERE rn <= 5 GROUP BY src, nl
-         |), b AS (
-         |  SELECT src, pred_label, votes,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY votes DESC, pred_label) AS brn
-         |  FROM v
-         |)
-         |SELECT b.src AS vec_id, b.pred_label, b.votes, e.label AS true_label,
-         |  CAST(CASE WHEN b.pred_label = e.label THEN 1 ELSE 0 END AS BIGINT) AS correct
-         |FROM b JOIN embeddings e ON e.vec_id = b.src WHERE brn = 1""".stripMargin,
-    // 3 unrolled power iterations; contributions summed in DECIMAL(38,18)
-    // (associative-exact), so ranks replay bit-identically
-    "q_pagerank" ->
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey + 1000000000 AS src, l_suppkey AS dst
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |), deg AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY src),
-        |n AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-        |r0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS rank FROM n),
-        |c1 AS (SELECT e.dst, SUM(CAST(r0.rank / deg.outdeg AS DECIMAL(38,18))) AS s
-        |       FROM e JOIN deg USING (src) JOIN r0 ON r0.id = e.src GROUP BY e.dst),
-        |r1 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * COALESCE(CAST(c1.s AS DOUBLE), 0.0) AS rank
-        |       FROM n LEFT JOIN c1 ON c1.dst = n.id),
-        |c2 AS (SELECT e.dst, SUM(CAST(r1.rank / deg.outdeg AS DECIMAL(38,18))) AS s
-        |       FROM e JOIN deg USING (src) JOIN r1 ON r1.id = e.src GROUP BY e.dst),
-        |r2 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * COALESCE(CAST(c2.s AS DOUBLE), 0.0) AS rank
-        |       FROM n LEFT JOIN c2 ON c2.dst = n.id),
-        |c3 AS (SELECT e.dst, SUM(CAST(r2.rank / deg.outdeg AS DECIMAL(38,18))) AS s
-        |       FROM e JOIN deg USING (src) JOIN r2 ON r2.id = e.src GROUP BY e.dst),
-        |r3 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * COALESCE(CAST(c3.s AS DOUBLE), 0.0) AS rank
-        |       FROM n LEFT JOIN c3 ON c3.dst = n.id)
-        |SELECT id, round(rank, 6) AS rank FROM r3
-        |ORDER BY rank DESC, id LIMIT 100""".stripMargin,
-    // Efraimidis–Spirakis race: u is the FNV bucket center (exact dyadic
-    // double), key = −ln(u)/w — selection replayed on the unrounded key
-    "q_weighted_sample" ->
-      s"""WITH h AS (
-         |  SELECT doc_id, n_chars,
-         |    ${duckFnvU("('ws|' || CAST(doc_id AS VARCHAR))")} AS hu
-         |  FROM documents
-         |), k AS (
-         |  SELECT doc_id,
-         |    GREATEST(CAST(n_chars AS DOUBLE), 1e-12) AS weight,
-         |    -ln((CAST(hu % 16777216 AS DOUBLE) + 0.5) / 16777216.0)
-         |      / GREATEST(CAST(n_chars AS DOUBLE), 1e-12) AS rk
-         |  FROM h)
-         |SELECT doc_id, weight, round(rk, 6) AS race_key FROM k
-         |ORDER BY rk ASC, doc_id ASC LIMIT 200""".stripMargin,
-    "q_sql_q5" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST((1 - l_discount) AS DECIMAL(4,2))) AS DOUBLE) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC""".stripMargin,
-    "q_cross_source_overlap" ->
-      s"""WITH toksrc AS (
-         |  SELECT source, $duckToks AS w FROM documents
-         |), sh AS (
-         |  SELECT source, unnest(list_distinct([array_to_string(w[i:i+4], ' ') FOR i IN range(1, len(w)-3)])) AS s
-         |  FROM toksrc WHERE len(w) >= 5
-         |), inv AS (SELECT DISTINCT source, s FROM sh),
-         |tot AS (SELECT source, COUNT(*) AS n FROM inv GROUP BY source),
-         |p AS (SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS shared
-         |      FROM inv a JOIN inv b ON a.s = b.s AND a.source < b.source GROUP BY 1, 2)
-         |SELECT p.source_a, p.source_b, p.shared,
-         |  round(CAST(p.shared AS DOUBLE) / (ta.n + tb.n - p.shared), 6) AS jaccard
-         |FROM p JOIN tot ta ON ta.source = p.source_a
-         |       JOIN tot tb ON tb.source = p.source_b""".stripMargin,
-    // rank band (rn−1)·1000 < n·p ≤ rn·1000 ⇔ rn = ceil(n·p/1000): the same
-    // cross-multiplied integer arithmetic as winsorizedStats — no float ceil
-    "q_winsorize" ->
-      """WITH r AS (
-        |  SELECT source AS grp, n_chars AS v,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents
-        |), b AS (
-        |  SELECT grp,
-        |    min(CASE WHEN (rn-1)*1000 < n*100 AND n*100 <= rn*1000 THEN v END) AS lo,
-        |    min(CASE WHEN (rn-1)*1000 < n*900 AND n*900 <= rn*1000 THEN v END) AS hi
-        |  FROM r GROUP BY 1
-        |)
-        |SELECT r.grp, count(*) AS n, min(b.lo) AS lo, min(b.hi) AS hi,
-        |  round(CAST(sum(v) AS DOUBLE) / count(*), 6) AS raw_mean,
-        |  round(CAST(sum(greatest(b.lo, least(b.hi, v))) AS DOUBLE) / count(*), 6) AS win_mean
-        |FROM r JOIN b USING (grp) GROUP BY 1""".stripMargin,
-    // nucleus membership by the cross-multiplied prefix test
-    // (cum−cnt)·1000 < p·total; cnt DESC, tok ASC is a total order, so the
-    // RANGE default frame equals Spark's ROWS frame
-    "q_top_p_vocab" ->
-      s"""WITH toks AS (
-         |  SELECT source AS grp, unnest($duckToks) AS tok FROM documents
-         |), c AS (
-         |  SELECT grp, tok, count(*) AS cnt FROM toks GROUP BY 1, 2
-         |), w AS (
-         |  SELECT grp, cnt,
-         |    sum(cnt) OVER (PARTITION BY grp ORDER BY cnt DESC, tok) AS cum,
-         |    sum(cnt) OVER (PARTITION BY grp) AS total
-         |  FROM c
-         |)
-         |SELECT grp, count(*) AS nucleus_size, CAST(sum(cnt) AS BIGINT) AS nucleus_mass,
-         |  CAST(max(total) AS BIGINT) AS total_tokens,
-         |  round(CAST(sum(cnt) AS DOUBLE) / CAST(max(total) AS DOUBLE), 6) AS coverage
-         |FROM w WHERE (cum - cnt) * 1000 < 900 * total GROUP BY 1""".stripMargin,
-    "q_embed_dim_stats" ->
-      """WITH x AS (
-        |  SELECT unnest([{'dim': i - 1, 'v': embedding[i]} FOR i IN range(1, len(embedding) + 1)]) AS s
-        |  FROM embeddings
-        |)
-        |SELECT CAST(s.dim AS BIGINT) AS dim, count(*) AS n,
-        |  round(CAST(min(s.v) AS DOUBLE), 6) AS mn,
-        |  round(CAST(max(s.v) AS DOUBLE), 6) AS mx,
-        |  CAST(count(*) FILTER (WHERE s.v = 0) AS BIGINT) AS n_zero,
-        |  CAST(count(*) FILTER (WHERE s.v < 0) AS BIGINT) AS n_neg
-        |FROM x GROUP BY 1""".stripMargin,
-    // IVF probe sweep: 6dp-centroid list ranking, candidate and truth
-    // ranks on the identical cosine, one settings table instead of a loop
-    "q_ivf_probe_sweep" ->
-      s"""WITH ${duckIvfCtes(16, 2, 2)},
-         |q AS (SELECT vec_id AS qid, embedding FROM embeddings WHERE vec_id < 10),
-         |ex0 AS (
-         |  SELECT x.vec_id AS qid, y.vec_id AS did, $duckCos AS cos
-         |  FROM embeddings x, embeddings y
-         |  WHERE x.vec_id < 10 AND y.vec_id != x.vec_id
-         |), ex AS (
-         |  SELECT qid, did FROM (
-         |    SELECT qid, did,
-         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, did) AS rn
-         |    FROM ex0) WHERE rn <= 20
-         |), np AS (SELECT unnest([2, 4, 8]) AS nprobe),
-         |cand AS (
-         |  SELECT DISTINCT np.nprobe, pl.qid, a.vec_id AS did
-         |  FROM np JOIN plr pl ON pl.lrank <= np.nprobe
-         |  JOIN asg a ON a.cidx = pl.cidx AND a.vec_id <> pl.qid
-         |), iv AS (
-         |  SELECT nprobe, qid, did FROM (
-         |    SELECT cd.nprobe, cd.qid, cd.did,
-         |      ROW_NUMBER() OVER (PARTITION BY cd.nprobe, cd.qid
-         |        ORDER BY ($duckCos) DESC, cd.did) AS rn
-         |    FROM cand cd
-         |    JOIN embeddings x ON x.vec_id = cd.qid
-         |    JOIN embeddings y ON y.vec_id = cd.did) WHERE rn <= 20
-         |), hits AS (
-         |  SELECT iv.nprobe, iv.qid, COUNT(*) AS n_hit
-         |  FROM iv JOIN ex ON ex.qid = iv.qid AND ex.did = iv.did
-         |  GROUP BY 1, 2
-         |)
-         |SELECT CAST(np.nprobe AS BIGINT) AS nprobe, q.qid,
-         |  CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  round(CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / 20.0, 6) AS recall
-         |FROM np CROSS JOIN q
-         |LEFT JOIN hits h ON h.nprobe = np.nprobe AND h.qid = q.qid""".stripMargin,
-    // isotropy: 6dp unit components as exact DECIMAL per-dim sums; both
-    // sides of the sum-identity (squared sums, self-diagonal) exact,
-    // one double division
-    "q_isotropy" ->
-      """WITH u AS (
-        |  SELECT [CAST(round(CAST(x AS DOUBLE) /
-        |      sqrt(list_sum([CAST(y AS DOUBLE)*CAST(y AS DOUBLE) FOR y IN embedding])), 6)
-        |    AS DECIMAL(10,6)) FOR x IN embedding] AS u
-        |  FROM embeddings
-        |), e AS (
-        |  SELECT unnest([{'dim': i - 1, 'ud': u[i]} FOR i IN range(1, len(u) + 1)]) AS s
-        |  FROM u
-        |), d AS (
-        |  SELECT s.dim, SUM(s.ud) AS s_d, SUM(s.ud * s.ud) AS q_d FROM e GROUP BY 1
-        |), m AS (
-        |  SELECT SUM(s_d * s_d) AS norm2, SUM(q_d) AS diag FROM d
-        |), nn AS (SELECT COUNT(*) AS n FROM embeddings)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  round(CAST(norm2 AS DOUBLE), 6) AS sum_norm2,
-        |  round(CAST(norm2 - diag AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE), 6) AS avg_cos
-        |FROM m CROSS JOIN nn""".stripMargin,
-    // whitening invariant gate (see embedWhitenQ): the oracle IS the
-    // identity ZCA exists to produce — whitened mean 0, covariance I —
-    // as a 64-row literal at the 4-dp tolerance
-    "q_embed_whiten" ->
-      """SELECT CAST(d AS BIGINT) AS dim, 0.0 AS mean_w, 1.0 AS var_w,
-        |  0.0 AS max_abs_offdiag
-        |FROM range(0, 64) t(d)""".stripMargin,
-    // k-center greedy: the full selection loop replayed as a recursive
-    // CTE (seed = smallest id; per step the LATERAL argmax of min cosine
-    // distance to the selected set, ties to smallest id — the mmr_rerank
-    // oracle pattern, corpus-global)
-    "q_kcenter_coreset" ->
-      """WITH RECURSIVE nv AS (
-        |  SELECT vec_id AS id,
-        |    [CAST(embedding[i] AS DOUBLE) FOR i IN range(1, 65)] AS vec
-        |  FROM embeddings
-        |), n AS (
-        |  SELECT id, vec, sqrt(list_sum([x * x FOR x IN vec])) AS nrm FROM nv
-        |), sel(step, id, d, ids) AS (
-        |  SELECT 1, w.id, CAST(NULL AS DOUBLE), [w.id]
-        |  FROM (SELECT id FROM n ORDER BY id LIMIT 1) w
-        |  UNION ALL
-        |  SELECT s.step + 1, w.id, w.d, list_append(s.ids, w.id)
-        |  FROM sel s, LATERAL (
-        |    SELECT c.id,
-        |      (SELECT min(1 - list_sum(list_transform(list_zip(c.vec, p.vec),
-        |            z -> z[1] * z[2])) / (c.nrm * p.nrm))
-        |       FROM n p WHERE list_contains(s.ids, p.id)) AS d
-        |    FROM n c WHERE NOT list_contains(s.ids, c.id)
-        |    ORDER BY d DESC, c.id LIMIT 1) w
-        |  WHERE s.step < 8
-        |)
-        |SELECT CAST(step AS BIGINT) AS step, id AS vec_id,
-        |  round(d, 6) AS min_dist
-        |FROM sel""".stripMargin,
-    // sorted-neighborhood pairs: DuckDB's jaro_winkler_similarity is the
-    // function the native expression is bit-exact to (q_jaro_pairs), and
-    // the rank window replays the same (name, key) global order
-    "q_snm_pairs" ->
-      """WITH r AS (
-        |  SELECT p_partkey, p_name,
-        |    row_number() OVER (ORDER BY p_name, p_partkey) AS rn
-        |  FROM part)
-        |SELECT a.p_partkey AS a, b.p_partkey AS b,
-        |  round(jaro_winkler_similarity(a.p_name, b.p_name), 6) AS sim
-        |FROM r a JOIN r b ON b.rn > a.rn AND b.rn - a.rn < 8
-        |WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.9""".stripMargin,
-    // multi-pass SNM: the union of ALL THREE rank-window replays (name
-    // order, reversed-name order, brand∥type∥name order),
-    // canonicalized least/greatest and dedup'd, then the same bit-exact
-    // jaro_winkler verify over names joined back
-    "q_snm_multipass" ->
-      """WITH r1 AS (
-        |  SELECT p_partkey, row_number() OVER (ORDER BY p_name, p_partkey) AS rn
-        |  FROM part),
-        |r2 AS (
-        |  SELECT p_partkey,
-        |    row_number() OVER (ORDER BY reverse(p_name), p_partkey) AS rn
-        |  FROM part),
-        |r3 AS (
-        |  SELECT p_partkey,
-        |    row_number() OVER (
-        |      ORDER BY concat_ws(' ', p_brand, p_type, p_name),
-        |        p_partkey) AS rn
-        |  FROM part),
-        |cand AS (
-        |  SELECT least(a.p_partkey, b.p_partkey) AS a,
-        |    greatest(a.p_partkey, b.p_partkey) AS b
-        |  FROM r1 a JOIN r1 b ON b.rn > a.rn AND b.rn - a.rn < 8
-        |  UNION
-        |  SELECT least(a.p_partkey, b.p_partkey),
-        |    greatest(a.p_partkey, b.p_partkey)
-        |  FROM r2 a JOIN r2 b ON b.rn > a.rn AND b.rn - a.rn < 8
-        |  UNION
-        |  SELECT least(a.p_partkey, b.p_partkey),
-        |    greatest(a.p_partkey, b.p_partkey)
-        |  FROM r3 a JOIN r3 b ON b.rn > a.rn AND b.rn - a.rn < 8)
-        |SELECT c.a, c.b,
-        |  round(jaro_winkler_similarity(pa.p_name, pb.p_name), 6) AS sim
-        |FROM cand c
-        |JOIN part pa ON pa.p_partkey = c.a
-        |JOIN part pb ON pb.p_partkey = c.b
-        |WHERE jaro_winkler_similarity(pa.p_name, pb.p_name) >= 0.9""".stripMargin,
-    // int8 code energy: the quantize8 replay (round half-away on both
-    // engines), per-position exact BIGINT sums over the codes
-    "q_dim_energy" ->
-      """WITH c AS (
-        |  SELECT list_max([abs(CAST(x AS DOUBLE)) FOR x IN embedding]) AS mx,
-        |    embedding FROM embeddings
-        |), cq AS (
-        |  SELECT [CAST(round(CAST(x AS DOUBLE) / (CASE WHEN mx > 0 THEN mx/127.0 ELSE 1.0 END)) AS BIGINT)
-        |          FOR x IN embedding] AS q
-        |  FROM c
-        |), e AS (
-        |  SELECT unnest([{'dim': i - 1, 'qval': q[i]} FOR i IN range(1, len(q) + 1)]) AS s
-        |  FROM cq
-        |)
-        |SELECT CAST(s.dim AS BIGINT) AS dim, COUNT(*) AS n,
-        |  CAST(SUM(s.qval) AS BIGINT) AS sum_q,
-        |  CAST(SUM(s.qval * s.qval) AS BIGINT) AS sum_q2,
-        |  CAST(COUNT(*) FILTER (WHERE abs(s.qval) = 127) AS BIGINT) AS n_sat,
-        |  CAST(COUNT(*) FILTER (WHERE s.qval = 0) AS BIGINT) AS n_zero
-        |FROM e GROUP BY 1""".stripMargin,
-    "q_ngram_novelty" ->
-      s"""WITH ids AS (SELECT min(doc_id) AS mn, max(doc_id) AS mx FROM documents),
-         |toksrc AS (SELECT doc_id, $duckToks AS w FROM documents),
-         |sh AS (
-         |  SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ') FOR i IN range(1, len(w)-1)]) AS grams
-         |  FROM toksrc WHERE len(w) >= 3
-         |), gb AS (
-         |  SELECT DISTINCT
-         |    least(CAST(7 AS BIGINT), CAST((doc_id - mn) * 8 // greatest(1, mx - mn + 1) AS BIGINT)) AS bucket,
-         |    unnest(grams) AS gram
-         |  FROM sh, ids
-         |), novel AS (SELECT min(bucket) AS bucket FROM gb GROUP BY gram),
-         |nb AS (SELECT bucket, count(*) AS novel_grams FROM novel GROUP BY 1),
-         |seen AS (SELECT bucket, count(*) AS seen_grams FROM gb GROUP BY 1)
-         |SELECT seen.bucket, seen_grams,
-         |  CAST(COALESCE(novel_grams, 0) AS BIGINT) AS novel_grams,
-         |  round(CAST(COALESCE(novel_grams, 0) AS DOUBLE) / seen_grams, 6) AS novelty_frac
-         |FROM seen LEFT JOIN nb ON seen.bucket = nb.bucket""".stripMargin,
-    // token COUNT is case-insensitive, so the lowercasing duckToks is the
-    // correct twin of TF.tokenCount here
-    "q_capped_select" ->
-      s"""WITH qual AS (SELECT * FROM ($duckQualitySql)),
-         |d AS (
-         |  SELECT d.source, d.doc_id, q.quality,
-         |    CAST(len($duckToks) AS BIGINT) AS n_tokens
-         |  FROM documents d JOIN qual q ON q.doc_id = d.doc_id
-         |), w AS (
-         |  SELECT source, doc_id, quality, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY source
-         |      ORDER BY quality DESC, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM d
-         |)
-         |SELECT * FROM w WHERE cum_tokens <= 5000""".stripMargin,
-    "q_dp_counts" ->
-      s"""WITH g AS (SELECT lang AS grp, count(*) AS true_n FROM documents GROUP BY 1),
-         |h AS (SELECT grp, true_n,
-         |  ${duckU2S(duckFnvU("('graft-dp-2026:' || grp)"))} AS hs FROM g)
-         |SELECT grp, true_n, ((hs % 7) + 7) % 7 - 3 AS noise,
-         |  greatest(CAST(0 AS BIGINT), true_n + ((hs % 7) + 7) % 7 - 3) AS released
-         |FROM h""".stripMargin,
-    // identical exact-integer micro-unit accumulation: HUGEINT products,
-    // floor `//` per cell (Spark: DECIMAL(38) `div`), one double division
-    "q_chi2_independence" ->
-      """WITH cells AS (SELECT lang AS a, source AS b, count(*) AS o FROM documents GROUP BY 1, 2),
-        |ra AS (SELECT a, sum(o) AS r FROM cells GROUP BY 1),
-        |cb AS (SELECT b, sum(o) AS c FROM cells GROUP BY 1),
-        |tot AS (SELECT sum(o) AS n FROM cells),
-        |grid AS (
-        |  SELECT ra.a, cb.b, r, c, CAST(COALESCE(o, 0) AS HUGEINT) AS o, n
-        |  FROM ra CROSS JOIN cb CROSS JOIN tot
-        |  LEFT JOIN cells ON cells.a = ra.a AND cells.b = cb.b
-        |), t AS (
-        |  SELECT CAST((o*n - r*c) * (o*n - r*c) * 1000000 // (r*c*n) AS BIGINT) AS tt
-        |  FROM grid
-        |)
-        |SELECT count(*) AS n_cells,
-        |  (SELECT CAST(n AS BIGINT) FROM tot) AS n_rows,
-        |  CAST(sum(tt) AS DOUBLE) / 1000000.0 AS chi2
-        |FROM t""".stripMargin,
-    "q_mrl_truncation" ->
-      """WITH x AS (SELECT * FROM embeddings WHERE vec_id = 0),
-        |f AS (
-        |  SELECT y.vec_id,
-        |    round(list_sum([CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE) FOR i IN range(1, 65)]) /
-        |      (sqrt(list_sum([CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE) FOR i IN range(1, 65)])) *
-        |       sqrt(list_sum([CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE) FOR i IN range(1, 65)]))), 6) AS cos
-        |  FROM embeddings y, x
-        |  ORDER BY cos DESC, y.vec_id LIMIT 20
-        |), tr AS (
-        |  SELECT y.vec_id,
-        |    round(list_sum([CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE) FOR i IN range(1, 17)]) /
-        |      (sqrt(list_sum([CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE) FOR i IN range(1, 17)])) *
-        |       sqrt(list_sum([CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE) FOR i IN range(1, 17)]))), 6) AS cos16
-        |  FROM embeddings y, x
-        |  ORDER BY cos16 DESC, y.vec_id LIMIT 20
-        |)
-        |SELECT tr.vec_id, tr.cos16, f.vec_id IS NOT NULL AS in_full
-        |FROM tr LEFT JOIN f ON tr.vec_id = f.vec_id""".stripMargin,
-    // +1 smoothing over the FIXED 64-bucket space (token counts fit 63
-    // bits), so empty buckets never divide by zero and both engines use
-    // the identical denominator
-    "q_psi_drift" ->
-      s"""WITH d AS (
-         |  SELECT doc_id % 2 AS half, CAST(len($duckToks) AS BIGINT) AS n_tokens
-         |  FROM documents
-         |), b AS (
-         |  SELECT half, CASE WHEN n_tokens <= 1 THEN 1
-         |    ELSE (CAST(1 AS BIGINT) << length(bin(n_tokens - 1))) END AS bucket_cap
-         |  FROM d
-         |), c AS (
-         |  SELECT bucket_cap,
-         |    count(*) FILTER (WHERE half = 0) AS n_ref,
-         |    count(*) FILTER (WHERE half = 1) AS n_new
-         |  FROM b GROUP BY 1
-         |), t AS (SELECT sum(n_ref) AS tr, sum(n_new) AS tn FROM c)
-         |SELECT bucket_cap, n_ref, n_new,
-         |  round(((n_new + 1) / (tn + 64.0) - (n_ref + 1) / (tr + 64.0))
-         |    * ln(((n_new + 1) / (tn + 64.0)) / ((n_ref + 1) / (tr + 64.0))), 6) AS psi_term
-         |FROM c, t""".stripMargin,
-    // KS drift: exact integer ECDFs at every occupied 64-char bucket; each
-    // D term is one double expression over four integers, max is
-    // order-independent, argmax tie-broken to the smallest bucket
-    "q_ks_drift" ->
-      """WITH c AS (
-        |  SELECT n_chars // 64 AS b,
-        |    SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS ca,
-        |    SUM(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END) AS cb
-        |  FROM documents GROUP BY 1
-        |), tot AS (SELECT SUM(ca) AS n_a, SUM(cb) AS n_b FROM c),
-        |cum AS (
-        |  SELECT b, SUM(ca) OVER (ORDER BY b) AS cum_a,
-        |    SUM(cb) OVER (ORDER BY b) AS cum_b
-        |  FROM c
-        |), t AS (
-        |  SELECT b, abs(CAST(cum_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-        |    - CAST(cum_b AS DOUBLE) / CAST(n_b AS DOUBLE)) AS d
-        |  FROM cum CROSS JOIN tot
-        |)
-        |SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  round((SELECT max(d) FROM t), 6) AS ks_d,
-        |  (SELECT min(b) FROM t WHERE d = (SELECT max(d) FROM t)) AS ks_at
-        |FROM tot""".stripMargin,
-    // Poisson bootstrap: hash-derived inverse-CDF weights (ppm table),
-    // exact BIGINT per-resample sums, one division per mean, CI bounds by
-    // exact rank over the 100-row resample census
-    "q_bootstrap_ci" ->
-      s"""WITH d AS (
-         |  SELECT CAST(doc_id AS VARCHAR) AS id, CAST(len($duckToks) AS BIGINT) AS x
-         |  FROM documents
-         |), rep AS (
-         |  SELECT d.id, d.x, g.b
-         |  FROM d CROSS JOIN (SELECT unnest(range(0, 100)) AS b) g
-         |), h AS (
-         |  SELECT b, x,
-         |    ${duckU2S(duckFnvU("('boot#' || CAST(b AS VARCHAR) || '#' || id)"))} AS hs
-         |  FROM rep
-         |), uw AS (
-         |  SELECT b, x, ((hs % 1000000) + 1000000) % 1000000 AS u FROM h
-         |), w AS (
-         |  SELECT b, x,
-         |    CASE WHEN u < 367879 THEN 0 WHEN u < 735758 THEN 1
-         |         WHEN u < 919698 THEN 2 WHEN u < 981011 THEN 3
-         |         WHEN u < 996340 THEN 4 WHEN u < 999405 THEN 5
-         |         WHEN u < 999916 THEN 6 WHEN u < 999989 THEN 7 ELSE 8 END AS w
-         |  FROM uw
-         |), m AS (
-         |  SELECT b, CASE WHEN SUM(w) > 0
-         |    THEN CAST(SUM(w * x) AS DOUBLE) / CAST(SUM(w) AS DOUBLE)
-         |    ELSE 0.0 END AS m
-         |  FROM w GROUP BY 1
-         |), r AS (
-         |  SELECT b, m,
-         |    (SELECT COUNT(*) FROM m m2
-         |     WHERE m2.m < m.m OR (m2.m = m.m AND m2.b < m.b)) AS rk
-         |  FROM m
-         |), f AS (SELECT CAST(SUM(x) AS BIGINT) AS sx, COUNT(*) AS n FROM d)
-         |SELECT CAST(100 AS BIGINT) AS b_resamples,
-         |  round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean,
-         |  round((SELECT max(m) FROM r WHERE rk = 2), 6) AS ci_lo,
-         |  round((SELECT max(m) FROM r WHERE rk = 97), 6) AS ci_hi
-         |FROM f""".stripMargin,
-    // Neyman allocation: exact moment census; sigma and the ppm weight are
-    // the identical double expressions (w_ppm from UNROUNDED sigma); base
-    // seats, remainders, and largest-remainder ranks are pure integers
-    "q_neyman_alloc" ->
-      s"""WITH d AS (
-         |  SELECT lang, CAST(len($duckToks) AS BIGINT) AS x FROM documents
-         |), c AS (
-         |  SELECT lang AS stratum, COUNT(*) AS n_h, SUM(x) AS s_x, SUM(x*x) AS q_x
-         |  FROM d GROUP BY 1
-         |), w0 AS (
-         |  SELECT stratum, CAST(n_h AS BIGINT) AS n_h,
-         |    CASE WHEN n_h > 1 THEN
-         |      sqrt((CAST(n_h AS DOUBLE)*CAST(q_x AS DOUBLE) - CAST(s_x AS DOUBLE)*CAST(s_x AS DOUBLE)) /
-         |           (CAST(n_h AS DOUBLE)*(CAST(n_h AS DOUBLE)-1.0)))
-         |    ELSE 0.0 END AS sg
-         |  FROM c
-         |), w AS (
-         |  SELECT stratum, n_h, round(sg, 6) AS sigma,
-         |    CAST(floor(CAST(n_h AS DOUBLE) * sg * 1000000.0) AS BIGINT) AS w_ppm
-         |  FROM w0
-         |), t AS (SELECT SUM(w_ppm) AS w_tot FROM w),
-         |b AS (
-         |  SELECT stratum, n_h, sigma, w_ppm,
-         |    CASE WHEN w_tot > 0 THEN 10000 * w_ppm // w_tot ELSE 0 END AS base,
-         |    CASE WHEN w_tot > 0 THEN 10000 * w_ppm % w_tot ELSE 0 END AS rem
-         |  FROM w CROSS JOIN t
-         |), lo AS (SELECT 10000 - SUM(base) AS r FROM b),
-         |rk AS (
-         |  SELECT b.stratum, b.n_h, b.sigma, b.w_ppm, b.base, b.rem,
-         |    (SELECT COUNT(*) FROM b b2
-         |     WHERE b2.rem > b.rem OR (b2.rem = b.rem AND b2.stratum < b.stratum)) AS n_better
-         |  FROM b
-         |)
-         |SELECT stratum, n_h, sigma, w_ppm,
-         |  CAST(base + CASE WHEN n_better < (SELECT r FROM lo) THEN 1 ELSE 0 END AS BIGINT) AS alloc
-         |FROM rk""".stripMargin,
-    // t-closeness: per-(lang, source) EMD vs the global length distribution
-    // in exact ppm fixed-point (cum·10^6 // n — truncating integer
-    // division), densified over the occupied-bucket census; only the final
-    // normalization is a rounded double
-    "q_t_closeness" ->
-      """WITH c AS (
-        |  SELECT lang, source, n_chars // 512 AS b, COUNT(*) AS c
-        |  FROM documents GROUP BY 1, 2, 3
-        |), bk AS (SELECT b, SUM(c) AS cg FROM c GROUP BY 1),
-        |g AS (SELECT lang, source, SUM(c) AS n_g FROM c GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT g.lang, g.source, bk.b, g.n_g, COALESCE(c.c, 0) AS c
-        |  FROM g CROSS JOIN bk
-        |  LEFT JOIN c ON c.lang = g.lang AND c.source = g.source AND c.b = bk.b
-        |), cumg AS (
-        |  SELECT lang, source, b, n_g,
-        |    SUM(c) OVER (PARTITION BY lang, source ORDER BY b) AS cum_g
-        |  FROM grid
-        |), cuma AS (SELECT b, SUM(cg) OVER (ORDER BY b) AS cum_all FROM bk),
-        |tot AS (SELECT SUM(cg) AS n_all, COUNT(*) AS n_b FROM bk),
-        |terms AS (
-        |  SELECT lang, source, n_g, n_b,
-        |    abs(cum_g * 1000000 // n_g - cum_all * 1000000 // n_all) AS term
-        |  FROM cumg JOIN cuma USING (b) CROSS JOIN tot
-        |)
-        |SELECT lang, source, CAST(max(n_g) AS BIGINT) AS n_g,
-        |  CAST(SUM(term) AS BIGINT) AS emd_ppm,
-        |  CASE WHEN max(n_b) <= 1 THEN 0.0 ELSE
-        |    round(CAST(SUM(term) AS DOUBLE) /
-        |      (CAST(max(n_b) - 1 AS DOUBLE) * 1000000.0), 6)
-        |  END AS t_close
-        |FROM terms GROUP BY lang, source""".stripMargin,
-    "q_sentence_stats" ->
-      """WITH s AS (
-        |  SELECT source, unnest(list_filter(string_split_regex(text, '[.!?]+'),
-        |    x -> len(trim(x)) > 0)) AS sent
-        |  FROM documents
-        |)
-        |SELECT source, count(*) AS n_sentences,
-        |  CAST(sum(len(trim(sent))) AS BIGINT) AS total_chars,
-        |  round(CAST(sum(len(trim(sent))) AS DOUBLE) / count(*), 6) AS avg_sentence_chars
-        |FROM s GROUP BY 1""".stripMargin,
-    // layout invariance: the oracle aggregates the UN-bucketed parquet —
-    // the bucketed write must change the plan (zero exchanges), never rows
-    "q_bucketed_agg" ->
-      """SELECT l_orderkey, count(*) AS n_items,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |FROM lineitem GROUP BY 1
-        |ORDER BY n_items DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q_bucketed_join" ->
-      """SELECT o_orderstatus, count(*) AS n_items,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    // both codec paths must reproduce the parquet truth exactly
-    "q_format_roundtrip" ->
-      """SELECT source, count(*) AS n_docs, CAST(0 AS BIGINT) AS mismatches,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-    // ORC leg of the codec-fidelity contract: same shape, mismatches must
-    // be exactly 0 after the write → orcTable read-back → value compare
-    "q_orc_roundtrip" ->
-      """SELECT source, count(*) AS n_docs, CAST(0 AS BIGINT) AS mismatches,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-    // Spearman: identical 2x census midranks, exact rank moments, Pearson
-    // closed form as one double expression
-    "q_spearman" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS x,
-         |    CAST(len($duckToks) AS BIGINT) AS y
-         |  FROM documents
-         |), cx AS (SELECT x AS v, COUNT(*) AS c FROM d GROUP BY 1),
-         |rx AS (
-         |  SELECT cx.v, 2 * COALESCE(SUM(c2.c), 0) + cx.c + 1 AS r2x
-         |  FROM cx LEFT JOIN cx c2 ON c2.v < cx.v GROUP BY cx.v, cx.c
-         |), cy AS (SELECT y AS v, COUNT(*) AS c FROM d GROUP BY 1),
-         |ry AS (
-         |  SELECT cy.v, 2 * COALESCE(SUM(c2.c), 0) + cy.c + 1 AS r2y
-         |  FROM cy LEFT JOIN cy c2 ON c2.v < cy.v GROUP BY cy.v, cy.c
-         |), j AS (
-         |  SELECT r2x, r2y FROM d JOIN rx ON rx.v = d.x JOIN ry ON ry.v = d.y
-         |), m AS (
-         |  SELECT COUNT(*) AS n, SUM(r2x) AS sx, SUM(r2x * r2x) AS sxx,
-         |    SUM(r2y) AS sy, SUM(r2y * r2y) AS syy, SUM(r2x * r2y) AS sxy
-         |  FROM j
-         |)
-         |SELECT CAST(n AS BIGINT) AS n,
-         |  CASE WHEN (CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))
-         |          * (CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)) > 0.0
-         |  THEN round((CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE)) /
-         |    sqrt((CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))
-         |       * (CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6)
-         |  ELSE NULL END AS spearman_rho
-         |FROM m""".stripMargin,
-    // Mann-Whitney U: doubled midrank sums via the integer identity
-    // ca*(2*cum - c + 1), exact tie term c^3 - c, tie-corrected z as the
-    // identical left-to-right double expression
-    "q_mann_whitney" ->
-      """WITH c AS (
-        |  SELECT n_chars // 16 AS b,
-        |    SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS ca,
-        |    SUM(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END) AS cb
-        |  FROM documents GROUP BY 1
-        |), cc AS (SELECT b, ca, ca + cb AS c FROM c),
-        |cum AS (SELECT b, ca, c, SUM(c) OVER (ORDER BY b) AS cum FROM cc),
-        |p AS (
-        |  SELECT CAST(SUM(ca) AS BIGINT) AS n_a,
-        |    CAST(SUM(c - ca) AS BIGINT) AS n_b,
-        |    CAST(SUM(ca * (cum * 2 - c + 1)) AS BIGINT) AS ranks2,
-        |    CAST(SUM(c * c * c - c) AS BIGINT) AS tie_sum
-        |  FROM cum
-        |)
-        |SELECT n_a, n_b, CAST(ranks2 - n_a * (n_a + 1) AS BIGINT) AS u2, tie_sum,
-        |  CASE WHEN n_a > 0 AND n_b > 0 AND
-        |    sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 *
-        |      ((CAST(n_a + n_b AS DOUBLE) + 1.0) - CAST(tie_sum AS DOUBLE) /
-        |       (CAST(n_a + n_b AS DOUBLE) * (CAST(n_a + n_b AS DOUBLE) - 1.0)))) > 0.0
-        |  THEN round(CAST(ranks2 - n_a * (n_a + 1) - n_a * n_b AS DOUBLE) /
-        |    (2.0 * sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 *
-        |      ((CAST(n_a + n_b AS DOUBLE) + 1.0) - CAST(tie_sum AS DOUBLE) /
-        |       (CAST(n_a + n_b AS DOUBLE) * (CAST(n_a + n_b AS DOUBLE) - 1.0))))), 6)
-        |  ELSE NULL END AS z
-        |FROM p""".stripMargin,
-    // identical pair comprehension, slot marginals, and the one ln per
-    // output row: ((4.0·N)·c_ab)/(c_a·c_b) left-associated on both engines
-    "q_pmi_pairs" ->
-      s"""WITH t AS (SELECT $duckToks AS w FROM documents),
-         |p0 AS (
-         |  SELECT unnest(flatten([[
-         |      CASE WHEN w[i] <= w[j] THEN {'a': w[i], 'b': w[j]}
-         |           ELSE {'a': w[j], 'b': w[i]} END
-         |      FOR j IN range(i + 1, least(i + 3, len(w)) + 1)]
-         |    FOR i IN range(1, len(w))])) AS s
-         |  FROM t WHERE len(w) >= 2
-         |),
-         |pc AS (SELECT s.a AS a, s.b AS b, count(*) AS c_ab FROM p0 GROUP BY 1, 2),
-         |m AS (SELECT tok, sum(c) AS c_t FROM (
-         |    SELECT a AS tok, c_ab AS c FROM pc
-         |    UNION ALL SELECT b, c_ab FROM pc) GROUP BY 1),
-         |n AS (SELECT sum(c_ab) AS np FROM pc)
-         |SELECT a, b, c_ab,
-         |  round(ln(4.0 * np * c_ab / (ma.c_t * mb.c_t)), 6) AS pmi
-         |FROM pc CROSS JOIN n
-         |  JOIN m ma ON ma.tok = a
-         |  JOIN m mb ON mb.tok = b
-         |WHERE c_ab >= 5
-         |ORDER BY pmi DESC, a, b LIMIT 100""".stripMargin,
-    "q_l_diversity" ->
-      """WITH d AS (
-        |  SELECT lang, source,
-        |    CASE WHEN n_chars <= 1 THEN 1
-        |         ELSE (CAST(1 AS BIGINT) << length(bin(n_chars - 1))) END AS sensitive
-        |  FROM documents
-        |)
-        |SELECT lang, source, count(*) AS n,
-        |  count(DISTINCT sensitive) AS l_distinct,
-        |  count(DISTINCT sensitive) < 3 AS at_risk
-        |FROM d GROUP BY 1, 2""".stripMargin,
-    // the connector's row derivation regenerated from range(): unsigned FNV
-    // of "seed:doc_id", lang = h mod 5, n_chars = 5·(10 + h mod 90) − 1
-    "q_connector_source" ->
-      s"""WITH h AS (
-         |  SELECT doc_id, ${duckFnvU("('7:' || CAST(doc_id AS VARCHAR))")} AS hu
-         |  FROM range(5000, 15000) t(doc_id)
-         |)
-         |SELECT CASE hu % 5 WHEN 0 THEN 'en' WHEN 1 THEN 'de' WHEN 2 THEN 'fr'
-         |                   WHEN 3 THEN 'es' ELSE 'zh' END AS lang,
-         |  count(*) AS n_docs,
-         |  CAST(sum(5 * (10 + hu % 90) - 1) AS BIGINT) AS total_chars
-         |FROM h GROUP BY 1""".stripMargin,
-    "q_connector_count" ->
-      """SELECT count(*) AS n_docs, min(doc_id) AS first_id, max(doc_id) AS last_id
-        |FROM range(0, 1000000) t(doc_id)""".stripMargin,
-    // identical level-1 prune, cubic in-basket comprehension, and
-    // left-associated lift3 = n_abc·N²/(n_a·n_b·n_c)
-    "q_basket_triples" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS bk, l_partkey % 50 AS i FROM lineitem),
-        |ic AS (SELECT i, count(*) AS ni FROM it GROUP BY 1),
-        |fi AS (SELECT i FROM ic WHERE ni >= 5),
-        |ba AS (
-        |  SELECT bk, list_sort(list(i)) AS arr
-        |  FROM it WHERE i IN (SELECT i FROM fi) GROUP BY bk
-        |), tr AS (
-        |  SELECT unnest(flatten(flatten([[[
-        |      {'a': arr[x], 'b': arr[y], 'c': arr[z]}
-        |      FOR z IN range(y + 1, len(arr) + 1)]
-        |    FOR y IN range(x + 1, len(arr))]
-        |  FOR x IN range(1, len(arr) - 1)]))) AS s
-        |  FROM ba WHERE len(arr) >= 3
-        |), tc AS (
-        |  SELECT s.a AS a, s.b AS b, s.c AS c, count(*) AS n_abc
-        |  FROM tr GROUP BY 1, 2, 3 HAVING count(*) >= 5
-        |), nb AS (SELECT count(DISTINCT bk) AS nbk FROM it)
-        |SELECT a, b, c, CAST(n_abc AS BIGINT) AS n_abc,
-        |  round(CAST(n_abc AS DOUBLE) * CAST(nbk AS DOUBLE) * CAST(nbk AS DOUBLE)
-        |    / (CAST(na.ni AS DOUBLE) * CAST(nb2.ni AS DOUBLE) * CAST(nc.ni AS DOUBLE)), 6) AS lift
-        |FROM tc CROSS JOIN nb
-        |  JOIN ic na ON na.i = a JOIN ic nb2 ON nb2.i = b JOIN ic nc ON nc.i = c
-        |ORDER BY lift DESC, a, b, c LIMIT 50""".stripMargin,
-    // per-step 7-day window in exact epoch micros, anchored at each stage's
-    // earliest completion (q_funnel's chain plus the gap conjunct)
-    "q_funnel_windowed" ->
-      """WITH s1 AS (
-        |  SELECT user_id, ts, event_type,
-        |    MIN(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), s2 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'view' AND ts > t_signup
-        |    AND epoch_us(ts) <= epoch_us(t_signup) + 604800000000
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_view FROM s1
-        |), s3 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts > t_view
-        |    AND epoch_us(ts) <= epoch_us(t_view) + 604800000000
-        |    THEN ts END) OVER (PARTITION BY user_id) AS t_purchase FROM s2
-        |)
-        |SELECT user_id, MAX(t_signup) AS t_signup, MAX(t_view) AS t_view,
-        |  MAX(t_purchase) AS t_purchase
-        |FROM s3 GROUP BY user_id""".stripMargin)
-
-  /** The PQ encode → LUT → ADC → shortlist → exact-re-score replay,
-    * parameterized by the source relation the codes are built over (the
-    * full corpus for q_pq_topk, the IVF-restricted subset for q_ivf_pq;
-    * `extraCtes` prepends the restriction chain). Codebook and query CTEs
-    * always read the UNRESTRICTED corpus, mirroring the Spark side.
-    */
-  private def duckPqSql(extraCtes: String, src: String): String =
-    s"""WITH ${extraCtes}x AS (SELECT * FROM embeddings WHERE vec_id = 0),
-       |cb AS (
-       |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS ce
-       |  FROM embeddings WHERE vec_id < 16
-       |), sub AS (SELECT unnest(range(8)) AS j),
-       |enc0 AS (
-       |  SELECT e.vec_id, s.j, c.cidx,
-       |    list_sum([CAST(e.embedding[s.j*8+i] AS DOUBLE) * CAST(c.ce[s.j*8+i] AS DOUBLE) FOR i IN range(1, 9)]) * -2.0
-       |    + list_sum([CAST(c.ce[s.j*8+i] AS DOUBLE) * CAST(c.ce[s.j*8+i] AS DOUBLE) FOR i IN range(1, 9)]) AS d
-       |  FROM $src e CROSS JOIN sub s CROSS JOIN cb c
-       |), enc AS (
-       |  SELECT vec_id, j, cidx FROM (
-       |    SELECT vec_id, j, cidx,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d, cidx) AS rn
-       |    FROM enc0) WHERE rn = 1
-       |), lut AS (
-       |  SELECT s.j, c.cidx,
-       |    list_sum([(CAST(x.embedding[s.j*8+i] AS DOUBLE) - CAST(c.ce[s.j*8+i] AS DOUBLE))
-       |            * (CAST(x.embedding[s.j*8+i] AS DOUBLE) - CAST(c.ce[s.j*8+i] AS DOUBLE)) FOR i IN range(1, 9)]) AS ld
-       |  FROM x CROSS JOIN sub s CROSS JOIN cb c
-       |), adcv AS (
-       |  SELECT e.vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(l.ld ORDER BY e.j)), (a, b) -> a + b) AS adc
-       |  FROM enc e JOIN lut l ON l.j = e.j AND l.cidx = e.cidx
-       |  GROUP BY e.vec_id
-       |), short AS (
-       |  SELECT vec_id, adc FROM adcv ORDER BY adc, vec_id LIMIT 40
-       |)
-       |SELECT y.vec_id AS vec_id, round(s.adc, 6) AS adc, round($duckCos, 6) AS cos
-       |FROM short s, x, embeddings y
-       |WHERE y.vec_id = s.vec_id
-       |ORDER BY cos DESC, y.vec_id LIMIT 10""".stripMargin
+  lazy val oracleSql: Map[String, String] = registry.map(d => d.name -> d.oracleSql).toMap
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** A node in the processing DAG.
   *
@@ -148,10 +148,4 @@ final case class Topology(entities: Map[String, Entity], workflow: Seq[(String, 
     val edges = workflow.map { case (a, b) => s"""  "$a" -> "$b";""" }
     (Seq("digraph topology {") ++ nodes ++ edges ++ Seq("}")).mkString("\n")
   }
-}
-
-object Topology {
-  /** Convenience: bind every source topic to `dir/<name>.parquet`. */
-  def bindParquet(spark: SparkSession, topology: Topology, dir: String): Map[String, DataFrame] =
-    topology.sources.map(s => s -> spark.read.parquet(s"$dir/$s.parquet")).toMap
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Expression, GenericInternalRow, JoinedRow, NamedExpression, RowOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, NamedExpression, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
@@ -76,13 +76,6 @@ case class AsofJoin(
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsofJoin =
     copy(left = newLeft, right = newRight)
-}
-
-object AsofJoin {
-  /** Fresh nullable output attributes for the as-of value columns. */
-  def outputAttrsFor(rightValues: Seq[NamedExpression]): Seq[Attribute] =
-    rightValues.map(v =>
-      AttributeReference(s"asof_${v.name}", v.dataType, nullable = true)())
 }
 
 /** Column pruning THROUGH the custom node: Catalyst's `ColumnPruning` only

@@ -103,7 +103,6 @@ object SyntheticDocs {
   def sourceFromHash(h: Long): String =
     sources(uMod(java.lang.Long.divideUnsigned(h, 8L), 4L).toInt)
 
-  def wordCount(seed: Long, docId: Long): Long = wordCountFromHash(rowHash(seed, docId))
   def lang(seed: Long, docId: Long): String = langFromHash(rowHash(seed, docId))
   def source(seed: Long, docId: Long): String = sourceFromHash(rowHash(seed, docId))
 

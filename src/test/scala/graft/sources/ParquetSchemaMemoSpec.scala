@@ -161,15 +161,37 @@ class ParquetSchemaMemoSpec extends SparkSpec {
     writeRawTs(dir, "memo_nanos", "TIMESTAMP(NANOS,true)", micros.map(_ * 1000))
     restoring(conf) {
       // each pass is a session that has not set the legacy conf: the read
-      // must infer, flip the conf and read the epoch nanos as longs, never
-      // bind the memoized LongType schema under the conf it was not read with
+      // infers with the conf set for inference only and reads the epoch
+      // nanos as longs, and the session keeps the conf it had
       for (_ <- 1 to 2) {
         spark.conf.set(conf, "false")
         val df = SparkEntry.t(spark, dir.toString, "memo_nanos")
         assert(df.schema("ts").dataType === LongType)
-        assert(spark.conf.get(conf) === "true")
+        assert(spark.conf.get(conf) === "false")
         assert(df.select(col("ts")).as[Long].collect().toSeq === micros.map(_ * 1000))
       }
     }
+  }
+
+  test("a NANOS read leaves the caller's unset nanosAsLong unset and reads the legacy rows") {
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = Files.createTempDirectory("graft_memo")
+    writeRawTs(dir, "memo_nanos_caller", "TIMESTAMP(NANOS,true)", micros.map(_ * 1000))
+    val caller = spark.newSession()
+    caller.conf.unset(conf)
+    val before = caller.conf.getOption(conf)
+    val path = dir.resolve("memo_nanos_caller.parquet").toString
+    assert(scala.util.Try(caller.read.parquet(path)).isFailure,
+      "without the conf the nanos footer rejects the read, so the fallback runs")
+    // the rows of a whole-session legacy read (this suite's session sets the conf)
+    assert(spark.conf.get(conf) === "true")
+    val legacy = rows(spark.read.parquet(path))
+    val first = SparkEntry.t(caller, dir.toString, "memo_nanos_caller")
+    assert(caller.conf.getOption(conf) === before)
+    assert(rows(first) === legacy)
+    val (again, jobs) = jobsOf(SparkEntry.t(caller, dir.toString, "memo_nanos_caller"))
+    assert(jobs === 0, "the fallback's schema is memoized under the caller's settings")
+    assert(caller.conf.getOption(conf) === before)
+    assert(rows(again) === legacy)
   }
 }
