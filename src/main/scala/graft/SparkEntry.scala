@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries._
+import graft.queries.ReferenceQueries.topologyTransactions
 
 /** Driver contract (see SURVEY.md §5.2/§7). Every operator from SURVEY §2
   * plus the north-star LLM-pipeline operators is exposed as a named query
@@ -394,7 +395,7 @@ object SparkEntry {
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    ReferenceQueries.topologyTransactions(spark, "/root/testdata/sf0.001")
+    topologyTransactions(spark, "/root/testdata/sf0.001")
 
   /** Every registry query, family by family, each defined once next to its
     * oracle; construction requires distinct names. Lazy, like the maps
