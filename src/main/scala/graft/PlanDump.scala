@@ -8,23 +8,25 @@ package graft
   * coalesced reads, runtime join strategy) is what lands in the file, with
   * the static formatted plan appended for the pre-AQE view.
   *
-  * Usage: `sbt "runMain graft.PlanDump <out-dir> <suffix> q_a,q_b,..."`
-  * writes `<out-dir>/<query>_<suffix>.txt` (env SPARK_GRAFT_SF_DIR
-  * overrides the corpus, SPARK_GRAFT_CPUS the local worker and shuffle
-  * partition count; the committed `plans/` were dumped with
-  * SPARK_GRAFT_CPUS=32, and the partition count shows in every exchange).
+  * Usage: `sbt "runMain graft.PlanDump <sf-dir> <out-dir> <suffix> q_a,q_b,..."`
+  * writes `<out-dir>/<query>_<suffix>.txt` for the corpus in `<sf-dir>`,
+  * which, as for [[Verify]], is an argument: a forked run through a running
+  * sbt server gets the server's environment, not the caller's
+  * (env SPARK_GRAFT_CPUS sets the local worker and shuffle partition count;
+  * the committed `plans/` were dumped with SPARK_GRAFT_CPUS=32, and the
+  * partition count shows in every exchange).
   * Expression and plan ids are renumbered (see [[renumber]]), so two dumps
   * of one plan are byte-identical.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanDump <out-dir> <suffix> q_a,q_b,...")
-    val outDir = java.nio.file.Paths.get(args(0))
-    val suffix = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(args.length >= 4, "usage: PlanDump <sf-dir> <out-dir> <suffix> q_a,q_b,...")
+    val sfDir = args(0)
+    val outDir = java.nio.file.Paths.get(args(1))
+    val suffix = args(2)
+    val names = args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val sfDir = Harness.sfDir
     val spark = Harness.session()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>

@@ -40,25 +40,45 @@ object SparkEntry {
       case None =>
         // Event tables have shipped `ts` as both TIMESTAMP(NANOS) (unreadable
         // without the legacy nanos-as-long conf) and plain timestamp[us]. Our
-        // own sessions set the conf at build time. For a caller-supplied
-        // session it is set only while the schema is inferred, and only if
-        // the nanos footer rejects the read: a read bound to that LongType
-        // schema executes without the conf, so the caller's session is left
-        // as it was.
+        // own sessions set the conf at build time. For any session it is set
+        // while the schema of a file whose footer stores NANOS is inferred,
+        // and only then: a read bound to that LongType schema executes
+        // without the conf, so the caller's session is left as it was.
         val inferred =
-          try s.read.parquet(path)
-          catch {
-            case e: Exception if e.getMessage != null && e.getMessage.contains("NANOS") =>
-              val schema = withConf(s, "spark.sql.legacy.parquet.nanosAsLong", "true")(
-                s.read.parquet(path).schema)
-              s.read.schema(schema).parquet(path)
-          }
-        // under the caller's settings, this file version always reads with
-        // the schema just found, so later reads skip the failed inference
+          if (storesNanos(s, path)) {
+            val schema = withConf(s, "spark.sql.legacy.parquet.nanosAsLong", "true")(
+              s.read.parquet(path).schema)
+            s.read.schema(schema).parquet(path)
+          } else s.read.parquet(path)
         parquetSchemas.put(key, inferred.schema)
         inferred
     }
     if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** Whether the Parquet footer of `path` (for a directory, of its first
+    * data file) stores a TIMESTAMP(NANOS) column, which Spark's schema
+    * inference rejects unless nanos are read as longs.
+    */
+  private def storesNanos(s: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) Some(p)
+      else fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .sortBy(_.getName).headOption
+    file.exists { f =>
+      val footer = scala.util.Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)))(_.getFooter)
+      footer.getFileMetaData.getSchema.getColumns.asScala.exists(
+        _.getPrimitiveType.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+    }
   }
 
   /** Runs `body` with one session setting changed, then puts it back as it
@@ -168,8 +188,10 @@ object SparkEntry {
     * once and then only STREAMS — a single long-running query — never
     * re-invokes staging), and the cutoff sits far above any plausible
     * single-run duration in this environment (gate + bench + verify
-    * together are under an hour; 24h of margin, not 2h). The temp dir then holds
-    * at most the last day of app trees instead of growing forever.
+    * together are under an hour; 24h of margin, not 2h). No stream outlives
+    * the call that asked for its base by that much: every gate runs
+    * `AvailableNow` and awaits termination before it returns. The temp dir
+    * then holds at most the last day of app trees instead of growing forever.
     */
   private[graft] val staleSweepDone = new java.util.concurrent.atomic.AtomicBoolean
 
@@ -195,71 +217,14 @@ object SparkEntry {
     val base = inTmpDir(s"graft_stream_${tag}_${dir.replaceAll("\\W", "_")}__$app")
     // keep OUR tree visibly live for other JVMs' sweeps even when staging
     // is memoized and no child dir gets recreated (see the doc above)
-    touchBase(base)
-    // …and keep it live for the duration of any RUNNING stream too: an app
-    // that calls streamBase once and then streams for days never re-invokes
-    // this method, so its only mtime refreshes would be the single touch
-    // above — inside another app's 24h sweep window eventually. Every query
-    // progress event re-touches every base this app registered, so a tree
-    // stays sweep-proof exactly as long as something is actually streaming
-    // from it (ADVICE r16).
-    liveStreamBases.add(base)
-    registerHeartbeat(s)
-    base
-  }
-
-  private def touchBase(base: String): Boolean =
     try {
       val p = java.nio.file.Paths.get(base)
-      val exists = java.nio.file.Files.exists(p)
-      if (exists)
+      if (java.nio.file.Files.exists(p))
         java.nio.file.Files.setLastModifiedTime(p,
           java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      exists
-    } catch { case _: Throwable => true } // transient FS error: keep registered
-
-  /** Bases this app has handed out, re-touched on every streaming progress
-    * event by [[StreamBaseHeartbeat]]. Entries whose tree is momentarily
-    * absent stay REGISTERED: a caller wipes-then-restages its tree right
-    * after streamBase returns, and a progress event from another live
-    * stream landing in that window must not permanently drop the base's
-    * sweep protection (the touch is a no-op until the tree reappears).
-    * The set is bounded by construction — one entry per distinct
-    * (tag, sf-dir) pair this app ever streams, a handful of strings.
-    */
-  private[graft] val liveStreamBases =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[graft] def touchStreamBases(): Unit =
-    liveStreamBases.forEach { b => touchBase(b); () }
-
-  /** Heartbeat listener: any streaming progress in the session refreshes
-    * every registered base's mtime — cost is one utimes per base per
-    * micro-batch, nothing touches the data files.
-    */
-  private[graft] final class StreamBaseHeartbeat
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    override def onQueryStarted(
-      e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(
-      e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-      touchStreamBases()
-    override def onQueryTerminated(
-      e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    } catch { case _: Throwable => () } // best-effort, like the sweep
+    base
   }
-
-  /** One heartbeat per session (listeners are session-scoped); idempotent
-    * under the lock via the listener-type scan.
-    */
-  private val heartbeatLock = new Object
-
-  private def registerHeartbeat(s: SparkSession): Unit =
-    heartbeatLock.synchronized {
-      try {
-        if (!s.streams.listListeners().exists(_.isInstanceOf[StreamBaseHeartbeat]))
-          s.streams.addListener(new StreamBaseHeartbeat)
-      } catch { case _: Throwable => () } // hygiene only — never fail a query
-    }
 
   /** Recursive delete of a staging tree — shared by the stream-parity
     * queries, which keep exactly ONE fixed tree per sf dir alive (wiped on
@@ -381,10 +346,10 @@ object SparkEntry {
   }
 
   /** Start a streaming query with `spark.sql.shuffle.partitions` sized to
-    * the state-store key space (see the SIZE THE STATE PARTITIONS note in
-    * [[streamStatefulParityQ]]: each micro-batch commits one delta file +
-    * fsync PER state partition, so 32 partitions over ~10³ keys is pure
-    * per-file overhead). The batch-side conf is restored immediately; each
+    * the state-store key space (see the SIZE THE STATE PARTITIONS note on
+    * [[graft.queries.StreamGateQueries.run]]: each micro-batch commits one
+    * delta file + fsync PER state partition, so 32 partitions over ~10³ keys
+    * is pure per-file overhead). The batch-side conf is restored immediately; each
     * caller starts a FRESH checkpoint, so the burned-in value never
     * conflicts.
     */

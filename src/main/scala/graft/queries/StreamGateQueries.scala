@@ -3,12 +3,28 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.ReferenceOps
+import graft.streaming._
 import graft.SparkEntry.{stagedEventsSchema, stageTimeSplitEvents, streamBase, wipeTree, withStatePartitions}
+
+/** A stream gate over the time-split events, as an incrementalized plan plus
+  * its sink: `start` begins the gate's streams over the files in `landing`,
+  * with sinks and checkpoints under `base`, and `read` reads the result
+  * back once they have drained. `read` takes `landing` too, so a gate can
+  * build a batch twin from the same files. [[StreamGateQueries.run]] runs
+  * one as a registry query; a spec can start and read one over its own
+  * directories.
+  */
+private[graft] final case class SplitGate(
+    tag: String,
+    start: (SparkSession, String, String) => Seq[StreamingQuery],
+    read: (SparkSession, String, String) => DataFrame)
 
 /** Registry queries of the stream gates: each runs a live Structured Streaming
   * lifecycle, and a gate with a batch twin shares its oracle. Each query
-  * registers with its oracle right after its body.
+  * registers with its oracle right after its body; a time-split gate is one
+  * [[SplitGate]] value registered as `query(name, run(gate), oracle)`.
   */
 private[graft] object StreamGateQueries extends QueryFamily {
 
@@ -57,18 +73,18 @@ private[graft] object StreamGateQueries extends QueryFamily {
       java.nio.file.Files.copy(in, landing.resolve(s"$table.parquet"))
       landing.toString
     }
-    val purchases = graft.streaming.StreamRunner
+    val purchases = StreamRunner
       .fileSource(s, stage("orders"), ordersSchema, format = "parquet")
       .select(col("o_orderkey").as("key"), col("o_custkey").as("user_id"),
         col("o_totalprice").as("amount"))
-    val donations = graft.streaming.StreamRunner
+    val donations = StreamRunner
       .fileSource(s, stage("events"), eventsSchema, format = "parquet")
       .select(col("event_id").as("key"), col("user_id"),
         (col("value") * 100).as("donation_amount_cents"))
-    val engine = graft.streaming.StreamRunner.start(
+    val engine = StreamRunner.start(
       ReferenceOps.transactionTopology,
       Map("purchase-made" -> purchases, "humble-donation-made" -> donations),
-      (sink, df) => graft.streaming.StreamRunner.fileSink(
+      (sink, df) => StreamRunner.fileSink(
         df, s"$base/$sink", s"$base/ckpt_$sink"))
     engine.awaitAll() // AvailableNow: terminates once the input is drained
     engine.stop()
@@ -77,6 +93,54 @@ private[graft] object StreamGateQueries extends QueryFamily {
   // stream parity: the LIVE streaming run must produce the batch
   // experiment's exact multiset — one oracle string serves both faces
   query("q_stream_parity", streamParityQ, ReferenceQueries.topologyExperimentDef.oracleSql)
+
+  /** The staged events as a stream: `maxFilesPerTrigger=1` turns the three
+    * time-range files into three ordered micro-batches.
+    */
+  private def events(s: SparkSession, landing: String): DataFrame =
+    StreamRunner.fileSource(s, landing, stagedEventsSchema, format = "parquet",
+      options = Map("maxFilesPerTrigger" -> "1"))
+
+  /** The append-mode file sink at `base/out`, checkpointed at `base/ckpt`. */
+  private def appendOut(df: DataFrame, base: String): Seq[StreamingQuery] =
+    Seq(StreamRunner.fileSink(df, s"$base/out", s"$base/ckpt"))
+
+  /** The update-mode idempotent sink at `base/out`, checkpointed at
+    * `base/ckpt`: each micro-batch lands in its own `_batch_id` partition.
+    */
+  private def updateOut(df: DataFrame, base: String): Seq[StreamingQuery] =
+    Seq(StreamRunner.idempotentParquetSink(df, s"$base/out", s"$base/ckpt"))
+
+  private def out(s: SparkSession, base: String): DataFrame = s.read.parquet(s"$base/out")
+
+  /** Runs one time-split gate as a COLD end-to-end streaming lifecycle, the
+    * only code that stages, starts and reads one: stage the events as three
+    * time-range files (memoized per JVM, see [[stageTimeSplitEvents]]), wipe
+    * the gate's own tree, start its streams, await every one
+    * (`AvailableNow`: each terminates once the input drains), and read the
+    * result back.
+    *
+    * The tree is a FIXED per-(tag, sf dir, app) base wiped at entry: a fresh
+    * tree per invocation leaked directories every bench and verify round,
+    * and wiping on the way in keeps at most one tree per gate alive while
+    * every run still gets the cold checkpoint and sink it exists to measure.
+    *
+    * SIZE THE STATE PARTITIONS TO THE KEY SPACE: a stateful query's
+    * shuffle-partition count is burned into its checkpoint at first start,
+    * and every micro-batch writes one state-store delta file + fsync PER
+    * PARTITION — 32 partitions × 3 batches = 96 store commits for 1.5k keys
+    * was pure per-file overhead (the Kafka Streams analog is sizing task
+    * count to the key space). The batch-side conf is restored as soon as the
+    * streams have started; each run starts a FRESH checkpoint, so the
+    * burned-in value never conflicts.
+    */
+  private def run(gate: SplitGate)(s: SparkSession, dir: String): DataFrame = {
+    val landing = stageTimeSplitEvents(s, dir)
+    val base = streamBase(s, gate.tag, dir)
+    wipeTree(base)
+    withStatePartitions(s, 4)(gate.start(s, landing, base)).foreach(_.awaitTermination())
+    gate.read(s, landing, base)
+  }
 
   /** STATEFUL streaming under the driver gate — the arbitrary-state
     * (`flatMapGroupsWithState`) runtime path that [[streamParityQ]]'s
@@ -93,47 +157,27 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * parity was previously only spec-visible). Equal-ts view/purchase
     * collisions would make arrival order authoritative where ASOF is
     * order-blind; the data has none (verified at every SF), and the
-    * StatefulOpsSpec pins the trade.
+    * StatefulOpsSpec pins the trade. Its tree is its own (`asof`): the
+    * staging base holds the landing files the run reads.
     */
-  private def streamStatefulParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val base = streamBase(s, "stateful", dir)
-    val landing = java.nio.file.Paths.get(stageTimeSplitEvents(s, dir))
-    // fresh streaming run dirs per invocation (the part under gate)
-    val runBase = s"$base/run"
-    wipeTree(runBase)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing.toString, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .as[graft.streaming.EnrichEvent]
-    val enriched = graft.streaming.StatefulOps
-      .streamingAsofEnrich(src, refType = "view", factType = "purchase")
-      .select(col("event_id"), col("user_id"), col("value"),
-        col("prior_view_value"))
-    // SIZE THE STATE PARTITIONS TO THE KEY SPACE: a stateful query's
-    // shuffle-partition count is burned into its checkpoint at first
-    // start, and every micro-batch writes one state-store delta file +
-    // fsync PER PARTITION — 32 partitions × 3 batches = 96 store commits
-    // for 1.5k keys was pure per-file overhead (the Kafka Streams analog
-    // is sizing task count to the key space). The batch-side conf is
-    // restored immediately; each run starts a FRESH checkpoint, so the
-    // burned-in value never conflicts.
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        enriched.toDF(), s"$runBase/out", s"$runBase/ckpt")
-    }
-    q.awaitTermination() // AvailableNow: terminates once the input drains
-    s.read.parquet(s"$runBase/out")
-  }
+  private[graft] val asofGate = SplitGate("asof",
+    { (s, landing, base) =>
+      import s.implicits._
+      appendOut(StatefulOps
+        .streamingAsofEnrich(events(s, landing).as[EnrichEvent], refType = "view",
+          factType = "purchase")
+        .select(col("event_id"), col("user_id"), col("value"), col("prior_view_value")), base)
+    },
+    (s, _, base) => out(s, base))
   // the batch q_asof_join SQL verbatim: the live flatMapGroupsWithState
   // runtime over 3 ordered micro-batches must compute exactly what the
   // batch AS-OF operator computes
-  query("q_stream_stateful_parity", streamStatefulParityQ, AnalyticsQueries.asofJoinDef.oracleSql)
+  query("q_stream_stateful_parity", run(asofGate), AnalyticsQueries.asofJoinDef.oracleSql)
 
   /** `dropDuplicatesWithinWatermark` under the driver gate — the streaming
     * dedup runtime ([[graft.streaming.StreamRunner.streamingDedup]], the
     * live face of [[graft.dedup.Dedup.exact]]) over the SAME staged 3-file
-    * time-split source as [[streamStatefulParityQ]]: three ordered
+    * time-split source as [[asofGate]]: three ordered
     * micro-batches with real cross-batch dedup-state round-trips (a key
     * first seen in batch 0 must still suppress its batch-2 repeats through
     * the state store). The retention delay deliberately covers the whole
@@ -147,33 +191,20 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * encounters first is partition-order nondeterministic — the key set
     * is not.
     */
-  private def streamDedupParityQ(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "dedup", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withColumn("day", to_date(col("ts")).cast("timestamp"))
-    val deduped = graft.streaming.StreamRunner
-      .streamingDedup(src, "ts", "3650 days",
-        Seq("user_id", "event_type", "day"))
-      .select(col("user_id"), col("event_type"), col("day"))
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        deduped, s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-  }
+  private[graft] val dedupGate = SplitGate("dedup",
+    (s, landing, base) => appendOut(StreamRunner
+      .streamingDedup(events(s, landing).withColumn("day", to_date(col("ts")).cast("timestamp")),
+        "ts", "3650 days", Seq("user_id", "event_type", "day"))
+      .select(col("user_id"), col("event_type"), col("day")), base),
+    (s, _, base) => out(s, base))
   // live dropDuplicatesWithinWatermark with a span-covering retention ==
-  // batch DISTINCT over the key columns (see streamDedupParityQ)
-  query("q_stream_dedup_parity", streamDedupParityQ,
+  // batch DISTINCT over the key columns (see dedupGate)
+  query("q_stream_dedup_parity", run(dedupGate),
     """SELECT DISTINCT user_id, event_type,
       |  CAST(CAST(ts AS DATE) AS TIMESTAMP) AS day FROM events""".stripMargin)
 
   /** `mapGroupsWithState` with EventTimeTimeout under the driver gate —
-    * the live face of the batch funnel ([[funnelQ]]): the staged 3-batch
+    * the live face of the batch funnel (q_funnel): the staged 3-batch
     * events stream drives [[graft.streaming.StatefulOps.streamingFunnel]]
     * (signup → view → purchase), whose per-user stage list must survive
     * cross-batch state round-trips (a user signing up in batch 0 and
@@ -189,44 +220,27 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * so batches land via the idempotent foreachBatch sink and the FINAL
     * row per user (max `_batch_id`) is the funnel result.
     */
-  private def streamFunnelParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "funnel", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[graft.streaming.FunnelEvent]
-    val prog = graft.streaming.StatefulOps.streamingFunnel(
-      src, Seq("signup", "view", "purchase"),
-      stateTtlMs = 90L * 24 * 3600 * 1000)
-    val q = withStatePartitions(s, 4) {
-      prog.toDF().writeStream
-        .outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) =>
-          graft.streaming.StreamRunner.writeBatchIdempotent(b, id, s"$base/out"))
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
+  private[graft] val funnelGate = SplitGate("funnel",
+    { (s, landing, base) =>
+      import s.implicits._
+      updateOut(StatefulOps.streamingFunnel(
+        events(s, landing).withWatermark("ts", "1 hour")
+          .select(col("user_id"), col("ts"), col("event_type")).as[FunnelEvent],
+        Seq("signup", "view", "purchase"), stateTtlMs = 90L * 24 * 3600 * 1000).toDF(), base)
+    },
     // try_element_at: a user who never reaches stage k has a short
     // stage_times array — out-of-bounds must be NULL (q_funnel's shape),
     // not an ANSI error
-    s.read.parquet(s"$base/out")
+    (s, _, base) => out(s, base)
       .groupBy(col("user_id"))
       .agg(max_by(col("stage_times"), col("_batch_id")).as("__st"))
       .select(col("user_id"),
         try_element_at(col("__st"), lit(1)).as("t_signup"),
         try_element_at(col("__st"), lit(2)).as("t_view"),
-        try_element_at(col("__st"), lit(3)).as("t_purchase"))
-  }
+        try_element_at(col("__st"), lit(3)).as("t_purchase")))
   // the batch q_funnel SQL verbatim: live mapGroupsWithState over 3
   // ordered micro-batches must compute exactly the batch funnel
-  query("q_stream_funnel_parity", streamFunnelParityQ, AnalyticsQueries.funnelDef.oracleSql)
+  query("q_stream_funnel_parity", run(funnelGate), AnalyticsQueries.funnelDef.oracleSql)
 
   /** Watermark-closed tumbling windows under the driver gate — the live
     * face of [[graft.streaming.StreamRunner.windowedAgg]] (SURVEY §2.5's
@@ -241,28 +255,17 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * per-batch partial aggregation is exact (a double sum's value would
     * depend on accumulation order across batches).
     */
-  private def streamWindowParityQ(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "window", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-    val agg = graft.streaming.StreamRunner
-      .windowedAgg(src, "ts", "event_type", "v", "1 day", "1 hour")
+  private[graft] val windowGate = SplitGate("window",
+    (s, landing, base) => appendOut(StreamRunner
+      .windowedAgg(events(s, landing).withColumn("v", col("value").cast("decimal(18,2)")),
+        "ts", "event_type", "v", "1 day", "1 hour")
       .select(col("window.start").as("ws"), col("event_type"),
-        col("n"), col("total").cast("double").as("total"))
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(agg, s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-  }
+        col("n"), col("total").cast("double").as("total")), base),
+    (s, _, base) => out(s, base))
   // watermark-closed tumbling windows: the live append-mode emission =
   // batch day buckets restricted to windows the final watermark
   // (max ts − 1 h) closed; day buckets are epoch-aligned on both sides
-  query("q_stream_window_parity", streamWindowParityQ,
+  query("q_stream_window_parity", run(windowGate),
     """WITH b AS (SELECT date_trunc('day', ts) AS ws, event_type,
       |  CAST(value AS DECIMAL(18,2)) AS v FROM events)
       |SELECT ws, event_type, COUNT(*) AS n, CAST(SUM(v) AS DOUBLE) AS total
@@ -286,37 +289,27 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * already spec'd; this puts the join-state runtime under the hash gate
     * every round.)
     */
-  private def streamJoinParityQ(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "join", dir)
-    wipeTree(base)
-    def src() = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-      .withWatermark("ts", "1 hour")
-    val views = src().filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts"), col("value"))
-      .withWatermark("ts", "1 hour")
-    val joined = graft.streaming.StreamRunner.streamIntervalJoin(
-      purchases, views, "user_id", "ts", "ts",
-      beforeUs = 3600L * 1000000L, afterUs = 0L,
-      rightCols = Seq("value" -> "view_value"))
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        joined.select(col("event_id"), col("user_id"), col("view_value")),
-        s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
+  private[graft] val joinGate = SplitGate("join",
+    { (s, landing, base) =>
+      val purchases = events(s, landing).filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("ts"))
+        .withWatermark("ts", "1 hour")
+      val views = events(s, landing).filter(col("event_type") === "view")
+        .select(col("user_id"), col("ts"), col("value"))
+        .withWatermark("ts", "1 hour")
+      appendOut(StreamRunner.streamIntervalJoin(
+          purchases, views, "user_id", "ts", "ts",
+          beforeUs = 3600L * 1000000L, afterUs = 0L,
+          rightCols = Seq("value" -> "view_value"))
+        .select(col("event_id"), col("user_id"), col("view_value")), base)
+    },
+    (s, _, base) => out(s, base)
       .groupBy(col("event_id"), col("user_id"))
       .agg(count(lit(1)).as("n_views"),
-        sum(col("view_value").cast("decimal(18,2)")).cast("double").as("view_total"))
-  }
+        sum(col("view_value").cast("decimal(18,2)")).cast("double").as("view_total")))
   // the batch q_interval_join SQL verbatim: live stream-stream join
   // state over 3 ordered micro-batches == the batch interval join
-  query("q_stream_join_parity", streamJoinParityQ, AnalyticsQueries.intervalJoinDef.oracleSql)
+  query("q_stream_join_parity", run(joinGate), AnalyticsQueries.intervalJoinDef.oracleSql)
 
   /** Session windows with a FIRING event-time timeout under the driver
     * gate — [[graft.streaming.StatefulOps.streamingSessionize]]
@@ -335,34 +328,22 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * min∘trunc). `total_value` is NOT projected: its per-session double
     * accumulation order is undefined between equal-ts events.
     */
-  private def streamSessionizeParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "sess", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[graft.streaming.SessionEvent]
-    val sessions = graft.streaming.StatefulOps
-      .streamingSessionize(src, gapMs = 1800L * 1000)
-    val q = withStatePartitions(s, 4) {
-      graft.streaming.StreamRunner.fileSink(
-        sessions.toDF().select(col("user_id"), col("n_events"),
-          col("session_start"), col("session_end")),
-        s"$base/out", s"$base/ckpt")
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
-  }
+  private[graft] val sessionizeGate = SplitGate("sess",
+    { (s, landing, base) =>
+      import s.implicits._
+      appendOut(StatefulOps.streamingSessionize(
+          events(s, landing).withWatermark("ts", "1 hour")
+            .select(col("user_id"), col("ts"), col("value")).as[SessionEvent],
+          gapMs = 1800L * 1000)
+        .select(col("user_id"), col("n_events"), col("session_start"), col("session_end")), base)
+    },
+    (s, _, base) => out(s, base))
   // live sessionize == batch sessions at MILLISECOND precision (the
   // operator's state is Timestamp.getTime ms): gap decisions diff
   // epoch_ms; start/end are ms-truncated; each user's LAST session is
   // emitted only if the final watermark (max ts − 1 h) strictly passed
   // its last+gap timeout — every other session was closed in-stream
-  query("q_stream_sessionize_parity", streamSessionizeParityQ,
+  query("q_stream_sessionize_parity", run(sessionizeGate),
     """WITH x AS (
       |  SELECT user_id, ts, event_id,
       |    CASE WHEN lag(ts) OVER w IS NULL
@@ -399,39 +380,23 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * is what makes a sketch portable across engines; this gate extends it
     * to the streaming runtime.
     */
-  private def streamKmvParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "kmv", dir)
-    wipeTree(base)
-    val src = graft.streaming.StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-      .select(col("event_type").as("group"),
-        col("user_id").cast("string").as("item"))
-      .as[graft.streaming.KmvEvent]
-    val snaps = graft.streaming.StatefulOps.streamingKmvDistinct(src, k = 256)
-    val q = withStatePartitions(s, 4) {
-      snaps.toDF().writeStream
-        .outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) =>
-          graft.streaming.StreamRunner.writeBatchIdempotent(b, id, s"$base/out"))
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.read.parquet(s"$base/out")
+  private[graft] val kmvGate = SplitGate("kmv",
+    { (s, landing, base) =>
+      import s.implicits._
+      updateOut(StatefulOps.streamingKmvDistinct(
+        events(s, landing).select(col("event_type").as("group"),
+          col("user_id").cast("string").as("item")).as[KmvEvent], k = 256).toDF(), base)
+    },
+    (s, _, base) => out(s, base)
       .groupBy(col("group"))
       .agg(max_by(struct(col("kmv_k"), col("h_k"), col("est_distinct")),
         col("_batch_id")).as("__f"))
       .select(col("group").as("event_type"), col("__f.kmv_k").as("kmv_k"),
-        col("__f.h_k").as("h_k"), col("__f.est_distinct").as("est_distinct"))
-  }
+        col("__f.h_k").as("h_k"), col("__f.est_distinct").as("est_distinct")))
   // the batch q_kmv_distinct SQL verbatim: KMV state is a pure set
   // function (k smallest distinct hashes, arrival-order independent),
   // so the live final snapshot must equal the batch sketch value-exactly
-  query("q_stream_kmv_parity", streamKmvParityQ, SketchQueries.kmvDistinctDef.oracleSql)
+  query("q_stream_kmv_parity", run(kmvGate), SketchQueries.kmvDistinctDef.oracleSql)
 
   /** The three RECURSIVE stateful runtimes under the driver gate — EMA,
     * Welford anomaly, token-bucket rate limit — whose per-event folds are
@@ -440,50 +405,36 @@ private[graft] object StreamGateQueries extends QueryFamily {
     * so value-replay oracles are impossible. This gate uses the
     * INVARIANT form instead: each op runs LIVE over the staged 3-batch
     * split (three concurrent update-mode streams, real cross-batch
-    * state-store round-trips) AND as its own batch twin (the identical
-    * fold — `flatMapGroupsWithState` in batch mode for ema/anomaly,
-    * [[graft.streaming.StatefulOps.rateLimitBatch]] for the bucket), and
-    * the query emits one row per op: (op, n_rows, n_mismatch) from a
-    * full-outer join on event_id comparing EXACT values (bit equality —
-    * same Scala arithmetic in same per-key order is the contract). The
-    * oracle pins n_mismatch = 0 and anchors n_rows to DuckDB's OWN
-    * count(*) of events — a dropped, duplicated, or diverging row
-    * anywhere in the live runtime hash-mismatches the round. Stated
+    * state-store round-trips) AND as its own batch twin over the landed
+    * files (the identical fold — `flatMapGroupsWithState` in batch mode
+    * for ema/anomaly, [[graft.streaming.StatefulOps.rateLimitBatch]] for
+    * the bucket), and the query emits one row per op: (op, n_rows,
+    * n_mismatch) from a full-outer join on event_id comparing EXACT values
+    * (bit equality — same Scala arithmetic in same per-key order is the
+    * contract). The oracle pins n_mismatch = 0 and anchors n_rows to
+    * DuckDB's OWN count(*) of events — a dropped, duplicated, or diverging
+    * row anywhere in the live runtime hash-mismatches the round. Stated
     * honestly: this is live == engine-batch-twin under an independent
     * row-count anchor, not an independent value replay — the strongest
     * gate the non-replayable folds admit.
     */
-  private def streamRecursiveParityQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.{StatefulOps, StreamRunner, EmaEvent, RateEvent}
-    val landing = stageTimeSplitEvents(s, dir)
-    val base = streamBase(s, "recur", dir)
-    wipeTree(base)
-    def src() = StreamRunner
-      .fileSource(s, landing, stagedEventsSchema, format = "parquet",
-        options = Map("maxFilesPerTrigger" -> "1"))
-    def upd(df: DataFrame, name: String) = df.writeStream
-      .outputMode("update")
-      .foreachBatch((b: DataFrame, id: Long) =>
-        StreamRunner.writeBatchIdempotent(b, id, s"$base/$name"))
-      .option("checkpointLocation", s"$base/ckpt_$name")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val queries = withStatePartitions(s, 4) { Seq(
-      upd(StatefulOps.streamingEma(
-        src().select(col("user_id"), col("ts"), col("event_id"), col("value"))
-          .as[EmaEvent], alpha = 0.3).toDF(), "ema"),
-      upd(StatefulOps.streamingAnomaly(
-        src().select(col("user_id"), col("ts"), col("event_id"), col("value"))
-          .as[EmaEvent], zMax = 3.0).toDF(), "anomaly"),
-      upd(StatefulOps.streamingRateLimit(
-        src().select(col("user_id"), col("ts"), col("event_id"))
-          .as[RateEvent], capTokens = 2L, ratePerSec = 1L).toDF(), "rate_limit"))
+  private[graft] val recursiveGate = {
+    // the three folds over `ev`, each with the columns compared; the bucket's
+    // batch twin is its own fold, not the stateful one run in batch
+    def ops(s: SparkSession, ev: DataFrame): Seq[(String, DataFrame, Seq[String])] = {
+      import s.implicits._
+      val emaIn = ev.select(col("user_id"), col("ts"), col("event_id"), col("value")).as[EmaEvent]
+      val rateIn = ev.select(col("user_id"), col("ts"), col("event_id")).as[RateEvent]
+      Seq(
+        ("anomaly", StatefulOps.streamingAnomaly(emaIn, zMax = 3.0).toDF(),
+          Seq("value", "z", "anomaly")),
+        ("ema", StatefulOps.streamingEma(emaIn, alpha = 0.3).toDF(), Seq("ema")),
+        ("rate_limit", (if (ev.isStreaming)
+            StatefulOps.streamingRateLimit(rateIn, capTokens = 2L, ratePerSec = 1L)
+          else StatefulOps.rateLimitBatch(rateIn, capTokens = 2L, ratePerSec = 1L)).toDF(),
+          Seq("admitted", "tokens_after_micro")))
     }
-    queries.foreach(_.awaitTermination()) // concurrent AvailableNow streams
-    val staged = s.read.parquet(landing)
-    def cmp(op: String, live: DataFrame, twin: DataFrame,
-            cols: Seq[String]): DataFrame = {
+    def cmp(op: String, live: DataFrame, twin: DataFrame, cols: Seq[String]): DataFrame = {
       // presence markers + null-safe <=> per column: the earlier
       // isNull-either-side form counted a row whose compared column is
       // legitimately null on BOTH sides as a mismatch, so a future stateful
@@ -491,8 +442,7 @@ private[graft] object StreamGateQueries extends QueryFamily {
       // positive. Only a row missing from one side entirely (presence
       // marker null after the full outer join) or a genuine value
       // divergence (not <=>) counts now.
-      val l = live.select(col("event_id") +: lit(true).as("__pl") +:
-        cols.map(col): _*)
+      val l = live.select(col("event_id") +: lit(true).as("__pl") +: cols.map(col): _*)
       val t = twin.select(col("event_id") +: lit(true).as("__pt") +:
         cols.map(c => col(c).as(s"__b_$c")): _*)
       val mism = (col("__pl").isNull || col("__pt").isNull ||
@@ -502,25 +452,19 @@ private[graft] object StreamGateQueries extends QueryFamily {
           sum(when(mism, 1L).otherwise(0L)).as("n_mismatch"))
         .select(lit(op).as("op"), col("n_rows"), col("n_mismatch"))
     }
-    val emaTwin = StatefulOps.streamingEma(
-      staged.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[EmaEvent], alpha = 0.3).toDF()
-    val anomTwin = StatefulOps.streamingAnomaly(
-      staged.select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[EmaEvent], zMax = 3.0).toDF()
-    val rateTwin = StatefulOps.rateLimitBatch(
-      staged.select(col("user_id"), col("ts"), col("event_id"))
-        .as[RateEvent], capTokens = 2L, ratePerSec = 1L).toDF()
-    cmp("anomaly", s.read.parquet(s"$base/anomaly"), anomTwin,
-        Seq("value", "z", "anomaly"))
-      .unionByName(cmp("ema", s.read.parquet(s"$base/ema"), emaTwin, Seq("ema")))
-      .unionByName(cmp("rate_limit", s.read.parquet(s"$base/rate_limit"),
-        rateTwin, Seq("admitted", "tokens_after_micro")))
+    SplitGate("recur",
+      // three concurrent update-mode streams, one sink per op
+      (s, landing, base) => ops(s, events(s, landing)).map { case (op, live, _) =>
+        StreamRunner.idempotentParquetSink(live, s"$base/$op", s"$base/ckpt_$op")
+      },
+      (s, landing, base) => ops(s, s.read.parquet(landing))
+        .map { case (op, twin, cols) => cmp(op, s.read.parquet(s"$base/$op"), twin, cols) }
+        .reduce(_ unionByName _))
   }
   // invariant gate for the NON-SQL-expressible recursive folds (see
-  // streamRecursiveParityQ): zero live-vs-twin mismatches, row counts
+  // recursiveGate): zero live-vs-twin mismatches, row counts
   // anchored to DuckDB's own count of events — one row per op
-  query("q_stream_recursive_parity", streamRecursiveParityQ,
+  query("q_stream_recursive_parity", run(recursiveGate),
     """SELECT 'anomaly' AS op, (SELECT count(*) FROM events) AS n_rows,
       |  CAST(0 AS BIGINT) AS n_mismatch
       |UNION ALL

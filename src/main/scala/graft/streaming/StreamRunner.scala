@@ -229,13 +229,16 @@ object StreamRunner {
       .partitionBy("_batch_id")
       .parquet(path)
 
-  /** Idempotent parquet sink via foreachBatch + [[writeBatchIdempotent]].
+  /** Idempotent parquet sink via foreachBatch + [[writeBatchIdempotent]], in
+    * update mode: a stateful operator's changed rows land per micro-batch,
+    * and for a query without aggregation update output equals append.
     * Default trigger drains available data and stops (batch-style backfill);
     * pass `Trigger.ProcessingTime(...)` for a continuously running pipeline.
     */
   def idempotentParquetSink(df: DataFrame, path: String, checkpointDir: String,
                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     df.writeStream
+      .outputMode("update")
       .foreachBatch((batch: DataFrame, batchId: Long) =>
         writeBatchIdempotent(batch, batchId, path))
       .option("checkpointLocation", checkpointDir)

@@ -1096,6 +1096,17 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("ReusedExchange"), p)
   }
 
+  test("q_pagerank: the edge set is built ONCE and every consumer reuses it") {
+    // pageRank's isNotNull base filter keeps every consumer of the distinct
+    // edge set (out-degrees, nodes, each iteration's contributions)
+    // canonically equal; without it the edge build executed 4x. The build is
+    // the distinct's exchange on (src, dst); a reuse line names it after a
+    // comma, so only the built one follows a tree edge
+    val p = finalPlanOf("q_pagerank")
+    assert("- Exchange hashpartitioning\\(src#\\d+L?, dst#\\d+L?, ".r.findAllIn(p).size === 1, p)
+    assert(p.contains("ReusedExchange"), p)
+  }
+
   test("q_ngram_jaccard: set sizes ride the inverted index — no corpus join-backs") {
     // pre-r18: the candidate-pair set was joined BACK to the shingle sets
     // twice to attach na/nb, re-scanning and re-shingling the corpus; the

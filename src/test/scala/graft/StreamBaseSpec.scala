@@ -65,46 +65,4 @@ class StreamBaseSpec extends SparkSpec {
         s"own base mtime must be refreshed by streamBase, got $mtime vs $old")
     } finally Files.deleteIfExists(own)
   }
-
-  test("the streaming heartbeat keeps long-running bases fresh: progress " +
-       "events re-touch every registered base; vanished trees self-remove") {
-    val app = spark.sparkContext.applicationId.replaceAll("\\W", "_")
-    val own = inTmp(s"graft_stream_hbtag__tmp_x__$app")
-    Files.createDirectories(own)
-    try {
-      val base = SparkEntry.streamBase(spark, "hbtag", "/tmp/x")
-      assert(base === own.toString)
-      // streamBase must have registered the base AND a heartbeat listener
-      // on the session (the ADVICE r16 case: an app that staged once and
-      // then only streams never re-invokes streamBase, so without the
-      // listener its tree ages into foreign sweeps' 24 h window)
-      assert(SparkEntry.liveStreamBases.contains(base))
-      assert(spark.streams.listListeners()
-        .exists(_.isInstanceOf[SparkEntry.StreamBaseHeartbeat]),
-        "streamBase must install the heartbeat listener once per session")
-      // age the tree, then fire the touch the listener delegates to — the
-      // mtime must come back to now without any streamBase re-invocation
-      val old = System.currentTimeMillis() - 25L * 3600 * 1000
-      Files.setLastModifiedTime(own, FileTime.fromMillis(old))
-      SparkEntry.touchStreamBases()
-      assert(Files.getLastModifiedTime(own).toMillis > old + 24L * 3600 * 1000,
-        "heartbeat touch must refresh a registered base's mtime")
-      // a momentarily-absent tree (the wipe-then-restage window) must STAY
-      // registered — dropping it here would permanently lose sweep
-      // protection for the restaged tree — and the touch must resume once
-      // the tree reappears
-      Files.delete(own)
-      SparkEntry.touchStreamBases() // no-op, no throw, no deregistration
-      assert(SparkEntry.liveStreamBases.contains(base),
-        "an absent tree must stay in the heartbeat registry (wipe/restage window)")
-      Files.createDirectories(own)
-      Files.setLastModifiedTime(own, FileTime.fromMillis(old))
-      SparkEntry.touchStreamBases()
-      assert(Files.getLastModifiedTime(own).toMillis > old + 24L * 3600 * 1000,
-        "the heartbeat must resume touching a restaged tree")
-    } finally {
-      SparkEntry.liveStreamBases.remove(own.toString)
-      Files.deleteIfExists(own)
-    }
-  }
 }

@@ -10,9 +10,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.{ProcessStarts, SparkSpec}
 
@@ -126,16 +125,12 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
   private def checkpointForks(body: => Unit): Int =
     ProcessStarts.count(ProcessStarts.inClass("CheckpointFileManager", "StateStoreProvider"))(body)
 
-  /** A three-batch streamingSessionize lifecycle into a sink that drops the
-    * rows (it must still consume every partition: Spark checks that each
-    * state store committed). */
+  /** A three-batch streamingSessionize lifecycle, as its stream gate runs
+    * it. */
   private def lifecycle(s: SparkSession): Unit = withTempDir("graft_forks") { d =>
     files(spark).foreach(land(_, d.resolve("in")))
-    val q = sessions(s, d.resolve("in")).writeStream
-      .foreachBatch((b: DataFrame, _: Long) => b.write.format("noop").mode("append").save())
-      .option("checkpointLocation", d.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val Seq(q) = graft.queries.StreamGateQueries.sessionizeGate
+      .start(s, d.resolve("in").toString, d.toString)
     q.awaitTermination()
     assert(q.recentProgress.count(_.numInputRows > 0) === 3)
   }

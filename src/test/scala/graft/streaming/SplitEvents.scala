@@ -5,15 +5,13 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, max_by, try_element_at}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkEntry
 
 /** The stream gates' fixture for specs: a seeded events table staged as
-  * the gates stage theirs, three time-split parquet files landed one at a
-  * time into a directory a file source watches, and the two stateful
-  * operators the gates run on them, each with its sink and read-back.
+  * the gates stage theirs, as three time-split parquet files that a spec
+  * lands one at a time into a directory a gate's file source watches. The
+  * gates themselves are the registry's [[graft.queries.SplitGate]] values.
   */
 object SplitEvents {
 
@@ -52,47 +50,6 @@ object SplitEvents {
     Files.createDirectories(landing)
     Files.copy(file, landing.resolve(file.getFileName), StandardCopyOption.COPY_ATTRIBUTES)
   }
-
-  /** One micro-batch per landed file. */
-  def source(s: SparkSession, landing: Path): DataFrame =
-    StreamRunner.fileSource(s, landing.toString, SparkEntry.stagedEventsSchema, "parquet",
-      Map("maxFilesPerTrigger" -> "1"))
-
-  def sessions(s: SparkSession, landing: Path): DataFrame = {
-    import s.implicits._
-    StatefulOps.streamingSessionize(source(s, landing).withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "value").as[SessionEvent], gapMs = 1800L * 1000)
-      .select("user_id", "n_events", "session_start", "session_end")
-  }
-
-  /** A stateful operator as the stream gates run it: start a drain of
-    * `landing` into `base`'s sink and checkpoint, and read the sink back. */
-  final case class Op(start: (SparkSession, Path, Path) => StreamingQuery,
-                      read: (SparkSession, Path) => DataFrame)
-
-  val sessionize = Op(
-    (s, landing, base) => StreamRunner.fileSink(sessions(s, landing),
-      base.resolve("out").toString, base.resolve("ckpt").toString),
-    (s, base) => s.read.parquet(base.resolve("out").toString))
-
-  val funnel = Op(
-    { (s, landing, base) =>
-      import s.implicits._
-      StatefulOps.streamingFunnel(source(s, landing).withWatermark("ts", "1 hour")
-          .select("user_id", "ts", "event_type").as[FunnelEvent],
-          Seq("signup", "view", "purchase"), stateTtlMs = 90L * 24 * 3600 * 1000)
-        .toDF().writeStream.outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) =>
-          StreamRunner.writeBatchIdempotent(b, id, base.resolve("out").toString))
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    },
-    (s, base) => s.read.parquet(base.resolve("out").toString).groupBy("user_id")
-      .agg(max_by(col("stage_times"), col("_batch_id")).as("st"))
-      .select(col("user_id"), try_element_at(col("st"), lit(1)).as("t_signup"),
-        try_element_at(col("st"), lit(2)).as("t_view"),
-        try_element_at(col("st"), lit(3)).as("t_purchase")))
 
   def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
