@@ -31,6 +31,20 @@ import graft.streaming.LocalCheckpointFileManager
   * on a 4-core box; without the sources it is 68.9 KB, about 1 ms and
   * 1.5 ms. Afterwards `getPropertySources` returns null for every key until
   * one is set again; Spark reads it only to log where a key came from.
+  *
+  * Generated code: the session sets `spark.sql.artifact.isolation.enabled`
+  * to false unless it already has a value for it. With isolation on (Spark's
+  * default) every session, and so every streaming query's cloned session,
+  * gets its own artifact class loader, and that loader is part of the key of
+  * Spark's codegen cache; each new stream then compiles again the classes
+  * the JVM has already compiled (13, 19 and 29 per lifecycle of the as-of,
+  * sessionize and funnel streams, on a 4-core box). With it off every
+  * session shares the application's loader and one cache. The engine adds
+  * no jars, files or archives to a session and clones none itself, so
+  * nothing depends on isolation: with it off a session has no artifact
+  * state and its tasks run on the application class path, which holds
+  * every graft class. A session that adds artifacts of its own opts out
+  * by setting the key to true when it is built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -60,6 +74,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       val key = LocalCheckpointFileManager.ConfKey
       if (session.conf.getOption(key).isEmpty)
         session.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+      // this key has a default, so only getAll tells a set value from it
+      if (!session.conf.getAll.contains(GraftExtensions.IsolationKey))
+        session.conf.set(GraftExtensions.IsolationKey, "false")
       GraftExtensions.dropProvenance(session.sparkContext.hadoopConfiguration)
       NoRule
     }
@@ -176,6 +193,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** Spark's per-session artifact isolation, which the session turns off. */
+  private[graft] val IsolationKey = "spark.sql.artifact.isolation.enabled"
 
   /** Hadoop's private map from each key to the resources that set it, or
     * None on a Hadoop without one. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
@@ -91,6 +92,14 @@ object StatefulOps {
 
   implicit private val sessionOutEnc: Encoder[SessionOut] = Encoders.product[SessionOut]
   implicit private val stateEnc: Encoder[SessionState] = Encoders.product[SessionState]
+  /** The funnel's state encoder, resolved once per JVM. Each query's
+    * operator resolves its state encoder again, and resolving a `Seq` field
+    * gives its element a lambda variable numbered from a JVM-wide counter,
+    * which the generated state deserializer's source embeds. A fresh
+    * encoder thus gave every query new source text, and Spark compiled it
+    * again; a bound encoder resolves to itself. */
+  implicit private val funnelStateEnc: Encoder[(Seq[Long], Long)] =
+    ExpressionEncoder[(Seq[Long], Long)]().resolveAndBind()
 
   /** Streaming sessionization: events grouped by user; a session closes (and
     * emits one [[SessionOut]] row) when no event arrives within `gapMs` of
